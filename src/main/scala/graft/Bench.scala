@@ -55,11 +55,6 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val spark = LocalSpark.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // Static confs silently keep the FIRST JVM value (ADVICE r18): log
-    // the effective codegen-cache size so an ignored setting is visible
-    // in the artifact's stderr, not discovered as a mystery regression.
-    System.err.println("[bench] effective spark.sql.codegen.cache.maxEntries=" +
-      spark.conf.get("spark.sql.codegen.cache.maxEntries"))
     // NonFatal only: after an OutOfMemoryError the JVM's numbers are
     // garbage — better to die loudly than record a plausible-looking
     // artifact from a broken heap (round-9 review).

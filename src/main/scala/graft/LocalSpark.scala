@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE local-session builder both harness mains share — Verify
-  * validates exactly what Bench times, so their sessions must stay
-  * semantically identical (a conf added to one and not the other would
-  * silently benchmark a different plan than the verified one).
+/** The ONE place a local session is configured: Bench, Verify, Inspect,
+  * VolumeProbe and the specs all build from here, so what is verified,
+  * inspected and gated is the engine that is timed. The settings are
+  * constants — a tool run under another shuffle writer or codegen cache
+  * measures another program — and Spark's own AQE coalescing defaults
+  * stand (OPTIMIZATION_r19.md has the measured A/B).
   *
   *  - UTC session timezone: the timestamp-normalization contract of
   *    graft.sources.Tables requires it (non-UTC fails fast there).
@@ -28,14 +30,15 @@ import org.apache.spark.sql.SparkSession
   *    class references, so the cost is MBs. A long-lived production
   *    driver serving a query library would set exactly this. */
 object LocalSpark {
-  def session(cpus: String): SparkSession = SparkSession.builder()
+  /** The session configuration, for a caller that adds a conf of its own
+    * (a test warehouse dir, VolumeProbe's broadcast threshold) before
+    * `getOrCreate()`. */
+  def builder(cpus: String): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
+    .config("spark.sql.shuffle.partitions", cpus)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+    .config("spark.sql.codegen.cache.maxEntries", "4096")
     // Never take the bypass-merge shuffle write path: it opens (and then
     // merge-concatenates) one file PER REDUCE PARTITION per map task,
     // and with shuffle.partitions = cpus every SQL exchange sits under
@@ -46,20 +49,9 @@ object LocalSpark {
     // writer; whole query 10.0 → 4.3 CPU-s). The unsafe writer sorts
     // partition ids over serialized rows and writes ONE file + index per
     // task — strictly fewer syscalls at any width; deployments with
-    // > 200-partition shuffles never used bypass in the first place. */
-    .config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "0"))
-    // AQE small-partition coalescing dials (round-19 measurement of the
-    // 8-beats-32-cores inversion, VERDICT r18 #3) — env-overridable for
-    // A/B, defaults = Spark defaults so the bench stays comparable and
-    // nothing is tuned to local[32]; see OPTIMIZATION_r19.md for the
-    // measured matrix and why the defaults stand.
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64MB"))
-    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1MB"))
+    // > 200-partition shuffles never used bypass in the first place.
+    .config("spark.shuffle.sort.bypassMergeThreshold", "0")
     .config("spark.ui.enabled", "false")
-    .getOrCreate()
+
+  def session(cpus: String): SparkSession = builder(cpus).getOrCreate()
 }

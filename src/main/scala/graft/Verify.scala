@@ -13,13 +13,8 @@ object Verify {
     // previous run's parquet in place and the downstream compare would
     // validate stale data as a pass (round-9 review). A failed query now
     // leaves NO output — absence is the failure signal.
-    val out = Paths.get(outDir)
-    if (Files.exists(out)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(out).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-    }
-    Files.createDirectories(out)
+    LocalFiles.rmTree(outDir)
+    Files.createDirectories(Paths.get(outDir))
     // Optional comma-separated name filter — the subset-verify loop for
     // iterating on one query without paying the full dump. The driver's
     // gate runs unfiltered (env unset → every query).

@@ -79,26 +79,13 @@ import org.apache.spark.sql.graftx.{Metrics, Sessions}
   */
 object VolumeProbe {
 
-  private def rmTree(d: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(d)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-  }
-
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_VOL_FACTOR", "100").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_VOL_OUT", "VOLPROBE_r07.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = LocalSpark.builder(cpus)
       .config("spark.sql.autoBroadcastJoinThreshold", "-1") // see class doc
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -1798,8 +1785,8 @@ object VolumeProbe {
       println(json)
       if (!allPass) exitCode = 1
     } finally {
-      rmTree(dir1)
-      rmTree(dirN)
+      LocalFiles.rmTree(dir1)
+      LocalFiles.rmTree(dirN)
       spark.stop()
     }
     if (exitCode != 0) sys.exit(exitCode)

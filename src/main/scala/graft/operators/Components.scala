@@ -75,7 +75,6 @@ object Components {
     Sessions.copyRuntimeConf(parent, s)
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val debug = sys.props.get("graft.cc.debug").contains("true")
     // The candidate-pair lineage can be the heaviest stage of the whole
     // query (for dedup_clusters it is the corpus-wide MinHash-LSH join),
     // so it is snapshotted under the PARENT session — full shuffle width,
@@ -109,7 +108,6 @@ object Components {
     var inFlightNext: org.apache.spark.rdd.RDD[_] = null
     try {
       while (round < maxRounds && !converged) {
-        val t0 = System.nanoTime()
         val (propRdd, prop) = Sessions.snapshot(
           edges.join(prev, col("dst") === col("v"))
             .groupBy(col("src")).agg(min(col("rep")).as("rep"))
@@ -125,8 +123,6 @@ object Components {
             prev.select(col("v").as("pv"), col("rep").as("prev_rep")),
             col("v") === col("pv"))
           .filter(col("rep") =!= col("prev_rep")).count()
-        if (debug)
-          println(f"[cc] round $round changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2f s")
         propRdd.unpersist(blocking = false)
         inFlightProp = null
         prevRdd.unpersist(blocking = false)

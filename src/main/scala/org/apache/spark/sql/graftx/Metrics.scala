@@ -35,9 +35,10 @@ object Metrics {
     * no extra shuffle records, no spill, plan shape sane — but the join
     * node's own output-row metric counts every generated pair, and like
     * the other gated quantities it is a property of the plan, not the
-    * host. Only populated by the SparkSession overload of
-    * [[withTaskWork]]; the bare-SparkContext form (Bench) leaves it 0. */
-  /** `incomplete` is true when the post-body listener-bus drain timed
+    * host. Only populated by [[withTaskWorkPlans]]; the bare-SparkContext
+    * [[withTaskWork]] (Bench) leaves it 0.
+    *
+    * `incomplete` is true when the post-body listener-bus drain timed
     * out: some stage/execution events may not have been delivered, so
     * every counter is a LOWER bound. Consumers that gate on these
     * numbers must surface the flag in their artifact (round-9 ADVICE: a
@@ -47,17 +48,10 @@ object Metrics {
       diskSpilledBytes: Long, joinOutputRows: Long = 0L,
       incomplete: Boolean = false)
 
-  /** Runs `body`, returning (result, total executor CPU seconds of all
-    * stages completed during it). */
-  def withCpuTime[T](sc: SparkContext)(body: => T): (T, Double) = {
-    val (r, w) = withTaskWork(sc)(body)
-    (r, w.cpuSec)
-  }
-
   /** Runs `body`, returning (result, aggregate [[TaskWork]] of all stages
     * completed during it). `joinOutputRows` stays 0 here — join metrics
-    * live on plan nodes, not task metrics; use the [[SparkSession]]
-    * overload to capture them. */
+    * live on plan nodes, not task metrics; use [[withTaskWorkPlans]] to
+    * capture them. */
   def withTaskWork[T](sc: SparkContext)(body: => T): (T, TaskWork) = {
     val cpuNs = new AtomicLong
     val shuffleRecs = new AtomicLong
@@ -101,26 +95,19 @@ object Metrics {
         false
     }
 
-  /** [[withTaskWork]] that ALSO fills `joinOutputRows`: a
-    * QueryExecutionListener captures every action's QueryExecution (the
-    * noop write the probes run is a NEW QueryExecution, not the measured
-    * frame's own — walking `df.queryExecution` would read never-executed
-    * zero metrics), and the [[Sessions.beginPlanCapture]] window
+  /** [[withTaskWork]] that ALSO fills `joinOutputRows` and returns the
+    * executed plans it captured: a QueryExecutionListener captures every
+    * action's QueryExecution (the noop write the probes run is a NEW
+    * QueryExecution, not the measured frame's own — walking
+    * `df.queryExecution` would read never-executed zero metrics), and the [[Sessions.beginPlanCapture]] window
     * contributes the executed plans of snapshots taken inside the block,
     * whose joins run under their own QueryExecution that no action
-    * listener sees. Single-threaded by the same harness contract as
-    * [[Sessions.releaseSnapshots]]. */
-  def withTaskWork[T](spark: SparkSession)(body: => T): (T, TaskWork) = {
-    val (r, w, _) = withTaskWorkPlans(spark)(body)
-    (r, w)
-  }
-
-  /** [[withTaskWork]] (SparkSession form) that also returns the executed
-    * plans it captured, so a caller can run post-execution plan-shape
-    * checks (e.g. [[hasNestedLoop]]) on the plans that actually ran —
-    * including the FINAL adaptive plan after any AQE re-plan, which the
-    * pre-execution `queryExecution.sparkPlan` cannot show (round-6
-    * ADVICE). */
+    * listener sees. The returned plans let a caller run post-execution
+    * plan-shape checks (e.g. [[hasNestedLoop]]) on the plans that
+    * actually ran — including the FINAL adaptive plan after any AQE
+    * re-plan, which the pre-execution `queryExecution.sparkPlan` cannot
+    * show (round-6 ADVICE). Single-threaded by the same harness contract
+    * as [[Sessions.releaseSnapshots]]. */
   def withTaskWorkPlans[T](spark: SparkSession)(
       body: => T): (T, TaskWork, Seq[SparkPlan]) = {
     val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
@@ -160,32 +147,14 @@ object Metrics {
     * roots descend through `executedPlan`, never the initial plan), so a
     * runtime re-plan into a nested loop is visible and a replanned-away
     * initial-plan node is not, unlike string-matching the tree dump. */
-  def hasNestedLoop(plans: Seq[SparkPlan]): Boolean = {
-    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
-    def walk(p: SparkPlan): Boolean =
-      seen.add(p) && {
-        (p match {
-          case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => true
-          case _ => false
-        }) || {
-          val kids = p match {
-            case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-            case qs: QueryStageExec => Seq(qs.plan)
-            case o => o.children
-          }
-          // p.subqueries: scalar/IN-subquery plans hang off EXPRESSIONS,
-          // not children — without descending them a nested loop inside a
-          // subquery is invisible to the gate (round-9 review).
-          (kids ++ p.subqueries).exists(walk)
-        }
-      }
-    plans.exists(walk)
-  }
+  def hasNestedLoop(plans: Seq[SparkPlan]): Boolean =
+    nestedLoopCount(plans) > 0 || hasCartesian(plans)
 
   /** AQE-aware children: adaptive roots descend through the FINAL
-    * executed plan, stages through their materialized plan. */
+    * executed plan, stages through their materialized plan.
+    * `p.subqueries`: scalar/IN-subquery plans hang off EXPRESSIONS, not
+    * children — without descending them a node inside a subquery would be
+    * invisible to the gates (round-9 review). */
   private def planKids(p: SparkPlan): Seq[SparkPlan] = (p match {
     case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
     case qs: QueryStageExec => Seq(qs.plan)
@@ -255,24 +224,7 @@ object Metrics {
     * (`executedPlan` is the FINAL adaptive plan post-execution) and query
     * stages. Identity-dedup guards against a plan reachable twice (e.g.
     * a stage reused under two parents) double-counting its metric. */
-  def joinOutputRows(plans: Seq[SparkPlan]): Long = {
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
-    def walk(p: SparkPlan): Long =
-      if (!seen.add(p)) 0L
-      else {
-        val self = p match {
-          case j: BaseJoinExec =>
-            j.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
-          case _ => 0L
-        }
-        val kids = (p match {
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case qs: QueryStageExec => Seq(qs.plan)
-          case o => o.children
-        }) ++ p.subqueries // join nodes inside subquery plans count too
-        self + kids.iterator.map(walk).sum
-      }
-    plans.map(walk).sum
-  }
+  def joinOutputRows(plans: Seq[SparkPlan]): Long =
+    collectNodes(plans)(_.isInstanceOf[BaseJoinExec])
+      .map(_.metrics.get("numOutputRows").map(_.value).getOrElse(0L)).sum
 }

@@ -81,7 +81,7 @@ object Sessions {
     // The snapshot's joins execute under ITS QueryExecution — invisible
     // to any action listener on the parent frame. While a measurement
     // window is open ([[beginPlanCapture]]), retain the executed plan
-    // STRONGLY so Metrics.withTaskWork(SparkSession) can include its
+    // STRONGLY so Metrics.withTaskWorkPlans can include its
     // numOutputRows in the measured block's join total — a weak
     // reference here lost plans to GC under exactly the corpus-scale
     // memory pressure the probes create, silently corrupting the
@@ -89,12 +89,12 @@ object Sessions {
     // window nothing is retained, so library callers pay nothing.
     if (planCaptureActive.get())
       capturedPlans.add(df.queryExecution.executedPlan)
-    // Snapshot-CHILD formatted plans for PlanFormat (round-18 verdict #5:
-    // a rewrite below a snapshot leaf is invisible in the parent query's
-    // formatted plan — the round-18 Generate pair expansion had to be
-    // verified from code + StageProfile instead of plans/). Only while a
-    // text-capture window is open: explainString plans the child QE,
-    // which is pure waste in Bench/Verify.
+    // Snapshot-CHILD formatted plans for `Inspect explain` (round-18
+    // verdict #5: a rewrite below a snapshot leaf is invisible in the
+    // parent query's formatted plan — the round-18 Generate pair expansion
+    // had to be verified from code + stage profiles instead of plans/).
+    // Only while a text-capture window is open: explainString plans the
+    // child QE, which is pure waste in Bench/Verify.
     if (planTextCaptureActive.get())
       capturedPlanTexts.add(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
@@ -160,8 +160,8 @@ object Sessions {
   private val planTextCaptureActive = new java.util.concurrent.atomic.AtomicBoolean(false)
   private val capturedPlanTexts = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
-  /** Opens a snapshot-child FORMATTED-PLAN capture window (PlanFormat
-    * evidence plumbing — see the note in [[snapshot]]). Single-threaded
+  /** Opens a snapshot-child FORMATTED-PLAN capture window (`Inspect
+    * explain` evidence plumbing — see the note in [[snapshot]]). Single-threaded
     * harness contract, like [[beginPlanCapture]]. */
   def beginPlanTextCapture(): Unit = {
     capturedPlanTexts.clear()

@@ -18,11 +18,7 @@ class BucketingSpec extends SparkSpec with BeforeAndAfterAll {
   private val tmp = Files.createTempDirectory("graft-bucketing").toString
 
   override def afterAll(): Unit = {
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(tmp)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
+    LocalFiles.rmTree(tmp)
     super.afterAll()
   }
 

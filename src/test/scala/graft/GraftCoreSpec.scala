@@ -12,12 +12,14 @@ class GraftCoreSpec extends SparkSpec {
   import TestSpark.spark.implicits._
 
   test("range mapreduce: 1M pairs sum to N(N-1)/2 (dist_map_test.cc:71-88)") {
-    val n = 1000000L
-    val res = Graft.mapreduceRange[String, Long](
+    def total(n: Long) = Graft.mapreduceRange[String, Long](
       Graft.fromRange(spark, 0, n),
       i => Iterator.single(("total", i)),
-      _ + _).collect()
-    assert(res.toSeq == Seq(("total", n * (n - 1) / 2)))
+      _ + _).collect().toSeq
+    val n = 1000000L
+    assert(total(n) == Seq(("total", n * (n - 1) / 2)))
+    // An empty range maps nothing, so no key exists to reduce: 0 rows.
+    assert(total(0L).isEmpty)
   }
 
   test("range mapreduce: distinct key per element (range_test.cc:6-16)") {
@@ -47,9 +49,12 @@ class GraftCoreSpec extends SparkSpec {
 
   test("put merges with reducer on collision (async_set, dist_map.h:118-130)") {
     val store = Seq(("aa", 1L), ("bb", 2L)).toDS()
-    val batch = Seq(("bb", 10L), ("cc", 5L)).toDS()
-    val merged = Graft.put(store, batch, (a: Long, b: Long) => a + b).collect().toMap
-    assert(merged == Map("aa" -> 1L, "bb" -> 12L, "cc" -> 5L))
+    def put(batch: org.apache.spark.sql.Dataset[(String, Long)]) =
+      Graft.put(store, batch, (a: Long, b: Long) => a + b).collect().toMap
+    assert(put(Seq(("bb", 10L), ("cc", 5L)).toDS()) ==
+      Map("aa" -> 1L, "bb" -> 12L, "cc" -> 5L))
+    // An empty batch leaves the store unchanged.
+    assert(put(spark.emptyDataset[(String, Long)]) == Map("aa" -> 1L, "bb" -> 2L))
   }
 
   test("get returns value or default (dist_map.h:132-145)") {

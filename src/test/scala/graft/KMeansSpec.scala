@@ -93,11 +93,6 @@ class KMeansSpec extends SparkSpec {
       // and this corpus converges by then.
       assert(KMeans.lastConverged)
       assert(declared.toSeq == loop.toSeq)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
+    } finally LocalFiles.rmTree(dir)
   }
 }

@@ -19,11 +19,6 @@ class LmFluencySpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def rmTree(dir: String): Unit = {
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(dir)).deleteRecursively()
-  }
-
   test("planted micro-corpus: closed-form scores, bigram-less doc excluded") {
     val dir = java.nio.file.Files.createTempDirectory("graft-lm").toString
     try {
@@ -42,6 +37,6 @@ class LmFluencySpec extends SparkSpec {
       // The fluency ordering: the doc whose continuation is the
       // corpus-common one outscores the doc with the rare continuation.
       assert(out(1L)._2 > out(2L)._2)
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 }

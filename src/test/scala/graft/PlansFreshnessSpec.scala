@@ -14,14 +14,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * build instead of surfacing a round later in review.
   *
   * Deliberately a pure text test — no SparkSession — so it costs
-  * milliseconds and cannot flake; `sbt "runMain graft.PlanDump"` is the
-  * fix when it fires.
+  * milliseconds and cannot flake; `sbt "runMain graft.Inspect plans"` with
+  * SPARK_GRAFT_SF_DIR at the sf0.1 fixtures is the fix when it fires.
   */
 class PlansFreshnessSpec extends AnyFunSuite {
 
   test("PLANS.md carries exactly one section per declared query") {
     val path = Paths.get("PLANS.md")
-    assert(Files.exists(path), "PLANS.md missing — run graft.PlanDump")
+    assert(Files.exists(path), "PLANS.md missing — run: SPARK_GRAFT_SF_DIR=<sf0.1 dir> " +
+      "sbt \"runMain graft.Inspect plans\"")
     val headers = Files.readString(path).linesIterator
       .filter(_.startsWith("## ")).map(_.stripPrefix("## ").trim).toSeq
     val dupes = headers.groupBy(identity).collect { case (n, hs) if hs.size > 1 => n }
@@ -33,13 +34,14 @@ class PlansFreshnessSpec extends AnyFunSuite {
     assert(missing.isEmpty && stale.isEmpty,
       s"PLANS.md is stale — missing sections: ${missing.toSeq.sorted}; " +
         s"sections for undeclared queries: ${stale.toSeq.sorted}. " +
-        "Regenerate with: sbt \"runMain graft.PlanDump\"")
+        "Regenerate with: SPARK_GRAFT_SF_DIR=<sf0.1 dir> sbt \"runMain graft.Inspect plans\"")
   }
 
   test("no PLANS.md section records a failed plan") {
     val text = Files.readString(Paths.get("PLANS.md"))
     assert(!text.contains("PLAN FAILED"),
       "PLANS.md contains a PLAN FAILED section — a declared query did " +
-        "not plan against the dump fixture")
+        "not plan against the dump fixture; fix it and regenerate with: " +
+        "SPARK_GRAFT_SF_DIR=<sf0.1 dir> sbt \"runMain graft.Inspect plans\"")
   }
 }

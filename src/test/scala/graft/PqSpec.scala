@@ -35,13 +35,6 @@ class PqSpec extends SparkSpec {
     dir
   }
 
-  private def rmTree(dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
-  }
-
   test("every planted point codes to its prototype in all 8 subspaces; prototype err = 0") {
     val dir = fixtureDir()
     try {
@@ -62,7 +55,7 @@ class PqSpec extends SparkSpec {
         val expectedErr = if (m == pertSub) { val k = (j % 2) + 1; (k * k).toLong } else 0L
         assert(err == expectedErr, s"point $id subspace $m err $err != $expectedErr")
       }
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("ivfpq: the ADC scan never leaves the probed cell") {
@@ -99,7 +92,7 @@ class PqSpec extends SparkSpec {
       assert(out.forall(_.getLong(2) == 1L),
         s"all-zero-coded cell-a candidates must sit at adist 1, got " +
           s"${out.map(_.getLong(2)).toSeq}")
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("residual IVFADC equals plain ADC on a one-cell corpus (algebraic identity)") {
@@ -123,7 +116,7 @@ class PqSpec extends SparkSpec {
       assert(plain.nonEmpty)
       assert(residual == plain.map { case (p, c, a) => (p, c, a * 1000000L) },
         s"one-cell residual IVFADC diverged from plain ADC:\n$residual\nvs\n$plain")
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("residual ivfpq: the ADC scan never leaves the probed cell") {
@@ -154,7 +147,7 @@ class PqSpec extends SparkSpec {
         .collect().filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
       assert(out.map(_.getLong(1)).toSeq == Seq(0L, 102L, 103L, 104L, 105L),
         s"probed-cell restriction violated: got ${out.map(_.getLong(1)).toSeq}")
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("trained-cell ivfpq: Lloyd cells separate planted blobs, empties drop, scan stays in-cell") {
@@ -195,7 +188,7 @@ class PqSpec extends SparkSpec {
       ).flatMap { case (p, cands) => cands.map(c => (p, c, 0L)) }
       assert(out.sorted.toSeq == expected.sorted,
         s"trained-cell ADC diverged:\n${out.sorted.toSeq}\nvs\n${expected.sorted}")
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("trained codebooks recover the planted prototypes exactly (integer fixpoint)") {
@@ -263,7 +256,7 @@ class PqSpec extends SparkSpec {
         val expectedErr = if (m == pertSub) 1000000L else 0L
         assert(err == expectedErr, s"point $id subspace $m err $err != $expectedErr")
       }
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("nprobe=2 routing recovers the cross-cell neighbors nprobe=1 loses") {
@@ -298,7 +291,7 @@ class PqSpec extends SparkSpec {
       assert(out.forall(_.getLong(2) == 1L),
         s"all-zero-coded candidates must sit at adist 1, got " +
           s"${out.map(_.getLong(2)).toSeq}")
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("exact re-rank fixes the ADC's planted rank inversions") {
@@ -324,7 +317,7 @@ class PqSpec extends SparkSpec {
       assert(out.forall(_.getLong(2) == 1L),
         s"shortlist adist must be 1 for all-zero-coded candidates, got " +
           s"${out.map(_.getLong(2)).toSeq}")
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("ADC ranking for the near-prototype probe is the cluster-0 cells, id-tiebroken") {
@@ -341,6 +334,6 @@ class PqSpec extends SparkSpec {
         s"got ${adc.map(_.getLong(1)).toSeq}")
       assert(adc.forall(_.getLong(2) == 1L),
         s"all-zero-coded candidates must sit at adist 1, got ${adc.map(_.getLong(2)).toSeq}")
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 }

@@ -133,12 +133,7 @@ class SamplingSpec extends SparkSpec {
         .filter(col("n_splits") > 1L)
         .count()
       assert(contentAudited == 0L, "content-keyed split produced a leaky group")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("DSIR votes separate target-like from source-like documents on a planted bimodal corpus") {

@@ -72,13 +72,7 @@ class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
   private val dir10 = Files.createTempDirectory("graft-scale10").toString
 
   override def afterAll(): Unit = {
-    for (d <- Seq(dir1, dir10)) {
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(d)
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
+    Seq(dir1, dir10).foreach(LocalFiles.rmTree)
     super.afterAll()
   }
 
@@ -480,10 +474,10 @@ class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
         // stall pathology inflates WALL and — under memory-bandwidth
         // contention — even thread-CPU time (the identical clusters run
         // measured 10 s and 500 s executor-CPU in adjacent sessions,
-        // while ScaleDebug showed the same per-round plan both times). A
-        // genuine quadratic regression is deterministic work and fails
-        // every attempt; a host episode does not survive two attempts
-        // minutes apart.
+        // while a post-execution plan dump showed the same per-round plan
+        // both times). A genuine quadratic regression is deterministic
+        // work and fails every attempt; a host episode does not survive
+        // two attempts minutes apart.
         info(s"$name failed all gates once — re-measuring (host-stall suspicion): ${first._2}")
         val second = gateOnce(name, q1, q10)
         assert(second._1, second._2)

@@ -32,11 +32,6 @@ class SemDedupSpec extends SparkSpec {
   private def perturb(v: Seq[Float], dim: Int, millunits: Int): Seq[Float] =
     v.updated(dim, v(dim) + millunits * 0.001f)
 
-  private def rmTree(dir: String): Unit = {
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(dir)).deleteRecursively()
-  }
-
   test("planted cliques: one keep-farthest survivor each, exact cdist, id tie-break") {
     val rows =
       (0 until 8).map(p => (p.toLong, proto(p))) ++
@@ -66,7 +61,7 @@ class SemDedupSpec extends SparkSpec {
         assert(kept == expectedKept,
           s"vector $id kept=$kept, expected $expectedKept")
       }
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("trained cells: same verdicts as the seeded form, cdist = distance to the Lloyd mean") {
@@ -111,7 +106,7 @@ class SemDedupSpec extends SparkSpec {
         assert(kept == expectedKept,
           s"vector $id kept=$kept, expected $expectedKept")
       }
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("the cells dial: finer cells keep every verdict deterministic and split no clique") {
@@ -142,7 +137,7 @@ class SemDedupSpec extends SparkSpec {
           else false
         assert(out(id) == expectedKept, s"vector $id flipped under the k dial")
       }
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 
   test("the tau dial: a cos≈0.707 pair drops at tau=0.3 but survives the paper's tau=0.95") {
@@ -174,6 +169,6 @@ class SemDedupSpec extends SparkSpec {
       org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
       assert(lo == Map(0L -> false, 1L -> true, 2L -> true,
         100L -> true, 101L -> false), s"tau=0.3 verdicts: $lo")
-    } finally rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 }

@@ -28,13 +28,7 @@ class SessionEquivalenceSpec extends SparkSpec {
   private val tempDirs = scala.collection.mutable.Buffer[String]()
 
   override def afterAll(): Unit = {
-    import scala.jdk.CollectionConverters._
-    for (d <- tempDirs) {
-      val path = java.nio.file.Paths.get(d)
-      if (java.nio.file.Files.exists(path))
-        java.nio.file.Files.walk(path).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
+    tempDirs.foreach(LocalFiles.rmTree)
     super.afterAll()
   }
 

@@ -1,9 +1,11 @@
 #!/bin/bash
 # Standalone-JVM launcher for the long probes/bench (graft.VolumeProbe,
-# graft.Bench) — run inside tmux: an sbt-forked run dies with the
-# sandbox's background-task timeout, and sbt must not compile while one
-# of these JVMs is mid-flight (lazy classfile loads would mix versions).
-# Usage: tools/run_probe.sh <MainClass> [env pre-set by caller]
+# graft.Bench, graft.Inspect) — run inside tmux: an sbt-forked run dies
+# with the shell's background-task timeout, and sbt must not compile
+# while one of these JVMs is mid-flight (lazy classfile loads would mix
+# versions). Arguments after the main class pass through to it.
+# Usage: tools/run_probe.sh <MainClass> [args...]  (env pre-set by caller)
+#   e.g. tools/run_probe.sh graft.Inspect stages graph_pagerank 3
 set -eu
 if [ $# -lt 1 ]; then
   echo "usage: $0 <MainClass>  (env: SPARK_GRAFT_SF_DIR etc. pre-set by caller)" >&2
