@@ -1,7 +1,11 @@
 package graft.core
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.CachedRows
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType, LongType, ShortType, StringType}
 
 /** Typed facade mirroring hpmr's public surface (src/hpmr.h:1-10) over
   * Datasets — SURVEY §2.4. A "DistMap" here is simply a `Dataset[(K, V)]`
@@ -12,9 +16,13 @@ import org.apache.spark.sql.functions._
   * async_set + sync (src/dist_map.h:118-130,147-210).
   *
   * Scale posture: every method is a lazy transformation on distributed
-  * data; nothing but `get`/`count` touches the driver, and those return
-  * scalars (a point lookup and a global count — the same collectives the
-  * reference exposes, src/dist_map.h:90-96,132-145).
+  * data; only `get`/`has`/`count` bring anything to the driver, and those
+  * return scalars (a point lookup, membership and a global count — the
+  * same collectives the reference exposes, src/dist_map.h:90-96,132-145).
+  * A point op on a store served by the in-memory cache ([[cache]]) is one
+  * job over the cached batches with no SQL planning — the analog of the
+  * reference's lookup in a resident hash table; on any other store it is
+  * a planned filter whose key predicate reaches the source scan.
   */
 object Graft {
 
@@ -64,34 +72,83 @@ object Graft {
       implicit ekv: Encoder[(K, V)], ek: Encoder[K]): Dataset[(K, V)] =
     mapreduce[K, V, K, V](store.union(batch), (k, v) => Iterator.single((k, v)), reducer)
 
-  /** Key-equality filter for point ops. Fast path: a Column predicate
-    * (`col("_1") === lit(key)`), which Catalyst pushes into the source
-    * scan — on a parquet-backed store the lookup reads only row groups
-    * whose min/max straddle the key instead of deserializing every row.
-    * The fast path is taken ONLY for key types where SQL equality matches
-    * Scala `==` (integral types, strings, booleans): floating-point keys
-    * stay on the typed filter because SQL treats NaN = NaN as true while
-    * `==` does not, and product-typed keys (hpmr's template contract)
-    * cannot be `lit`-encoded at all. An allowlist beats try/catch — a
-    * swallowed exception would silently degrade lookups to full scans. */
+  /** The Catalyst type of `key` when SQL `=` on it matches Scala `==`
+    * (integral types, strings, booleans), else None. The one allowlist
+    * that chooses how a point op compares keys, on both paths: SQL
+    * equality for these (a Column predicate that Catalyst pushes into the
+    * source scan, or the internal value on cached rows); the typed `==`
+    * on the decoded pair for the rest. Floating-point keys stay typed
+    * because SQL treats NaN = NaN as true while `==` does not; product
+    * keys (hpmr's template contract) cannot be `lit`-encoded, and a `null`
+    * key equals nothing under SQL `=` but a null key under `==`. An
+    * allowlist beats try/catch — a swallowed exception would silently
+    * degrade lookups to full scans. */
+  private def sqlKeyType(key: Any): Option[DataType] = key match {
+    case _: java.lang.Long => Some(LongType)
+    case _: java.lang.Integer => Some(IntegerType)
+    case _: java.lang.Short => Some(ShortType)
+    case _: java.lang.Byte => Some(ByteType)
+    case _: String => Some(StringType)
+    case _: java.lang.Boolean => Some(BooleanType)
+    case _ => None
+  }
+
+  /** Key-equality filter for uncached point ops: on a parquet-backed
+    * store an allowlisted key ([[sqlKeyType]]) reads only the row groups
+    * whose min/max straddle it instead of deserializing every row. */
   private def keyFilter[K, V](store: Dataset[(K, V)], key: K): Dataset[(K, V)] =
-    key match {
-      case (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
-            _: java.lang.Byte | _: String | _: java.lang.Boolean) =>
-        store.filter(col("_1") === lit(key))
-      case _ => store.filter((p: (K, V)) => p._1 == key)
+    if (sqlKeyType(key).isDefined) store.filter(col("_1") === lit(key))
+    else store.filter((p: (K, V)) => p._1 == key)
+
+  /** The planned point op: the first pair of [[keyFilter]], by one
+    * `take(1)` for both `get` and `has`. */
+  private def firstMatch[K, V](store: Dataset[(K, V)], key: K): Option[(K, V)] =
+    keyFilter(store, key).take(1).headOption
+
+  /** The pair keyed `key`, found by one job over the store's cached
+    * batches when the in-memory cache serves the store, else by
+    * [[firstMatch]]. Each task scans its partition and stops at the first
+    * row whose `_1` (found by name, as `col("_1")` is: a parquet store
+    * keeps its file's column order) equals the key, with the comparison
+    * [[sqlKeyType]] chooses; the driver decodes only that one row. An
+    * allowlisted key whose column has another type (an upcast read)
+    * keeps the planned path and its SQL cast-and-compare. `op` names the
+    * job, which runs under no SQL execution, in the Spark UI. */
+  private def lookup[K, V](op: String, store: Dataset[(K, V)], key: K): Option[(K, V)] = {
+    val keyType = store.schema.find(_.name == "_1").map(_.dataType)
+    (CachedRows.of(store), sqlKeyType(key)) match {
+      case (Some(rows), None) =>
+        val decode = CachedRows.decoder(store)
+        scanCached(op, rows)(r => decode(r)._1 == key).map(decode)
+      case (Some(rows), Some(t)) if keyType.contains(t) =>
+        val i = store.schema.fieldIndex("_1")
+        val v = CatalystTypeConverters.convertToCatalyst(key)
+        scanCached(op, rows)(r => !r.isNullAt(i) && r.get(i, t) == v)
+          .map(CachedRows.decoder(store))
+      case _ => firstMatch(store, key)
     }
+  }
+
+  /** One job over `rows`: each task returns a copy of its first `hit` row. */
+  private def scanCached(op: String, rows: RDD[InternalRow])(
+      hit: InternalRow => Boolean): Option[InternalRow] = {
+    val sc = rows.sparkContext
+    CachedRows.withCallSite(sc, op) {
+      sc.runJob(rows, (it: Iterator[InternalRow]) => it.find(hit).map(_.copy()))
+    }.collectFirst { case Some(r) => r }
+  }
 
   /** Point lookup with default (DistMap::get, src/dist_map.h:132-145).
     * Driver-side scalar — the reference's MPI_Bcast collective collapses
-    * to a filter + take(1) on the keyed store. */
+    * to one job over the cached batches when the store is cached, else to
+    * a planned, pushed-down filter + take(1) ([[lookup]]). */
   def get[K, V](store: Dataset[(K, V)], key: K, default: V): V =
-    keyFilter(store, key).take(1)
-      .headOption.map(_._2).getOrElse(default)
+    lookup("Graft.get", store, key).map(_._2).getOrElse(default)
 
-  /** Membership (`has`, src/bare_hash_container.h:181-196) for a single key. */
+  /** Membership (`has`, src/bare_hash_container.h:181-196) for a single
+    * key: the same lookup as [[get]]. */
   def has[K, V](store: Dataset[(K, V)], key: K): Boolean =
-    !keyFilter(store, key).isEmpty
+    lookup("Graft.has", store, key).isDefined
 
   /** NaN keys can never match: SQL `<=>`/`=` treat NaN = NaN as TRUE
     * while the typed `==` of get/has (and the reference's C++ `==`, under
@@ -154,7 +211,8 @@ object Graft {
   /** Pin a store in executor memory — the engine analog of holding the
     * hash table resident between queries (the reference's containers live
     * in RAM for their whole lifetime; a Dataset is recomputed per action
-    * unless cached). */
+    * unless cached). `get`/`has` on the returned store read its cached
+    * batches directly, one job per call. */
   def cache[K, V](store: Dataset[(K, V)]): Dataset[(K, V)] = store.persist()
 
   /** `clear` (src/bare_hash_container.h:119-133): release the store's
