@@ -1,28 +1,32 @@
 package graft.core
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.CachedRows
+import org.apache.spark.sql.graftx.{Bridge, CachedRows}
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType, LongType, ShortType, StringType}
 
 /** Typed facade mirroring hpmr's public surface (src/hpmr.h:1-10) over
   * Datasets — SURVEY §2.4. A "DistMap" here is simply a `Dataset[(K, V)]`
-  * with distinct keys: the hash-partitioned Exchange that `groupByKey`
-  * plans is the analog of hpmr's `hash % n_procs` routing
-  * (src/dist_map.h:121-124), and typed aggregation runs the same
-  * partial-combine → shuffle → final-combine phases as
-  * async_set + sync (src/dist_map.h:118-130,147-210).
+  * with distinct keys in column `_1` and values in `_2`, in that order
+  * (the key column contract; get/has/put reject any other layout). The
+  * stores [[mapreduce]] and [[put]] build are key-owned: they group on
+  * `_1` itself, so the hash-partitioned Exchange routes every key to
+  * partition `pmod(murmur3(k), n)`, the analog of hpmr's owner
+  * `hash(k) % n_procs` (src/dist_map.h:121-124), and the partial-combine
+  * → shuffle → final-combine phases are those of async_set + sync
+  * (src/dist_map.h:118-130,147-210).
   *
   * Scale posture: every method is a lazy transformation on distributed
   * data; only `get`/`has`/`count` bring anything to the driver, and those
   * return scalars (a point lookup, membership and a global count — the
   * same collectives the reference exposes, src/dist_map.h:90-96,132-145).
   * A point op on a store served by the in-memory cache ([[cache]]) is one
-  * job over the cached batches with no SQL planning — the analog of the
-  * reference's lookup in a resident hash table; on any other store it is
-  * a planned filter whose key predicate reaches the source scan.
+  * job with no SQL planning that reads the cached blocks directly: on a
+  * materialized key-owned store one task reads only the key's owner
+  * block — the analog of the reference's lookup in the owner's resident
+  * hash table; on any other store it is a planned filter whose key
+  * predicate reaches the source scan.
   */
 object Graft {
 
@@ -38,23 +42,29 @@ object Graft {
   def fromRange(spark: SparkSession, start: Long, end: Long, step: Long = 1L): Dataset[java.lang.Long] =
     spark.range(start, end, step)
 
-  /** The shared shuffle-reduce tail of both mapreduce forms: hash-group
-    * emitted pairs by key and merge values with `reducer` (partial
-    * map-side combine comes from Spark's ReduceAggregator). */
+  /** The shared shuffle-reduce tail of both mapreduce forms: group the
+    * emitted pairs by the `_1` column itself and merge values with
+    * `reducer` (Spark's ReduceAggregator, the one typed `reduceGroups`
+    * runs, so partial map-side combine comes with it). Grouping on the
+    * output column makes the exchange hash `_1`: the store's partitioning
+    * names its key, which is what lets a cached point op read only the
+    * owning partition ([[lookup]]). */
   private def reduceByKey[KR, VR](pairs: Dataset[(KR, VR)], reducer: Reducer[VR])(
-      implicit ekr: Encoder[(KR, VR)], ek: Encoder[KR]): Dataset[(KR, VR)] =
-    pairs.groupByKey(_._1)
-      .reduceGroups((a: (KR, VR), b: (KR, VR)) => (a._1, reducer(a._2, b._2)))
-      .map { case (_, (k, v)) => (k, v) }
+      implicit ekr: Encoder[(KR, VR)], ev: Encoder[VR]): Dataset[(KR, VR)] =
+    pairs.groupBy(col("_1"))
+      .agg(udaf(Bridge.reduceAggregator(reducer), ev)(col("_2")).as("_2"))
+      .as[(KR, VR)]
 
   /** The central operator: flat-map each pair through `mapper`, hash-shuffle
     * by the emitted key, merge values with `reducer`
     * (DistMap::mapreduce, src/dist_map.h:255-279). Spark plans map-side
     * partial reduction (ReduceAggregator partials) before the exchange,
-    * matching hpmr's staging-map combine. */
+    * matching hpmr's staging-map combine, and the exchange hashes the key
+    * column `_1`, the analog of hpmr's owner `hash(k) % n_procs`
+    * (src/dist_map.h:121-124). */
   def mapreduce[K, V, KR, VR](in: Dataset[(K, V)], mapper: Mapper[K, V, KR, VR],
                               reducer: Reducer[VR])(
-      implicit ekr: Encoder[(KR, VR)], ek: Encoder[KR]): Dataset[(KR, VR)] =
+      implicit ekr: Encoder[(KR, VR)], ev: Encoder[VR]): Dataset[(KR, VR)] =
     reduceByKey(in.flatMap { case (k, v) => mapper(k, v) }, reducer)
 
   /** Range::mapreduce (src/range.h:28-64): the same shape with the range
@@ -62,15 +72,29 @@ object Graft {
   def mapreduceRange[KR, VR](range: Dataset[java.lang.Long],
                              mapper: Long => IterableOnce[(KR, VR)],
                              reducer: Reducer[VR])(
-      implicit ekr: Encoder[(KR, VR)], ek: Encoder[KR]): Dataset[(KR, VR)] =
+      implicit ekr: Encoder[(KR, VR)], ev: Encoder[VR]): Dataset[(KR, VR)] =
     reduceByKey(range.flatMap((i: java.lang.Long) => mapper(i)), reducer)
 
   /** Buffered write with combine (DistMap::async_set,
     * src/dist_map.h:118-130): merge a batch of new pairs into the store,
-    * resolving key collisions with `reducer`. */
+    * resolving key collisions with `reducer`. The union is positional, so
+    * both sides must hold the key column contract ([[requireKeyed]]). */
   def put[K, V](store: Dataset[(K, V)], batch: Dataset[(K, V)], reducer: Reducer[V])(
-      implicit ekv: Encoder[(K, V)], ek: Encoder[K]): Dataset[(K, V)] =
-    mapreduce[K, V, K, V](store.union(batch), (k, v) => Iterator.single((k, v)), reducer)
+      implicit ekv: Encoder[(K, V)], ev: Encoder[V]): Dataset[(K, V)] = {
+    requireKeyed("Graft.put", store)
+    requireKeyed("Graft.put", batch)
+    reduceByKey(store.union(batch), reducer)
+  }
+
+  /** The key column contract of a store: its first two columns are `_1`
+    * (the key) and `_2` (the value), in that order. The relational ops
+    * find the key by name while a tuple decodes and a union pairs columns
+    * by position, so a store written `_2, _1` would silently key on its
+    * values; `op` rejects it, naming the schema. */
+  private def requireKeyed(op: String, store: Dataset[_]): Unit =
+    if (!store.columns.take(2).sameElements(Seq("_1", "_2")))
+      throw new IllegalArgumentException(
+        s"$op: a store's first two columns must be _1 (key), _2 (value); got ${store.schema.simpleString}")
 
   /** The Catalyst type of `key` when SQL `=` on it matches Scala `==`
     * (integral types, strings, booleans), else None. The one allowlist
@@ -105,48 +129,42 @@ object Graft {
   private def firstMatch[K, V](store: Dataset[(K, V)], key: K): Option[(K, V)] =
     keyFilter(store, key).take(1).headOption
 
-  /** The pair keyed `key`, found by one job over the store's cached
-    * batches when the in-memory cache serves the store, else by
-    * [[firstMatch]]. Each task scans its partition and stops at the first
-    * row whose `_1` (found by name, as `col("_1")` is: a parquet store
-    * keeps its file's column order) equals the key, with the comparison
-    * [[sqlKeyType]] chooses; the driver decodes only that one row. An
-    * allowlisted key whose column has another type (an upcast read)
-    * keeps the planned path and its SQL cast-and-compare. `op` names the
-    * job, which runs under no SQL execution, in the Spark UI. */
-  private def lookup[K, V](op: String, store: Dataset[(K, V)], key: K): Option[(K, V)] = {
-    val keyType = store.schema.find(_.name == "_1").map(_.dataType)
+  /** The pair keyed `key`, or None, as a thunk that decodes it: `has`
+    * never decodes and `get` decodes only its hit. When the in-memory
+    * cache serves the store ([[CachedRows]]) it is found by one job over
+    * the cached batches: each task stops at its first row whose `_1`
+    * equals the key, with the comparison [[sqlKeyType]] chooses, and an
+    * allowlisted key reads only the block of the partition that owns it
+    * when the cache's plan is hash-partitioned on `_1` (any store
+    * [[mapreduce]] or [[put]] built), else every block. An allowlisted key
+    * whose column has another type (an upcast read) and every other store
+    * take [[firstMatch]]. `op` names the job, which runs under no SQL
+    * execution, in the Spark UI. */
+  private def lookup[K, V](op: String, store: Dataset[(K, V)], key: K): Option[() => (K, V)] = {
+    requireKeyed(op, store)
     (CachedRows.of(store), sqlKeyType(key)) match {
-      case (Some(rows), None) =>
+      case (Some(cache), None) =>
         val decode = CachedRows.decoder(store)
-        scanCached(op, rows)(r => decode(r)._1 == key).map(decode)
-      case (Some(rows), Some(t)) if keyType.contains(t) =>
-        val i = store.schema.fieldIndex("_1")
+        cache.find(op, None)(r => decode(r)._1 == key).map(r => () => decode(r))
+      case (Some(cache), Some(t)) if store.schema.head.dataType == t =>
         val v = CatalystTypeConverters.convertToCatalyst(key)
-        scanCached(op, rows)(r => !r.isNullAt(i) && r.get(i, t) == v)
-          .map(CachedRows.decoder(store))
-      case _ => firstMatch(store, key)
+        cache.find(op, cache.owner(v, t))(r => !r.isNullAt(0) && r.get(0, t) == v)
+          .map(r => () => CachedRows.decoder(store)(r))
+      case _ => firstMatch(store, key).map(p => () => p)
     }
-  }
-
-  /** One job over `rows`: each task returns a copy of its first `hit` row. */
-  private def scanCached(op: String, rows: RDD[InternalRow])(
-      hit: InternalRow => Boolean): Option[InternalRow] = {
-    val sc = rows.sparkContext
-    CachedRows.withCallSite(sc, op) {
-      sc.runJob(rows, (it: Iterator[InternalRow]) => it.find(hit).map(_.copy()))
-    }.collectFirst { case Some(r) => r }
   }
 
   /** Point lookup with default (DistMap::get, src/dist_map.h:132-145).
     * Driver-side scalar — the reference's MPI_Bcast collective collapses
-    * to one job over the cached batches when the store is cached, else to
-    * a planned, pushed-down filter + take(1) ([[lookup]]). */
+    * to one job over the owner's cached block when the store is cached
+    * (the reference answers from the owner's resident table), else to a
+    * planned, pushed-down filter + take(1) ([[lookup]]). Rejects a store
+    * that breaks the key column contract ([[requireKeyed]]). */
   def get[K, V](store: Dataset[(K, V)], key: K, default: V): V =
-    lookup("Graft.get", store, key).map(_._2).getOrElse(default)
+    lookup("Graft.get", store, key).fold(default)(_()._2)
 
   /** Membership (`has`, src/bare_hash_container.h:181-196) for a single
-    * key: the same lookup as [[get]]. */
+    * key: the same lookup as [[get]], with nothing decoded. */
   def has[K, V](store: Dataset[(K, V)], key: K): Boolean =
     lookup("Graft.has", store, key).isDefined
 
@@ -211,8 +229,10 @@ object Graft {
   /** Pin a store in executor memory — the engine analog of holding the
     * hash table resident between queries (the reference's containers live
     * in RAM for their whole lifetime; a Dataset is recomputed per action
-    * unless cached). `get`/`has` on the returned store read its cached
-    * batches directly, one job per call. */
+    * unless cached). `get`/`has` on the returned store run one job per
+    * call over its cached blocks: once an action has materialized a
+    * key-owned store, one task that reads only the key's owner block; a
+    * block lost since is recomputed and cached again. */
   def cache[K, V](store: Dataset[(K, V)]): Dataset[(K, V)] = store.persist()
 
   /** `clear` (src/bare_hash_container.h:119-133): release the store's

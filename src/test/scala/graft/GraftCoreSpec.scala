@@ -247,4 +247,17 @@ class GraftCoreSpec extends SparkSpec {
         _ + _).collect().toMap
     assert(run(1) == run(13))
   }
+
+  test("-0.0 and 0.0 reduce to one key at 1 and at 13 partitions") {
+    // C++ == (and std::hash) treat them as one key, and so do get/has
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    try Seq(1, 13).foreach { n =>
+      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+      val res = Graft.mapreduce[Double, Long, Double, Long](
+        Seq((-0.0, 1L), (0.0, 2L)).toDS().repartition(n), (k, v) => Iterator.single((k, v)), _ + _)
+        .collect().toSeq
+      assert(res == Seq((0.0, 3L)), s"at $n partitions")
+      assert(Graft.get(res.toDS(), -0.0, -1L) == 3L)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
 }

@@ -13,20 +13,26 @@ import graft.core.Graft
 
 /** `Graft.get`/`has` on a store the in-memory cache serves: one job over
   * the cached batches, no SQL execution, and the same answers as the
-  * planned filter on the uncached store for every key type and layout. */
+  * planned filter on the uncached store for every key type; on a
+  * materialized key-owned store one task over the owner's block, with no
+  * lineage, and a lost block recomputed. A store that breaks the key
+  * column contract is rejected. */
 class PointLookupSpec extends SparkSpec {
 
   import TestSpark.spark.implicits._
 
-  /** `body`'s result, the SQL executions and jobs it ran, and the name of
-    * each job's result stage (its call site). Jobs are counted in a job
+  /** What `body` ran: SQL executions, jobs, stages per job (skipped
+    * parents included), tasks of each job's result stage, and the name of
+    * each job's result stage (its call site). */
+  private case class Ran(executions: Int, jobs: Int, stages: Seq[Int], tasks: Seq[Int], names: Seq[String])
+
+  /** `body`'s result and what it ran ([[Ran]]). Jobs are counted in a job
     * group set around `body`, which it must leave as set. */
-  private def counted[A](body: => A): (A, Int, Int, Seq[String]) = {
+  private def counted[A](body: => A): (A, Ran) = {
     val sc = spark.sparkContext
     val group = "point-lookup-spec"
     val executions = new AtomicInteger
-    val jobs = new AtomicInteger
-    val stageNames = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, String)]
     val qel = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executions.incrementAndGet()
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = executions.incrementAndGet()
@@ -34,9 +40,9 @@ class PointLookupSpec extends SparkSpec {
     val sl = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties.getProperty("spark.jobGroup.id") == group) {
-          jobs.incrementAndGet()
-          // the result stage; the others are the cache's skipped parents
-          stageNames.add(e.stageInfos.maxBy(_.stageId).name)
+          // the result stage; any others are the cache's skipped parents
+          val result = e.stageInfos.maxBy(_.stageId)
+          jobs.add((e.stageInfos.size, result.numTasks, result.name))
         }
     }
     Metrics.flushListeners(sc)
@@ -49,7 +55,8 @@ class PointLookupSpec extends SparkSpec {
       assert(sc.getLocalProperty("spark.job.description") == "point lookup")
       Metrics.flushListeners(sc)
       import scala.jdk.CollectionConverters._
-      (a, executions.get, jobs.get, stageNames.asScala.toSeq)
+      val js = jobs.asScala.toSeq
+      (a, Ran(executions.get, js.size, js.map(_._1), js.map(_._2), js.map(_._3)))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(sl)
@@ -71,9 +78,9 @@ class PointLookupSpec extends SparkSpec {
     val store = Graft.cache(mk())
     try {
       store.count()
-      val (got, executions, _, _) = counted(answers(store))
+      val (got, ran) = counted(answers(store))
       assert(got == expected, "cached")
-      assert(executions == (if (planned) 2 * keys.size else 0), "SQL executions")
+      assert(ran.executions == (if (planned) 2 * keys.size else 0), "SQL executions")
     } finally Graft.clear(store)
   }
 
@@ -104,15 +111,29 @@ class PointLookupSpec extends SparkSpec {
       Map((2, "b") -> 20L))
   }
 
-  test("a parquet store written as (_2, _1) is matched on the column named _1") {
+  test("get, has and put reject a store whose first two columns are not _1, _2") {
     val dir = java.nio.file.Files.createTempDirectory("graft-lookup").toString + "/store"
     Seq((100L, 1L), (200L, 2L)).toDF("_2", "_1").write.mode("overwrite").parquet(dir)
-    // `as[(K, V)]` binds a tuple by ordinal, so a row decodes as (file _2,
-    // file _1), while the key predicate reads the column NAMED _1: key 2
-    // finds the row (_2 = 200, _1 = 2) and returns its decoded _2, which is
-    // 2; key 200 is absent. The cached path must find the same rows.
-    agree(() => spark.read.parquet(dir).as[(Long, Long)], Seq(2L, 200L, 4L), -1L,
-      Map(2L -> 2L))
+    // `as[(K, V)]` binds a tuple by ordinal while the key predicate and the
+    // reduce read the column NAMED _1 and a union pairs columns by
+    // position: on this layout every op would key on values
+    val plain = spark.read.parquet(dir).as[(Long, Long)]
+    val keyed = Seq((1L, 1L)).toDS()
+    def rejected(what: String)(op: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](op)
+      assert(e.getMessage.startsWith(s"Graft.$what:"), e.getMessage)
+      assert(e.getMessage.contains("struct<_2:bigint,_1:bigint>"), e.getMessage)
+    }
+    val store = Graft.cache(spark.read.parquet(dir).as[(Long, Long)])
+    try {
+      store.count()
+      Seq(plain, store).foreach { s =>
+        rejected("get")(Graft.get(s, 2L, -1L))
+        rejected("has")(Graft.has(s, 2L))
+        rejected("put")(Graft.put(keyed, s, (a: Long, b: Long) => a + b))
+        rejected("put")(Graft.put(s, keyed, (a: Long, b: Long) => a + b))
+      }
+    } finally Graft.clear(store)
     LocalFiles.rmTree(dir)
   }
 
@@ -133,27 +154,27 @@ class PointLookupSpec extends SparkSpec {
     val store = Graft.cache(Seq(("aa", 1L), ("bb", 2L)).toDS().repartition(3))
     try {
       store.count()
-      val old = CachedRows.of(store).get.dependencies.head.rdd
+      val old = CachedRows.of(store).get.batches
       Graft.clear(store)
       assert(CachedRows.of(store).isEmpty)
       val persisted = sc.getPersistentRDDs.keySet
-      val (a, executions, _, _) = counted((Graft.get(store, "bb", -1L), Graft.has(store, "zz")))
-      assert(a == ((2L, false)) && executions == 2, "a cleared store takes the planned path")
+      val (a, ran) = counted((Graft.get(store, "bb", -1L), Graft.has(store, "zz")))
+      assert(a == ((2L, false)) && ran.executions == 2, "a cleared store takes the planned path")
       assert(sc.getPersistentRDDs.keySet == persisted, "a cleared store was re-materialized")
 
       Graft.cache(store).count()
-      val batches = CachedRows.of(store).get.dependencies.head.rdd
+      val batches = CachedRows.of(store).get.batches
       assert(batches.id != old.id && old.getStorageLevel == StorageLevel.NONE)
       assert(sc.getPersistentRDDs.contains(batches.id), "the re-cached batches are not the ones read")
-      val (b, executions2, _, _) = counted((Graft.get(store, "bb", -1L), Graft.has(store, "zz")))
-      assert(b == ((2L, false)) && executions2 == 0)
+      val (b, ran2) = counted((Graft.get(store, "bb", -1L), Graft.has(store, "zz")))
+      assert(b == ((2L, false)) && ran2.executions == 0)
 
       // a Dataset derived from a cached store is not served by the cache as
       // a whole, so it is planned (reading the cache inside its plan)
       val derived = store.filter($"_2" > 1L)
       assert(CachedRows.of(derived).isEmpty)
-      val (c, executions3, _, _) = counted((Graft.get(derived, "bb", -1L), Graft.has(derived, "aa")))
-      assert(c == ((2L, false)) && executions3 == 2)
+      val (c, ran3) = counted((Graft.get(derived, "bb", -1L), Graft.has(derived, "aa")))
+      assert(c == ((2L, false)) && ran3.executions == 2)
     } finally Graft.clear(store)
   }
 
@@ -161,16 +182,101 @@ class PointLookupSpec extends SparkSpec {
     val store = Graft.cache(Seq(("aa", 1L), ("bb", 2L), ("cc", 3L)).toDS().repartition(4))
     try {
       store.count()
-      val (v, gx, gj, gNames) = counted(Graft.get(store, "cc", -1L))
+      val (v, g) = counted(Graft.get(store, "cc", -1L))
       assert(v == 3L)
-      assert((gx, gj) == ((0, 1)), s"get: $gx SQL executions, $gj jobs")
-      assert(gNames == Seq("Graft.get"), "the job's call site")
-      val (h, hx, hj, hNames) = counted(Graft.has(store, "zz"))
+      assert((g.executions, g.jobs) == ((0, 1)), s"get: $g")
+      assert(g.names == Seq("Graft.get"), "the job's call site")
+      val (h, hr) = counted(Graft.has(store, "zz"))
       assert(!h)
-      assert((hx, hj) == ((0, 1)), s"has: $hx SQL executions, $hj jobs")
-      assert(hNames == Seq("Graft.has"), "the job's call site")
+      assert((hr.executions, hr.jobs) == ((0, 1)), s"has: $hr")
+      assert(hr.names == Seq("Graft.has"), "the job's call site")
       assert(spark.sparkContext.getLocalProperty("callSite.short") == null,
         "the call site was not restored")
+    } finally Graft.clear(store)
+  }
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` at `n`. */
+  private def withShufflePartitions[A](n: Int)(body: => A): A = {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
+
+  /** A cached, materialized key-owned store of "k0".."k299" built by
+    * mapreduce and then put at `n` shuffle partitions. */
+  private def keyOwned(n: Int): Dataset[(String, Long)] = withShufflePartitions(n) {
+    val ingest = Graft.mapreduceRange[String, Long](Graft.fromRange(spark, 0L, 600L),
+      i => Iterator.single((s"k${i % 250}", 1L)), _ + _)
+    val store = Graft.cache(Graft.put(ingest, (240 until 300).map(i => (s"k$i", 10L)).toDS(),
+      (a: Long, b: Long) => a + b))
+    store.count()
+    store
+  }
+
+  /** The value of "k$i", i < 300, in [[keyOwned]]: its share of 600 ones
+    * over "k0".."k249", plus the put's 10 on "k240".."k299". */
+  private def want(i: Int): Long = (if (i < 250) (if (i < 100) 3L else 2L) else 0L) + (if (i >= 240) 10L else 0L)
+
+  test("key-owned stores at 1, 4, 13, 200 partitions: one task reads the owner block") {
+    Seq(1, 4, 13, 200).foreach { n =>
+      val store = keyOwned(n)
+      try {
+        assert(CachedRows.of(store).get.batches.getNumPartitions == n)
+        Seq(0, 7, 99, 100, 245, 260, 299).foreach { i =>
+          val (got, ran) = counted((Graft.get(store, s"k$i", -1L), Graft.has(store, s"k$i")))
+          assert(got == ((want(i), true)), s"k$i at $n partitions")
+          assert(ran == Ran(0, 2, Seq(1, 1), Seq(1, 1), Seq("Graft.get", "Graft.has")), s"k$i at $n: $ran")
+        }
+        Seq("k300", "none", "").foreach { k =>
+          val (got, ran) = counted((Graft.get(store, k, -1L), Graft.has(store, k)))
+          assert(got == ((-1L, false)), s"$k at $n partitions")
+          assert(ran.tasks == Seq(1, 1) && ran.stages == Seq(1, 1), s"$k at $n: $ran")
+        }
+      } finally Graft.clear(store)
+    }
+  }
+
+  test("a cached store no action has materialized answers through its lineage") {
+    val store = withShufflePartitions(4) {
+      Graft.cache(Graft.mapreduce[String, Long, String, Long](
+        (0 until 100).map(i => (s"k$i", i.toLong)).toDS(), (k, v) => Iterator.single((k, v)), _ + _))
+    }
+    try {
+      assert(Graft.get(store, "k42", -1L) == 42L)
+      assert(!Graft.has(store, "k100"))
+      assert(Graft.has(store, "k0"))
+      assert(store.count() == 100L)
+    } finally Graft.clear(store)
+  }
+
+  test("a cached block removed from the block manager is recomputed and cached again") {
+    import org.apache.spark.SparkEnv
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.storage.RDDBlockId
+    val store = keyOwned(4)
+    try {
+      val cache = CachedRows.of(store).get
+      val p = cache.owner(CatalystTypeConverters.convertToCatalyst("k7"), StringType).get
+      val block = RDDBlockId(cache.batches.id, p)
+      val master = SparkEnv.get.blockManager.master
+      def located = master.getLocations(block).nonEmpty
+      assert(located)
+      master.removeBlock(block) // the block manager drops it asynchronously
+      org.scalatest.concurrent.Eventually.eventually(
+        org.scalatest.concurrent.Eventually.timeout(org.scalatest.time.Span(10, org.scalatest.time.Seconds))) {
+        assert(!located)
+      }
+      assert(Graft.get(store, "k7", -1L) == want(7))
+      assert(located, "the lookup did not cache the block again")
+      assert(Graft.has(store, "k7") && !Graft.has(store, "k300"))
+      // a block that vanishes after its location was checked fails the
+      // block read, and the lookup falls back to the lineage
+      SparkEnv.get.blockManager.removeBlock(block, tellMaster = false)
+      assert(located)
+      assert(Graft.get(store, "k7", -1L) == want(7))
+      assert(SparkEnv.get.blockManager.getStatus(block).isDefined, "the block was not cached again")
+      assert((0 until 300).forall(i => Graft.get(store, s"k$i", -1L) == want(i)))
     } finally Graft.clear(store)
   }
 }
