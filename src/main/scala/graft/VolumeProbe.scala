@@ -280,10 +280,8 @@ object VolumeProbe {
         SimilarityQueries.ivfpqCodesTable(spark, dirN)
       }
       if (wanted("sim_ivfpq_full_clustered_topk")) {
-        SimilarityQueries.ivfpqFullCodesTable(spark, dir1)
-        SimilarityQueries.ivfpqFullCodesTable(spark, dirN)
-        SimilarityQueries.ivfpqFullArtifactTables(spark, dir1)
-        SimilarityQueries.ivfpqFullArtifactTables(spark, dirN)
+        SimilarityQueries.ivfpqFullPersisted(spark, dir1)
+        SimilarityQueries.ivfpqFullPersisted(spark, dirN)
       }
       if (wanted("sim_ivfpq_append") || wanted("sim_ivfpq_drift_guard") ||
           wanted("sim_ivfpq_delete_topk") || wanted("sim_ivfpq_append_nprobe") ||
@@ -1167,12 +1165,15 @@ object VolumeProbe {
                 SimilarityQueries.ivfpqIndexNprobe(spark, dir, 2)
               else if (name == "sim_ivfpq_clustered_topk")
                 (SimilarityQueries.ivfpqCodesTable(spark, dir),
-                  SimilarityQueries.ivfpqIndex(spark, dir)._2)
+                  SimilarityQueries.ivfpqIndexNprobe(spark, dir, 1)._2)
               else if (name == "sim_ivfpq_full_trained_topk")
-                SimilarityQueries.ivfpqFullTrainedIndex(spark, dir)
+                SimilarityQueries.ivfpqTrainAll(spark,
+                  graft.sources.Tables.embeddings(spark, dir)) match {
+                  case (_, _, c, t) => (c, t) }
               else if (name == "sim_ivfpq_full_clustered_topk")
-                (SimilarityQueries.ivfpqFullCodesTable(spark, dir),
-                  SimilarityQueries.ivfpqFullTrainedIndex(spark, dir)._2)
+                (SimilarityQueries.ivfpqFullPersisted(spark, dir)._1,
+                  SimilarityQueries.ivfpqTrainAll(spark,
+                    graft.sources.Tables.embeddings(spark, dir))._4)
               else if (name == "sim_ivfpq_append") {
                 val (c, cellsT, cbT) =
                   SimilarityQueries.ivfpqAppendPersisted(spark, dir)
@@ -1218,7 +1219,7 @@ object VolumeProbe {
                 (c2, SimilarityQueries.ivfpqProbeTablesFrozen(
                   spark, dir, cells2, cbT))
               }
-              else SimilarityQueries.ivfpqIndex(spark, dir)
+              else SimilarityQueries.ivfpqIndexNprobe(spark, dir, 1)
             val (cRdd, codesSnap) = Sessions.snapshot(codes)
             val (tRdd, tabSnap) = Sessions.snapshot(scanTab)
             val nVec = codesSnap.count() / 8 // materializes the snapshot
@@ -1288,10 +1289,13 @@ object VolumeProbe {
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             val (codes, scanTab) =
               if (name == "sim_ivfpq_full_trained_topk")
-                SimilarityQueries.ivfpqFullTrainedIndex(spark, dir)
+                SimilarityQueries.ivfpqTrainAll(spark,
+                  graft.sources.Tables.embeddings(spark, dir)) match {
+                  case (_, _, c, t) => (c, t) }
               else if (name == "sim_ivfpq_full_clustered_topk")
-                (SimilarityQueries.ivfpqFullCodesTable(spark, dir),
-                  SimilarityQueries.ivfpqFullTrainedIndex(spark, dir)._2)
+                (SimilarityQueries.ivfpqFullPersisted(spark, dir)._1,
+                  SimilarityQueries.ivfpqTrainAll(spark,
+                    graft.sources.Tables.embeddings(spark, dir))._4)
               else if (name == "sim_ivfpq_append") {
                 val (c, cellsT, cbT) =
                   SimilarityQueries.ivfpqAppendPersisted(spark, dir)
@@ -1329,7 +1333,7 @@ object VolumeProbe {
                 (c2, SimilarityQueries.ivfpqProbeTablesFrozen(
                   spark, dir, cells2, cbT))
               }
-              else SimilarityQueries.ivfpqIndex(spark, dir)
+              else SimilarityQueries.ivfpqIndexNprobe(spark, dir, 1)
             val (sRdd, shortSnap) = Sessions.snapshot(
               SimilarityQueries.ivfpqCandidates(codes, scanTab,
                 SimilarityQueries.RerankShortlist))
@@ -1375,7 +1379,8 @@ object VolumeProbe {
               graft.sources.Tables.embeddings(spark, dir))
             val nDelta = delta.count()
             val (_, work, _) = Metrics.withTaskWorkPlans(spark) {
-              SimilarityQueries.ivfpqEncodeFrozen(delta, cellsT, cbT)
+              SimilarityQueries.ivfpqEncodeFrozenQ(
+                graft.operators.KMeans.quantize(delta), cellsT, cbT)
                 .write.mode("overwrite").format("noop").save()
             }
             Sessions.releaseSnapshots()

@@ -32,11 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
-  /** Per-subspace round counts of the most recent [[trainCodebooks]]
-    * call — probe/spec introspection, the [[KMeans.lastRounds]] contract
-    * per subspace. Not thread-safe across concurrent runs. */
-  @volatile var lastRoundsPerSubspace: Seq[Int] = Nil
-
   /** @param embeddings (vec_id, embedding) — ids unique; each subspace's
     *                   init centroids are the subvectors of vec_id < k
     * @param m          subspace count (embedding width must be m·subDim)
@@ -45,25 +40,23 @@ object Pq {
     *                   label domain)
     * @param loopParts  shuffle width inside each lloyd loop
     * @param maxRounds  per-subspace round budget
-    * @return (subspace, cluster_id, dim, c, n_vecs) — dim is the
-    *         WITHIN-subspace dimension (0 until subDim) */
+    * @return ((subspace, cluster_id, dim, c, n_vecs), per-subspace
+    *         Lloyd round counts) — dim is the WITHIN-subspace dimension
+    *         (0 until subDim) */
   def trainCodebooks(embeddings: DataFrame, m: Int = 8, subDim: Int = 8,
-      k: Int = 4, loopParts: Int = 8, maxRounds: Int = 40): DataFrame = {
-    lastRoundsPerSubspace = Nil
-    val rounds = Array.fill(m)(-1)
-    val parts = (0 until m).map { j =>
+      k: Int = 4, loopParts: Int = 8,
+      maxRounds: Int = 40): (DataFrame, Seq[Int]) = {
+    val (parts, rounds) = (0 until m).map { j =>
       val sub = embeddings.select(col("vec_id"),
         slice(col("embedding"), j * subDim + 1, subDim).as("embedding"))
       val trained = KMeans.lloyd(sub, k, subDim, loopParts, maxRounds)
         .withColumn("subspace", lit(j.toLong))
-      // lloyd's driver loop has RUN by the time it returns, so the
-      // introspection fields are this subspace's.
-      rounds(j) = KMeans.lastRounds
-      trained
-    }
-    lastRoundsPerSubspace = rounds.toSeq
-    parts.reduce(_ unionByName _)
+      // lloyd's driver loop has RUN by the time it returns, so its
+      // round count is this subspace's.
+      (trained, KMeans.lastRounds)
+    }.unzip
+    (parts.reduce(_ unionByName _)
       .select(col("subspace"), col("cluster_id"), col("dim"),
-        col("c"), col("n_vecs"))
+        col("c"), col("n_vecs")), rounds)
   }
 }

@@ -3,8 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import org.apache.spark.sql.graftx.Sessions
+import graft.sources.{Bucketing, Tables}
 import graft.functions.ColFns._
+import graft.functions.VecOps
+import graft.operators.KMeans
 
 /** Approximate-nearest-neighbor search over the embedding column.
   *
@@ -369,6 +372,189 @@ object SimilarityQueries {
       .orderBy("cluster_id", "dim")
   }
 
+  // ---- IVF-PQ blocks ------------------------------------------------
+  // Every PQ / IVF-PQ builder below is a composition of these private
+  // blocks, one copy each. Each block fixes its aliases, broadcast hints
+  // and snapshot cuts, so a change to encode or scan is made once and
+  // every declared plan (PLANS.md) moves with it.
+
+  /** Millunit-quantized embeddings: `keys` plus `qv`. */
+  private def milliVecs(s: SparkSession, d: String, keys: String*): DataFrame =
+    Tables.embeddings(s, d)
+      .select(keys.map(col) :+ quantizeVecMilli(col("embedding")).as("qv"): _*)
+
+  /** Subspace split: `v`'s 8 contiguous 8-dim slices, one row per
+    * (keys…, subspace) through a constant-arity explode, with the slice's
+    * squared norm. Probe-side callers rename the outputs (pm, psv, psn2). */
+  private def subspaces(df: DataFrame, keys: Seq[String], v: String,
+      m: String = "m", sv: String = "sv", sn2: String = "sn2"): DataFrame =
+    df.select(keys.map(col) :+ explode(array((0 until 8).map(j =>
+        struct(lit(j.toLong).as("m"),
+          slice(col(v), j * 8 + 1, 8).as("sv"))): _*)).as("ms"): _*)
+      .select(keys.map(col) ++ Seq(col("ms.m").as(m), col("ms.sv").as(sv)): _*)
+      .withColumn(sn2, qnorm2(col(sv)))
+
+  /** Seed codebook: the subvectors of vec_id < 4 (the id-stable seed
+    * rule) as (cid, cm, cv, cn2) — ≤ 32 rows by the unique-key filter,
+    * broadcast-pinned (BroadcastGuardSpec allowlists it). */
+  private def seedCodebook(sub: DataFrame): DataFrame =
+    sub.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("cid"), col("m").as("cm"),
+        col("sv").as("cv"), col("sn2").as("cn2"))
+
+  /** Round 0 of a trained codebook: the vec_id < 4 subvectors at the
+    * training scale `cv`, with cn2 = |cv|². */
+  private def trainingSeed(sub: DataFrame, cv: Column): DataFrame =
+    withCn2(sub.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("cid"), col("m").as("cm"), cv.as("cv")), "cv")
+
+  /** `df` plus cn2 = |v|² of its vector column `v`. */
+  private def withCn2(df: DataFrame, v: String): DataFrame =
+    df.withColumn("cn2", qdot(col(v), col(v)))
+
+  /** |sv − cv|² = |sv|² − 2·(sv·cv) + |cv|² over a subspace row joined
+    * with a codebook row at the subvectors' own scale (probe-side rows
+    * name their norm and slice psn2, psv). */
+  private def subDist(sn2: String = "sn2", sv: String = "sv"): Column =
+    col(sn2) - lit(2L) * qdot(col(sv), col("cv")) + col("cn2")
+
+  /** Packed-long argmin over the broadcast codebook, per `keys` group:
+    * p = min(4·dist + cid) — dist ≥ 0 and cid ∈ [0, 4), so the packed
+    * order is the (dist, cid) order exactly; code = p mod 4, distance =
+    * p div 4. Collapsed in-stage by a map-side-combined HashAggregate. */
+  private def packedArgmin(sub: DataFrame, cb: DataFrame, dist: Column,
+      keys: String*): DataFrame =
+    sub.join(broadcast(cb), col("m") === col("cm"))
+      .groupBy(keys.map(col): _*)
+      .agg(min(dist * 4L + col("cid")).as("p"))
+
+  /** Wide-row encode: 8 conditional packed-mins grouped by vec_id (and
+    * the per-vector constant `cell`, output as `cell`), then the codes
+    * re-exploded AFTER the exchange to (vec_id, [cell,] m, code). The
+    * exchange carries ONE row per vector, so a vector's subspace rows
+    * stay co-partitioned at every scale (see [[simPqAdcTopk]]). */
+  private def encodeWide(sub: DataFrame, cb: DataFrame,
+      cell: Option[String]): DataFrame = {
+    val p = subDist() * 4L + col("cid")
+    sub.join(broadcast(cb), col("m") === col("cm"))
+      .groupBy(col("vec_id") +: cell.map(col).toSeq: _*)
+      .agg(min(when(col("m") === 0, p)).as("p0"),
+        (1 until 8).map(j => min(when(col("m") === j, p)).as(s"p$j")): _*)
+      .select((col("vec_id") +: cell.map(c => col(c).as("cell")).toSeq) :+
+        explode(array((0 until 8).map(j =>
+          struct(lit(j.toLong).as("m"),
+            pmod(col(s"p$j"), lit(4L)).as("code"))): _*)).as("mc"): _*)
+      .select((col("vec_id") +: cell.map(_ => col("cell")).toSeq) ++
+        Seq(col("mc.m").as("m"), col("mc.code").as("code")): _*)
+  }
+
+  /** Per-probe ADC distance table: probe subvectors (keys…, pm, psv,
+    * psn2) against the broadcast codebook → (keys…, pm, cid, pdist), at
+    * most |probes|·32 rows per routed cell. */
+  private def distTable(probeSub: DataFrame, cb: DataFrame,
+      keys: String*): DataFrame =
+    probeSub.join(broadcast(cb), col("pm") === col("cm"))
+      .select(keys.map(col) ++
+        Seq(col("pm"), col("cid"), subDist("psn2", "psv").as("pdist")): _*)
+
+  /** [[distTable]] for the corpus-member probes (vec_id < 5), whose
+    * subvectors are `sub`'s own rows, keyed `pid`. */
+  private def memberDtab(sub: DataFrame, cb: DataFrame, pid: String): DataFrame =
+    distTable(sub.filter(col("vec_id") < 5)
+      .select(col("vec_id").as(pid), col("m").as("pm"),
+        col("sv").as("psv"), col("sn2").as("psn2")), cb, pid)
+
+  /** Member distance tables joined with each probe's routed cell(s):
+    * (probe_id, pcell, pm, cid, pdist). `assigned` carries probe_id and
+    * the column `cell` is read from. */
+  private def memberScanTable(sub: DataFrame, cb: DataFrame,
+      assigned: DataFrame, cell: Column): DataFrame =
+    memberDtab(sub, cb, "pid")
+      .join(broadcast(assigned), col("pid") === col("probe_id"))
+      .select(col("probe_id"), cell, col("pm"), col("cid"), col("pdist"))
+
+  /** Distance tables of probes residualized against their routed cell:
+    * `pr` carries (probe_id, pcell, prv). */
+  private def probeDtabFromResiduals(pr: DataFrame, cb: DataFrame): DataFrame =
+    distTable(subspaces(pr, Seq("probe_id", "pcell"), "prv", "pm", "psv", "psn2"),
+      cb, "probe_id", "pcell")
+
+  /** Per-label cell statistics (c_label, n_l, cs = Σqv): one aggregate
+    * to ≤ |cells| rows. */
+  private def labelCells(q: DataFrame): DataFrame = {
+    val sumCols = (0 until 64).map(i => sum(element_at(col("qv"), i + 1)).as(s"s$i"))
+    q.groupBy("label")
+      .agg(count(lit(1)).as("n_l"), sumCols: _*)
+      .select(col("label").as("c_label"), col("n_l"),
+        array((0 until 64).map(i => col(s"s$i")): _*).as("cs"))
+  }
+
+  /** The probes (vec_id < 5) of a label-cell index: (probe_id, p3). */
+  private def labelProbes(q: DataFrame): DataFrame =
+    q.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("probe_id"), col("qv").as("p3"))
+
+  /** Cleared-denominator routing (the simAnnIvf rule): rank every cell
+    * by the integer |n_l·p − S_l|², no division, ties on the label, and
+    * keep the ranks `keep` admits → (probe_id, c_label). */
+  private def routeCleared(probes: DataFrame, cents: DataFrame,
+      keep: Column): DataFrame = {
+    def scaled = zip_with(col("p3"), col("cs"), (x, s_) => col("n_l") * x - s_)
+    val w = Window.partitionBy("probe_id").orderBy(asc("rdist"), asc("c_label"))
+    probes.crossJoin(broadcast(cents))
+      .withColumn("rdist", qdot(scaled, scaled))
+      .withColumn("rk", row_number().over(w))
+      .filter(keep)
+      .select(col("probe_id"), col("c_label"))
+  }
+
+  /** Two fixed Lloyd rounds (the emb_kmeans blocks) from `cents0`. */
+  private def lloydTwoRounds(q: DataFrame, cents0: DataFrame): DataFrame = {
+    val c1 = withCn2(KMeans.update(KMeans.assign(q, cents0), 64), "c")
+    withCn2(KMeans.update(KMeans.assign(q, c1), 64), "c")
+  }
+
+  /** Trained coarse cells: the quantized frame snapshotted once, and
+    * its two-round k-means (k = 8) from the vec_id < 8 seeds. */
+  private def trainedCells(emb: DataFrame): (DataFrame, DataFrame) = {
+    val q = Sessions.snapshot(KMeans.quantize(emb))._2
+    (q, lloydTwoRounds(q, withCn2(q.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cluster"), transform(col("qv"), _ * 1000L).as("c")), "c")))
+  }
+
+  /** Residual against the routed centroid: `assigned` carries (vec_id,
+    * cluster, qv), `cents` the (cluster, c) centroids, broadcast; the
+    * residual 1000·qv − c is an exact micro-unit vector named `rv`. */
+  private def routedResidual(assigned: DataFrame, cents: DataFrame,
+      id: Column, cell: Column, rv: String): DataFrame =
+    assigned.join(broadcast(cents.select(col("cluster").as("rc"), col("c"))),
+        col("cluster") === col("rc"))
+      .select(id, cell, VecOps.zipScaleSub(col("qv"), col("c"), 1000L).as(rv))
+
+  /** Write `df` as the cell-partitioned parquet table `name`, repartitioned
+    * on the cell key first so each cell directory gets ~one file. */
+  private[graft] def saveByCell(df: DataFrame, name: String,
+      mode: String = "overwrite"): Unit =
+    df.repartition(col("cell"))
+      .write.mode(mode).format("parquet")
+      .partitionBy("cell").saveAsTable(name)
+
+  /** A new codes generation: `base` written as the cell-partitioned table
+    * `name`, then ONE dynamic-partition-overwrite job replaces exactly
+    * the partitions `rewrite` carries. A partition absent from `rewrite`
+    * keeps its files as they are. */
+  private def rewriteCells(s: SparkSession, name: String, base: DataFrame,
+      rewrite: => DataFrame): Unit = {
+    saveByCell(base, name)
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val prev = s.conf.get(mode, "STATIC")
+    s.conf.set(mode, "DYNAMIC")
+    try rewrite.select(col("vec_id"), col("m"), col("code"), col("cell"))
+      .repartition(col("cell"))
+      .write.mode("overwrite").insertInto(name)
+    finally s.conf.set(mode, prev)
+  }
+
   /** Product-quantization encode (Jégou et al. 2011, "Product
     * Quantization for Nearest Neighbor Search") — the vector-compression
     * step behind billion-scale ANN indexes: the 64-dim embedding splits
@@ -399,26 +585,29 @@ object SimilarityQueries {
     * codes never re-read the corpus. Reference principle: fixed-width
     * per-key storage, `/root/reference/src/dist_map.h:36-47`. */
   val embPqCodes: Q = (s, d) => {
-    val q = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        quantizeVecMilli(col("embedding")).as("qv"))
-    val sub = q
-      .select(col("vec_id"), explode(array((0 until 8).map(m =>
-        struct(lit(m.toLong).as("m"),
-          slice(col("qv"), m * 8 + 1, 8).as("sv"))): _*)).as("ms"))
-      .select(col("vec_id"), col("ms.m").as("m"), col("ms.sv").as("sv"))
-      .withColumn("sn2", qnorm2(col("sv")))
-    val cb = sub.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("m").as("cm"),
-        col("sv").as("cv"), col("sn2").as("cn2"))
-    val dist = col("sn2") - lit(2L) * qdot(col("sv"), col("cv")) + col("cn2")
-    sub.join(broadcast(cb), col("m") === col("cm"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(dist * 4L + col("cid")).as("p"))
+    val sub = subspaces(milliVecs(s, d, "vec_id"), Seq("vec_id"), "qv")
+    packedArgmin(sub, seedCodebook(sub), subDist(), "vec_id", "m")
       .select(col("vec_id"), col("m").as("subspace"),
         pmod(col("p"), lit(4L)).as("code"),
         call_function("div", col("p"), lit(4L)).as("err"))
       .orderBy("vec_id", "subspace")
+  }
+
+  /** Per-dim exact floor mean, floor(a / n) for n ≥ 1. */
+  private def floorMean(a: Column, n: Column): Column =
+    call_function("div", a - pmod(a, n), n)
+
+  /** Codebook update: per (subspace, cluster), the count and the per-dim
+    * mean `mean(Σsv_d)` — an interpreted transform over ≤ 32 final rows
+    * (the 64 KB codegen rule) — as a (cm, cid, cv, cn2) codebook. */
+  private def updateCodebook(assigned: DataFrame,
+      mean: Column => Column): DataFrame = {
+    val sums = (0 until 8).map(i => sum(element_at(col("sv"), i + 1)).as(s"s$i"))
+    withCn2(assigned.groupBy(col("m"), col("cluster"))
+      .agg(count(lit(1)).as("n"), sums: _*)
+      .select(col("m").as("cm"), col("cluster").as("cid"),
+        transform(array((0 until 8).map(i => col(s"s$i")): _*), mean)
+          .as("cv")), "cv")
   }
 
   /** PQ encode against TRAINED codebooks — [[embPqCodes]] with the seed
@@ -437,7 +626,8 @@ object SimilarityQueries {
     * micro² quantization error against the TRAINED codebook — at the
     * seed codebook it would be 10⁶× [[embPqCodes]]' err; training can
     * only shrink the per-cluster sum of it (the Lloyd descent
-    * property).
+    * property). The mixed millunit/micro scale is why its assign/update
+    * stay apart from [[ivfpqTrainAll]]'s single-scale residual ones.
     *
     * Scale shape — BETTER than emb_kmeans's: every assignment is an
     * EQUI join on the subspace index (m === cm, a broadcast hash join —
@@ -447,47 +637,19 @@ object SimilarityQueries {
     * broadcast-pinned. Three corpus passes total (two training rounds +
     * the final encode), each one scan + one in-stage collapse. */
   val embPqTrainedCodes: Q = (s, d) => {
-    val q = org.apache.spark.sql.graftx.Sessions.snapshot(
-      Tables.embeddings(s, d)
-        .select(col("vec_id"), quantizeVecMilli(col("embedding")).as("qv")))._2
-    val sub = q
-      .select(col("vec_id"), explode(array((0 until 8).map(m =>
-        struct(lit(m.toLong).as("m"),
-          slice(col("qv"), m * 8 + 1, 8).as("sv"))): _*)).as("ms"))
-      .select(col("vec_id"), col("ms.m").as("m"), col("ms.sv").as("sv"))
-      .withColumn("sn2", qnorm2(col("sv")))
-    def withCn2(cb: DataFrame): DataFrame =
-      cb.withColumn("cn2", qdot(col("cv"), col("cv")))
-    val c0 = withCn2(sub.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("m").as("cm"),
-        transform(col("sv"), _ * 1000L).as("cv")))
-    // Assignment: the KMeans.assign shape per subspace — packed-long
-    // argmin over the broadcast codebook, sv riding as a grouping key.
-    def assignSub(cb: DataFrame): DataFrame = {
-      val dist = lit(1000000L) * col("sn2") -
-        lit(2000L) * qdot(col("sv"), col("cv")) + col("cn2")
-      sub.join(broadcast(cb), col("m") === col("cm"))
-        .groupBy(col("vec_id"), col("m"), col("sv"))
-        .agg(min(dist * 4L + col("cid")).as("p"))
+    val q = Sessions.snapshot(milliVecs(s, d, "vec_id"))._2
+    val sub = subspaces(q, Seq("vec_id"), "qv")
+    val dist = lit(1000000L) * col("sn2") -
+      lit(2000L) * qdot(col("sv"), col("cv")) + col("cn2")
+    def assignSub(cb: DataFrame): DataFrame =
+      packedArgmin(sub, cb, dist, "vec_id", "m", "sv")
         .select(col("vec_id"), col("m"), col("sv"),
           pmod(col("p"), lit(4L)).as("cluster"),
           call_function("div", col("p"), lit(4L)).as("dist"))
-    }
-    // Update: the KMeans.update shape — floor-mean micro centroids via
-    // an interpreted transform over ≤ 32 final rows (the 64 KB rule).
-    def updateSub(assigned: DataFrame): DataFrame = {
-      val sums = (0 until 8).map(i => sum(element_at(col("sv"), i + 1)).as(s"s$i"))
-      withCn2(assigned.groupBy(col("m"), col("cluster"))
-        .agg(count(lit(1)).as("n"), sums: _*)
-        .select(col("m").as("cm"), col("cluster").as("cid"),
-          transform(array((0 until 8).map(i => col(s"s$i")): _*),
-            sd => { val a = sd * 1000L
-                    call_function("div", a - pmod(a, col("n")), col("n")) })
-            .as("cv")))
-    }
-    val c1 = updateSub(assignSub(c0))
-    val c2 = updateSub(assignSub(c1))
-    assignSub(c2)
+    def updateSub(assigned: DataFrame): DataFrame =
+      updateCodebook(assigned, sd => floorMean(sd * 1000L, col("n")))
+    val c0 = trainingSeed(sub, transform(col("sv"), _ * 1000L))
+    assignSub(updateSub(assignSub(updateSub(assignSub(c0)))))
       .select(col("vec_id"), col("m").as("subspace"),
         col("cluster").as("code"), col("dist").as("err"))
       .orderBy("vec_id", "subspace")
@@ -511,51 +673,27 @@ object SimilarityQueries {
     * 64-dim dot per vector, the entire point of PQ at 100 TB (codes are
     * ~30× smaller than the vectors; a deployment scans codes clustered
     * by IVF cell and batches probes). Both forced broadcasts are
-    * bounded by the unique-key probe/seed filters (allowlisted). */
+    * bounded by the unique-key probe/seed filters (allowlisted).
+    *
+    * Codes aggregate by vec_id ALONE ([[encodeWide]]: 8 conditional
+    * packed-mins, one per subspace), then re-explode AFTER the exchange —
+    * deliberately not the (vec_id, m) grouping emb_pq_codes outputs. The
+    * first 100× probe run failed this query's records gate at 309× on a
+    * plan that grouped by (vec_id, m): whether the downstream (probe,
+    * vec) partial aggregation collapses then depends on the PARTITION
+    * LAYOUT — at 1× AQE coalesced the codes exchange to few partitions
+    * so a vector's 8 subspace rows stayed together (partials collapsed
+    * 40n → 5n), while at 100× the (vec_id, m) hash scattered them and
+    * every pair shipped ~8 partials. Grouping by vec_id makes the
+    * collapse STRUCTURAL: the exchange carries one 8-column row per
+    * vector, the post-exchange explode keeps a vector's 8 rows in one
+    * partition by construction, and the ADC partial aggregation
+    * collapses to |probes| partials per vector at every scale. */
   val simPqAdcTopk: Q = (s, d) => {
-    val q = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        quantizeVecMilli(col("embedding")).as("qv"))
-    val sub = q
-      .select(col("vec_id"), explode(array((0 until 8).map(m =>
-        struct(lit(m.toLong).as("m"),
-          slice(col("qv"), m * 8 + 1, 8).as("sv"))): _*)).as("ms"))
-      .select(col("vec_id"), col("ms.m").as("m"), col("ms.sv").as("sv"))
-      .withColumn("sn2", qnorm2(col("sv")))
-    val cb = sub.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("m").as("cm"),
-        col("sv").as("cv"), col("sn2").as("cn2"))
-    val dist = col("sn2") - lit(2L) * qdot(col("sv"), col("cv")) + col("cn2")
-    // Codes aggregate by vec_id ALONE (8 conditional packed-mins, one
-    // per subspace), then re-explode AFTER the exchange — deliberately
-    // not the (vec_id, m) grouping emb_pq_codes outputs. The first 100×
-    // probe run failed this query's records gate at 309× on a plan that
-    // grouped by (vec_id, m): whether the downstream (probe, vec)
-    // partial aggregation collapses then depends on the PARTITION
-    // LAYOUT — at 1× AQE coalesced the codes exchange to few partitions
-    // so a vector's 8 subspace rows stayed together (partials collapsed
-    // 40n → 5n), while at 100× the (vec_id, m) hash scattered them and
-    // every pair shipped ~8 partials. Grouping by vec_id makes the
-    // collapse STRUCTURAL: the exchange carries one 8-column row per
-    // vector, the post-exchange explode keeps a vector's 8 rows in one
-    // partition by construction, and the ADC partial aggregation
-    // collapses to |probes| partials per vector at every scale.
-    val codes = sub.join(broadcast(cb), col("m") === col("cm"))
-      .groupBy(col("vec_id"))
-      .agg(min(when(col("m") === 0, dist * 4L + col("cid"))).as("p0"),
-        (1 until 8).map(j =>
-          min(when(col("m") === j, dist * 4L + col("cid"))).as(s"p$j")): _*)
-      .select(col("vec_id"), explode(array((0 until 8).map(j =>
-        struct(lit(j.toLong).as("m"),
-          pmod(col(s"p$j"), lit(4L)).as("code"))): _*)).as("mc"))
-      .select(col("vec_id"), col("mc.m").as("m"), col("mc.code").as("code"))
-    val dtab = sub.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("m").as("pm"),
-        col("sv").as("psv"), col("sn2").as("psn2"))
-      .join(broadcast(cb), col("pm") === col("cm"))
-      .select(col("probe_id"), col("pm"), col("cid"),
-        (col("psn2") - lit(2L) * qdot(col("psv"), col("cv")) + col("cn2"))
-          .as("pdist"))
+    val sub = subspaces(milliVecs(s, d, "vec_id"), Seq("vec_id"), "qv")
+    val cb = seedCodebook(sub)
+    val codes = encodeWide(sub, cb, None)
+    val dtab = memberDtab(sub, cb, "probe_id")
     val w = Window.partitionBy("probe_id").orderBy(asc("adist"), asc("cand_id"))
     codes.join(broadcast(dtab),
         col("m") === col("pm") && col("code") === col("cid") &&
@@ -573,7 +711,7 @@ object SimilarityQueries {
     * retrieval scan (Jégou et al. 2011 §IV-B, "IVFADC") — returns the
     * codes table (every vector's 8 PQ codes + its IVF cell) and the
     * per-probe scan table (distance tables joined with each probe's
-    * routed cell). Factored out of [[simIvfPqTopk]] so the volume probe
+    * routed cells). Factored out of [[simIvfPqTopk]] so the volume probe
     * can snapshot the index once and measure the SCAN in isolation —
     * the quantity whose sub-linearity (probed-cell fraction of the full
     * ADC scan) is the entire point of composing IVF with PQ.
@@ -582,9 +720,16 @@ object SimilarityQueries {
     * coarse quantizer is k-means trained ([[graft.operators.KMeans
     * .lloyd]] is that trainer; labels stand in as the id-stable cell
     * assignment so the whole query stays one deterministic pass,
-    * exactly oracle-able). Probes route to the nearest cell centroid in
-    * cleared-denominator integer arithmetic (|n_l·p − S_l|², no
-    * division — the simAnnIvf rule), nprobe = 1.
+    * exactly oracle-able). Probes route to the `nprobe` nearest cell
+    * centroids in cleared-denominator integer arithmetic (|n_l·p − S_l|²,
+    * no division — the simAnnIvf rule). nprobe is THE IVF recall dial
+    * (Jégou et al. §IV-B: recall lost to cell routing is bought back by
+    * scanning the nprobe nearest cells, multiplying scan work by
+    * nprobe/|cells| of the corpus, never all of it). The scan table
+    * simply carries one row set per (probe, routed cell); the ADC scan's
+    * (subspace, code, CELL) join key needs no change — cells partition
+    * the corpus, so candidates from different probed cells are disjoint
+    * and the 8-lookup sums stay per-candidate exact.
     *
     * Scale shape, piece by piece:
     *  - codes: the [[simPqAdcTopk]] wide-row discipline — the one
@@ -593,8 +738,8 @@ object SimilarityQueries {
     *    so a vector's re-exploded subspace rows stay co-partitioned by
     *    construction at every scale;
     *  - centroids: one aggregate to ≤ |cells| rows (10 here), broadcast;
-    *  - the scan table: ≤ |probes|·8·4 = 160 distance rows joined with
-    *    the ≤ |probes|-row routing — broadcast-pinned;
+    *  - the scan table: ≤ |probes|·nprobe·32 distance rows joined with
+    *    the routing — broadcast-pinned;
     *  - the ADC scan itself ([[ivfpqScan]]): a broadcast hash join whose
     *    key includes the CELL, so only probed-cell candidates produce
     *    join output — the scan does |probes-in-cell| O(1) lookups per
@@ -603,88 +748,26 @@ object SimilarityQueries {
     *    never read at all. Reference principle: a point-get routes to
     *    one owner shard instead of scanning all of them,
     *    `/root/reference/src/dist_map.h:121-124`. */
-  private[graft] def ivfpqIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    ivfpqIndexNprobe(s, d, 1)
-
-  /** [[ivfpqIndex]] with an explicit probed-cell count — nprobe is THE
-    * IVF recall dial (Jégou et al. §IV-B: recall lost to cell routing is
-    * bought back by scanning the nprobe nearest cells, multiplying scan
-    * work by nprobe/|cells| of the corpus, never all of it). The scan
-    * table simply carries one row set per (probe, routed cell); the ADC
-    * scan's (subspace, code, CELL) join key needs no change — cells
-    * partition the corpus, so candidates from different probed cells are
-    * disjoint and the 8-lookup sums stay per-candidate exact. */
   private[graft] def ivfpqIndexNprobe(s: SparkSession, d: String,
       nprobe: Int): (DataFrame, DataFrame) = {
-    val q = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-        quantizeVecMilli(col("embedding")).as("qv"))
-    val sub = q
-      .select(col("vec_id"), col("label"), explode(array((0 until 8).map(m =>
-        struct(lit(m.toLong).as("m"),
-          slice(col("qv"), m * 8 + 1, 8).as("sv"))): _*)).as("ms"))
-      .select(col("vec_id"), col("label"), col("ms.m").as("m"), col("ms.sv").as("sv"))
-      .withColumn("sn2", qnorm2(col("sv")))
-    val cb = sub.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("m").as("cm"),
-        col("sv").as("cv"), col("sn2").as("cn2"))
-    val dist = col("sn2") - lit(2L) * qdot(col("sv"), col("cv")) + col("cn2")
-    // One wide row per vector through the exchange (the sim_pq_adc_topk
-    // structural-collapse rule); label rides as a second grouping key —
-    // functionally dependent on vec_id, so the group is unchanged and a
-    // vector's rows still hash to one partition.
-    val codes = sub.join(broadcast(cb), col("m") === col("cm"))
-      .groupBy(col("vec_id"), col("label"))
-      .agg(min(when(col("m") === 0, dist * 4L + col("cid"))).as("p0"),
-        (1 until 8).map(j =>
-          min(when(col("m") === j, dist * 4L + col("cid"))).as(s"p$j")): _*)
-      .select(col("vec_id"), col("label").as("cell"),
-        explode(array((0 until 8).map(j =>
-          struct(lit(j.toLong).as("m"),
-            pmod(col(s"p$j"), lit(4L)).as("code"))): _*)).as("mc"))
-      .select(col("vec_id"), col("cell"), col("mc.m").as("m"),
-        col("mc.code").as("code"))
-    // Coarse routing: nearest per-cell centroid by cleared-denominator
-    // integer distance (simAnnIvf), millunit scale throughout.
-    val sumCols = (0 until 64).map(i => sum(element_at(col("qv"), i + 1)).as(s"s$i"))
-    val cents = q.groupBy("label")
-      .agg(count(lit(1)).as("n_l"), sumCols: _*)
-      .select(col("label").as("c_label"), col("n_l"),
-        array((0 until 64).map(i => col(s"s$i")): _*).as("cs"))
-    val probes = q.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("qv").as("p3"))
-    val rdist = qdot(zip_with(col("p3"), col("cs"), (x, s_) => col("n_l") * x - s_),
-                     zip_with(col("p3"), col("cs"), (x, s_) => col("n_l") * x - s_))
-    val wN = Window.partitionBy("probe_id").orderBy(asc("rdist"), asc("c_label"))
-    val assigned = probes.crossJoin(broadcast(cents))
-      .withColumn("rdist", rdist)
-      .withColumn("rk", row_number().over(wN))
-      .filter(col("rk") <= nprobe)
-      .select(col("probe_id"), col("c_label"))
-    // Per-probe distance tables (the simPqAdcTopk dtab) + the routed cell(s).
-    val dtab = sub.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("pid"), col("m").as("pm"),
-        col("sv").as("psv"), col("sn2").as("psn2"))
-      .join(broadcast(cb), col("pm") === col("cm"))
-      .select(col("pid"), col("pm"), col("cid"),
-        (col("psn2") - lit(2L) * qdot(col("psv"), col("cv")) + col("cn2"))
-          .as("pdist"))
-    val scanTab = dtab.join(broadcast(assigned), col("pid") === col("probe_id"))
-      .select(col("probe_id"), col("c_label").as("pcell"),
-        col("pm"), col("cid"), col("pdist"))
-    (codes, scanTab)
+    val q = milliVecs(s, d, "vec_id", "label")
+    val sub = subspaces(q, Seq("vec_id", "label"), "qv")
+    val cb = seedCodebook(sub)
+    val assigned = routeCleared(labelProbes(q), labelCells(q), col("rk") <= nprobe)
+    (encodeWide(sub, cb, Some("label")),
+      memberScanTable(sub, cb, assigned, col("c_label").as("pcell")))
   }
 
-  /** The ADC candidate stage over an IVF×PQ index (see [[ivfpqIndex]]):
-    * candidates match on (subspace, code, CELL), so only probed-cell rows
-    * produce join output; adist = the 8-lookup sum; top-`r` per probe,
-    * self excluded, (adist asc, cand asc) ties. `r = 5` IS the declared
-    * scan ([[ivfpqScan]]); `r = RerankShortlist` feeds the exact re-rank
-    * refine stage ([[simIvfPqRerankTopk]]). `pre` (default identity)
-    * transforms the joined stream BEFORE the per-candidate aggregation —
-    * the delete query's tombstone anti-join rides here, ABOVE the
-    * DPP-generating equi-join, so the partitioned codes scan prunes
-    * exactly as without it. */
+  /** The ADC candidate stage over an IVF×PQ index (see
+    * [[ivfpqIndexNprobe]]): candidates match on (subspace, code, CELL),
+    * so only probed-cell rows produce join output; adist = the 8-lookup
+    * sum; top-`r` per probe, self excluded, (adist asc, cand asc) ties.
+    * `r = 5` IS the declared scan ([[ivfpqScan]]); `r = RerankShortlist`
+    * feeds the exact re-rank refine stage ([[simIvfPqRerankTopk]]).
+    * `pre` (default identity) transforms the joined stream BEFORE the
+    * per-candidate aggregation — the delete query's tombstone anti-join
+    * rides here, ABOVE the DPP-generating equi-join, so the partitioned
+    * codes scan prunes exactly as without it. */
   private[graft] def ivfpqCandidates(codes: DataFrame, scanTab: DataFrame,
       r: Int, pre: DataFrame => DataFrame = identity): DataFrame = {
     val w = Window.partitionBy("probe_id").orderBy(asc("adist"), asc("cand_id"))
@@ -705,15 +788,15 @@ object SimilarityQueries {
     ivfpqCandidates(codes, scanTab, 5)
       .orderBy("probe_id", "cand_id")
 
-  /** The declared IVF×PQ retrieval query — index build + routed ADC scan
-    * in one plan (round-13 verdict #1; the deployment shape
-    * [[simPqAdcTopk]]'s scaladoc promises: "a deployment scans codes
-    * clustered by IVF cell"). Results are approximate TWICE (cell
+  /** The declared IVF×PQ retrieval query — index build (nprobe = 1) +
+    * routed ADC scan in one plan (round-13 verdict #1; the deployment
+    * shape [[simPqAdcTopk]]'s scaladoc promises: "a deployment scans
+    * codes clustered by IVF cell"). Results are approximate TWICE (cell
     * routing can miss a neighbor outside the probed cell; ADC distances
     * are quantized) — the oracle computes the identical composition so
     * the check stays exact. */
   val simIvfPqTopk: Q = (s, d) => {
-    val (codes, scanTab) = ivfpqIndex(s, d)
+    val (codes, scanTab) = ivfpqIndexNprobe(s, d, 1)
     ivfpqScan(codes, scanTab)
   }
 
@@ -736,7 +819,7 @@ object SimilarityQueries {
     * at exactly 10⁶× the plain adist scale, micro² vs millunit² — a
     * closed-form identity PqSpec pins against [[simPqAdcTopk]].
     *
-    * Scale shape = [[ivfpqIndex]] plus one proven broadcast: the ≤
+    * Scale shape = [[ivfpqIndexNprobe]] plus one proven broadcast: the ≤
     * |cells|-row centroid table joins the corpus stream once to form
     * residuals (label-grouped aggregate — provably bounded, no
     * allowlist slot); codes keep the wide-row collapse keyed by
@@ -744,79 +827,32 @@ object SimilarityQueries {
     * bounded. The probe's residual is computed against its ROUTED
     * cell's centroid — probe-side only, ≤ |probes| rows. */
   private[graft] def ivfpqResidualIndex(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val q = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-        quantizeVecMilli(col("embedding")).as("qv"))
+    val q = milliVecs(s, d, "vec_id", "label")
     // ONE per-cell aggregate feeds both consumers: (n_l, cs) for the
     // cleared-denominator routing, cmean (floor-mean micro-units) for
     // the residuals. The division lambda is interpreted over ≤ |cells|
     // rows (the emb_kmeans update rule).
-    val sumCols = (0 until 64).map(i => sum(element_at(col("qv"), i + 1)).as(s"s$i"))
-    val cents = q.groupBy("label")
-      .agg(count(lit(1)).as("n_l"), sumCols: _*)
-      .select(col("label").as("c_label"), col("n_l"),
-        array((0 until 64).map(i => col(s"s$i")): _*).as("cs"))
-      .withColumn("cmean",
-        transform(col("cs"), sd => {
-          val a = sd * 1000L
-          call_function("div", a - pmod(a, col("n_l")), col("n_l")) }))
+    val cents = labelCells(q)
+      .withColumn("cmean", transform(col("cs"), sd => floorMean(sd * 1000L, col("n_l"))))
     // Residual stream: one proven broadcast join (label-grouped
     // aggregate) against the corpus scan; zip_with runs once per row —
     // the quantize-transform cost class, not the per-pair one.
     val rq = q.join(broadcast(cents.select(col("c_label").as("rl"), col("cmean"))),
         col("label") === col("rl"))
       .select(col("vec_id"), col("label"),
-        graft.functions.VecOps.zipScaleSub(col("qv"), col("cmean"), 1000L).as("rv"))
-    val sub = rq
-      .select(col("vec_id"), col("label"), explode(array((0 until 8).map(m =>
-        struct(lit(m.toLong).as("m"),
-          slice(col("rv"), m * 8 + 1, 8).as("sv"))): _*)).as("ms"))
-      .select(col("vec_id"), col("label"), col("ms.m").as("m"), col("ms.sv").as("sv"))
-      .withColumn("sn2", qnorm2(col("sv")))
-    val cb = sub.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("m").as("cm"),
-        col("sv").as("cv"), col("sn2").as("cn2"))
-    val dist = col("sn2") - lit(2L) * qdot(col("sv"), col("cv")) + col("cn2")
-    val codes = sub.join(broadcast(cb), col("m") === col("cm"))
-      .groupBy(col("vec_id"), col("label"))
-      .agg(min(when(col("m") === 0, dist * 4L + col("cid"))).as("p0"),
-        (1 until 8).map(j =>
-          min(when(col("m") === j, dist * 4L + col("cid"))).as(s"p$j")): _*)
-      .select(col("vec_id"), col("label").as("cell"),
-        explode(array((0 until 8).map(j =>
-          struct(lit(j.toLong).as("m"),
-            pmod(col(s"p$j"), lit(4L)).as("code"))): _*)).as("mc"))
-      .select(col("vec_id"), col("cell"), col("mc.m").as("m"),
-        col("mc.code").as("code"))
-    // Routing — identical to ivfpqIndex (cleared-denominator metric).
-    val probes = q.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("qv").as("p3"))
-    val rdist = qdot(zip_with(col("p3"), col("cs"), (x, s_) => col("n_l") * x - s_),
-                     zip_with(col("p3"), col("cs"), (x, s_) => col("n_l") * x - s_))
-    val wN = Window.partitionBy("probe_id").orderBy(asc("rdist"), asc("c_label"))
-    val assigned = probes.crossJoin(broadcast(cents.select(col("c_label"), col("n_l"), col("cs"))))
-      .withColumn("rdist", rdist)
-      .withColumn("rk", row_number().over(wN))
-      .filter(col("rk") === 1)
-      .select(col("probe_id"), col("c_label"))
+        VecOps.zipScaleSub(col("qv"), col("cmean"), 1000L).as("rv"))
+    val sub = subspaces(rq, Seq("vec_id", "label"), "rv")
+    val cb = seedCodebook(sub)
+    val probes = labelProbes(q)
+    val assigned = routeCleared(probes,
+      cents.select(col("c_label"), col("n_l"), col("cs")), col("rk") === 1)
     // Probe residual vs the ROUTED cell's centroid (≤ |probes| rows).
     val pr = probes.join(broadcast(assigned), Seq("probe_id"))
       .join(broadcast(cents.select(col("c_label").as("pl"), col("cmean").as("pcm"))),
         col("c_label") === col("pl"))
       .select(col("probe_id"), col("c_label").as("pcell"),
-        graft.functions.VecOps.zipScaleSub(col("p3"), col("pcm"), 1000L).as("prv"))
-    val dtab = pr
-      .select(col("probe_id"), col("pcell"), explode(array((0 until 8).map(m =>
-        struct(lit(m.toLong).as("m"),
-          slice(col("prv"), m * 8 + 1, 8).as("sv"))): _*)).as("ms"))
-      .select(col("probe_id"), col("pcell"), col("ms.m").as("pm"),
-        col("ms.sv").as("psv"))
-      .withColumn("psn2", qnorm2(col("psv")))
-      .join(broadcast(cb), col("pm") === col("cm"))
-      .select(col("probe_id"), col("pcell"), col("pm"), col("cid"),
-        (col("psn2") - lit(2L) * qdot(col("psv"), col("cv")) + col("cn2"))
-          .as("pdist"))
-    (codes, dtab)
+        VecOps.zipScaleSub(col("p3"), col("pcm"), 1000L).as("prv"))
+    (encodeWide(sub, cb, Some("label")), probeDtabFromResiduals(pr, cb))
   }
 
   /** The declared residual IVFADC query — see [[ivfpqResidualIndex]];
@@ -844,61 +880,24 @@ object SimilarityQueries {
     * centroid cross join (two Lloyd rounds + the final cell
     * assignment), each collapsed in-stage by the map-side packed-min
     * HashAggregate — all four bounded crosses (incl. the ≤ 5-row probe
-    * routing) allowlisted; the PQ/ADC half is [[ivfpqIndex]]'s shape
-    * with `cluster` as the cell (a per-vector constant, so the codes
-    * exchange stays layout-independent); the scan is [[ivfpqScan]],
-    * whose cell-key bound the volume probe measures exactly on the
-    * sibling ivfpq entries (this query's kmeans passes are gated by the
-    * emb_kmeans entry — same blocks, same plans). */
+    * routing) allowlisted; the PQ/ADC half is [[ivfpqIndexNprobe]]'s
+    * shape with `cluster` as the cell (a per-vector constant, so the
+    * codes exchange stays layout-independent); the scan is
+    * [[ivfpqScan]], whose cell-key bound the volume probe measures
+    * exactly on the sibling ivfpq entries (this query's kmeans passes
+    * are gated by the emb_kmeans entry — same blocks, same plans). */
   private[graft] def ivfpqTrainedIndex(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import graft.operators.KMeans
-    val q = org.apache.spark.sql.graftx.Sessions.snapshot(
-      KMeans.quantize(Tables.embeddings(s, d)))._2
-    val cents0 = q.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cluster"), transform(col("qv"), _ * 1000L).as("c"))
-      .withColumn("cn2", qdot(col("c"), col("c")))
-    val c1 = KMeans.update(KMeans.assign(q, cents0), 64)
-      .withColumn("cn2", qdot(col("c"), col("c")))
-    val c2 = KMeans.update(KMeans.assign(q, c1), 64)
-      .withColumn("cn2", qdot(col("c"), col("c")))
+    val (q, c2) = trainedCells(Tables.embeddings(s, d))
     // Cells: the whole corpus assigned under the trained table — assign
     // carries qv through, so the PQ half reads this frame directly (no
     // corpus-corpus re-join).
-    val cells = KMeans.assign(q, c2)
-    val sub = cells
-      .select(col("vec_id"), col("cluster"), explode(array((0 until 8).map(m =>
-        struct(lit(m.toLong).as("m"),
-          slice(col("qv"), m * 8 + 1, 8).as("sv"))): _*)).as("ms"))
-      .select(col("vec_id"), col("cluster"), col("ms.m").as("m"), col("ms.sv").as("sv"))
-      .withColumn("sn2", qnorm2(col("sv")))
-    val cb = sub.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("m").as("cm"),
-        col("sv").as("cv"), col("sn2").as("cn2"))
-    val dist = col("sn2") - lit(2L) * qdot(col("sv"), col("cv")) + col("cn2")
-    val codes = sub.join(broadcast(cb), col("m") === col("cm"))
-      .groupBy(col("vec_id"), col("cluster"))
-      .agg(min(when(col("m") === 0, dist * 4L + col("cid"))).as("p0"),
-        (1 until 8).map(j =>
-          min(when(col("m") === j, dist * 4L + col("cid"))).as(s"p$j")): _*)
-      .select(col("vec_id"), col("cluster").as("cell"),
-        explode(array((0 until 8).map(j =>
-          struct(lit(j.toLong).as("m"),
-            pmod(col(s"p$j"), lit(4L)).as("code"))): _*)).as("mc"))
-      .select(col("vec_id"), col("cell"), col("mc.m").as("m"),
-        col("mc.code").as("code"))
+    val sub = subspaces(KMeans.assign(q, c2), Seq("vec_id", "cluster"), "qv")
+    val cb = seedCodebook(sub)
     // Probe routing: the SAME assignment operator on the probe subset.
     val assigned = KMeans.assign(q.filter(col("vec_id") < 5), c2)
       .select(col("vec_id").as("probe_id"), col("cluster").as("pcell"))
-    val dtab = sub.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("pid"), col("m").as("pm"),
-        col("sv").as("psv"), col("sn2").as("psn2"))
-      .join(broadcast(cb), col("pm") === col("cm"))
-      .select(col("pid"), col("pm"), col("cid"),
-        (col("psn2") - lit(2L) * qdot(col("psv"), col("cv")) + col("cn2"))
-          .as("pdist"))
-      .join(broadcast(assigned), col("pid") === col("probe_id"))
-      .select(col("probe_id"), col("pcell"), col("pm"), col("cid"), col("pdist"))
-    (codes, dtab)
+    (encodeWide(sub, cb, Some("cluster")),
+      memberScanTable(sub, cb, assigned, col("pcell")))
   }
 
   /** The declared trained-cell IVFADC query — see [[ivfpqTrainedIndex]]. */
@@ -934,7 +933,7 @@ object SimilarityQueries {
     * shortlist row; no corpus-side exchange is added beyond the scan's
     * own ([[ivfpqCandidates]] keeps the wide-row codes collapse). */
   val simIvfPqRerankTopk: Q = (s, d) => {
-    val (codes, scanTab) = ivfpqIndex(s, d)
+    val (codes, scanTab) = ivfpqIndexNprobe(s, d, 1)
     rerankRefine(s, d, ivfpqCandidates(codes, scanTab, RerankShortlist))
   }
 
@@ -945,11 +944,10 @@ object SimilarityQueries {
     * stage's whole scale claim). */
   private[graft] def rerankRefine(s: SparkSession, d: String,
       shortlist: DataFrame): DataFrame = {
-    val q = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantizeVecMilli(col("embedding")).as("qv"))
+    val q = milliVecs(s, d, "vec_id")
     val pv = q.filter(col("vec_id") < 5)
       .select(col("vec_id").as("p_id"), col("qv").as("pqv"))
-    val diff = graft.functions.VecOps.zipScaleSub(col("qv"), col("pqv"), 1L)
+    val diff = VecOps.zipScaleSub(col("qv"), col("pqv"), 1L)
     val w = Window.partitionBy("probe_id").orderBy(asc("edist"), asc("cand_id"))
     q.join(broadcast(shortlist), col("vec_id") === col("cand_id"))
       .join(broadcast(pv), col("probe_id") === col("p_id"))
@@ -967,27 +965,28 @@ object SimilarityQueries {
     * 1/|cells| — still sub-linear, never all of it (PqSpec's mislabel
     * fixture shows exactly this recovery: the two deliberately
     * mislabeled planted points reappear in the top-5). Scale shape is
-    * [[ivfpqIndex]]'s with the scan table at ≤ |probes|·nprobe·32 rows;
-    * the volume probe's cell-bounded scan gate sums the probed-cell
+    * [[ivfpqIndexNprobe]]'s with the scan table at ≤ |probes|·nprobe·32
+    * rows; the volume probe's cell-bounded scan gate sums the probed-cell
     * mass over BOTH routed cells per probe. */
   val simIvfPqNprobeTopk: Q = (s, d) => {
     val (codes, scanTab) = ivfpqIndexNprobe(s, d, 2)
     ivfpqScan(codes, scanTab)
   }
 
-  /** FULLY-TRAINED IVFADC with exact re-rank — FAISS's IVFPQR end to end
-    * (Jégou et al. 2011 §IV-B index + §V re-ranking with BOTH quantizers
-    * trained): the coarse cells are the actual two-Lloyd-round k-means of
-    * [[ivfpqTrainedIndex]] (k = 8, vec_id < 8 seeds), the per-subspace
-    * codebooks are two fixed Lloyd rounds over the RESIDUAL subvectors
-    * (the [[embPqTrainedCodes]] blocks at the residual scale — IVFPQR
-    * trains PQ on y − c(y), not on y), encoding is residual, and the
-    * routed ADC shortlist (R = [[RerankShortlist]]) is exactly re-scored
-    * against the raw vectors. This closes round-14 verdict #6: the three
-    * previously-declared trained pieces (`sim_ivfpq_trained_topk` cells,
-    * `emb_pq_trained_codes` codebooks, `sim_ivfpq_rerank_topk` refine)
-    * COMPOSED in one declared plan, every round straight-line so the
-    * DuckDB oracle stays unrolled equi-join CTEs.
+  /** The training chain of the FULLY-TRAINED IVFADC (FAISS's IVFPQR
+    * index, Jégou et al. 2011 §IV-B with BOTH quantizers trained) over
+    * an ARBITRARY (vec_id, embedding) frame: the full-corpus declared
+    * index trains on everything; the incremental-admission index trains
+    * on the BASE partition only ([[ivfpqAppendPersisted]]), freezing the
+    * artifacts that later delta batches are quantized through. Seeds
+    * stay id-stable (vec_id < 8 cells, vec_id < 4 codebooks), so the
+    * caller's frame must contain those ids. Returns (≤ 8-row trained
+    * cells, ≤ 32-row residual codebook, codes, probe scan table).
+    *
+    * The coarse cells are the two-Lloyd-round k-means of
+    * [[ivfpqTrainedIndex]]; the per-subspace codebooks are two fixed
+    * Lloyd rounds over the RESIDUAL subvectors (IVFPQR trains PQ on
+    * y − c(y), not on y); encoding is residual.
     *
     * Exact integer arithmetic throughout: millunit vectors, micro-unit
     * trained cell centroids (the KMeans floor-mean), micro-unit
@@ -1006,146 +1005,70 @@ object SimilarityQueries {
     * index against the ≤ 32-row codebook, collapsed in-stage by the
     * packed-min HashAggregate; the final encode is the wide-row
     * collapse keyed (vec_id, cell); the scan is [[ivfpqCandidates]]'s
-    * cell-keyed join; the refine touches raw vectors for ≤ |probes|·R
-    * rows total. */
-  private[graft] def ivfpqFullTrainedIndex(s: SparkSession,
-      d: String): (DataFrame, DataFrame) = {
-    val (_, _, codes, dtab) = ivfpqFullTrainedAll(s, d)
-    (codes, dtab)
-  }
-
-  /** The full training chain with its ≤ 8-row cell table and ≤ 32-row
-    * residual codebook exposed alongside codes/dtab — the artifacts a
-    * deployment persists next to the clustered codes (see
-    * [[ivfpqFullArtifactTables]]). */
-  private[graft] def ivfpqFullTrainedAll(s: SparkSession,
-      d: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
-    ivfpqTrainAll(s, Tables.embeddings(s, d))
-
-  /** The training chain over an ARBITRARY (vec_id, embedding) frame —
-    * the full-corpus declared index trains on everything
-    * ([[ivfpqFullTrainedAll]]); the incremental-admission index trains
-    * on the BASE partition only ([[ivfpqAppendPersisted]]), freezing the
-    * artifacts that later delta batches are quantized through. Seeds
-    * stay id-stable (vec_id < 8 cells, vec_id < 4 codebooks), so the
-    * caller's frame must contain those ids. */
+    * cell-keyed join. */
   private[graft] def ivfpqTrainAll(s: SparkSession,
       emb: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import graft.operators.KMeans
-    val q = org.apache.spark.sql.graftx.Sessions.snapshot(
-      KMeans.quantize(emb))._2
-    val cents0 = q.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cluster"), transform(col("qv"), _ * 1000L).as("c"))
-      .withColumn("cn2", qdot(col("c"), col("c")))
-    val c1 = KMeans.update(KMeans.assign(q, cents0), 64)
-      .withColumn("cn2", qdot(col("c"), col("c")))
-    val c2 = KMeans.update(KMeans.assign(q, c1), 64)
-      .withColumn("cn2", qdot(col("c"), col("c")))
-    val cells = KMeans.assign(q, c2)
+    val (q, c2) = trainedCells(emb)
     // Residual stream vs the TRAINED centroid, micro-units, exploded to
     // subspaces and snapshotted once — every consumer below (codebook
     // seeds, two training rounds, the encode, the probe tables) reads
     // the cached frame instead of re-running the Lloyd chain.
-    val rq = cells.join(broadcast(c2.select(col("cluster").as("rc"), col("c"))),
-        col("cluster") === col("rc"))
-      .select(col("vec_id"), col("cluster"),
-        graft.functions.VecOps.zipScaleSub(col("qv"), col("c"), 1000L).as("rv"))
+    val rq = routedResidual(KMeans.assign(q, c2), c2, col("vec_id"), col("cluster"), "rv")
     // snapshotFlatStats, not snapshot: the training chain's origin size
     // estimate is a product of its bounded cross joins (~10¹¹⁴ bytes at
     // fixture scale) and would ride the snapshot leaf into every
     // size-driven decision downstream — in particular it makes DPP's
     // benefit check on the clustered-codes scan float-infinite on the
     // build side (see [[Sessions.snapshotFlatStats]]).
-    val sub = org.apache.spark.sql.graftx.Sessions.snapshotFlatStats(
-      rq.select(col("vec_id"), col("cluster"),
-          explode(array((0 until 8).map(m =>
-            struct(lit(m.toLong).as("m"),
-              slice(col("rv"), m * 8 + 1, 8).as("sv"))): _*)).as("ms"))
-        .select(col("vec_id"), col("cluster"),
-          col("ms.m").as("m"), col("ms.sv").as("sv"))
-        .withColumn("sn2", qnorm2(col("sv"))))._2
-    def withCn2(cb: DataFrame): DataFrame =
-      cb.withColumn("cn2", qdot(col("cv"), col("cv")))
-    val cb0 = withCn2(sub.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("m").as("cm"), col("sv").as("cv")))
+    val sub = Sessions.snapshotFlatStats(
+      subspaces(rq, Seq("vec_id", "cluster"), "rv"))._2
     // Per-subspace assignment at the residual (micro) scale: plain
-    // squared distance, packed-long argmin — the embPqTrainedCodes
-    // blocks minus the mixed-scale 10⁶/2000 factors.
-    def assignSub(cb: DataFrame): DataFrame = {
-      val dist = col("sn2") - lit(2L) * qdot(col("sv"), col("cv")) + col("cn2")
-      sub.join(broadcast(cb), col("m") === col("cm"))
-        .groupBy(col("vec_id"), col("m"), col("sv"))
-        .agg(min(dist * 4L + col("cid")).as("p"))
+    // squared distance, packed-long argmin; update: micro-unit
+    // floor-mean of the assigned residual subvectors.
+    def assignSub(cb: DataFrame): DataFrame =
+      packedArgmin(sub, cb, subDist(), "vec_id", "m", "sv")
         .select(col("vec_id"), col("m"), col("sv"),
           pmod(col("p"), lit(4L)).as("cluster"))
-    }
-    // Update: micro-unit floor-mean of the assigned residual subvectors
-    // (interpreted transform over ≤ 32 final rows — the 64 KB rule).
-    def updateSub(assigned: DataFrame): DataFrame = {
-      val sums = (0 until 8).map(i => sum(element_at(col("sv"), i + 1)).as(s"s$i"))
-      withCn2(assigned.groupBy(col("m"), col("cluster"))
-        .agg(count(lit(1)).as("n"), sums: _*)
-        .select(col("m").as("cm"), col("cluster").as("cid"),
-          transform(array((0 until 8).map(i => col(s"s$i")): _*),
-            sd => call_function("div", sd - pmod(sd, col("n")), col("n")))
-            .as("cv")))
-    }
-    val cbT = updateSub(assignSub(updateSub(assignSub(cb0))))
-    val dist = col("sn2") - lit(2L) * qdot(col("sv"), col("cv")) + col("cn2")
-    val codes = sub.join(broadcast(cbT), col("m") === col("cm"))
-      .groupBy(col("vec_id"), col("cluster"))
-      .agg(min(when(col("m") === 0, dist * 4L + col("cid"))).as("p0"),
-        (1 until 8).map(j =>
-          min(when(col("m") === j, dist * 4L + col("cid"))).as(s"p$j")): _*)
-      .select(col("vec_id"), col("cluster").as("cell"),
-        explode(array((0 until 8).map(j =>
-          struct(lit(j.toLong).as("m"),
-            pmod(col(s"p$j"), lit(4L)).as("code"))): _*)).as("mc"))
-      .select(col("vec_id"), col("cell"), col("mc.m").as("m"),
-        col("mc.code").as("code"))
+    def updateSub(assigned: DataFrame): DataFrame =
+      updateCodebook(assigned, floorMean(_, col("n")))
+    val cbT = updateSub(assignSub(updateSub(assignSub(trainingSeed(sub, col("sv"))))))
     // Probe routing: probes are corpus members, so their cell AND their
     // residual subvectors are the snapshotted frames' own rows.
     val assignedP = sub.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("cluster").as("pcell"))
       .distinct()
-    val dtab = sub.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("pid"), col("m").as("pm"),
-        col("sv").as("psv"), col("sn2").as("psn2"))
-      .join(broadcast(cbT), col("pm") === col("cm"))
-      .select(col("pid"), col("pm"), col("cid"),
-        (col("psn2") - lit(2L) * qdot(col("psv"), col("cv")) + col("cn2"))
-          .as("pdist"))
-      .join(broadcast(assignedP), col("pid") === col("probe_id"))
-      .select(col("probe_id"), col("pcell"), col("pm"), col("cid"), col("pdist"))
-    (c2, cbT, codes, dtab)
+    (c2, cbT, encodeWide(sub, cbT, Some("cluster")),
+      memberScanTable(sub, cbT, assignedP, col("pcell")))
   }
 
-  /** The declared fully-trained IVFPQR query — see
-    * [[ivfpqFullTrainedIndex]]; the scan keeps the ADC top-R shortlist
-    * and [[rerankRefine]] re-scores it exactly, the
-    * `sim_ivfpq_rerank_topk` contract at the fully-trained index. */
+  /** FULLY-TRAINED IVFADC with exact re-rank — FAISS's IVFPQR end to end
+    * (Jégou et al. 2011 §IV-B index + §V re-ranking with BOTH quantizers
+    * trained, [[ivfpqTrainAll]] over the whole corpus): the routed ADC
+    * shortlist (R = [[RerankShortlist]]) is exactly re-scored against the
+    * raw vectors by [[rerankRefine]], the `sim_ivfpq_rerank_topk`
+    * contract at the fully-trained index. This closes round-14 verdict
+    * #6: the three previously-declared trained pieces
+    * (`sim_ivfpq_trained_topk` cells, `emb_pq_trained_codes` codebooks,
+    * `sim_ivfpq_rerank_topk` refine) COMPOSED in one declared plan, every
+    * round straight-line so the DuckDB oracle stays unrolled equi-join
+    * CTEs. The refine touches raw vectors for ≤ |probes|·R rows total. */
   val simIvfPqFullTrainedTopk: Q = (s, d) => {
-    val (codes, dtab) = ivfpqFullTrainedIndex(s, d)
+    val (_, _, codes, dtab) = ivfpqTrainAll(s, Tables.embeddings(s, d))
     rerankRefine(s, d, ivfpqCandidates(codes, dtab, RerankShortlist))
   }
 
-  /** The PQ codes of [[ivfpqIndex]] PERSISTED as a catalog parquet table
-    * PARTITIONED BY CELL — the deployment layout the ivfpq scaladocs
-    * promise ("the codes table is clustered by cell so non-probed cells
-    * are never read at all"), now a materialized property instead of a
-    * claim (round-14 verdict #3). Same memoized ensure-once machinery as
-    * [[graft.sources.Bucketing.bucketedFacts]] (md5 dir tag in the table
-    * name, source-dir + content-fingerprint table properties, rebuild on
-    * staleness); the write repartitions on the cell key first so each
-    * cell directory gets ~one file instead of one per input task. */
+  /** The PQ codes of [[ivfpqIndexNprobe]] PERSISTED as a catalog parquet
+    * table PARTITIONED BY CELL — the deployment layout the ivfpq
+    * scaladocs promise ("the codes table is clustered by cell so
+    * non-probed cells are never read at all"), now a materialized
+    * property instead of a claim (round-14 verdict #3). Same memoized
+    * ensure-once machinery as [[graft.sources.Bucketing.bucketedFacts]]
+    * (md5 dir tag in the table name, source-dir + content-fingerprint
+    * table properties, rebuild on staleness). */
   private[graft] def ivfpqCodesTable(s: SparkSession, d: String): DataFrame = {
-    import graft.sources.Bucketing
     val tbl = s"graft_ivfpq_codes_${Bucketing.dirTag(d)}"
     Bucketing.ensureTable(s, tbl, d) {
-      val (codes, _) = ivfpqIndex(s, d)
-      codes.repartition(col("cell"))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("cell").saveAsTable(tbl)
+      saveByCell(ivfpqIndexNprobe(s, d, 1)._1, tbl)
     }
   }
 
@@ -1172,58 +1095,29 @@ object SimilarityQueries {
     * `/root/reference/src/dist_map.h:121-124`. */
   val simIvfPqClusteredTopk: Q = (s, d) => {
     val codes = ivfpqCodesTable(s, d)
-    val (_, scanTab) = ivfpqIndex(s, d) // codes subtree unused → never built
+    val (_, scanTab) = ivfpqIndexNprobe(s, d, 1) // codes subtree unused → never built
     ivfpqScan(codes, scanTab)
   }
 
-  /** The FULLY-TRAINED IVFPQR codes ([[ivfpqFullTrainedIndex]]) PERSISTED
-    * as a catalog parquet table PARTITIONED BY CELL — the deployment
-    * shape round-15 left half-built (its verdict #1): the seed-codebook
-    * index had a clustered layout ([[ivfpqCodesTable]]) while the
-    * fully-trained composition rebuilt its index inline every run. This
-    * closes the loop: train ONCE (two Lloyd rounds for the coarse cells
-    * + two residual-Lloyd rounds per subspace for the codebooks), write
-    * the codes clustered by their trained cell, and let every later scan
-    * read only the routed cells' directories. Same memoized ensure-once
-    * machinery as [[ivfpqCodesTable]]/[[graft.sources.Bucketing
-    * .bucketedFacts]] (md5 dir tag, source-dir + content-fingerprint
-    * table properties, rebuild on staleness); the cell-key repartition
-    * before the write gives each cell directory ~one file. Reference
-    * principle: the stored map is built once and point-reads route to
-    * one owner shard, `/root/reference/src/dist_map.h:121-124`. */
-  private[graft] def ivfpqFullCodesTable(s: SparkSession, d: String): DataFrame =
-    ivfpqFullPersisted(s, d)._1
-
-  /** The trained ARTIFACTS persisted next to the clustered codes: the
-    * ≤ 8-row cell-centroid table and the ≤ 32-row residual codebook,
-    * materialized once per source dir through the same ensure-once
-    * machinery. This is what makes "train once, scan many" literal for
-    * the whole index: with the artifacts on disk, a query rebuilds only
-    * the PROBE-side tables (≤ 5 rows end to end) — the corpus-scale
-    * training chain never re-runs at query time. */
-  private[graft] def ivfpqFullArtifactTables(s: SparkSession,
-      d: String): (DataFrame, DataFrame) = {
-    val (_, cells, cb) = ivfpqFullPersisted(s, d)
-    (cells, cb)
-  }
-
-  /** ALL THREE persisted pieces of the fully-trained index — the
-    * cell-partitioned codes, the ≤ 8-row cell centroids, the ≤ 32-row
-    * residual codebook — ensured from ONE shared lazy training chain:
-    * on a cold catalog the corpus-scale chain runs exactly once and
-    * feeds every ensure body (ADVICE round 16: the previous split
-    * between [[ivfpqFullCodesTable]]'s ensure and an independent lazy
-    * in [[ivfpqFullArtifactTables]] re-trained the chain twice on first
-    * build — correct, training is deterministic, but double the
-    * advertised "train once" cost). Steady state is three catalog
-    * lookups; `all` is never forced. */
-  private[graft] def ivfpqFullPersisted(s: SparkSession,
-      d: String): (DataFrame, DataFrame, DataFrame) = {
-    import graft.sources.Bucketing
+  /** A trained index PERSISTED: the ≤ 8-row cell centroids, the ≤ 32-row
+    * residual codebook and the codes clustered by trained cell, each a
+    * catalog table `<prefix>_{cells,cb,codes}_<dirTag>` ensured from ONE
+    * shared lazy [[ivfpqTrainAll]] chain over `train` — on a cold catalog
+    * the corpus-scale chain runs exactly once and feeds every ensure body
+    * (ADVICE round 16: separate lazies re-trained the chain twice on
+    * first build). When the codes table is (re)built, `admit` (if any)
+    * is then encoded through the just-persisted artifact tables and
+    * APPEND-written into it — exactly what a later-session admission
+    * does. Steady state is three catalog lookups; the chain is never
+    * forced. Reference principle: the stored map is built once and
+    * point-reads route to one owner shard (the reference's
+    * `src/dist_map.h:121-124`). */
+  private def persistTrained(s: SparkSession, d: String, prefix: String,
+      train: => DataFrame, admit: => Option[DataFrame]): (DataFrame, DataFrame, DataFrame) = {
     val tag = Bucketing.dirTag(d)
-    val (codesName, cellsName, cbName) = (s"graft_ivfpqft_codes_$tag",
-      s"graft_ivfpqft_cells_$tag", s"graft_ivfpqft_cb_$tag")
-    lazy val all = ivfpqFullTrainedAll(s, d)
+    val (codesName, cellsName, cbName) = (s"${prefix}_codes_$tag",
+      s"${prefix}_cells_$tag", s"${prefix}_cb_$tag")
+    lazy val all = ivfpqTrainAll(s, train)
     val cells = Bucketing.ensureTable(s, cellsName, d) {
       all._1.select(col("cluster"), col("c"), col("cn2"))
         .write.mode("overwrite").format("parquet").saveAsTable(cellsName)
@@ -1233,19 +1127,30 @@ object SimilarityQueries {
         .write.mode("overwrite").format("parquet").saveAsTable(cbName)
     }
     val codes = Bucketing.ensureTable(s, codesName, d) {
-      all._3.repartition(col("cell"))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("cell").saveAsTable(codesName)
+      saveByCell(all._3, codesName)
+      admit.foreach(emb => saveByCell(ivfpqEncodeFrozenQ(KMeans.quantize(emb),
+        s.table(cellsName), s.table(cbName)), codesName, "append"))
     }
     (codes, cells, cb)
   }
 
+  /** The fully-trained IVFPQR index persisted ([[persistTrained]] over
+    * the whole corpus): (cell-partitioned codes, cells, codebook) — the
+    * deployment shape round-15 left half-built (its verdict #1): train
+    * ONCE (two Lloyd rounds for the coarse cells + two residual-Lloyd
+    * rounds per subspace for the codebooks), write the codes clustered
+    * by their trained cell, and let every later scan read only the
+    * routed cells' directories. With the artifacts on disk, a query
+    * rebuilds only the PROBE-side tables (≤ 5 rows end to end) — the
+    * corpus-scale training chain never re-runs at query time. */
+  private[graft] def ivfpqFullPersisted(s: SparkSession,
+      d: String): (DataFrame, DataFrame, DataFrame) =
+    persistTrained(s, d, "graft_ivfpqft", Tables.embeddings(s, d), None)
+
   /** The declared deployment-shaped IVFPQR query — round-15 verdict #1:
     * [[simIvfPqFullTrainedTopk]]'s exact composition (identical output,
-    * identical oracle) with EVERY trained piece read from the catalog —
-    * codes from the cell-partitioned table ([[ivfpqFullCodesTable]]),
-    * cells and residual codebooks from the ≤ 32-row artifact tables
-    * ([[ivfpqFullArtifactTables]]) — train once, persist, scan many.
+    * identical oracle) with EVERY trained piece read from the catalog
+    * ([[ivfpqFullPersisted]]) — train once, persist, scan many.
     * Query-time work is exactly the deployment's: quantize the ≤ 5
     * probe vectors, route them through the persisted cells (the same
     * packed-argmin KMeans.assign the training ran — per-row, so
@@ -1263,47 +1168,36 @@ object SimilarityQueries {
     * fetch-by-id — nothing corpus-scale recomputes per query. */
   val simIvfPqFullClusteredTopk: Q = (s, d) => {
     val (codes, cellsT, cbT) = ivfpqFullPersisted(s, d)
-    val dtab = ivfpqProbeTablesFrozen(s, d, cellsT, cbT)
-    rerankRefine(s, d, ivfpqCandidates(codes, dtab, RerankShortlist))
+    deployedScan(s, d, codes, cellsT, cbT)
   }
+
+  /** The deployment scan over a persisted index: the frozen-artifact
+    * probe pipeline, the cell-keyed ADC shortlist over `codes`, and the
+    * exact re-rank. */
+  private def deployedScan(s: SparkSession, d: String, codes: DataFrame,
+      cellsT: DataFrame, cbT: DataFrame): DataFrame =
+    rerankRefine(s, d, ivfpqCandidates(codes,
+      ivfpqProbeTablesFrozen(s, d, cellsT, cbT), RerankShortlist))
 
   /** Probe-side pipeline over the ≤ 5-vector probe set against FROZEN
-    * persisted artifacts: quantize → route (KMeans.assign, the
-    * training's own assignment operator, so probe-side cells equal the
-    * corpus-side ones the codes recorded) → residualize against the
-    * routed centroid → per-subspace ADC distance tables against the
-    * ≤ 32-row codebook. Shared by the full-clustered scan and the
-    * append-admitted scan — both deployments' query-time work is
-    * exactly this ≤ 5-row pipeline plus the DPP-pruned codes join. */
-  private[graft] def ivfpqProbeTablesFrozen(s: SparkSession, d: String,
-      cellsT: DataFrame, cbT: DataFrame): DataFrame = {
-    import graft.operators.KMeans
-    val probes = KMeans.quantize(
-      Tables.embeddings(s, d).filter(col("vec_id") < 5))
-    val assigned = KMeans.assign(probes, cellsT)
-    val pr = assigned.join(broadcast(cellsT.select(
-        col("cluster").as("rc"), col("c"))), col("cluster") === col("rc"))
-      .select(col("vec_id").as("probe_id"), col("cluster").as("pcell"),
-        graft.functions.VecOps.zipScaleSub(col("qv"), col("c"), 1000L).as("prv"))
-    probeDtabFromResiduals(pr, cbT)
+    * persisted artifacts: quantize → `route` to (vec_id, cluster, qv)
+    * rows → residualize against each routed centroid → per-subspace ADC
+    * distance tables against the ≤ 32-row codebook. */
+  private def frozenProbeTables(s: SparkSession, d: String, cellsT: DataFrame,
+      cbT: DataFrame)(route: DataFrame => DataFrame): DataFrame = {
+    val probes = KMeans.quantize(Tables.embeddings(s, d).filter(col("vec_id") < 5))
+    probeDtabFromResiduals(routedResidual(route(probes), cellsT,
+      col("vec_id").as("probe_id"), col("cluster").as("pcell"), "prv"), cbT)
   }
 
-  /** The shared tail of the frozen-artifact probe pipelines: explode the
-    * per-(probe, routed-cell) residual into the 8 subspaces and build
-    * the ADC distance tables against the broadcast ≤ 32-row codebook.
-    * `pr` carries (probe_id, pcell, prv). */
-  private def probeDtabFromResiduals(pr: DataFrame, cbT: DataFrame): DataFrame =
-    pr
-      .select(col("probe_id"), col("pcell"), explode(array((0 until 8).map(m =>
-        struct(lit(m.toLong).as("m"),
-          slice(col("prv"), m * 8 + 1, 8).as("sv"))): _*)).as("ms"))
-      .select(col("probe_id"), col("pcell"), col("ms.m").as("pm"),
-        col("ms.sv").as("psv"))
-      .withColumn("psn2", qnorm2(col("psv")))
-      .join(broadcast(cbT), col("pm") === col("cm"))
-      .select(col("probe_id"), col("pcell"), col("pm"), col("cid"),
-        (col("psn2") - lit(2L) * qdot(col("psv"), col("cv")) + col("cn2"))
-          .as("pdist"))
+  /** [[frozenProbeTables]] routed by KMeans.assign — the training's own
+    * assignment operator, so probe-side cells equal the corpus-side ones
+    * the codes recorded. Shared by the full-clustered scan and the
+    * append-admitted scans — both deployments' query-time work is
+    * exactly this ≤ 5-row pipeline plus the DPP-pruned codes join. */
+  private[graft] def ivfpqProbeTablesFrozen(s: SparkSession, d: String,
+      cellsT: DataFrame, cbT: DataFrame): DataFrame =
+    frozenProbeTables(s, d, cellsT, cbT)(KMeans.assign(_, cellsT))
 
   /** [[ivfpqProbeTablesFrozen]] at nprobe > 1 — the deployment recall
     * dial applied to the PERSISTED index: rank every frozen cell by the
@@ -1317,23 +1211,16 @@ object SimilarityQueries {
     * used by RecallSpec to show the dial buys audited recall on the
     * planted corpus. */
   private[graft] def ivfpqProbeTablesFrozenNprobe(s: SparkSession, d: String,
-      cellsT: DataFrame, cbT: DataFrame, nprobe: Int): DataFrame = {
-    import graft.operators.KMeans
-    val probes = KMeans.quantize(
-      Tables.embeddings(s, d).filter(col("vec_id") < 5))
-    val dist = lit(1000000L) * col("n2") -
-      lit(2000L) * qdot(col("qv"), col("c")) + col("cn2")
-    val w = Window.partitionBy("vec_id").orderBy(asc("d"), asc("cluster"))
-    val routed = probes.crossJoin(broadcast(cellsT))
-      .select(col("vec_id"), col("cluster"), col("qv"), dist.as("d"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= nprobe)
-    val pr = routed.join(broadcast(cellsT.select(
-        col("cluster").as("rc"), col("c"))), col("cluster") === col("rc"))
-      .select(col("vec_id").as("probe_id"), col("cluster").as("pcell"),
-        graft.functions.VecOps.zipScaleSub(col("qv"), col("c"), 1000L).as("prv"))
-    probeDtabFromResiduals(pr, cbT)
-  }
+      cellsT: DataFrame, cbT: DataFrame, nprobe: Int): DataFrame =
+    frozenProbeTables(s, d, cellsT, cbT) { probes =>
+      val dist = lit(1000000L) * col("n2") -
+        lit(2000L) * qdot(col("qv"), col("c")) + col("cn2")
+      val w = Window.partitionBy("vec_id").orderBy(asc("d"), asc("cluster"))
+      probes.crossJoin(broadcast(cellsT))
+        .select(col("vec_id"), col("cluster"), col("qv"), dist.as("d"))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= nprobe)
+    }
 
   /** Base/delta split for the incremental-admission index: the delta
     * batch is every 10th vector (vec_id ≡ 9 mod 10 — id-stable, so both
@@ -1349,75 +1236,41 @@ object SimilarityQueries {
   private[graft] def appendDelta(emb: DataFrame): DataFrame =
     emb.filter(pmod(col("vec_id"), lit(AppendMod)) === AppendMod - 1L)
 
-  /** The residual subspace stream of an arbitrary (vec_id, embedding)
-    * frame through FROZEN artifacts: quantize → route (KMeans.assign,
-    * the training's own operator) → residualize → explode to the 8
-    * subspaces. This is assign-only admission — the chain reads |emb|
+  /** The residual subspace stream of an already-quantized (vec_id, qv,
+    * n2) frame through FROZEN artifacts: route (KMeans.assign, the
+    * training's own operator) → residualize → explode to the 8
+    * subspaces. This is assign-only admission — the chain reads |q|
     * rows plus the ≤ 8-row broadcast cell table; no Lloyd round, no
     * corpus-scale recompute (reference principle: `async_set` + `sync`
     * admit keys into a BUILT store without rebuilding it,
     * /root/reference/src/dist_map.h:118-130). */
-  private[graft] def ivfpqResidualSubFrozen(emb: DataFrame,
-      cellsT: DataFrame): DataFrame = {
-    import graft.operators.KMeans
-    ivfpqResidualSubFrozenQ(KMeans.quantize(emb), cellsT)
-  }
-
-  /** [[ivfpqResidualSubFrozen]] from an ALREADY-QUANTIZED (vec_id, qv,
-    * n2) frame — the split path feeds its snapshotted member frame here
-    * so the corpus-side fetch happens exactly once. */
   private[graft] def ivfpqResidualSubFrozenQ(q: DataFrame,
-      cellsT: DataFrame): DataFrame = {
-    import graft.operators.KMeans
-    val assigned = KMeans.assign(q, cellsT)
-    val rq = assigned.join(broadcast(cellsT.select(
-        col("cluster").as("rc"), col("c"))), col("cluster") === col("rc"))
-      .select(col("vec_id"), col("cluster"),
-        graft.functions.VecOps.zipScaleSub(col("qv"), col("c"), 1000L).as("rv"))
-    rq.select(col("vec_id"), col("cluster"),
-        explode(array((0 until 8).map(m =>
-          struct(lit(m.toLong).as("m"),
-            slice(col("rv"), m * 8 + 1, 8).as("sv"))): _*)).as("ms"))
-      .select(col("vec_id"), col("cluster"), col("ms.m").as("m"),
-        col("ms.sv").as("sv"))
-      .withColumn("sn2", qnorm2(col("sv")))
-  }
+      cellsT: DataFrame): DataFrame =
+    subspaces(routedResidual(KMeans.assign(q, cellsT), cellsT,
+      col("vec_id"), col("cluster"), "rv"), Seq("vec_id", "cluster"), "rv")
 
-  /** Encode an arbitrary embedding frame through FROZEN artifacts into
-    * (vec_id, cell, m, code) rows — identical arithmetic to the training
-    * chain's own encode (packed-long argmin over the broadcast ≤ 32-row
-    * codebook; the per-(vec_id, m) min is the same quantity the wide
-    * min-when collapse computes), so encoding the training frame through
-    * its own artifacts reproduces the trained codes EXACTLY
-    * (IvfpqAppendSpec pins it). */
-  private[graft] def ivfpqEncodeFrozen(emb: DataFrame,
-      cellsT: DataFrame, cbT: DataFrame): DataFrame = {
-    import graft.operators.KMeans
-    ivfpqEncodeFrozenQ(KMeans.quantize(emb), cellsT, cbT)
-  }
-
-  /** [[ivfpqEncodeFrozen]] from an already-quantized frame (see
-    * [[ivfpqResidualSubFrozenQ]]) — identical arithmetic. */
+  /** Encode an already-quantized frame (`KMeans.quantize` of a (vec_id,
+    * embedding) frame) through FROZEN artifacts into (vec_id, cell, m,
+    * code) rows — identical arithmetic to the training chain's own encode
+    * (packed-long argmin over the broadcast ≤ 32-row codebook; the
+    * per-(vec_id, m) min is the same quantity the wide min-when collapse
+    * computes), so encoding the training frame through its own artifacts
+    * reproduces the trained codes EXACTLY (IvfpqAppendSpec pins it). */
   private[graft] def ivfpqEncodeFrozenQ(q: DataFrame,
-      cellsT: DataFrame, cbT: DataFrame): DataFrame = {
-    val sub = ivfpqResidualSubFrozenQ(q, cellsT)
-    val dist = col("sn2") - lit(2L) * qdot(col("sv"), col("cv")) + col("cn2")
-    sub.join(broadcast(cbT), col("m") === col("cm"))
-      .groupBy(col("vec_id"), col("cluster"), col("m"))
-      .agg(min(dist * 4L + col("cid")).as("p"))
+      cellsT: DataFrame, cbT: DataFrame): DataFrame =
+    packedArgmin(ivfpqResidualSubFrozenQ(q, cellsT), cbT, subDist(),
+        "vec_id", "cluster", "m")
       .select(col("vec_id"), col("cluster").as("cell"), col("m"),
         pmod(col("p"), lit(4L)).as("code"))
-  }
 
   /** The INCREMENTAL-ADMISSION index (round-16 verdict #1): artifacts
     * trained on the BASE corpus only and frozen, base codes written
     * cell-partitioned, and the delta batch APPEND-written into the same
     * partitioned table after quantizing through the frozen artifacts —
-    * never a rebuild. Cold-catalog build cost decomposes as: one
-    * base-scale training chain (shared lazy across all three ensures,
-    * the [[ivfpqFullPersisted]] discipline) + one |delta|-scale encode;
-    * a later delta batch pays ONLY the encode (assign-only appends, the
-    * deployment reality — retrain is a separate decision
+    * never a rebuild ([[persistTrained]]). Cold-catalog build cost
+    * decomposes as: one base-scale training chain + one |delta|-scale
+    * encode; a later delta batch pays ONLY the encode (assign-only
+    * appends, the deployment reality — retrain is a separate decision
     * [[simIvfPqDriftGuard]] triggers on drift). The append write lands
     * new files inside existing cell directories: the clustered layout —
     * and with it DPP file pruning on the scan — survives admission.
@@ -1425,36 +1278,9 @@ object SimilarityQueries {
     * built store without rebuilding it,
     * /root/reference/src/dist_map.h:118-130,147-210. */
   private[graft] def ivfpqAppendPersisted(s: SparkSession,
-      d: String): (DataFrame, DataFrame, DataFrame) = {
-    import graft.sources.Bucketing
-    val tag = Bucketing.dirTag(d)
-    val (codesName, cellsName, cbName) = (s"graft_ivfpqap_codes_$tag",
-      s"graft_ivfpqap_cells_$tag", s"graft_ivfpqap_cb_$tag")
-    lazy val all = ivfpqTrainAll(s, appendBase(Tables.embeddings(s, d)))
-    val cells = Bucketing.ensureTable(s, cellsName, d) {
-      all._1.select(col("cluster"), col("c"), col("cn2"))
-        .write.mode("overwrite").format("parquet").saveAsTable(cellsName)
-    }
-    val cb = Bucketing.ensureTable(s, cbName, d) {
-      all._2.select(col("cm"), col("cid"), col("cv"), col("cn2"))
-        .write.mode("overwrite").format("parquet").saveAsTable(cbName)
-    }
-    val codes = Bucketing.ensureTable(s, codesName, d) {
-      // Day 0: the base corpus' codes, clustered by trained cell.
-      all._3.repartition(col("cell"))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("cell").saveAsTable(codesName)
-      // Day 1: the delta batch appended THROUGH THE CATALOG — the encode
-      // reads the just-persisted artifact tables (not the training
-      // chain), exactly what a later-session admission does.
-      ivfpqEncodeFrozen(appendDelta(Tables.embeddings(s, d)),
-          s.table(cellsName), s.table(cbName))
-        .repartition(col("cell"))
-        .write.mode("append").format("parquet")
-        .partitionBy("cell").saveAsTable(codesName)
-    }
-    (codes, cells, cb)
-  }
+      d: String): (DataFrame, DataFrame, DataFrame) =
+    persistTrained(s, d, "graft_ivfpqap", appendBase(Tables.embeddings(s, d)),
+      Some(appendDelta(Tables.embeddings(s, d))))
 
   /** The declared incremental-admission query: the deployment scan
     * ([[simIvfPqFullClusteredTopk]]'s probe pipeline + DPP-pruned
@@ -1469,8 +1295,7 @@ object SimilarityQueries {
     * new information (identical-point clusters). */
   val simIvfPqAppendTopk: Q = (s, d) => {
     val (codes, cellsT, cbT) = ivfpqAppendPersisted(s, d)
-    val dtab = ivfpqProbeTablesFrozen(s, d, cellsT, cbT)
-    rerankRefine(s, d, ivfpqCandidates(codes, dtab, RerankShortlist))
+    deployedScan(s, d, codes, cellsT, cbT)
   }
 
   /** Scale divisor for the drift statistic: per-vector quantization
@@ -1495,11 +1320,10 @@ object SimilarityQueries {
   val simIvfPqDriftGuard: Q = (s, d) => {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val (_, cellsT, cbT) = ivfpqAppendPersisted(s, d)
-    val sub = ivfpqResidualSubFrozen(Tables.embeddings(s, d), cellsT)
-    val dist = col("sn2") - lit(2L) * qdot(col("sv"), col("cv")) + col("cn2")
+    val sub = ivfpqResidualSubFrozenQ(KMeans.quantize(Tables.embeddings(s, d)), cellsT)
     val per = sub.join(broadcast(cbT), col("m") === col("cm"))
       .groupBy(col("vec_id"), col("m"))
-      .agg(min(dist).as("mdist"))
+      .agg(min(subDist()).as("mdist"))
       .groupBy(col("vec_id"))
       .agg(sum(col("mdist")).as("qerr"))
       .select(col("vec_id"),
@@ -1542,17 +1366,11 @@ object SimilarityQueries {
     * corpus scan, no retrain — and the table persists CELL-PARTITIONED
     * so a query fetches only the probed cells' tombstones. */
   private[graft] def ivfpqTombstones(s: SparkSession, d: String): DataFrame = {
-    import graft.sources.Bucketing
-    import graft.operators.KMeans
-    val tag = Bucketing.dirTag(d)
-    val name = s"graft_ivfpqap_tomb_$tag"
+    val name = s"graft_ivfpqap_tomb_${Bucketing.dirTag(d)}"
     Bucketing.ensureTable(s, name, d) {
       val (_, cellsT, _) = ivfpqAppendPersisted(s, d)
-      KMeans.assign(KMeans.quantize(deleteSet(Tables.embeddings(s, d))), cellsT)
-        .select(col("vec_id"), col("cluster").as("cell"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("cell").saveAsTable(name)
+      saveByCell(KMeans.assign(KMeans.quantize(deleteSet(Tables.embeddings(s, d))), cellsT)
+        .select(col("vec_id"), col("cluster").as("cell")), name)
     }
   }
 
@@ -1678,22 +1496,6 @@ object SimilarityQueries {
       .orderBy("cell")
   }
 
-  /** The COMPACTED generation of the tombstoned index — the reference's
-    * backshift delete made durable (/root/reference/src/
-    * bare_hash_container.h:150-179 reclaims the slot at erase time;
-    * an immutable-file deployment reclaims it by REWRITING the touched
-    * partitions): generation 0 clones the served table's clustered
-    * layout (in production the gc generation IS the served table; the
-    * clone keeps both generations addressable for the declared
-    * surface), then ONE dynamic-partition-overwrite job reads ONLY the
-    * tombstone-touched cells' partitions, anti-joins the tombstones on
-    * (cell, vec_id), and overwrites ONLY those partitions — cells
-    * without tombstones are never read or rewritten (IvfpqCompactSpec
-    * proves it on a single-cell deletion fixture), so the reclaim cost
-    * is the touched cells' mass, not the corpus. After compaction the
-    * scan needs NO tombstone anti-join — [[simIvfPqDeleteTopk]]'s
-    * filter became the storage layout — and DPP file pruning is
-    * untouched (same partitioned table shape). */
   /** The reclaim job's data flow, exposed for the volume probe's
     * compaction-isolation arm: the TOUCHED cells' codes (left-semi on
     * the tombstoned cells) with the tombstones anti-joined out — the
@@ -1713,22 +1515,31 @@ object SimilarityQueries {
         "left_anti")
   }
 
+  /** The COMPACTED generation of the tombstoned index — the reference's
+    * backshift delete made durable (its src/
+    * bare_hash_container.h:150-179 reclaims the slot at erase time;
+    * an immutable-file deployment reclaims it by REWRITING the touched
+    * partitions): generation 0 clones the served table's clustered
+    * layout (in production the gc generation IS the served table; the
+    * clone keeps both generations addressable for the declared
+    * surface), then ONE dynamic-partition-overwrite job reads ONLY the
+    * tombstone-touched cells' partitions, anti-joins the tombstones on
+    * (cell, vec_id), and overwrites ONLY those partitions — cells
+    * without tombstones are never read or rewritten, so the reclaim cost
+    * is the touched cells' mass, not the corpus. A cell whose every
+    * vector is tombstoned writes no row, and the dynamic overwrite
+    * leaves a partition absent from the write as it was — so the gc
+    * audit's n_live = 0 cells are dropped from the generation outright.
+    * After compaction the scan needs NO tombstone anti-join —
+    * [[simIvfPqDeleteTopk]]'s filter became the storage layout — and DPP
+    * file pruning is untouched (same partitioned table shape). */
   private[graft] def ivfpqCompactedCodes(s: SparkSession, d: String): DataFrame = {
-    import graft.sources.Bucketing
-    val tag = Bucketing.dirTag(d)
-    val name = s"graft_ivfpqap_gc_$tag"
+    val name = s"graft_ivfpqap_gc_${Bucketing.dirTag(d)}"
     Bucketing.ensureTable(s, name, d) {
-      val (codes, _, _) = ivfpqAppendPersisted(s, d)
-      codes.repartition(col("cell"))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("cell").saveAsTable(name)
-      val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-      try ivfpqCompactLive(s, d)
-        .select(col("vec_id"), col("m"), col("code"), col("cell"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").insertInto(name)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      rewriteCells(s, name, ivfpqAppendPersisted(s, d)._1, ivfpqCompactLive(s, d))
+      simIvfPqGcStats(s, d).filter(col("n_live") === 0L).select("cell")
+        .collect().foreach(r =>
+          s.sql(s"ALTER TABLE $name DROP IF EXISTS PARTITION (cell = ${r.getLong(0)})"))
     }
   }
 
@@ -1736,14 +1547,12 @@ object SimilarityQueries {
     * COMPACTED codes table — no tombstone anti-join anywhere in the
     * plan, because compaction moved the delete from query time to the
     * storage layout. Result ≡ [[simIvfPqDeleteTopk]] ≡ never-inserted
-    * (IvfpqCompactSpec chains all three), so the oracle is the delete
+    * (IvfpqMaintenanceSpec chains all three), so the oracle is the delete
     * oracle verbatim; what changed is WHERE the filter lives, which is
     * the entire point of the verb. */
   val simIvfPqCompactTopk: Q = (s, d) => {
     val (_, cellsT, cbT) = ivfpqAppendPersisted(s, d)
-    val codes = ivfpqCompactedCodes(s, d)
-    val dtab = ivfpqProbeTablesFrozen(s, d, cellsT, cbT)
-    rerankRefine(s, d, ivfpqCandidates(codes, dtab, RerankShortlist))
+    deployedScan(s, d, ivfpqCompactedCodes(s, d), cellsT, cbT)
   }
 
   /** Cell id minted for the split's second child — the first id above
@@ -1765,7 +1574,7 @@ object SimilarityQueries {
     * dynamic-partition-overwrite job that touches exactly two
     * partitions — the parent's (replaced) and the new child's (created).
     * Every other cell's partition, codes, and centroid are untouched
-    * (IvfpqSplitSpec pins bytes-equal rows), so the split costs
+    * (IvfpqMaintenanceSpec pins bytes-equal rows), so the split costs
     * |parent cell|, not the corpus — the hot-cell remedy without the
     * full retrain the drift guard would trigger.
     *
@@ -1773,15 +1582,15 @@ object SimilarityQueries {
     * centroid moves), child 1 takes [[SplitCellId]]. Probe routing
     * argmins over the 9-row table unchanged in form; the PQ codebook
     * stays frozen — only the coarse quantizer refined, which is what
-    * keeps the re-encode |parent|-bounded. */
-  /** The split job's data flow — (new cells table, the re-encoded
-    * member codes, the pre-split codes) — exposed for the volume
-    * probe's split-isolation arm: everything after the parent argmax is
-    * |parent cell|-bounded (the 2-means assigns, the member re-encode),
-    * never corpus-bounded. */
+    * keeps the re-encode |parent|-bounded.
+    *
+    * This is the split job's data flow — (new cells table, the
+    * re-encoded member codes, the pre-split codes) — exposed for the
+    * volume probe's split-isolation arm: everything after the parent
+    * argmax is |parent cell|-bounded (the 2-means assigns, the member
+    * re-encode), never corpus-bounded. */
   private[graft] def ivfpqSplitBuild(s: SparkSession,
       d: String): (DataFrame, DataFrame, DataFrame) = {
-    import graft.operators.KMeans
     val (codes0, cellsT, cbT) = ivfpqAppendPersisted(s, d)
     val parent = codes0.filter(col("m") === 0L)
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
@@ -1798,21 +1607,16 @@ object SimilarityQueries {
     // ivfpqTrainAll discipline; the 10× smoke measured the unsnapshotted
     // chain at 3 corpus shuffles and ~45·M join rows vs 41·M + O(1)
     // here).
-    val mq = org.apache.spark.sql.graftx.Sessions.snapshot(
+    val mq = Sessions.snapshot(
       KMeans.quantize(Tables.embeddings(s, d)).join(memberIds, "vec_id"))._2
     val seeds = mq.orderBy(asc("vec_id")).limit(2)
       .select(col("vec_id"), col("qv"))
     val minId = seeds.agg(min(col("vec_id")).as("s_min"))
-    val cents0 = seeds.crossJoin(broadcast(minId))
+    val cents0 = withCn2(seeds.crossJoin(broadcast(minId))
       .select(when(col("vec_id") === col("s_min"), 0L).otherwise(1L)
           .as("cluster"),
-        transform(col("qv"), _ * 1000L).as("c"))
-      .withColumn("cn2", qdot(col("c"), col("c")))
-    val c1 = KMeans.update(KMeans.assign(mq, cents0), 64)
-      .withColumn("cn2", qdot(col("c"), col("c")))
-    val c2 = KMeans.update(KMeans.assign(mq, c1), 64)
-      .withColumn("cn2", qdot(col("c"), col("c")))
-    val children = c2.crossJoin(broadcast(parent))
+        transform(col("qv"), _ * 1000L).as("c")), "c")
+    val children = lloydTwoRounds(mq, cents0).crossJoin(broadcast(parent))
       .select(when(col("cluster") === 0L, col("p_cell"))
           .otherwise(lit(SplitCellId)).as("cluster"),
         col("c"), col("cn2"))
@@ -1825,11 +1629,10 @@ object SimilarityQueries {
   }
 
   private[graft] def ivfpqSplitTables(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import graft.sources.Bucketing
     val tag = Bucketing.dirTag(d)
     val cellsName = s"graft_ivfpqsp_cells_$tag"
     val codesName = s"graft_ivfpqsp_codes_$tag"
-    // ONE shared lazy chain feeds both ensures (the ivfpqFullPersisted
+    // ONE shared lazy chain feeds both ensures (the persistTrained
     // discipline): parent selection, the in-cell 2-means, and the
     // member re-encode run at most once per cold catalog.
     lazy val built: (DataFrame, DataFrame, DataFrame) = ivfpqSplitBuild(s, d)
@@ -1837,15 +1640,7 @@ object SimilarityQueries {
       built._1.write.mode("overwrite").format("parquet").saveAsTable(cellsName)
     }
     val codes = Bucketing.ensureTable(s, codesName, d) {
-      built._3.repartition(col("cell"))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("cell").saveAsTable(codesName)
-      val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-      try built._2.select(col("vec_id"), col("m"), col("code"), col("cell"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").insertInto(codesName)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      rewriteCells(s, codesName, built._3, built._2)
     }
     (codes, cells)
   }
@@ -1854,16 +1649,14 @@ object SimilarityQueries {
     * probe router argmin-ing over the SPLIT cells table (9 rows) and
     * the DPP-pruned scan reading the split codes partitions. A probe
     * routed to an unsplit cell sees an identical plan and identical
-    * results ([[simIvfPqAppendTopk]]'s — IvfpqSplitSpec pins it); a
+    * results ([[simIvfPqAppendTopk]]'s — IvfpqMaintenanceSpec pins it); a
     * probe routed into the split region scans ONE child instead of the
     * whole former parent — the balance remedy, half the hot cell's mass
     * per probe at equal recall machinery (the exact re-rank still
     * re-scores the shortlist). */
   val simIvfPqCellSplit: Q = (s, d) => {
     val (codes, cellsT2) = ivfpqSplitTables(s, d)
-    val (_, _, cbT) = ivfpqAppendPersisted(s, d)
-    val dtab = ivfpqProbeTablesFrozen(s, d, cellsT2, cbT)
-    rerankRefine(s, d, ivfpqCandidates(codes, dtab, RerankShortlist))
+    deployedScan(s, d, codes, cellsT2, ivfpqAppendPersisted(s, d)._3)
   }
 
   /** The audit join shared by both recall audits: per probe, the

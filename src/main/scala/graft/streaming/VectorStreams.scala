@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming form of the ANN index's incremental admission —
@@ -46,10 +45,12 @@ object VectorStreams {
     * embedding) batch through the frozen artifacts into (vec_id, cell,
     * m, code) rows. Pure and batch-domain: reused by the streaming sink
     * below, by backfill jobs, and by the batch day-1 admission itself
-    * (it IS [[graft.queries.SimilarityQueries.ivfpqEncodeFrozen]]). */
+    * (it IS [[graft.queries.SimilarityQueries.ivfpqEncodeFrozenQ]] over
+    * the quantized batch). */
   def encodeBatch(batch: DataFrame, cellsT: DataFrame,
       cbT: DataFrame): DataFrame =
-    graft.queries.SimilarityQueries.ivfpqEncodeFrozen(batch, cellsT, cbT)
+    graft.queries.SimilarityQueries.ivfpqEncodeFrozenQ(
+      graft.operators.KMeans.quantize(batch), cellsT, cbT)
 
   /** Start the admission sink: every micro-batch of `vectors` (schema:
     * vec_id LONG, embedding ARRAY<FLOAT/DOUBLE>, extra columns ignored)
@@ -64,10 +65,8 @@ object VectorStreams {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        encodeBatch(batch.toDF(), cellsT, cbT)
-          .repartition(col("cell"))
-          .write.mode("append").format("parquet")
-          .partitionBy("cell").saveAsTable(codesTable)
+        graft.queries.SimilarityQueries.saveByCell(
+          encodeBatch(batch.toDF(), cellsT, cbT), codesTable, "append")
       }
       .start()
 }

@@ -38,8 +38,8 @@ class IvfpqAppendSpec extends SparkSpec {
 
   test("append-admitted codes table == one-shot encode through the frozen artifacts") {
     val (codes, cellsT, cbT) = SimilarityQueries.ivfpqAppendPersisted(spark, sfDir)
-    val oneShot = SimilarityQueries.ivfpqEncodeFrozen(
-      Tables.embeddings(spark, sfDir), cellsT, cbT)
+    val oneShot = SimilarityQueries.ivfpqEncodeFrozenQ(
+      graft.operators.KMeans.quantize(Tables.embeddings(spark, sfDir)), cellsT, cbT)
     assert(codes.count() > 0)
     assertSameRows(
       codes.select("vec_id", "cell", "m", "code"),

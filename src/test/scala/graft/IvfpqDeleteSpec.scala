@@ -48,7 +48,8 @@ class IvfpqDeleteSpec extends SparkSpec {
     val survivors = emb.filter(
       pmod(col("vec_id"), lit(SimilarityQueries.AppendMod)) =!=
         SimilarityQueries.DeleteResidue)
-    val neverInserted = SimilarityQueries.ivfpqEncodeFrozen(survivors, cellsT, cbT)
+    val neverInserted = SimilarityQueries.ivfpqEncodeFrozenQ(
+      graft.operators.KMeans.quantize(survivors), cellsT, cbT)
     val dtab = SimilarityQueries.ivfpqProbeTablesFrozen(spark, sfDir, cellsT, cbT)
     val want = SimilarityQueries.rerankRefine(spark, sfDir,
       SimilarityQueries.ivfpqCandidates(neverInserted, dtab,

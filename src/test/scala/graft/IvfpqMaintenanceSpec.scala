@@ -40,10 +40,37 @@ class IvfpqMaintenanceSpec extends SparkSpec {
       s"$what differ: ${extraA} rows only in left, ${extraB} only in right")
   }
 
+  /** A cell wholly inside the delete set: seed vec 4 and ids 14, 24, 34
+    * (all ≡ 4 mod 10) sit at one remote point, so the cell trained on
+    * seed 4 holds exactly them; every other vector sits on one of the
+    * remaining seven anchors. Compaction must leave that cell empty. */
+  private lazy val deletedCellDir: String = {
+    val dir = Files.createTempDirectory("graft-deleted-cell").toString
+    def anchor(k: Int): Array[Float] =
+      Array.tabulate(64)(d => if (d / 8 == k) 1.0f else 0.0f)
+    val remote = Array.fill(64)(-1.0f)
+    val others = Seq(0, 1, 2, 3, 5, 6, 7)
+    def vecOf(i: Int): Array[Float] =
+      if (Set(4, 14, 24, 34)(i)) remote
+      else if (i < 8) anchor(i)
+      else anchor(others(i % 7))
+    val sp = spark
+    import sp.implicits._
+    (0 until 100).map(i => (i.toLong, vecOf(i), i % 8))
+      .toDF("vec_id", "embedding", "label")
+      .repartition(4)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
   test("compaction == delete == never-inserted, with no tombstoned row left in storage") {
-    val (codes, _, _) = SimilarityQueries.ivfpqAppendPersisted(spark, sfDir)
-    val gc = SimilarityQueries.ivfpqCompactedCodes(spark, sfDir)
-    val tomb = SimilarityQueries.ivfpqTombstones(spark, sfDir)
+    for (dir <- Seq(sfDir, deletedCellDir)) compactionMatchesDelete(dir)
+  }
+
+  private def compactionMatchesDelete(dir: String): Unit = {
+    val (codes, _, _) = SimilarityQueries.ivfpqAppendPersisted(spark, dir)
+    val gc = SimilarityQueries.ivfpqCompactedCodes(spark, dir)
+    val tomb = SimilarityQueries.ivfpqTombstones(spark, dir)
     // Storage-level: gc == codes ⟕̸ tombstones (the anti-join, applied).
     val live = codes.join(
       tomb.select(col("vec_id").as("t_id"), col("cell").as("t_cell")),
@@ -55,8 +82,8 @@ class IvfpqMaintenanceSpec extends SparkSpec {
       "compaction reclaimed a different mass than 8 rows per tombstone")
     // Service-level: the declared compact scan equals the declared
     // delete scan row for row — the filter moved, the answer did not.
-    val compacted = SimilarityQueries.simIvfPqCompactTopk(spark, sfDir).collect()
-    val deleted = SimilarityQueries.simIvfPqDeleteTopk(spark, sfDir).collect()
+    val compacted = SimilarityQueries.simIvfPqCompactTopk(spark, dir).collect()
+    val deleted = SimilarityQueries.simIvfPqDeleteTopk(spark, dir).collect()
     assert(compacted.nonEmpty)
     assert(compacted.toSeq == deleted.toSeq,
       "post-compaction scan diverged from the tombstone-anti scan")

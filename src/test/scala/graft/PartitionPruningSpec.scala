@@ -128,11 +128,11 @@ class PartitionPruningSpec extends SparkSpec {
     // scan through DPP with routed-cell pruning + exact re-rank. Same
     // fixture-asymmetry knobs as the seed-codebook case above (the DPP
     // benefit heuristic is size-driven; deployment sizes invert here).
-    val codes = SimilarityQueries.ivfpqFullCodesTable(spark, sfDir)
+    val codes = SimilarityQueries.ivfpqFullPersisted(spark, sfDir)._1
     val nCells = codes.select("cell").distinct().count()
     assert(nCells > 1, "trained index collapsed to one cell; test is vacuous")
     val probedCells = {
-      val (_, dtab) = SimilarityQueries.ivfpqFullTrainedIndex(spark, sfDir)
+      val (_, _, _, dtab) = SimilarityQueries.ivfpqTrainAll(spark, Tables.embeddings(spark, sfDir))
       dtab.select("pcell").distinct().count()
     }
     assert(probedCells < nCells,

@@ -208,12 +208,13 @@ class PqSpec extends SparkSpec {
         yield ((100 + p * 10 + j * 2 + (if (sgn > 0) 0 else 1)).toLong,
           perturb(proto(p), j * 7, sgn)))
     val emb = rows.toDF("vec_id", "embedding")
-    val trained = graft.operators.Pq.trainCodebooks(emb, m = 8, subDim = 8, k = 4,
-      loopParts = 3).collect()
+    val (trainedDf, rounds) = graft.operators.Pq.trainCodebooks(emb, m = 8,
+      subDim = 8, k = 4, loopParts = 3)
+    val trained = trainedDf.collect()
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-    assert(graft.operators.Pq.lastRoundsPerSubspace == Seq.fill(8)(2),
+    assert(rounds == Seq.fill(8)(2),
       s"expected 2 lloyd rounds per subspace, got " +
-        s"${graft.operators.Pq.lastRoundsPerSubspace}")
+        s"${rounds}")
     // 8 subspaces x 4 codewords x 8 dims.
     assert(trained.length == 8 * 4 * 8)
     trained.foreach { r =>

@@ -25,8 +25,8 @@ class VectorStreamsSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     // Day 0: the base corpus' codes, cell-partitioned — the
     // ivfpqAppendPersisted day-0 write.
-    SimilarityQueries.ivfpqEncodeFrozen(
-        SimilarityQueries.appendBase(Tables.embeddings(spark, sfDir)),
+    SimilarityQueries.ivfpqEncodeFrozenQ(graft.operators.KMeans.quantize(
+        SimilarityQueries.appendBase(Tables.embeddings(spark, sfDir))),
         cellsT, cbT)
       .repartition(col("cell"))
       .write.mode("overwrite").format("parquet")
