@@ -39,7 +39,7 @@ import org.apache.spark.sql.graftx.Metrics
   *     trust it).
   * The FILE additionally carries "walls": every query's per-rep walls in
   * rep order, the raw data behind both summaries. Each rep is metered
-  * with Metrics.withTaskWork, and "measurements_incomplete" (both
+  * in one Metrics.measure window, and "measurements_incomplete" (both
   * channels) counts (query, rep) MEASUREMENTS whose listener-bus drain
   * timed out — it ranges over reps × queries, not reps (round-10 ADVICE:
   * the old "reps_incomplete" name read as bounded by "reps" when it is
@@ -65,11 +65,9 @@ object Bench {
     // on a few representative queries so the first timed query doesn't
     // absorb cold-start costs that belong to no query in particular.
     Seq("mr_sum_by_key", "sim_cosine_topk", "text_wordcount_topk").foreach(runOnce)
-    // Flush warmup's straggler listener events and drop its snapshot
-    // caches so rep 1 of the first query absorbs neither (round-9
-    // review: the first metered block otherwise attributed late warmup
-    // stage events and warmup cache pressure to the first query).
-    Metrics.flushListeners(spark.sparkContext)
+    // Drop warmup's snapshot caches so rep 1 of the first query does not
+    // absorb warmup cache pressure (round-9 review); its straggler
+    // listener events are drained by the first window's opening flush.
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
     // noop sink forces full query execution (count() would let Catalyst
     // prune ordering/projections and under-measure).
@@ -99,21 +97,19 @@ object Bench {
     val okFlags = Array.fill(names.size)(true)
     var measIncomplete = 0
     for (r <- 0 until reps; i <- names.indices) {
-      // Wall timestamps wrap runOnce INSIDE the metered block: the task
-      // meter ends with a listenerBus.waitUntilEmpty (up to 30 s) that is
-      // metric plumbing, not query cost — timing around the whole block
-      // would inflate walls by the drain and break cross-round
-      // comparability (ADVICE round 4).
-      var wall = 0.0
-      val (ok, work) = Metrics.withTaskWork(spark.sparkContext) {
+      // Wall timestamps wrap runOnce INSIDE the window: the window opens
+      // and closes with a listenerBus.waitUntilEmpty (up to 30 s each)
+      // that is metric plumbing, not query cost — timing around the
+      // whole window would inflate walls by the drains and break
+      // cross-round comparability (ADVICE round 4).
+      val ((ok, wall), m) = Metrics.measure(spark) {
         val t0 = System.nanoTime()
         val r0 = runOnce(names(i))
-        wall = (System.nanoTime() - t0) / 1e9
-        r0
+        (r0, (System.nanoTime() - t0) / 1e9)
       }
       walls(i)(r) = wall
-      cpusSec(i)(r) = work.cpuSec
-      if (work.incomplete) measIncomplete += 1
+      cpusSec(i)(r) = m.work.cpuSec
+      if (m.work.incomplete) measIncomplete += 1
       if (!ok) okFlags(i) = false
       // Outside the timer: dropping the finished rep's snapshot caches is
       // harness bookkeeping, not query cost — and without it 100+ queries ×

@@ -3,10 +3,10 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.Locale
 
-import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
+import scala.util.matching.Regex
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftx.{Metrics, Sessions}
@@ -17,18 +17,21 @@ import org.apache.spark.sql.graftx.{Metrics, Sessions}
   *
   *  - `plans [outFile]` (default PLANS.md): the tree shape of every
   *    declared query's initial physical plan, one `## <name>` section
-  *    each — the committed dump PlansFreshnessSpec checks.
+  *    each — the committed dump PlansFreshnessSpec checks. A catalog
+  *    table's location prints as `[<warehouse>/<table>]`, so the dump
+  *    does not depend on where the checkout lives.
   *  - `explain <outDir> <tag> [q1,q2,...]` (no list → every declared
   *    query): `.explain("formatted")` per query into
   *    `<outDir>/<query>_<tag>.txt` — PushedFilters, ReadSchema, join build
   *    sides, exchange specs — followed by the formatted plan of every
   *    snapshot child: a rewrite below a snapshot leaf is invisible in the
   *    parent's plan (round-18 verdict #5).
-  *  - `stages <query> [reps]` (default 3 reps): each metered rep's stages,
-  *    hog first — span, executor CPU, tasks, input records, shuffle
-  *    read/write records, spill. Rep 1 is warm-up and unmetered. Span is
-  *    submission→completion, not wall: concurrent stages overlap, so the
-  *    span sum can exceed the rep wall (ADVICE r18).
+  *  - `stages <query> [reps]` (default 3 reps): each rep's stages from
+  *    its [[Metrics.measure]] window, hog first — span, executor CPU,
+  *    tasks, input records, shuffle read/write records, spill. Rep 1 is
+  *    warm-up; its table is not printed. Span is submission→completion,
+  *    not wall: concurrent stages overlap, so the span sum can exceed the
+  *    rep wall (ADVICE r18).
   *
   * Env: SPARK_GRAFT_SF_DIR (required: the fixture dir; PLANS.md is
   * dumped from sf0.1), SPARK_GRAFT_CPUS (default 4). Run:
@@ -79,7 +82,16 @@ object Inspect {
     finally Sessions.releaseSnapshots()
   }
 
+  /** A catalog table's scan Location names the warehouse's absolute path
+    * and is abbreviated at a length that depends on it; print it as
+    * `[<warehouse>/<table>]`, the table taken from the scan's own name. */
+  private def warehouseRelative(tree: String, warehouse: String): String =
+    ("""(spark_catalog\.\w+\.(\w+)\[.*Location: \w+\(\d+ paths\))\[""" +
+      Regex.quote(warehouse) + """/[^\]]*?(\]|\.\.\.)""").r
+      .replaceAllIn(tree, m => Regex.quoteReplacement(s"${m.group(1)}[<warehouse>/${m.group(2)}]"))
+
   private def plans(spark: SparkSession, sfDir: String, out: String): Unit = {
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
     val sb = new StringBuilder(
       "# PLANS — physical plans of the declared query inventory\n\n" +
       s"Generated by `graft.Inspect plans` against `$sfDir` on the `LocalSpark.session` " +
@@ -87,7 +99,8 @@ object Inspect {
       s"${spark.conf.get("spark.sql.shuffle.partitions")}`, AQE on — plans shown are\n" +
       "the initial physical plans; AQE may further coalesce/re-plan at runtime).\n")
     SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      val tree = planText(spark, sfDir, name)(_.queryExecution.executedPlan.toString)
+      val tree = warehouseRelative(
+        planText(spark, sfDir, name)(_.queryExecution.executedPlan.toString), warehouse)
       sb.append(s"\n## $name\n\n```\n")
       // keep the tree shape; drop the verbose per-node detail sections
       sb.append(tree.linesIterator.takeWhile(_.nonEmpty).mkString("\n"))
@@ -114,54 +127,37 @@ object Inspect {
     }
   }
 
-  private final case class StageRow(id: Int, name: String, spanMs: Long,
-      cpuMs: Long, tasks: Int, inputRecs: Long, shufReadRecs: Long,
-      shufWriteRecs: Long, spillBytes: Long)
-
   private def stages(spark: SparkSession, sfDir: String, name: String,
       reps: Int): Unit = {
     val fn = query(name)
-    val rows = ArrayBuffer.empty[StageRow]
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        val m = si.taskMetrics
-        if (m != null) rows.synchronized {
-          rows += StageRow(si.stageId, si.name.linesIterator.next(),
-            (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(-1L),
-            m.executorCpuTime / 1000000L, si.numTasks,
-            m.inputMetrics.recordsRead, m.shuffleReadMetrics.recordsRead,
-            m.shuffleWriteMetrics.recordsWritten, m.diskBytesSpilled)
-        }
-      }
+    def spanSec(si: StageInfo): Double =
+      (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(-1L) / 1e3
+    def cpuSec(si: StageInfo): Double = si.taskMetrics.executorCpuTime / 1e9
+    def fmt(si: StageInfo): String = {
+      val m = si.taskMetrics
+      String.format(Locale.ROOT, "%5d %7.2fs %7.2fs %5d %10d %10d %10d %8d  %s",
+        Int.box(si.stageId), Double.box(spanSec(si)), Double.box(cpuSec(si)),
+        Int.box(si.numTasks), Long.box(m.inputMetrics.recordsRead),
+        Long.box(m.shuffleReadMetrics.recordsRead),
+        Long.box(m.shuffleWriteMetrics.recordsWritten),
+        Long.box(m.diskBytesSpilled), si.name.linesIterator.next().take(120))
     }
-    def fmt(r: StageRow): String = String.format(Locale.ROOT,
-      "%5d %7.2fs %7.2fs %5d %10d %10d %10d %8d  %s",
-      Int.box(r.id), Double.box(r.spanMs / 1e3), Double.box(r.cpuMs / 1e3),
-      Int.box(r.tasks), Long.box(r.inputRecs), Long.box(r.shufReadRecs),
-      Long.box(r.shufWriteRecs), Long.box(r.spillBytes), r.name.take(120))
 
     for (rep <- 1 to reps) {
-      rows.synchronized(rows.clear())
-      if (rep > 1) spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val wall =
-        try {
+      val (wall, measured) =
+        try Metrics.measure(spark) {
+          val t0 = System.nanoTime()
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
           (System.nanoTime() - t0) / 1e9
-        } finally {
-          Metrics.flushListeners(spark.sparkContext)
-          if (rep > 1) spark.sparkContext.removeSparkListener(listener)
-          Sessions.releaseSnapshots()
-        }
-      val snap = rows.synchronized(rows.toVector)
-      println(f"%n=== $name rep $rep wall=$wall%.3fs stages=${snap.size} " +
-        f"cpuSum=${snap.map(_.cpuMs).sum / 1e3}%.3fs " +
-        f"stageSpanSum=${snap.map(_.spanMs).sum / 1e3}%.3fs " +
+        } finally Sessions.releaseSnapshots()
+      val st = measured.stages
+      println(f"%n=== $name rep $rep wall=$wall%.3fs stages=${st.size} " +
+        f"cpuSum=${st.map(cpuSec).sum}%.3fs " +
+        f"stageSpanSum=${st.map(spanSec).sum}%.3fs " +
         "(concurrent stages overlap; spanSum can exceed wall) ===")
       if (rep > 1) {
         println("stage    span     cpu  tasks      input   shufRead  shufWrite    spill  name")
-        snap.sortBy(-_.cpuMs).take(30).foreach(r => println(fmt(r)))
+        st.sortBy(-cpuSec(_)).take(30).foreach(si => println(fmt(si)))
       }
     }
   }

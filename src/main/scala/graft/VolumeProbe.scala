@@ -71,7 +71,7 @@ import org.apache.spark.sql.graftx.{Metrics, Sessions}
   * green.
   *
   * Emits one JSON artifact (SPARK_GRAFT_VOL_OUT, default
-  * VOLPROBE_r07.json in the working dir) with per-query raw numbers,
+  * volprobe_out.json in the working dir) with per-query raw numbers,
   * ratios, and gate results; exits non-zero if any gate fails — AFTER
   * the finally block has removed the multi-GB temp corpora and stopped
   * the session (round-6 ADVICE: sys.exit inside the try skipped the
@@ -79,10 +79,30 @@ import org.apache.spark.sql.graftx.{Metrics, Sessions}
   */
 object VolumeProbe {
 
+  /** One measured run: query `q` over `dir` at `parts` shuffle
+    * partitions, CONSTRUCTED and written to the noop sink inside one
+    * [[Metrics.measure]] window — the iterative operators do their work
+    * eagerly at construction — returning (wall seconds, the window).
+    * Snapshot caches release AFTER the timer: cleanup is harness
+    * bookkeeping, and carrying a previous run's corpus-scale cached RDDs
+    * into the next measurement is the storage hoarding ADVICE round 3
+    * flagged. ScaleProbeSpec measures through this too. */
+  private[graft] def measure(spark: SparkSession, q: DedupQueries.Q,
+      dir: String, parts: Int): (Double, Metrics.Measured) = {
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    val t0 = System.nanoTime()
+    val (_, m) = Metrics.measure(spark) {
+      q(spark, dir).write.mode("overwrite").format("noop").save()
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    Sessions.releaseSnapshots()
+    (wall, m)
+  }
+
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_VOL_FACTOR", "100").toInt
-    val out = sys.env.getOrElse("SPARK_GRAFT_VOL_OUT", "VOLPROBE_r07.json")
+    val out = sys.env.getOrElse("SPARK_GRAFT_VOL_OUT", "volprobe_out.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = LocalSpark.builder(cpus)
       .config("spark.sql.autoBroadcastJoinThreshold", "-1") // see class doc
@@ -91,12 +111,11 @@ object VolumeProbe {
 
     // Optional comma-separated query-name filter for iterating on one
     // entry without paying the full ~25-min probe. The canonical 100×
-    // artifact (VOLPROBE_r{N}.json) must come from an unfiltered run —
-    // ALL entries present (20 as of round 13); the 1000× decade artifact
-    // (VOLPROBE_1000X_r{N}.json) is a DELIBERATELY filtered run over the
-    // flagship dedup chain + the span/audit families (the full family at
-    // 1000× would spill the exact-baseline entries' ~37 GB each for no
-    // additional plan-class evidence).
+    // artifact must come from an unfiltered run — ALL entries present
+    // (20 as of round 13); the 1000× decade artifact is a DELIBERATELY
+    // filtered run over the flagship dedup chain + the span/audit
+    // families (the full family at 1000× would spill the exact-baseline
+    // entries' ~37 GB each for no additional plan-class evidence).
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_VOL_ONLY").map(_.split(",").map(_.trim).toSet)
     def wanted(n: String): Boolean = only.forall(_.contains(n))
@@ -883,46 +902,31 @@ object VolumeProbe {
           .filter(t => wanted(t._1))
       }
 
-      def measure(q: DedupQueries.Q, dir: String, parts: Int)
-          : (Double, Metrics.TaskWork, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        val t0 = System.nanoTime()
-        val (_, work, plans) = Metrics.withTaskWorkPlans(spark) {
-          val df = q(spark, dir)
-          df.write.mode("overwrite").format("noop").save()
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        Sessions.releaseSnapshots()
-        (wall, work, plans)
-      }
-
       // Warm-up (JIT, codegen, parquet reader) so the 1× baseline isn't
       // cold-start; the gated quantities are record counts, which warm-up
       // cannot change, but clean context numbers are worth one cheap run.
-      measure(queries.head._2, dir1, cpus.toInt)
+      measure(spark, queries.head._2, dir1, cpus.toInt)
 
       var allPass = true
       val entries = queries.map { case (name, q1, qN) =>
-        val (w1, k1, plans1) = measure(q1, dir1, cpus.toInt)
-        val rounds1 = graft.operators.Components.lastRounds
-        val kmRounds1 = graft.operators.KMeans.lastRounds
-        val kmConv1 = graft.operators.KMeans.lastConverged
-        val prRounds1 = graft.operators.PageRank.lastRounds
-        val prConv1 = graft.operators.PageRank.lastConverged
-        val lpaRounds1 = graft.operators.Lpa.lastRounds
-        val lpaTerm1 = graft.operators.Lpa.lastConverged ||
-          graft.operators.Lpa.lastOscillating
-        val bpeRounds1 = graft.operators.Bpe.lastRounds
-        val (wN, kN, plansN) = measure(qN, dirN, partsN)
-        val roundsN = graft.operators.Components.lastRounds
-        val kmRoundsN = graft.operators.KMeans.lastRounds
-        val kmConvN = graft.operators.KMeans.lastConverged
-        val prRoundsN = graft.operators.PageRank.lastRounds
-        val prConvN = graft.operators.PageRank.lastConverged
-        val lpaRoundsN = graft.operators.Lpa.lastRounds
-        val lpaTermN = graft.operators.Lpa.lastConverged ||
-          graft.operators.Lpa.lastOscillating
-        val bpeRoundsN = graft.operators.Bpe.lastRounds
+        val (w1, m1) = measure(spark, q1, dir1, cpus.toInt)
+        val (wN, mN) = measure(spark, qN, dirN, partsN)
+        val (k1, plans1, kN, plansN) = (m1.work, m1.plans, mN.work, mN.plans)
+        // A loop entry's rounds, and whether it ended before its cap, come
+        // from the LoopEnd its own run posted inside the window: -1 and
+        // false when the loop did not finish there.
+        def rounds(m: Metrics.Measured, loop: String): Int =
+          m.loop(loop).fold(-1)(_.rounds)
+        def beforeCap(m: Metrics.Measured, loop: String): Boolean =
+          m.loop(loop).exists(_.exit != Metrics.Exit.Cap)
+        val (rounds1, roundsN) = (rounds(m1, "Components"), rounds(mN, "Components"))
+        val (kmRounds1, kmRoundsN) = (rounds(m1, "KMeans"), rounds(mN, "KMeans"))
+        val (kmConv1, kmConvN) = (beforeCap(m1, "KMeans"), beforeCap(mN, "KMeans"))
+        val (prRounds1, prRoundsN) = (rounds(m1, "PageRank"), rounds(mN, "PageRank"))
+        val (prConv1, prConvN) = (beforeCap(m1, "PageRank"), beforeCap(mN, "PageRank"))
+        val (lpaRounds1, lpaRoundsN) = (rounds(m1, "Lpa"), rounds(mN, "Lpa"))
+        val (lpaTerm1, lpaTermN) = (beforeCap(m1, "Lpa"), beforeCap(mN, "Lpa"))
+        val (bpeRounds1, bpeRoundsN) = (rounds(m1, "Bpe"), rounds(mN, "Bpe"))
         // Entries whose DECLARED plan carries bounded nested-loop joins
         // (the exact-allowlisted <= k-row broadcast cross joins: kmeans
         // centroid tables, dsir's scalar totals row) get the bounded
@@ -1224,10 +1228,10 @@ object VolumeProbe {
             val (tRdd, tabSnap) = Sessions.snapshot(scanTab)
             val nVec = codesSnap.count() / 8 // materializes the snapshot
             tabSnap.count()
-            val (_, work, _) = Metrics.withTaskWorkPlans(spark) {
+            val work = Metrics.measure(spark) {
               SimilarityQueries.ivfpqScan(codesSnap, tabSnap)
                 .write.mode("overwrite").format("noop").save()
-            }
+            }._2.work
             // Expected scan mass from the routed cells themselves:
             // 8 code rows per candidate in each probe's routed cell,
             // minus the probe's own rows when it lives in that cell.
@@ -1338,10 +1342,10 @@ object VolumeProbe {
               SimilarityQueries.ivfpqCandidates(codes, scanTab,
                 SimilarityQueries.RerankShortlist))
             val nShort = shortSnap.count() // materializes the snapshot
-            val (_, work, _) = Metrics.withTaskWorkPlans(spark) {
+            val work = Metrics.measure(spark) {
               SimilarityQueries.rerankRefine(spark, dir, shortSnap)
                 .write.mode("overwrite").format("noop").save()
-            }
+            }._2.work
             sRdd.unpersist(blocking = false)
             (work.joinOutputRows, nShort)
           }
@@ -1378,11 +1382,11 @@ object VolumeProbe {
             val delta = SimilarityQueries.appendDelta(
               graft.sources.Tables.embeddings(spark, dir))
             val nDelta = delta.count()
-            val (_, work, _) = Metrics.withTaskWorkPlans(spark) {
+            val work = Metrics.measure(spark) {
               SimilarityQueries.ivfpqEncodeFrozenQ(
                 graft.operators.KMeans.quantize(delta), cellsT, cbT)
                 .write.mode("overwrite").format("noop").save()
-            }
+            }._2.work
             Sessions.releaseSnapshots()
             (work.joinOutputRows, work.shuffleRecordsRead, nDelta)
           }
@@ -1424,11 +1428,11 @@ object VolumeProbe {
               graft.sources.Tables.embeddings(spark, dir))
             val nDel = del.count()
             import graft.operators.KMeans
-            val (_, work, _) = Metrics.withTaskWorkPlans(spark) {
+            val work = Metrics.measure(spark) {
               KMeans.assign(KMeans.quantize(del), cellsT)
                 .select(col("vec_id"), col("cluster").as("cell"))
                 .write.mode("overwrite").format("noop").save()
-            }
+            }._2.work
             Sessions.releaseSnapshots()
             (work.joinOutputRows, work.shuffleRecordsRead, nDel)
           }
@@ -1492,10 +1496,10 @@ object VolumeProbe {
             val mt = codes.filter(col("m") === 0L)
               .join(broadcast(touched), col("cell") === col("tc"), "left_semi")
               .count()
-            val (_, work, _) = Metrics.withTaskWorkPlans(spark) {
+            val work = Metrics.measure(spark) {
               SimilarityQueries.ivfpqCompactLive(spark, dir)
                 .write.mode("overwrite").format("noop").save()
-            }
+            }._2.work
             Sessions.releaseSnapshots()
             (work.joinOutputRows, work.shuffleRecordsRead, mt, nDel)
           }
@@ -1539,10 +1543,10 @@ object VolumeProbe {
               .groupBy(col("cell")).agg(count(lit(1)).as("n"))
               .agg(max(col("n"))).head.getLong(0)
             val n = codes0.count() / 8L
-            val (_, work, _) = Metrics.withTaskWorkPlans(spark) {
+            val work = Metrics.measure(spark) {
               SimilarityQueries.ivfpqSplitBuild(spark, dir)._2
                 .write.mode("overwrite").format("noop").save()
-            }
+            }._2.work
             Sessions.releaseSnapshots()
             (work.joinOutputRows, work.shuffleRecordsRead, m, n)
           }
@@ -1592,21 +1596,21 @@ object VolumeProbe {
               DedupQueries.semdedupRouted(k)(spark, s"$dir/semdd"))._2
             routed.count() // materialize level 1
             val groups = DedupQueries.semdedupCellGroups(k)(spark, s"$dir/semdd")
-            val (_, workA, _) = Metrics.withTaskWorkPlans(spark) {
+            val workA = Metrics.measure(spark) {
               DedupQueries.semdedupAssignFrom(routed, groups, k)
                 .write.mode("overwrite").format("noop").save()
-            }
+            }._2.work
             val asn = Sessions.snapshot(
               DedupQueries.semdedupAssignFrom(routed, groups, k))._2
             val nVec = asn.count() // materializes the assigned snapshot
-            val (_, workC, _) = Metrics.withTaskWorkPlans(spark) {
+            val workC = Metrics.measure(spark) {
               DedupQueries.semdedupCandidates(asn)
                 .write.mode("overwrite").format("noop").save()
-            }
-            val (_, workQ, _) = Metrics.withTaskWorkPlans(spark) {
+            }._2.work
+            val workQ = Metrics.measure(spark) {
               DedupQueries.semdedupLosers(asn)
                 .write.mode("overwrite").format("noop").save()
-            }
+            }._2.work
             Sessions.releaseSnapshots()
             (workA.joinOutputRows, workC.joinOutputRows,
               workQ.joinOutputRows, nVec)

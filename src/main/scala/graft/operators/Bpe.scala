@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.Sessions
+import org.apache.spark.sql.graftx.{Metrics, Sessions}
+import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
 
 import graft.queries.TextQueries
 
@@ -70,10 +71,11 @@ import graft.queries.TextQueries
   *
   * A batch that would shrink below one pair falls back to the plain
   * winner (k = 1 is unconditionally sequential). `maxBatch` bounds the
-  * folded replace-expression depth per round. Rounds counted in
-  * [[lastRounds]] remain MERGES (the probe's target contract);
-  * [[lastBatches]] records the driver-round count the batching buys
-  * down.
+  * folded replace-expression depth per round. The run posts
+  * `LoopEnd("Bpe", merges, Cap | Exhausted, batches)`
+  * ([[Metrics.loopEnd]]): its rounds are MERGES (= rows in the returned
+  * table, the probe's target contract), its batches the driver rounds
+  * (≤ merges) the batching buys down; a run that throws posts nothing.
   *
   * Loop discipline (the [[KMeans]]/[[PageRank]]/[[Lpa]] contract):
   * conf-isolated `newSession()` clone, AQE off, shuffle width
@@ -81,25 +83,11 @@ import graft.queries.TextQueries
   * re-snapshots the ≤ cap-row merged vocabulary (localCheckpoint per
   * round — real vocab targets run thousands of rounds, the dependency-
   * graph depth the PageRank lesson is about); hitting `targetMerges`
-  * is SUCCESS (the budget is the contract), stopping early on
-  * exhaustion is recorded in [[lastConverged]].
+  * is SUCCESS (the budget is the contract, exit `Cap`), stopping early
+  * — no adjacent pair left, or the best pair's count below `minCount` —
+  * is exit `Exhausted`.
   */
 object Bpe {
-
-  /** Merge rounds the most recent [[train]] completed (= rows in the
-    * returned table). Probe introspection, the [[KMeans.lastRounds]]
-    * contract; reset at entry. */
-  @volatile var lastRounds: Int = -1
-
-  /** True iff the most recent [[train]] stopped EARLY — no adjacent
-    * pair left, or the best pair's count fell below `minCount` —
-    * rather than by reaching `targetMerges`. */
-  @volatile var lastConverged: Boolean = false
-
-  /** Driver rounds (= batches = Spark job pairs) the most recent
-    * [[train]] used — ≤ [[lastRounds]]; the quantity batching exists to
-    * shrink (32k merges in ~32k/avgBatch driver rounds). */
-  @volatile var lastBatches: Int = -1
 
   /** @param docWords     (doc_id, word) occurrence stream — the
     *                     [[TextQueries.bpeDocWords]] contract (empty
@@ -119,9 +107,6 @@ object Bpe {
     require(targetMerges >= 1, s"targetMerges must be positive: $targetMerges")
     require(minCount >= 1L, s"minCount must be positive: $minCount")
     require(maxBatch >= 1, s"maxBatch must be positive: $maxBatch")
-    lastRounds = -1
-    lastConverged = false
-    lastBatches = -1
     val parent = docWords.sparkSession
     val s = parent.newSession()
     Sessions.copyRuntimeConf(parent, s)
@@ -236,9 +221,8 @@ object Bpe {
           }
         }
       }
-      lastRounds = round
-      lastConverged = exhausted
-      lastBatches = batches
+      Metrics.loopEnd(parent, LoopEnd("Bpe", round,
+        if (exhausted) Exit.Exhausted else Exit.Cap, batches))
     } finally {
       if ((inFlight != null) && (inFlight ne vocabRdd))
         inFlight.unpersist(blocking = false)

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.Sessions
+import org.apache.spark.sql.graftx.{Metrics, Sessions}
+import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
 
 /** Distributed connected components — the operator behind `dedup_clusters`
   * (each near-dup pair component collapses to its min doc_id, the
@@ -46,18 +47,16 @@ import org.apache.spark.sql.graftx.Sessions
   *  - non-convergence within the cap THROWS — wrong labels must never
   *    ship silently. With doubling reach, maxRounds = 50 covers any
   *    diameter below ~2^49; hitting the cap means a bug, not a big graph.
+  *
+  * A converged run posts `LoopEnd("Components", rounds, Fixpoint)`
+  * ([[Metrics.loopEnd]]); a run that throws posts nothing. VolumeProbe
+  * normalizes the clusters entries' per-round linearity gate by those
+  * rounds: every round re-joins the full edge set, so total join-output
+  * rows are rounds × O(edges), and rounds track the MAX component
+  * diameter in the corpus (O(log d) by the doubling argument above) — a
+  * property of the data's cluster structure, not of data volume.
   */
 object Components {
-
-  /** Rounds the most recent [[connectedComponents]] call took to reach
-    * its fixpoint — probe introspection only. VolumeProbe normalizes the
-    * clusters entry's per-round linearity gate by this: every round
-    * re-joins the full edge set, so total join-output rows are
-    * rounds × O(edges), and rounds track the MAX component diameter in
-    * the corpus (O(log d) by the doubling argument above) — a property
-    * of the data's cluster structure, not of data volume. Not
-    * thread-safe across concurrent component runs. */
-  @volatile var lastRounds: Int = -1
 
   /** @param pairs     (doc_a, doc_b) undirected candidate pairs
     * @param loopParts shuffle width for the iterative stage (size to the
@@ -136,10 +135,10 @@ object Components {
         converged = changed == 0
         round += 1
       }
-      lastRounds = round
       if (!converged)
         throw new IllegalStateException(
           s"connectedComponents did not converge within $maxRounds rounds")
+      Metrics.loopEnd(parent, LoopEnd("Components", round, Exit.Fixpoint))
     } finally {
       if (inFlightProp != null) inFlightProp.unpersist(blocking = false)
       if ((inFlightNext != null) && (inFlightNext ne prevRdd))

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.Sessions
+import org.apache.spark.sql.graftx.{Metrics, Sessions}
+import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
 
 import graft.functions.ColFns.{qdot, qnorm2}
 
@@ -39,8 +40,9 @@ import graft.functions.ColFns.{qdot, qnorm2}
   *    than throws: a label fixpoint is correctness (wrong labels must
   *    never ship), a Lloyd fixpoint is refinement — integer floor
   *    centroids can in principle 2-cycle near a tie, and every real
-  *    deployment runs k-means under a round budget. [[lastRounds]]
-  *    records what happened for the caller/probe to gate on.
+  *    deployment runs k-means under a round budget. The run posts
+  *    `LoopEnd("KMeans", rounds, Fixpoint | Cap)` ([[Metrics.loopEnd]])
+  *    for the caller/probe to gate on; a run that throws posts nothing.
   *
   * 100 TB shape: each round is one broadcast cross join (≤ k rows
   * forced, the allowlisted posture) collapsed by a map-side-combined
@@ -49,15 +51,6 @@ import graft.functions.ColFns.{qdot, qnorm2}
   * linear cost, nothing else accumulates.
   */
 object KMeans {
-
-  /** Rounds the most recent [[lloyd]] call ran (counting the round that
-    * observed convergence) — probe introspection, same contract as
-    * [[Components.lastRounds]]. Not thread-safe across concurrent runs. */
-  @volatile var lastRounds: Int = -1
-
-  /** True iff the most recent [[lloyd]] call reached an exact centroid
-    * fixpoint within its round budget (vs exiting on the cap). */
-  @volatile var lastConverged: Boolean = false
 
   /** Assignment step over pre-quantized frames: `q` carries
     * (vec_id, qv: array<long> millunits, n2 = |qv|²), `cents` carries
@@ -128,12 +121,6 @@ object KMeans {
   def lloyd(embeddings: DataFrame, k: Int, dims: Int = 64,
             loopParts: Int = 8, maxRounds: Int = 40): DataFrame = {
     require(k >= 1 && k <= 16, s"packed argmin carries labels in [0,16): k=$k")
-    // Reset the introspection fields at ENTRY: if a round's count job
-    // throws, a probe/test reading them afterwards must see "this run
-    // recorded nothing" (-1/false), not the PREVIOUS run's values
-    // (round-13 ADVICE — staleness-on-failure was undocumented).
-    lastRounds = -1
-    lastConverged = false
     val parent = embeddings.sparkSession
     val s = parent.newSession()
     Sessions.copyRuntimeConf(parent, s)
@@ -175,8 +162,8 @@ object KMeans {
         converged = changed == 0
         round += 1
       }
-      lastRounds = round
-      lastConverged = converged
+      Metrics.loopEnd(parent, LoopEnd("KMeans", round,
+        if (converged) Exit.Fixpoint else Exit.Cap))
     } finally {
       if ((inFlight != null) && (inFlight ne prevRdd))
         inFlight.unpersist(blocking = false)

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.Sessions
+import org.apache.spark.sql.graftx.{Metrics, Sessions}
+import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
 
 /** Run-to-termination label propagation (round-15 verdict #4) — the
   * N-round form behind the declared fixed-2-round
@@ -30,8 +31,9 @@ import org.apache.spark.sql.graftx.Sessions
   * joins the previous AND the one before it (all node-scale) and two
   * conditional sums count disagreements against each. Hitting
   * `maxRounds` RETURNS rather than throws (the lloyd rule — a label
-  * table short of termination is refinement, not corruption);
-  * [[lastConverged]]/[[lastOscillating]] record which exit fired.
+  * table short of termination is refinement, not corruption). The run
+  * posts `LoopEnd("Lpa", rounds, Fixpoint | TwoCycle | Cap)`
+  * ([[Metrics.loopEnd]]); a run that throws posts nothing.
   *
   * Loop discipline (inherited from [[Components]]/[[KMeans]]/
   * [[PageRank]]):
@@ -56,21 +58,6 @@ import org.apache.spark.sql.graftx.Sessions
   * /root/reference/src/dist_map.h:255-279.
   */
 object Lpa {
-
-  /** Rounds the most recent [[iterate]] ran (counting the round that
-    * observed termination) — probe introspection, the
-    * [[PageRank.lastRounds]] contract. Not thread-safe across
-    * concurrent runs; reset at entry so a failed run shows -1/false. */
-  @volatile var lastRounds: Int = -1
-
-  /** True iff the loop exited on an exact fixpoint (labels unchanged
-    * from the previous round). */
-  @volatile var lastConverged: Boolean = false
-
-  /** True iff the loop exited on period-2 oscillation (labels equal to
-    * those TWO rounds ago while differing from the previous round —
-    * the synchronous-LPA bipartite limit cycle). */
-  @volatile var lastOscillating: Boolean = false
 
   /** One synchronous vote round over a DIRECTED edge frame (src, dst)
     * and a label frame (p, lbl): every node adopts the mode of its
@@ -115,9 +102,6 @@ object Lpa {
     *         side of the 2-cycle */
   def iterate(pairs: DataFrame, loopParts: Int = 8,
               maxRounds: Int = 60): DataFrame = {
-    lastRounds = -1
-    lastConverged = false
-    lastOscillating = false
     val parent = pairs.sparkSession
     val s = parent.newSession()
     Sessions.copyRuntimeConf(parent, s)
@@ -136,11 +120,11 @@ object Lpa {
     var prevPrevRdd: org.apache.spark.rdd.RDD[_] = null
     var prevPrev: DataFrame = null
     var round = 0
-    var done = false
+    var exit: Exit = Exit.Cap
     var inFlight: org.apache.spark.rdd.RDD[_] = null
     var fin: DataFrame = null
     try {
-      while (round < maxRounds && !done) {
+      while (round < maxRounds && exit == Exit.Cap) {
         val (nextRdd, next) = Sessions.snapshot(voteRound(edges, prev))
         nextRdd.localCheckpoint()
         inFlight = nextRdd
@@ -179,10 +163,9 @@ object Lpa {
         prevRdd = nextRdd
         inFlight = null
         round += 1
-        if (movedPrev == 0L) { lastConverged = true; done = true }
-        else if (movedPrevPrev == 0L) { lastOscillating = true; done = true }
+        if (movedPrev == 0L) exit = Exit.Fixpoint
+        else if (movedPrevPrev == 0L) exit = Exit.TwoCycle
       }
-      lastRounds = round
       // Materialize the final frame into a fresh snapshot so the loop's
       // checkpointed RDDs can all be released here (the PageRank
       // finally-block lesson: returning a plan over an about-to-be-
@@ -195,6 +178,7 @@ object Lpa {
       if (prevPrevRdd != null) prevPrevRdd.unpersist(blocking = false)
       prevRdd = null
       prevPrevRdd = null
+      Metrics.loopEnd(parent, LoopEnd("Lpa", round, exit))
     } finally {
       // Deterministic release on EVERY exit: the success path nulls
       // prevRdd/prevPrevRdd after its own unpersist, so these fire only

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.Sessions
+import org.apache.spark.sql.graftx.{Metrics, Sessions}
+import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
 
 import graft.functions.ColFns.floorDiv
 import graft.queries.LinkageQueries.{PrDampDen, PrDampNum, PrScale, PrTeleport}
@@ -32,17 +33,11 @@ import graft.queries.LinkageQueries.{PrDampDen, PrDampNum, PrScale, PrTeleport}
   *    static by construction: every node has degree ≥ 1 and receives a
   *    contribution every round);
   *  - hitting `maxRounds` RETURNS rather than throws (the lloyd rule):
-  *    a rank table short of tol is refinement, not corruption —
-  *    `lastConverged` records which exit fired.
+  *    a rank table short of tol is refinement, not corruption. The
+  *    run posts `LoopEnd("PageRank", rounds, Fixpoint | Cap)`
+  *    ([[Metrics.loopEnd]]); a run that throws posts nothing.
   */
 object PageRank {
-
-  /** Introspection for probes/specs — how many rounds the LAST iterate()
-    * on this JVM ran, and whether it exited on convergence or the round
-    * cap. Reset at entry so a failed run never shows a previous run's
-    * values. Not thread-safe; the probes run iterations serially. */
-  @volatile private[graft] var lastRounds: Int = -1
-  @volatile private[graft] var lastConverged: Boolean = false
 
   /** @param pairs     undirected support-thresholded edge set
     *                   (pa, pb) — [[graft.queries.LinkageQueries
@@ -56,8 +51,6 @@ object PageRank {
   def iterate(pairs: DataFrame, tol: Long = 1000L,
               loopParts: Int = 8, maxRounds: Int = 60): DataFrame = {
     require(tol >= 0L, s"tol must be non-negative, got $tol")
-    lastRounds = -1
-    lastConverged = false
     val parent = pairs.sparkSession
     val s = parent.newSession()
     Sessions.copyRuntimeConf(parent, s)
@@ -117,8 +110,6 @@ object PageRank {
         converged = moving == 0L
         round += 1
       }
-      lastRounds = round
-      lastConverged = converged
       // Attach the degree column and MATERIALIZE the final node-scale
       // table while the out-edge invariant is still cached (round-14
       // ADVICE: the returned plan referenced `nodes` — derived from the
@@ -141,6 +132,8 @@ object PageRank {
       // Sessions.releaseSnapshots caveat applies to `fin` itself —
       // see that scaladoc — but not to any checkpoint block).
       prevRdd.unpersist(blocking = false)
+      Metrics.loopEnd(parent, LoopEnd("PageRank", round,
+        if (converged) Exit.Fixpoint else Exit.Cap))
     } finally {
       if ((inFlight != null) && (inFlight ne prevRdd))
         inFlight.unpersist(blocking = false)

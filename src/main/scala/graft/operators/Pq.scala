@@ -40,23 +40,17 @@ object Pq {
     *                   label domain)
     * @param loopParts  shuffle width inside each lloyd loop
     * @param maxRounds  per-subspace round budget
-    * @return ((subspace, cluster_id, dim, c, n_vecs), per-subspace
-    *         Lloyd round counts) — dim is the WITHIN-subspace dimension
-    *         (0 until subDim) */
+    * @return (subspace, cluster_id, dim, c, n_vecs) — dim is the
+    *         WITHIN-subspace dimension (0 until subDim); each subspace's
+    *         loop posts its own `KMeans` LoopEnd, in subspace order */
   def trainCodebooks(embeddings: DataFrame, m: Int = 8, subDim: Int = 8,
-      k: Int = 4, loopParts: Int = 8,
-      maxRounds: Int = 40): (DataFrame, Seq[Int]) = {
-    val (parts, rounds) = (0 until m).map { j =>
+      k: Int = 4, loopParts: Int = 8, maxRounds: Int = 40): DataFrame =
+    (0 until m).map { j =>
       val sub = embeddings.select(col("vec_id"),
         slice(col("embedding"), j * subDim + 1, subDim).as("embedding"))
-      val trained = KMeans.lloyd(sub, k, subDim, loopParts, maxRounds)
+      KMeans.lloyd(sub, k, subDim, loopParts, maxRounds)
         .withColumn("subspace", lit(j.toLong))
-      // lloyd's driver loop has RUN by the time it returns, so its
-      // round count is this subspace's.
-      (trained, KMeans.lastRounds)
-    }.unzip
-    (parts.reduce(_ unionByName _)
+    }.reduce(_ unionByName _)
       .select(col("subspace"), col("cluster_id"), col("dim"),
-        col("c"), col("n_vecs")), rounds)
-  }
+        col("c"), col("n_vecs"))
 }

@@ -1,25 +1,29 @@
 package org.apache.spark.sql.graftx
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** private[spark] bridge for reading aggregate task metrics around a
-  * block of Spark actions. Used by the scale-probe tests: wall-clock on a
-  * shared VM includes multi-second host stalls that have nothing to do
-  * with the plan under test, while `executorCpuTime` measures the WORK —
-  * a quadratic regression burns ~100× CPU at 10× input however noisy the
-  * host is. Lives in the org.apache.spark namespace only for
-  * `listenerBus.waitUntilEmpty` access (listener events are async; without
-  * the flush the last stages of the measured block would be missed). */
+/** The one measurement window: [[measure]] runs a block of Spark actions
+  * and returns what it cost — per-stage task metrics, the executed
+  * plans, and the [[LoopEnd]] records of the driver loops that finished
+  * inside it. Bench, Inspect, VolumeProbe and the specs all measure
+  * through it. Wall-clock on a shared VM includes multi-second host
+  * stalls that have nothing to do with the plan under test, while
+  * `executorCpuTime` and the record counts measure the WORK — a quadratic
+  * regression burns ~100× CPU at 10× input however noisy the host is.
+  * Lives in the org.apache.spark namespace for `listenerBus` access
+  * (listener events are async; without the drains a window would miss
+  * its own last stages and catch the previous block's late ones). */
 object Metrics {
 
   /** Work counters for one measured block. `cpuSec` excludes GC threads
@@ -35,44 +39,124 @@ object Metrics {
     * no extra shuffle records, no spill, plan shape sane — but the join
     * node's own output-row metric counts every generated pair, and like
     * the other gated quantities it is a property of the plan, not the
-    * host. Only populated by [[withTaskWorkPlans]]; the bare-SparkContext
-    * [[withTaskWork]] (Bench) leaves it 0.
+    * host.
     *
-    * `incomplete` is true when the post-body listener-bus drain timed
-    * out: some stage/execution events may not have been delivered, so
-    * every counter is a LOWER bound. Consumers that gate on these
-    * numbers must surface the flag in their artifact (round-9 ADVICE: a
-    * silently partial rep read as complete) so the rep can be discounted
-    * or re-run instead of trusted. */
+    * `incomplete` is true when a listener-bus drain timed out: some
+    * stage/execution events may not have been delivered (or a previous
+    * block's may have leaked in), so the counters are not exact.
+    * Consumers that gate on these numbers must surface the flag in their
+    * artifact (round-9 ADVICE: a silently partial rep read as complete)
+    * so the rep can be discounted or re-run instead of trusted. */
   final case class TaskWork(cpuSec: Double, shuffleRecordsRead: Long,
       diskSpilledBytes: Long, joinOutputRows: Long = 0L,
       incomplete: Boolean = false)
 
-  /** Runs `body`, returning (result, aggregate [[TaskWork]] of all stages
-    * completed during it). `joinOutputRows` stays 0 here — join metrics
-    * live on plan nodes, not task metrics; use [[withTaskWorkPlans]] to
-    * capture them. */
-  def withTaskWork[T](sc: SparkContext)(body: => T): (T, TaskWork) = {
-    val cpuNs = new AtomicLong
-    val shuffleRecs = new AtomicLong
-    val spilled = new AtomicLong
+  /** How a driver loop ended. */
+  sealed trait Exit
+  object Exit {
+    /** Nothing changed since the previous round (within tolerance). */
+    case object Fixpoint extends Exit
+    /** Labels equal those of two rounds ago: the synchronous-LPA 2-cycle. */
+    case object TwoCycle extends Exit
+    /** The round (or merge) budget ran out. */
+    case object Cap extends Exit
+    /** No work was left before the budget ran out (BPE's early stop). */
+    case object Exhausted extends Exit
+  }
+
+  /** One driver loop's outcome, posted on the listener bus by the loop
+    * ([[loopEnd]]) when it finishes; a loop that throws posts nothing.
+    * `batches` is BPE's driver-round count (merges are its `rounds`), -1
+    * for the other loops. Not written to the event log. */
+  final case class LoopEnd(loop: String, rounds: Int, exit: Exit,
+      batches: Int = -1) extends SparkListenerEvent {
+    override protected[spark] def logEvent: Boolean = false
+  }
+
+  /** Posts `e` for any open [[measure]] window; without one it costs an
+    * event on the bus and nothing else. */
+  def loopEnd(spark: SparkSession, e: LoopEnd): Unit =
+    spark.sparkContext.listenerBus.post(e)
+
+  /** What one [[measure]] window saw: the summed [[TaskWork]], the
+    * executed plans (action QueryExecutions, then snapshot plans), every
+    * completed stage's info with its task metrics, and the [[LoopEnd]]
+    * records in posting order. */
+  final case class Measured(work: TaskWork, plans: Seq[SparkPlan],
+      stages: Seq[StageInfo], loops: Seq[LoopEnd]) {
+    /** The last record of loop `name`, if one finished in the window. */
+    def loop(name: String): Option[LoopEnd] = loops.findLast(_.loop == name)
+  }
+
+  /** Runs `body` inside one measurement window.
+    *
+    * The window opens by DRAINING the listener bus, so events the
+    * previous block posted but the bus had not yet delivered (a late
+    * execution-end carries that query's join rows) land before anything
+    * here is registered. Inside, a SparkListener collects completed
+    * stages and [[LoopEnd]] records, and a QueryExecutionListener every
+    * action's QueryExecution (the noop write the probes run is a NEW
+    * QueryExecution, not the measured frame's own — walking
+    * `df.queryExecution` would read never-executed zero metrics); the
+    * [[Sessions.beginPlanCapture]] window adds the executed plans of
+    * snapshots taken inside the block, whose joins run under their own
+    * QueryExecution that no action listener sees. The window closes with
+    * a second drain. The plans let a caller run post-execution
+    * plan-shape checks (e.g. [[hasNestedLoop]]) on what actually ran —
+    * the FINAL adaptive plan after any AQE re-plan, which the
+    * pre-execution `queryExecution.sparkPlan` cannot show (round-6
+    * ADVICE). Single-threaded by the same harness contract as
+    * [[Sessions.releaseSnapshots]]. */
+  def measure[T](spark: SparkSession)(body: => T): (T, Measured) = {
+    val sc = spark.sparkContext
+    val opened = flushListeners(sc)
+    val stages = new ConcurrentLinkedQueue[StageInfo]
+    val loops = new ConcurrentLinkedQueue[LoopEnd]
+    val qes = new ConcurrentLinkedQueue[QueryExecution]
     val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          cpuNs.addAndGet(m.executorCpuTime)
-          shuffleRecs.addAndGet(m.shuffleReadMetrics.recordsRead)
-          spilled.addAndGet(m.diskBytesSpilled)
-        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics != null) stages.add(e.stageInfo)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case l: LoopEnd => loops.add(l)
+        case _ =>
       }
     }
-    sc.addSparkListener(listener)
+    val execListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = qes.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = qes.add(qe)
+    }
+    // Setup sits INSIDE the try: if any step throws, the finally still
+    // pairs endPlanCapture/unregister with whatever did happen, so a
+    // failed setup can't leave the JVM-global capture window open
+    // (round-9 ADVICE). Every cleanup call is a safe no-op when its setup
+    // never ran.
     try {
+      Sessions.beginPlanCapture()
+      sc.addSparkListener(listener)
+      spark.listenerManager.register(execListener)
       val result = body
-      val drained = flushListeners(sc)
-      (result, TaskWork(cpuNs.get / 1e9, shuffleRecs.get, spilled.get,
-        incomplete = !drained))
-    } finally sc.removeSparkListener(listener)
+      val closed = flushListeners(sc)
+      // onFailure enqueues QEs whose lazy executedPlan may RETHROW the
+      // original failure when forced — a caller that handled its own
+      // per-query error must not lose the whole measured block at
+      // readout (round-9 review), so undecodable plans are skipped.
+      val plans = qes.asScala
+        .flatMap(qe => scala.util.Try(qe.executedPlan).toOption).toSeq ++
+        Sessions.endPlanCapture()
+      val st = stages.asScala.toSeq
+      val ms = st.map(_.taskMetrics)
+      val work = TaskWork(ms.map(_.executorCpuTime).sum / 1e9,
+        ms.map(_.shuffleReadMetrics.recordsRead).sum,
+        ms.map(_.diskBytesSpilled).sum, joinOutputRows(plans),
+        incomplete = !(opened && closed))
+      (result, Measured(work, plans, st, loops.asScala.toSeq))
+    } finally {
+      spark.listenerManager.unregister(execListener)
+      sc.removeSparkListener(listener)
+      Sessions.endPlanCapture() // idempotent; ensures the flag is off on failure
+    }
   }
 
   /** Drains the listener bus so async stage/execution events posted by
@@ -84,8 +168,7 @@ object Metrics {
     * with a stderr note — but the `false` return propagates into
     * [[TaskWork.incomplete]] so downstream artifacts record the rep as
     * partial rather than trusting it (round-9 ADVICE). Public so harness
-    * mains outside org.apache.spark can flush between phases (warmup →
-    * first metered rep). */
+    * mains outside org.apache.spark can flush between phases. */
   def flushListeners(sc: SparkContext, timeoutMs: Long = 30000): Boolean =
     try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
     catch {
@@ -94,53 +177,6 @@ object Metrics {
           s"[graftx] listener bus not drained within $timeoutMs ms; metrics may be incomplete")
         false
     }
-
-  /** [[withTaskWork]] that ALSO fills `joinOutputRows` and returns the
-    * executed plans it captured: a QueryExecutionListener captures every
-    * action's QueryExecution (the noop write the probes run is a NEW
-    * QueryExecution, not the measured frame's own — walking
-    * `df.queryExecution` would read never-executed zero metrics), and the [[Sessions.beginPlanCapture]] window
-    * contributes the executed plans of snapshots taken inside the block,
-    * whose joins run under their own QueryExecution that no action
-    * listener sees. The returned plans let a caller run post-execution
-    * plan-shape checks (e.g. [[hasNestedLoop]]) on the plans that
-    * actually ran — including the FINAL adaptive plan after any AQE
-    * re-plan, which the pre-execution `queryExecution.sparkPlan` cannot
-    * show (round-6 ADVICE). Single-threaded by the same harness contract
-    * as [[Sessions.releaseSnapshots]]. */
-  def withTaskWorkPlans[T](spark: SparkSession)(
-      body: => T): (T, TaskWork, Seq[SparkPlan]) = {
-    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
-    val execListener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = qes.add(qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = qes.add(qe)
-    }
-    // Both the capture window and the listener registration sit INSIDE
-    // the try: if either throws, the finally still pairs
-    // endPlanCapture/unregister with whatever did happen, so a failed
-    // setup can't leave the JVM-global capture window open (round-9
-    // ADVICE). Both cleanup calls are safe no-ops when setup never ran.
-    try {
-      Sessions.beginPlanCapture()
-      spark.listenerManager.register(execListener)
-      // The inner call's listener flush also delivers the execution-end
-      // events that drive QueryExecutionListener dispatch.
-      val (result, base) = withTaskWork(spark.sparkContext)(body)
-      // onFailure enqueues QEs whose lazy executedPlan may RETHROW the
-      // original failure when forced — a caller that handled its own
-      // per-query error must not lose the whole measured block at
-      // readout (round-9 review), so undecodable plans are skipped.
-      val plans = qes.asScala
-        .flatMap(qe => scala.util.Try(qe.executedPlan).toOption).toSeq ++
-        Sessions.endPlanCapture()
-      (result, base.copy(joinOutputRows = joinOutputRows(plans)), plans)
-    } finally {
-      spark.listenerManager.unregister(execListener)
-      Sessions.endPlanCapture() // idempotent; ensures the flag is off on failure
-    }
-  }
 
   /** True if any plan contains a BroadcastNestedLoopJoin or
     * CartesianProduct node — STRUCTURAL, on the final adaptive plan (AQE

@@ -81,7 +81,7 @@ object Sessions {
     // The snapshot's joins execute under ITS QueryExecution — invisible
     // to any action listener on the parent frame. While a measurement
     // window is open ([[beginPlanCapture]]), retain the executed plan
-    // STRONGLY so Metrics.withTaskWorkPlans can include its
+    // STRONGLY so Metrics.measure can include its
     // numOutputRows in the measured block's join total — a weak
     // reference here lost plans to GC under exactly the corpus-scale
     // memory pressure the probes create, silently corrupting the
@@ -183,7 +183,7 @@ object Sessions {
 
   /** Opens a plan-capture window: subsequent snapshots retain their
     * executed plans (strongly) until [[endPlanCapture]]. Measurement
-    * plumbing for [[Metrics.withTaskWorkPlans]]; same single-threaded
+    * plumbing for [[Metrics.measure]]; same single-threaded
     * harness contract as [[releaseSnapshots]]. Discards anything left by
     * earlier, unmeasured work. */
   def beginPlanCapture(): Unit = {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Metrics.Exit
 
 import graft.queries.TextQueries
 
@@ -102,17 +103,19 @@ class BpeSpec extends SparkSpec {
     val dir = plant(words)
     for (target <- Seq(2, 5, 9)) {
       val (want, wantEarly) = refTrain(words, target, minCount = 2L)
-      val got = Bpe.train(TextQueries.bpeDocWords(spark, dir), target,
-          minCount = 2L, loopParts = 2)
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq
+      val (got, Seq(end)) = loopEnds("Bpe") {
+        Bpe.train(TextQueries.bpeDocWords(spark, dir), target,
+            minCount = 2L, loopParts = 2)
+          .collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+          .toSeq
+      }
       org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
       assert(got == want, s"target $target: $got != $want")
-      assert(Bpe.lastRounds == want.size,
-        s"target $target: rounds ${Bpe.lastRounds} != ${want.size}")
-      assert(Bpe.lastConverged == wantEarly,
-        s"target $target: early=${Bpe.lastConverged}, reference $wantEarly")
+      assert(end.rounds == want.size,
+        s"target $target: rounds ${end.rounds} != ${want.size}")
+      assert((end.exit == Exit.Exhausted) == wantEarly,
+        s"target $target: exit ${end.exit}, reference early=$wantEarly")
     }
   }
 
@@ -126,15 +129,17 @@ class BpeSpec extends SparkSpec {
     val words = Map("ab" -> 100L, "cd" -> 90L, "ef" -> 80L, "gh" -> 70L)
     val dir = plant(words)
     val (want, _) = refTrain(words, 4, minCount = 2L)
-    val got = Bpe.train(TextQueries.bpeDocWords(spark, dir), 4,
-        minCount = 2L, loopParts = 2)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
+    val (got, Seq(end)) = loopEnds("Bpe") {
+      Bpe.train(TextQueries.bpeDocWords(spark, dir), 4,
+          minCount = 2L, loopParts = 2)
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .toSeq
+    }
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
     assert(got == want, s"$got != $want")
-    assert(Bpe.lastRounds == 4 && Bpe.lastBatches == 1,
-      s"rounds=${Bpe.lastRounds} batches=${Bpe.lastBatches} — " +
+    assert(end.rounds == 4 && end.batches == 1,
+      s"rounds=${end.rounds} batches=${end.batches} — " +
         "the disjoint-pair fixture must train in one batch")
   }
 
@@ -147,15 +152,17 @@ class BpeSpec extends SparkSpec {
     val words = Map("ab" -> 10L, "cd" -> 10L, "ce" -> 10L)
     val dir = plant(words)
     val (want, _) = refTrain(words, 3, minCount = 2L)
-    val got = Bpe.train(TextQueries.bpeDocWords(spark, dir), 3,
-        minCount = 2L, loopParts = 2)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
+    val (got, Seq(end)) = loopEnds("Bpe") {
+      Bpe.train(TextQueries.bpeDocWords(spark, dir), 3,
+          minCount = 2L, loopParts = 2)
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .toSeq
+    }
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
     assert(got == want, s"$got != $want")
-    assert(Bpe.lastRounds == 3 && Bpe.lastBatches == 3,
-      s"rounds=${Bpe.lastRounds} batches=${Bpe.lastBatches} — " +
+    assert(end.rounds == 3 && end.batches == 3,
+      s"rounds=${end.rounds} batches=${end.batches} — " +
         "the tied interacting fixture must fall back to one merge per round")
   }
 
@@ -182,16 +189,18 @@ class BpeSpec extends SparkSpec {
     val dir = plant(words)
     val (want, _) = refTrain(words, 60, minCount = 2L)
     assert(want.size >= 30, s"fixture too shallow: ${want.size} merges")
-    val got = Bpe.train(TextQueries.bpeDocWords(spark, dir), 60,
-        minCount = 2L, loopParts = 2)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
+    val (got, Seq(end)) = loopEnds("Bpe") {
+      Bpe.train(TextQueries.bpeDocWords(spark, dir), 60,
+          minCount = 2L, loopParts = 2)
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .toSeq
+    }
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
     assert(got == want,
       s"batched trajectory diverged from sequential:\n$got\n!=\n$want")
-    assert(Bpe.lastBatches < Bpe.lastRounds,
-      s"batches=${Bpe.lastBatches} rounds=${Bpe.lastRounds} — " +
+    assert(end.batches < end.rounds,
+      s"batches=${end.batches} rounds=${end.rounds} — " +
         "batching must still engage under the collision guard")
   }
 
@@ -200,15 +209,17 @@ class BpeSpec extends SparkSpec {
     // "ab" x5 merges once (count 5); the only remaining pair (c, d) has
     // count 1 < minCount = 2, so a target of 10 stops after 1 merge.
     val dir = plant(Map("ab" -> 5L, "cd" -> 1L))
-    val got = Bpe.train(TextQueries.bpeDocWords(spark, dir), 10,
-        minCount = 2L, loopParts = 2)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
+    val (got, Seq(end)) = loopEnds("Bpe") {
+      Bpe.train(TextQueries.bpeDocWords(spark, dir), 10,
+          minCount = 2L, loopParts = 2)
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .toSeq
+    }
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
     assert(got == Seq((1L, "a", "b", 5L)), got.toString)
-    assert(Bpe.lastRounds == 1 && Bpe.lastConverged,
-      s"rounds=${Bpe.lastRounds} early=${Bpe.lastConverged}")
+    assert(end.rounds == 1 && end.exit == Exit.Exhausted,
+      s"rounds=${end.rounds} exit=${end.exit}")
   }
 
   test("train loop: the fixed-round declared query is its prefix") {

@@ -23,6 +23,18 @@ class ComponentsSpec extends SparkSpec {
     assert(labels.forall(_._2 == 0L), "every path vertex joins component 0")
   }
 
+  test("a run that hits maxRounds throws, and its window holds no Components record") {
+    // The 300-vertex path needs ~9 rounds; a cap of 2 must fail loudly
+    // and leave nothing behind that reads as this run's outcome.
+    val pairs = (0L until 299L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val (thrown, ends) = loopEnds("Components") {
+      intercept[IllegalStateException](
+        Components.connectedComponents(pairs, loopParts = 3, maxRounds = 2))
+    }
+    assert(thrown.getMessage.contains("did not converge within 2 rounds"))
+    assert(ends.isEmpty, ends.toString)
+  }
+
   test("cycle, star, and disjoint components resolve to min labels") {
     val cycle = (0L until 40L).map(i => (100 + i, 100 + (i + 1) % 40))
     val star = (1L to 30L).map(i => (500L, 500 + i))

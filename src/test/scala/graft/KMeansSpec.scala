@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.KMeans
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Metrics.Exit
 
 /** Convergence tests for the N-round Lloyd driver loop (round-12 verdict
   * #7) — a PLANTED corpus whose fixpoint and round count are known in
@@ -40,9 +41,11 @@ class KMeansSpec extends SparkSpec {
       0L -> 0.0, 1L -> 0.1,
       2L -> 0.002, 3L -> 0.004,
       4L -> 10.0, 5L -> 10.002))
-    val out = KMeans.lloyd(emb, k = 2, loopParts = 3).collect()
-    assert(KMeans.lastConverged, "planted blobs must reach the fixpoint")
-    assert(KMeans.lastRounds == 3, s"expected 3 rounds, got ${KMeans.lastRounds}")
+    val (out, Seq(end)) = loopEnds("KMeans") {
+      KMeans.lloyd(emb, k = 2, loopParts = 3).collect()
+    }
+    assert(end.exit == Exit.Fixpoint, "planted blobs must reach the fixpoint")
+    assert(end.rounds == 3, s"expected 3 rounds, got ${end.rounds}")
     val byCluster = out.groupBy(_.getLong(0))
     assert(byCluster.keySet == Set(0L, 1L))
     // Micro-unit fixed-point means: cluster 0 = {0, 2, 4, 100} millunits
@@ -62,8 +65,10 @@ class KMeansSpec extends SparkSpec {
       0L -> 0.0, 1L -> 0.1,
       2L -> 0.002, 3L -> 0.004,
       4L -> 10.0, 5L -> 10.002))
-    KMeans.lloyd(emb, k = 2, loopParts = 3, maxRounds = 1).collect()
-    assert(!KMeans.lastConverged && KMeans.lastRounds == 1)
+    val (_, Seq(end)) = loopEnds("KMeans") {
+      KMeans.lloyd(emb, k = 2, loopParts = 3, maxRounds = 1).collect()
+    }
+    assert(end.exit == Exit.Cap && end.rounds == 1)
   }
 
   test("lloyd fixpoint equals the declared 2-round emb_kmeans on a <=2-round corpus") {
@@ -83,15 +88,17 @@ class KMeansSpec extends SparkSpec {
       val declared = graft.queries.SimilarityQueries.embKmeans(spark, dir)
         .collect().map(_.toSeq)
       org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      val loop = KMeans.lloyd(
-        spark.read.parquet(s"$dir/embeddings.parquet"), k = 8, loopParts = 3)
-        .collect().map(_.toSeq)
+      val (loop, Seq(end)) = loopEnds("KMeans") {
+        KMeans.lloyd(
+          spark.read.parquet(s"$dir/embeddings.parquet"), k = 8, loopParts = 3)
+          .collect().map(_.toSeq)
+      }
       // k = 8 over 6 points: init clusters are the ids < 8 present (all
       // six), every point is its own nearest centroid at round 1 except
       // the merges Lloyd itself performs — whatever the trajectory, the
       // CONTRACT is declared(2 rounds) == lloyd's table after 2 rounds,
       // and this corpus converges by then.
-      assert(KMeans.lastConverged)
+      assert(end.exit == Exit.Fixpoint)
       assert(declared.toSeq == loop.toSeq)
     } finally LocalFiles.rmTree(dir)
   }

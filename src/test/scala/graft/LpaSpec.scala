@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Metrics.Exit
 
 import graft.queries.LinkageQueries
 
@@ -100,16 +101,18 @@ class LpaSpec extends SparkSpec {
       1L -> Seq(2L, 3L), 2L -> Seq(1L, 3L), 3L -> Seq(1L, 2L, 4L),
       4L -> Seq(3L, 5L, 6L), 5L -> Seq(4L, 6L), 6L -> Seq(4L, 5L))
     val (want, wantRounds, wantConv, wantOsc) = refIterate(adj, 30)
-    val got = Lpa.iterate(edges.toDF("pa", "pb"), loopParts = 2)
-      .collect()
-      .map(r => r.getAs[Long]("p") -> r.getAs[Long]("label")).toMap
+    val (got, Seq(end)) = loopEnds("Lpa") {
+      Lpa.iterate(edges.toDF("pa", "pb"), loopParts = 2)
+        .collect()
+        .map(r => r.getAs[Long]("p") -> r.getAs[Long]("label")).toMap
+    }
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
     assert(wantConv || wantOsc, "reference hit the cap — fixture is degenerate")
-    assert(Lpa.lastConverged == wantConv && Lpa.lastOscillating == wantOsc,
-      s"exit (conv=${Lpa.lastConverged}, osc=${Lpa.lastOscillating}) != " +
-        s"reference (conv=$wantConv, osc=$wantOsc)")
-    assert(Lpa.lastRounds == wantRounds,
-      s"rounds ${Lpa.lastRounds} != reference $wantRounds")
+    assert((end.exit == Exit.Fixpoint) == wantConv &&
+      (end.exit == Exit.TwoCycle) == wantOsc,
+      s"exit ${end.exit} != reference (conv=$wantConv, osc=$wantOsc)")
+    assert(end.rounds == wantRounds,
+      s"rounds ${end.rounds} != reference $wantRounds")
     assert(got == want, s"labels $got != reference $want")
   }
 
@@ -125,15 +128,16 @@ class LpaSpec extends SparkSpec {
                   3L -> Seq(1L, 2L), 4L -> Seq(1L, 2L))
     val (want, wantRounds, wantConv, wantOsc) = refIterate(adj, 30)
     assert(wantOsc && !wantConv, "reference did not oscillate — trace is wrong")
-    val got = Lpa.iterate(pairs.toDF("pa", "pb"), loopParts = 2)
-      .collect()
-      .map(r => r.getAs[Long]("p") -> r.getAs[Long]("label")).toMap
+    val (got, Seq(end)) = loopEnds("Lpa") {
+      Lpa.iterate(pairs.toDF("pa", "pb"), loopParts = 2)
+        .collect()
+        .map(r => r.getAs[Long]("p") -> r.getAs[Long]("label")).toMap
+    }
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-    assert(Lpa.lastOscillating && !Lpa.lastConverged,
-      s"expected oscillation exit, got conv=${Lpa.lastConverged} " +
-        s"osc=${Lpa.lastOscillating} rounds=${Lpa.lastRounds}")
-    assert(Lpa.lastRounds == wantRounds,
-      s"rounds ${Lpa.lastRounds} != reference $wantRounds")
+    assert(end.exit == Exit.TwoCycle,
+      s"expected oscillation exit, got ${end.exit} rounds=${end.rounds}")
+    assert(end.rounds == wantRounds,
+      s"rounds ${end.rounds} != reference $wantRounds")
     assert(got == want, s"labels $got != reference $want")
   }
 
@@ -142,24 +146,24 @@ class LpaSpec extends SparkSpec {
     // ADVICE round 16: with zero nodes the disagreement sums aggregate
     // over zero rows to NULL and getLong NPE'd; the empty table is
     // trivially a fixpoint and must be returned as such.
-    val out = Lpa.iterate(
-      Seq.empty[(Long, Long)].toDF("pa", "pb"), loopParts = 2)
-    val n = out.count()
+    val (n, Seq(end)) = loopEnds("Lpa") {
+      Lpa.iterate(Seq.empty[(Long, Long)].toDF("pa", "pb"), loopParts = 2).count()
+    }
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
     assert(n == 0, s"empty graph produced $n labels")
-    assert(Lpa.lastConverged,
-      s"empty graph must exit as a fixpoint (rounds=${Lpa.lastRounds})")
+    assert(end.exit == Exit.Fixpoint,
+      s"empty graph must exit as a fixpoint (rounds=${end.rounds})")
   }
 
   test("iterate: terminates on the fixture co-order graph") {
     import graft.operators.Lpa
-    val out = Lpa.iterate(
-      LinkageQueries.coOrderPairs(spark, sfDir), loopParts = 4)
-    val n = out.count()
+    val (n, Seq(end)) = loopEnds("Lpa") {
+      Lpa.iterate(LinkageQueries.coOrderPairs(spark, sfDir), loopParts = 4).count()
+    }
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
     assert(n > 0)
-    assert(Lpa.lastConverged || Lpa.lastOscillating,
-      s"loop hit the round cap on the fixture graph (rounds=${Lpa.lastRounds})")
+    assert(end.exit != Exit.Cap,
+      s"loop hit the round cap on the fixture graph (rounds=${end.rounds})")
   }
 
   test("fixture graph: communities partition the node set") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Metrics.Exit
 
 import graft.operators.PageRank
 import graft.queries.LinkageQueries
@@ -48,21 +49,23 @@ class PageRankSpec extends SparkSpec {
     val adj = Map(1L -> Seq(2L), 2L -> Seq(1L, 3L), 3L -> Seq(2L))
     val tol = 20000L
     val (want, wantRounds) = refIterate(adj, tol, 60)
-    val got = PageRank.iterate(
-        LinkageQueries.coOrderPairs(spark, dir), tol = tol, loopParts = 2)
-      .collect()
-      .map(r => r.getAs[Long]("p_partkey") ->
-        (r.getAs[Long]("pagerank"), r.getAs[Long]("degree"))).toMap
+    val (got, Seq(end)) = loopEnds("PageRank") {
+      PageRank.iterate(
+          LinkageQueries.coOrderPairs(spark, dir), tol = tol, loopParts = 2)
+        .collect()
+        .map(r => r.getAs[Long]("p_partkey") ->
+          (r.getAs[Long]("pagerank"), r.getAs[Long]("degree"))).toMap
+    }
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-    assert(PageRank.lastConverged, "loop hit the round cap on a 3-node graph")
-    assert(PageRank.lastRounds == wantRounds,
-      s"rounds ${PageRank.lastRounds} != reference $wantRounds")
+    assert(end.exit == Exit.Fixpoint, "loop hit the round cap on a 3-node graph")
+    assert(end.rounds == wantRounds,
+      s"rounds ${end.rounds} != reference $wantRounds")
     assert(got.view.mapValues(_._1).toMap == want,
       s"ranks $got != reference $want")
     assert(got(2L)._2 == 2L && got(1L)._2 == 1L && got(3L)._2 == 1L)
     // the contraction argument in the scaladoc: the tol exit engaged
     // well under the cap
-    assert(PageRank.lastRounds < 40, PageRank.lastRounds.toString)
+    assert(end.rounds < 40, end.rounds.toString)
   }
 
   test("rounds are flat across fixture scales (the contraction bound, CI-resident)") {
@@ -92,13 +95,15 @@ class PageRankSpec extends SparkSpec {
     }
     val tol = 20000L
     def roundsAt(copies: Int): (Int, Long) = {
-      val n = PageRank.iterate(
-          LinkageQueries.coOrderPairs(spark, fixture(copies)),
-          tol = tol, loopParts = 2)
-        .count()
+      val (n, Seq(end)) = loopEnds("PageRank") {
+        PageRank.iterate(
+            LinkageQueries.coOrderPairs(spark, fixture(copies)),
+            tol = tol, loopParts = 2)
+          .count()
+      }
       org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      assert(PageRank.lastConverged, s"copies=$copies hit the round cap")
-      (PageRank.lastRounds, n)
+      assert(end.exit == Exit.Fixpoint, s"copies=$copies hit the round cap")
+      (end.rounds, n)
     }
     val (r1, n1) = roundsAt(1)
     val (r10, n10) = roundsAt(10)
@@ -109,12 +114,14 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("fixture graph: converges, conserves rank mass up to floor loss") {
-    val out = PageRank.iterate(
-        LinkageQueries.coOrderPairs(spark, sfDir), tol = 5000L)
-      .agg(count(lit(1)).as("n"), sum(col("pagerank")).as("mass"))
-      .collect().head
+    val (out, Seq(end)) = loopEnds("PageRank") {
+      PageRank.iterate(
+          LinkageQueries.coOrderPairs(spark, sfDir), tol = 5000L)
+        .agg(count(lit(1)).as("n"), sum(col("pagerank")).as("mass"))
+        .collect().head
+    }
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-    assert(PageRank.lastConverged, "fixture graph did not converge in 60 rounds")
+    assert(end.exit == Exit.Fixpoint, "fixture graph did not converge in 60 rounds")
     val (n, mass) = (out.getAs[Long]("n"), out.getAs[Long]("mass"))
     assert(n > 0)
     // The damped update conserves total mass at the fixpoint (teleport

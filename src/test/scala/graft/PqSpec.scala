@@ -208,8 +208,10 @@ class PqSpec extends SparkSpec {
         yield ((100 + p * 10 + j * 2 + (if (sgn > 0) 0 else 1)).toLong,
           perturb(proto(p), j * 7, sgn)))
     val emb = rows.toDF("vec_id", "embedding")
-    val (trainedDf, rounds) = graft.operators.Pq.trainCodebooks(emb, m = 8,
-      subDim = 8, k = 4, loopParts = 3)
+    val (trainedDf, ends) = loopEnds("KMeans") {
+      graft.operators.Pq.trainCodebooks(emb, m = 8, subDim = 8, k = 4, loopParts = 3)
+    }
+    val rounds = ends.map(_.rounds)
     val trained = trainedDf.collect()
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
     assert(rounds == Seq.fill(8)(2),

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.queries.{DedupQueries, OlapQueries, SimilarityQueries, TextQueries}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.{Metrics, Sessions}
+import org.apache.spark.sql.graftx.Metrics
 import org.scalatest.BeforeAndAfterAll
 
 /** Synthetic scale probe for the dedup/cluster family and the OLAP joins
@@ -362,27 +362,17 @@ class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
       "sample_dsir_weights", "emb_kmeans", "text_bpe_train",
       "text_bpe_encode", "sim_range_search")
 
-  /** One measured run: (wall seconds, [[Metrics.TaskWork]], plan-sane).
-    * The query is CONSTRUCTED inside the metered block — the iterative
-    * operators (dedup_clusters) do their work eagerly at construction.
-    * Snapshot caches release AFTER the timer: cleanup is harness
-    * bookkeeping, and carrying a previous run's corpus-scale cached RDDs
-    * into the next measurement is exactly the storage-hoarding ADVICE
-    * round 3 flagged. Plan-sane = no BroadcastNestedLoopJoin/
-    * CartesianProduct node in any EXECUTED plan of the block — the
-    * action QEs plus snapshot plans that [[Metrics.withTaskWorkPlans]]
-    * captures, checked structurally on the final adaptive plan (round-6
-    * ADVICE: the pre-execution sparkPlan cannot show an AQE runtime
-    * re-plan into a nested loop). */
+  /** One measured run through [[VolumeProbe.measure]] at the session's
+    * shuffle width: (wall seconds, [[Metrics.TaskWork]], plan-sane).
+    * Plan-sane = no BroadcastNestedLoopJoin/CartesianProduct node in any
+    * EXECUTED plan of the window — the action QEs plus snapshot plans
+    * that [[Metrics.measure]] captures, checked structurally on the final
+    * adaptive plan (round-6 ADVICE: the pre-execution sparkPlan cannot
+    * show an AQE runtime re-plan into a nested loop). */
   private def measureOnce(q: DedupQueries.Q, dir: String): (Double, Metrics.TaskWork, Boolean) = {
-    val t0 = System.nanoTime()
-    val (_, work, plans) = Metrics.withTaskWorkPlans(spark) {
-      val df = q(spark, dir)
-      df.write.mode("overwrite").format("noop").save()
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    Sessions.releaseSnapshots()
-    (wall, work, !Metrics.hasNestedLoop(plans))
+    val (wall, m) = VolumeProbe.measure(spark, q, dir,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    (wall, m.work, !Metrics.hasNestedLoop(m.plans))
   }
 
   // Best of two runs per metric: a single run is exposed to one-off JVM

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftx.Metrics
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,4 +20,11 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   lazy val sfDir: String = TestSpark.sfDir
+
+  /** Runs `body` in one [[Metrics.measure]] window: its result and the
+    * window's LoopEnd records of `loop`, in posting order. */
+  def loopEnds[T](loop: String)(body: => T): (T, Seq[Metrics.LoopEnd]) = {
+    val (out, m) = Metrics.measure(spark)(body)
+    (out, m.loops.filter(_.loop == loop))
+  }
 }

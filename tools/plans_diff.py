@@ -11,9 +11,11 @@ across JVM runs:
   - lambda class addresses (`Lambda$12/0x0000...@1a2b3c`) and the
     identity hashes of anonymous objects (`Reducers$$anon$1@47935bc5`);
   - fresh lambda-variable suffixes (`x_12`, `y_13`);
-  - catalog-table locations under `spark-warehouse/`, which name the
-    checkout directory (and are truncated at a length that depends on
-    it); the table itself stays visible in the `FileScan` name.
+  - catalog-table locations: an absolute one under `spark-warehouse/`
+    names the checkout directory (and is truncated at a length that
+    depends on it); `graft.Inspect plans` prints `[<warehouse>/<table>]`
+    instead. Both become `[<warehouse>]`; the table itself stays visible
+    in the `FileScan` name.
 
 Prints a unified diff for each section that differs, plus sections present
 in only one file, and a summary line. Exits 1 if any section differs.
@@ -29,7 +31,8 @@ _NORMALIZE = [
     (re.compile(r"\$\$Lambda/0x[0-9a-fA-F]+@[0-9a-fA-F]+"), "$$Lambda"),
     (re.compile(r"(\$anon\$\d+)@[0-9a-fA-F]+"), r"\1@H"),
     (re.compile(r"\b([a-z])_\d+\b"), r"\1_N"),
-    (re.compile(r"\[file:\S*?/spark-warehouse/[^,\]]*\]?"), "[<warehouse>]"),
+    (re.compile(r"\[file:\S*?/spark-warehouse/[^\]]*?(?:\]|\.\.\.)"), "[<warehouse>]"),
+    (re.compile(r"\[<warehouse>/[^\]]*\]"), "[<warehouse>]"),
 ]
 
 
