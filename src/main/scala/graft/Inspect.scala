@@ -18,8 +18,9 @@ import org.apache.spark.sql.graftx.{Metrics, Sessions}
   *  - `plans [outFile]` (default PLANS.md): the tree shape of every
   *    declared query's initial physical plan, one `## <name>` section
   *    each — the committed dump PlansFreshnessSpec checks. A catalog
-  *    table's location prints as `[<warehouse>/<table>]`, so the dump
-  *    does not depend on where the checkout lives.
+  *    table's location prints as `[<warehouse>/<table>]` and a fixture
+  *    file's as `[<sf>/<file>]`, so the dump does not depend on where the
+  *    checkout or the fixtures live.
   *  - `explain <outDir> <tag> [q1,q2,...]` (no list → every declared
   *    query): `.explain("formatted")` per query into
   *    `<outDir>/<query>_<tag>.txt` — PushedFilters, ReadSchema, join build
@@ -82,25 +83,31 @@ object Inspect {
     finally Sessions.releaseSnapshots()
   }
 
-  /** A catalog table's scan Location names the warehouse's absolute path
-    * and is abbreviated at a length that depends on it; print it as
-    * `[<warehouse>/<table>]`, the table taken from the scan's own name. */
-  private def warehouseRelative(tree: String, warehouse: String): String =
-    ("""(spark_catalog\.\w+\.(\w+)\[.*Location: \w+\(\d+ paths\))\[""" +
+  /** Scan Locations name absolute paths; print them relative, so the
+    * dump depends on neither the checkout nor the fixture directory. A
+    * catalog table's (abbreviated at a length that depends on the
+    * warehouse path) prints as `[<warehouse>/<table>]`, the table taken
+    * from the scan's own name; a fixture file under `sfDir` as
+    * `[<sf>/<file>]`. */
+  private def relativeLocations(tree: String, warehouse: String, sfDir: String): String = {
+    val catalog = ("""(spark_catalog\.\w+\.(\w+)\[.*Location: \w+\(\d+ paths\))\[""" +
       Regex.quote(warehouse) + """/[^\]]*?(\]|\.\.\.)""").r
       .replaceAllIn(tree, m => Regex.quoteReplacement(s"${m.group(1)}[<warehouse>/${m.group(2)}]"))
+    catalog.replace("file:" + Paths.get(sfDir).toAbsolutePath.normalize + "/", "<sf>/")
+  }
 
   private def plans(spark: SparkSession, sfDir: String, out: String): Unit = {
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
     val sb = new StringBuilder(
       "# PLANS — physical plans of the declared query inventory\n\n" +
-      s"Generated by `graft.Inspect plans` against `$sfDir` on the `LocalSpark.session` " +
+      s"Generated by `graft.Inspect plans` against the `${Paths.get(sfDir).getFileName}` " +
+      "fixtures (`<sf>` in scan locations) on the `LocalSpark.session` " +
       s"configuration (`${spark.sparkContext.master}`, `spark.sql.shuffle.partitions=" +
       s"${spark.conf.get("spark.sql.shuffle.partitions")}`, AQE on — plans shown are\n" +
       "the initial physical plans; AQE may further coalesce/re-plan at runtime).\n")
     SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      val tree = warehouseRelative(
-        planText(spark, sfDir, name)(_.queryExecution.executedPlan.toString), warehouse)
+      val tree = relativeLocations(
+        planText(spark, sfDir, name)(_.queryExecution.executedPlan.toString), warehouse, sfDir)
       sb.append(s"\n## $name\n\n```\n")
       // keep the tree shape; drop the verbose per-node detail sections
       sb.append(tree.linesIterator.takeWhile(_.nonEmpty).mkString("\n"))

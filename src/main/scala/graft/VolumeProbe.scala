@@ -19,7 +19,7 @@ import org.apache.spark.sql.graftx.{Metrics, Sessions}
   * ⌈log₂ factor⌉ extra hyperplanes hold bucket occupancy ≈ the candidate
   * budget — and for the pairs query, whose TABLE count also grows for
   * recall, plane growth absorbs the table growth too (2^k tracks L·n;
-  * see the fixed-point computation below). RecallSpec pins every grown
+  * see ScaleFixture.planeFixedPoint). RecallSpec pins every grown
   * form recall-safe: kNN at k = 10 and 13, pairs at (8,3) and (12,5).
   *
   * ScaleProbeSpec's 10× gate runs every build; this main exists because a
@@ -38,14 +38,9 @@ import org.apache.spark.sql.graftx.{Metrics, Sessions}
   * why wall/cpu are RECORDED in the artifact for context but never gated
   * on.
   *
-  * The 100× corpus uses the same per-copy word salting as ScaleProbeSpec
-  * (offset doc_ids, every word tagged per copy): intra-copy near-dup
-  * structure is preserved exactly while cross-copy shingle collisions are
-  * impossible, so candidate volume grows ~factor×, not factor²× as naive
-  * duplication would force on a perfectly linear operator. Embeddings get
-  * the analogous treatment: a per-copy ±1 DIAGONAL (deterministic
-  * per-(copy, dim) sign flip) is orthogonal, preserving intra-copy
-  * cosines exactly while scrambling cross-copy sign-LSH buckets.
+  * The corpora are [[ScaleFixture]]'s (its scaladoc gives the salting),
+  * at factor× the sf0.1 tables; so are the entries' queries. This main
+  * keeps its gates and the names it runs.
   *
   * Auto-broadcast is DISABLED for the probe session: the first run of
   * this probe failed its own gate at 274×/360× "growth" on
@@ -79,6 +74,26 @@ import org.apache.spark.sql.graftx.{Metrics, Sessions}
   */
 object VolumeProbe {
 
+  /** The [[ScaleFixture.entries]] this probe gates, in run order. */
+  private val names = Seq(
+    "dedup_minhash_capped", "dedup_jaccard_on_lsh", "dedup_minhash_estimate",
+    "dedup_clusters_raw", "dedup_ngram_jaccard_capped", "dedup_containment",
+    "graph_triangle_count", "graph_pagerank", "graph_label_propagation",
+    "text_bpe_train", "text_bpe_encode", "dedup_simhash_banded",
+    "text_dup_span_ratio", "text_lm_fluency", "text_ccnet_buckets",
+    "text_fuzzy_join_blocked", "text_fuzzy_join_multikey",
+    "linkage_entity_clusters", "linkage_golden_record", "text_inverted_index",
+    "split_leakage_audit", "text_dedup_spans", "sim_knn_graph", "sim_ann_lsh",
+    "dedup_embedding_pairs", "dedup_semdedup", "emb_kmeans",
+    "sample_dsir_weights", "emb_pq_codes", "sim_pq_adc_topk", "sim_ivfpq_topk",
+    "sim_ivfpq_residual_topk", "sim_ivfpq_trained_topk", "sim_ivfpq_rerank_topk",
+    "sim_ivfpq_nprobe_topk", "sim_ivfpq_clustered_topk",
+    "sim_ivfpq_full_trained_topk", "sim_ivfpq_full_clustered_topk",
+    "sim_ivfpq_append", "sim_ivfpq_delete_topk", "sim_ivfpq_append_nprobe",
+    "sim_ivfpq_cell_stats", "sim_ivfpq_gc_stats", "sim_ivfpq_compact_topk",
+    "sim_ivfpq_cell_split", "sim_ivfpq_drift_guard", "emb_pq_trained_codes",
+    "kmeans_lloyd", "pagerank_iterate", "bpe_train_loop", "lpa_iterate")
+
   /** One measured run: query `q` over `dir` at `parts` shuffle
     * partitions, CONSTRUCTED and written to the noop sink inside one
     * [[Metrics.measure]] window — the iterative operators do their work
@@ -111,9 +126,9 @@ object VolumeProbe {
 
     // Optional comma-separated query-name filter for iterating on one
     // entry without paying the full ~25-min probe. The canonical 100×
-    // artifact must come from an unfiltered run — ALL entries present
-    // (20 as of round 13); the 1000× decade artifact is a DELIBERATELY
-    // filtered run over the flagship dedup chain + the span/audit
+    // artifact must come from an unfiltered run — ALL entries present;
+    // the 1000× decade artifact is a DELIBERATELY filtered run over the
+    // flagship dedup chain + the span/audit
     // families (the full family at 1000× would spill the exact-baseline
     // entries' ~37 GB each for no additional plan-class evidence).
     val only: Option[Set[String]] =
@@ -124,21 +139,6 @@ object VolumeProbe {
     val dirN = Files.createTempDirectory(s"graft-vol$factor").toString
     var exitCode = 0
     try {
-      val embNames =
-        Set("sim_knn_graph", "dedup_embedding_pairs", "sim_ann_lsh",
-          "emb_kmeans", "emb_pq_codes", "sim_pq_adc_topk", "sim_ivfpq_topk",
-          "sim_ivfpq_residual_topk", "sim_ivfpq_trained_topk",
-          "sim_ivfpq_rerank_topk", "sim_ivfpq_nprobe_topk",
-          "sim_ivfpq_clustered_topk", "sim_ivfpq_full_trained_topk",
-          "sim_ivfpq_full_clustered_topk",
-          "sim_ivfpq_append", "sim_ivfpq_drift_guard",
-          "sim_ivfpq_delete_topk", "sim_ivfpq_append_nprobe",
-          "sim_ivfpq_cell_stats", "sim_ivfpq_gc_stats",
-          "sim_ivfpq_compact_topk", "sim_ivfpq_cell_split",
-          "emb_pq_trained_codes", "dedup_semdedup")
-      // The lloyd loop's planted-chain fixture (see below) — its own
-      // corpus, not the embeddings fixture.
-      val kmlName = "kmeans_lloyd"
       // Entries whose declared plans carry exact-allowlisted bounded
       // broadcast cross joins (BroadcastGuardSpec documents the bounds);
       // their plan-shape arm pins the ABSOLUTE BNLJ count per entry at
@@ -214,80 +214,12 @@ object VolumeProbe {
         // rounds of apply crosses on top of the rounds − 1 train merges.
         "text_bpe_train" -> (graft.queries.TextQueries.BpeMerges - 1),
         "text_bpe_encode" -> (2 * graft.queries.TextQueries.BpeMerges - 1))
-      val triName = "graph_triangle_count"
-      // PageRank (declared fixed-round + convergence-loop facade) rides
-      // the same disjoint-copy co-order fixture.
-      val prIterName = "pagerank_iterate"
-      // LPA (declared fixed-round + run-to-termination facade, round 16)
-      // rides the same disjoint-copy co-order fixture.
-      val lpaIterName = "lpa_iterate"
-      val graphNames =
-        Set(triName, "graph_pagerank", prIterName, "graph_label_propagation",
-          lpaIterName)
-      val fuzzyName = "text_fuzzy_join_blocked"
-      val fuzzyMultiName = "text_fuzzy_join_multikey"
-      // The entity-cluster composition rides the same part fixture as
-      // the fuzzy joins (its edges ARE the blocked fuzzy matches).
-      val fuzzyNames = Set(fuzzyName, fuzzyMultiName,
-        "linkage_entity_clusters", "linkage_golden_record")
-      val needDocs = only.forall(_.exists(n =>
-        !embNames.contains(n) && !graphNames.contains(n) &&
-          !fuzzyNames.contains(n) && n != kmlName))
-      val needEmb = only.forall(_.exists(embNames.contains))
-      val needTri = graphNames.exists(wanted)
-      val needPart = fuzzyNames.exists(wanted)
-      val needKml = wanted(kmlName)
-
-      if (needDocs) {
-        val docs = spark.read.parquet(s"$sf/documents.parquet")
-        docs.write.mode("overwrite").parquet(s"$dir1/documents.parquet")
-        // Same per-copy salting as ScaleProbeSpec (offset ids, per-copy
-        // word tags) built as ONE crossJoin against the copy-tag range
-        // instead of a factor-way union: identical content, and the plan
-        // stays O(1) in factor — a 1000-way union is where Catalyst,
-        // not the data, becomes the bottleneck. Row ORDER differs from
-        // the union form; every declared query is partition/order
-        // invariant (PartitionInvarianceSpec), so artifacts compare.
-        docs.crossJoin(
-            spark.range(factor).select(col("id").cast("int").as("tag")))
-          .select(
-            (col("doc_id") + col("tag") * 100000000L).as("doc_id"),
-            concat_ws(" ",
-              transform(split(col("text"), " "),
-                w => concat(w, lit("q"), col("tag").cast("string")))).as("text"),
-            col("lang"), col("source"), col("n_chars"))
-          .write.mode("overwrite").parquet(s"$dirN/documents.parquet")
-      }
-
-      // Embeddings: per-copy orthogonal ±1 diagonal (murmur3(dim, copy)
-      // parity — deterministic), the same fixture rule as
-      // ScaleProbeSpec's 10× family, at the probe factor.
-      if (needEmb) {
-        val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-        emb.write.mode("overwrite").parquet(s"$dir1/embeddings.parquet")
-        // Same crossJoin-against-the-tag-range form as the docs builder
-        // (identical content to the old factor-way union, O(1) plan in
-        // factor; order differs — every declared query is
-        // partition/order-invariant). hash(i, tag) is the same murmur3
-        // call whether tag is a literal or a column.
-        // Copy offset 2²² (not the docs' 10⁸): dedup_embedding_pairs
-        // packs candidate pairs into shiftleft(a,32)+b under an ENFORCED
-        // 0 ≤ vec_id < 2³² precondition (ids beyond that take the
-        // documented struct-pack form), so the probe's id universe must
-        // model the declared regime — 2²² keeps max id under 2³² through
-        // factor 1023 while copies stay disjoint (sf0.1 has 2 000
-        // vectors ≪ 2²²). With the old 10⁸ offset, factor ≥ 43 ids
-        // crossed 2³² and the query now raises rather than corrupt.
-        emb.crossJoin(
-            spark.range(factor).select(col("id").cast("int").as("tag")))
-          .select(
-            (col("vec_id") + col("tag") * (1L << 22)).as("vec_id"),
-            transform(col("embedding"), (x, i) =>
-              when(pmod(hash(i, col("tag")), lit(2)) === 1, negate(x))
-                .otherwise(x)).as("embedding"),
-            col("label"))
-          .write.mode("overwrite").parquet(s"$dirN/embeddings.parquet")
-      }
+      // The saturation ladder's input is the DEPLOYED corpus size —
+      // factor× the 1× doc count (a cheap metadata count).
+      val nDocs1 = spark.read.parquet(s"$sf/documents.parquet").count()
+      val table = ScaleFixture.entries(factor, nDocs1).map(e => e.name -> e).toMap
+      val entries = names.filter(wanted).map(table)
+      ScaleFixture.write(spark, sf, dir1, dirN, factor, entries.flatMap(_.kinds))
 
       // Pre-ensure the cell-partitioned codes tables for the clustered
       // IVFADC entry so the MEASURED run reads the catalog table only —
@@ -329,137 +261,10 @@ object VolumeProbe {
         SimilarityQueries.ivfpqSplitTables(spark, dirN)
       }
 
-      // Dense-id embedding fixture for the semdedup cells dial (the
-      // kmeans_lloyd own-fixture precedent): vec_id < k·factor selects
-      // seeds only where ids are DENSE in [0, k·factor), and the shared
-      // fixture's 2²² copy offset caps that at the 1× id range (2 000)
-      // — a fixture id-space property, not an operator one (the dial
-      // held exactly linear at factor 100, the last rung the shared
-      // offsets support). Same per-copy orthogonal sign-flip salting;
-      // the only change is the copy offset = the 1× vector count, so
-      // the salted copies 1..k/n₁−1 become legitimate extra seeds.
-      if (wanted("dedup_semdedup")) {
-        val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-        val n1 = emb.count()
-        emb.write.mode("overwrite").parquet(s"$dir1/semdd/embeddings.parquet")
-        emb.crossJoin(
-            spark.range(factor).select(col("id").cast("int").as("tag")))
-          .select(
-            (col("vec_id") + col("tag") * n1).as("vec_id"),
-            transform(col("embedding"), (x, i) =>
-              when(pmod(hash(i, col("tag")), lit(2)) === 1, negate(x))
-                .otherwise(x)).as("embedding"),
-            col("label"))
-          .write.mode("overwrite").parquet(s"$dirN/semdd/embeddings.parquet")
-      }
-
-      // Co-order graph fixture: factor× disjoint copies via offsets on
-      // BOTH keys (the ScaleProbeSpec `tri` rationale: offsetting only
-      // the orderkey would pile co-occurrence SUPPORT onto the same part
-      // pairs and densify the graph as a duplication artifact; disjoint
-      // copies are the honest "more orders over a wider catalog" shape).
-      if (needTri) {
-        // Full columns: Tables.lineitem normalizes l_shipdate at the
-        // source boundary and fails fast on a missing column.
-        val li = spark.read.parquet(s"$sf/lineitem.parquet")
-        li.write.mode("overwrite").parquet(s"$dir1/tri/lineitem.parquet")
-        val keyOff = 1000000000L
-        // crossJoin form of the disjoint-copy offsets (see docs builder).
-        li.crossJoin(
-            spark.range(factor).select(col("id").as("tag")))
-          .withColumn("l_orderkey", col("l_orderkey") + col("tag") * keyOff)
-          .withColumn("l_partkey", col("l_partkey") + col("tag") * keyOff)
-          .drop("tag")
-          .write.mode("overwrite").parquet(s"$dirN/tri/lineitem.parquet")
-      }
-
-      // Part-name fixture for the blocked fuzzy join (round-10 verdict
-      // #3): the salted arm tags EVERY token per copy (edit distances
-      // within a copy are preserved — both names gain the same-position
-      // suffix — while cross-copy same-block candidates are impossible:
-      // sharing a block means sharing the tagged last token, i.e. the
-      // copy), so the organic workload grows exactly factor×. On TOP of
-      // that, both arms carry a synthetic hot block whose last token is
-      // NEVER salted — 20 similar names at 1×, 20·factor at factor× —
-      // so the blocking key goes genuinely Zipf at scale and the probe
-      // can gate that the MaxBlock cap ENGAGES (the over-cap block is
-      // skipped wholesale) instead of the self-join going quadratic in
-      // the hot block.
-      if (needPart) {
-        val part = spark.read.parquet(s"$sf/part.parquet")
-          .select("p_partkey", "p_name", "p_retailprice")
-        // Hot-name keys live at 10^12 — beyond any salted copy's range
-        // (p_partkey + tag·10^8 stays < 10^11 at factor ≤ 1000), so
-        // partkeys are globally unique in BOTH arms (round-11 ADVICE:
-        // the old 9·10^8 base collided with the tag-9 copy from factor
-        // 10 — harmless while every fuzzy gate keys on p_name, but a
-        // latent trap for any future partkey-keyed gate).
-        def hotNames(n: Long) = spark.range(n).select(
-          (col("id") + 1000000000000L).as("p_partkey"),
-          concat(lit("hotname"), col("id").cast("string"),
-            lit(" zzcommonblock")).as("p_name"),
-          lit(1.0d).as("p_retailprice"))
-        part.unionByName(hotNames(20L))
-          .write.mode("overwrite").parquet(s"$dir1/part.parquet")
-        part.crossJoin(
-            spark.range(factor).select(col("id").cast("int").as("tag")))
-          .select(
-            (col("p_partkey") + col("tag") * 100000000L).as("p_partkey"),
-            concat_ws(" ",
-              transform(split(col("p_name"), " "),
-                w => concat(w, lit("q"), col("tag").cast("string")))).as("p_name"),
-            col("p_retailprice"))
-          .unionByName(hotNames(20L * factor))
-          .write.mode("overwrite").parquet(s"$dirN/part.parquet")
-      }
-
-      // Planted migration-chain fixture for the kmeans_lloyd entry
-      // (round-13 verdict #4): a heavy blob at 0 plus a LINEAR chain of
-      // distinct points — k = 2 Lloyd with the top chain point as the
-      // second seed makes the cluster boundary DESCEND the chain
-      // geometrically (the captured centroid's mean walks ~3/4 of the
-      // way down per round), so convergence rounds grow ~log₂ of the
-      // chain extent: measured by exact integer simulation, 5 rounds at
-      // L = 100 and 11 at L = 10 000. The factor× arm scales BOTH the
-      // blob (records grow ~factor× per round) and the chain length
-      // (rounds grow with the copy count — the property the
-      // rounds-normalized gate exists to exercise; a fixed-rounds
-      // fixture would never distinguish the normalized gate from the
-      // flat one). Values are millunit-exact (chain step 1 millunit =
-      // 0.001f), so quantization is lossless and the trajectory is the
-      // simulated one: rounds 5/6/8/10 at factors 1/10/100/1000. The
-      // 1-millunit step keeps the chain extent inside the packed-argmin
-      // domain (dist·16 must fit a long, so extent < ~7.6e5 millunits —
-      // a 10-millunit step OVERFLOWED at factor 1000, raising the ANSI
-      // fail-fast in KMeans.assign exactly as designed; the operator's
-      // own input domain is |q| ≲ 4e3 millunits, embeddings-scale).
-      // vec_id 0 = a blob point (seed centroid 0), vec_id 1 = the chain
-      // top (seed centroid 1) — the lloyd init convention.
-      val kmlBlob1 = 5000L
-      val kmlChain1 = 100L
-      if (needKml) {
-        def kmlFixture(dir: String, blob: Long, chain: Long): Unit = {
-          val blobPts = spark.range(blob)
-            .select(when(col("id") === 0, 0L).otherwise(col("id") + 1).as("vec_id"),
-              lit(0.0f).as("x"))
-          val chainPts = spark.range(chain)
-            .select(when(col("id") === chain - 1, 1L)
-                .otherwise(col("id") + blob + 1).as("vec_id"),
-              ((col("id") + 1).cast("double") * lit(0.001d))
-                .cast("float").as("x"))
-          blobPts.unionByName(chainPts)
-            .select(col("vec_id"),
-              concat(array(col("x")), array_repeat(lit(0.0f), 63)).as("embedding"))
-            .write.mode("overwrite").parquet(s"$dir/kml/embeddings.parquet")
-        }
-        kmlFixture(dir1, kmlBlob1, kmlChain1)
-        kmlFixture(dirN, kmlBlob1 * factor, kmlChain1 * factor)
-      }
-
-      // Shuffle partitions TRACK the measured volume (hoisted above the
-      // query list so the lloyd closures can size their loop width) —
-      // the deployment posture: a 1000-executor cluster sizes partitions
-      // to a fixed per-partition byte budget, not a fixed count. At
+      // Shuffle partitions TRACK the measured volume (the loop entries
+      // take their loop width from it) — the deployment posture: a
+      // 1000-executor cluster sizes partitions to a fixed per-partition
+      // byte budget, not a fixed count. At
       // factor ≤ 100 this is the same 32 every committed artifact used;
       // at 1000× a fixed 32 would pack 10× the 100× partition size and
       // the probe OOMs on execution memory — a fixture-host artifact,
@@ -469,446 +274,13 @@ object VolumeProbe {
       // results themselves).
       val partsN = math.min(1024, cpus.toInt * math.max(1, factor / 100))
 
-      // ⌈log₂ factor⌉ extra LSH planes at factor× vectors — the
-      // deployment re-parameterization the embedding entries gate.
-      val extraPlanes = math.ceil(math.log(factor) / math.log(2)).toInt
-      // The PAIRS query also grows hash tables for recall, and tables
-      // multiply candidate volume (~L·n²·s/2^k per the operator scaladoc),
-      // so ITS plane growth must absorb the table growth too:
-      // Δk = ⌈log₂(factor · L/L₀)⌉ solved as a fixed point with
-      // L = 2 + (Δk+1)/3. At factor 100: Δk=8, L=5 — the first probe run
-      // gated the naive Δk=7 (11 planes, 4 tables) and failed at 2.19×
-      // linear, exactly the un-absorbed 2× table factor.
-      val (pairPlanes, pairTables) = {
-        var dk = extraPlanes
-        var l = 2 + (dk + 1) / 3
-        var next = math.ceil(math.log(factor * l / 2.0) / math.log(2)).toInt
-        while (next != dk) {
-          dk = next; l = 2 + (dk + 1) / 3
-          next = math.ceil(math.log(factor * l / 2.0) / math.log(2)).toInt
-        }
-        (4 + dk, l)
-      }
-
-      // The saturation ladder's input is the DEPLOYED corpus size —
-      // factor× the 1× doc count (a cheap metadata count).
-      val nDocs1 = spark.read.parquet(s"$sf/documents.parquet").count()
-
-      // (name, 1× query, factor× query). Same function at both scales
-      // except the embedding family, whose factor× form grows the plane
-      // count per the log₂ rule (a fixed blocking at growing n densifies
-      // every bucket and measures the drop branch, not the operator).
-      val queries: Seq[(String, DedupQueries.Q, DedupQueries.Q)] = {
-        def sym(n: String, q: DedupQueries.Q) = (n, q, q)
-        Seq(
-          sym("dedup_minhash_capped", DedupQueries.dedupMinhashCapped),
-          sym("dedup_jaccard_on_lsh", DedupQueries.dedupJaccardOnLsh),
-          // round 15: the sketch-calibration composition — candidate
-          // generation and exact rescoring are the two probed shapes
-          // above; the estimate join adds candidates ⋈ the per-doc
-          // signature table twice (narrow rows, candidate-mass-bounded),
-          // so the whole query is linear by composition; flat gates.
-          sym("dedup_minhash_estimate", DedupQueries.dedupMinhashEstimate),
-          sym("dedup_clusters_raw", DedupQueries.dedupClustersRaw),
-          // The two other heavy declared dedup plans: the df-capped exact
-          // shingle self-join (word salting preserves each shingle's
-          // document frequency, so the df≤64 cap drops the same shingle
-          // universe at every factor) and the span-profiling equi-join.
-          sym("dedup_ngram_jaccard_capped", DedupQueries.dedupNgramJaccardCapped),
-          // round 10: containment rides the same df-capped shingle
-          // universe and intersection join (word salting preserves each
-          // shingle's df per copy, and Jaccard/containment are invariant
-          // under the injective per-copy renaming, so true pairs grow
-          // exactly linearly — same argument as the Jaccard entries).
-          sym("dedup_containment", DedupQueries.dedupContainment),
-          // round 10: the co-order triangle pipeline on its disjoint-copy
-          // lineitem fixture — the one corpus-scale shuffle is the basket
-          // collect_set; edges/wedges/triangles all grow factor× by
-          // construction.
-          (triName,
-            (s: SparkSession, dd: String) =>
-              graft.queries.LinkageQueries.graphTriangleCount(s, s"$dd/tri"),
-            (s: SparkSession, dd: String) =>
-              graft.queries.LinkageQueries.graphTriangleCount(s, s"$dd/tri")),
-          // round 14: PageRank on the same disjoint-copy fixture — the
-          // factor× graph is factor disjoint copies of the 1× graph
-          // (identical degrees, fixed 3 rounds), so the basket collapse
-          // and every per-round join + destination aggregate grow
-          // exactly factor×; flat gates apply.
-          ("graph_pagerank",
-            (s: SparkSession, dd: String) =>
-              graft.queries.LinkageQueries.graphPagerank(s, s"$dd/tri"),
-            (s: SparkSession, dd: String) =>
-              graft.queries.LinkageQueries.graphPagerank(s, s"$dd/tri")),
-          // round 15: label propagation on the same disjoint-copy graph
-          // fixture — labels never cross copies (no edges do), so the
-          // per-round vote join + two aggregates grow exactly factor×
-          // at the pagerank-gated plan class; flat gates apply.
-          ("graph_label_propagation",
-            (s: SparkSession, dd: String) =>
-              graft.queries.LinkageQueries.graphLabelPropagation(s, s"$dd/tri"),
-            (s: SparkSession, dd: String) =>
-              graft.queries.LinkageQueries.graphLabelPropagation(s, s"$dd/tri")),
-          // round 14: BPE merge training on the salted docs corpus — the
-          // corpus-scale word count grows factor× (per-copy word tags
-          // make vocabularies disjoint) while every merge round stays
-          // bounded by the 4096-word vocabulary cap, so total volume is
-          // ≤ linear; the rounds − 1 winner cross joins are ≤ 1-row
-          // bounded (pinned below).
-          sym("text_bpe_train", graft.queries.TextQueries.textBpeTrain),
-          // round 14: the apply path — merges fold over the DISTINCT-word
-          // table (vocabulary-scale, factor× distinct salted words), the
-          // corpus pays the word explode plus ONE occurrence→token-count
-          // equi join; 11 bounded crosses (5 train merges + 6 applies).
-          sym("text_bpe_encode", graft.queries.TextQueries.textBpeEncode),
-          // round 10 (r9 verdict #1): the banded SimHash join, whose
-          // 20-bit block-pair keys approach birthday saturation near the
-          // 100× corpus (~500 k docs vs the (6,2) rule bound of ~140 k).
-          // The 1× arm runs the DECLARED (6,2) — its recorded baseline is
-          // the declared plan's real shuffle volume (round-10 ADVICE: both
-          // arms previously ran the grown form, silently re-baselining) —
-          // and the factor× arm runs the (m, r) the saturation ladder
-          // picks for factor× docs ((7,3): 35 triples of 24–27-bit keys),
-          // EquivalenceSpec-pinned bit-identical to (6,2), exactly as the
-          // embedding entries run their grown (k, L). The records/joinrows
-          // gates for this entry normalize by the C(m,r)/C(6,2) band
-          // multiplicity the ladder step itself adds (see below).
-          ("dedup_simhash_banded",
-            DedupQueries.dedupSimhashBandedBlocks(6, 2),
-            { val (m, r) = DedupQueries.simhashBandedParamsFor(nDocs1 * factor)
-              DedupQueries.dedupSimhashBandedBlocks(m, r) }),
-          sym("text_dup_span_ratio", graft.queries.TextQueries.textDupSpanRatio),
-          // round 14: the bigram-LM fluency scorer — per-copy word
-          // tagging makes each copy's bigram vocabulary disjoint, so
-          // the model table, the collapsed per-doc bigram stream, and
-          // the one corpus-scale scoring join all grow exactly
-          // factor×; the flat gates apply unmodified.
-          sym("text_lm_fluency", graft.queries.TextQueries.textLmFluency),
-          // round 15: the CCNet tercile cut over the same disjoint
-          // bigram vocabularies — scores grow factor×, the counting
-          // aggregate's (lang, score) table is score-domain-bounded,
-          // and the one corpus-scale scoring join matches lm_fluency's;
-          // flat gates apply unmodified.
-          sym("text_ccnet_buckets", graft.queries.TextQueries.textCcnetBuckets),
-          // round 11 (r10 verdict #3): the two linkage operators that had
-          // only a 10× point. The fuzzy join rides the salted-vocab +
-          // unsalted-hot-block part fixture above; its entry gate also
-          // requires the MaxBlock cap to ENGAGE at factor× (the Zipf
-          // block is dropped wholesale, so join rows stay ~linear where
-          // an uncapped join would add C(20·factor, 2) hot pairs).
-          sym(fuzzyName, graft.queries.LinkageQueries.textFuzzyJoinBlocked),
-          // round 12 (r11 verdict #4): the declared multikey form on the
-          // same salted-vocab + unsalted-hot-block fixture — per-token
-          // salting keeps BOTH tagged block spaces (last ∪ first token)
-          // disjoint per copy; the hot block lives in L space only (hot
-          // first tokens are all distinct), so its cap-engagement gate
-          // checks the tagged union.
-          sym(fuzzyMultiName, graft.queries.LinkageQueries.textFuzzyJoinMulti),
-          // round 14: the ER cluster composition over the blocked fuzzy
-          // match graph — same part fixture (salted copies keep match
-          // components within a copy, so component structure and rounds
-          // stay flat while edge volume grows factor×); the cap gate
-          // applies (an un-skipped hot block would glue 20·factor names
-          // into one mega-entity), and joinrows normalize by measured
-          // component rounds, the dedup_clusters_raw discipline.
-          sym("linkage_entity_clusters",
-            graft.queries.LinkageQueries.linkageEntityClusters),
-          // round 14: the survivorship MERGE step over the same entity
-          // clusters — adds one catalog aggregate + one vocabulary-scale
-          // join on top; same fixture, same cap gate, same measured-
-          // round joinrows normalization (the component loop runs
-          // inside it verbatim).
-          sym("linkage_golden_record",
-            graft.queries.LinkageQueries.linkageGoldenRecord),
-          // The sharded inverted index on the salted docs corpus: terms
-          // are per-copy distinct, so (term, doc) pairs — the one
-          // corpus-scale shuffle — grow exactly factor×; the entry gate
-          // additionally proves the posting-row bound (max df_shard ≤
-          // PostingShard) held at factor×, i.e. no unbounded
-          // collect_list ever materialized.
-          sym("text_inverted_index", graft.queries.LinkageQueries.textInvertedIndex),
-          // round 9: the split-leakage audit rides the same salted corpus;
-          // its risk mode is the count-distinct expansion over
-          // (source, digest) groups — dup groups grow ~factor×.
-          sym("split_leakage_audit", graft.queries.SamplingQueries.splitLeakageAudit),
-          // Span REMOVAL: the token-level anti join is the heaviest
-          // shuffle shape in the surface (every token moves once) —
-          // exactly the plan whose 100x linearity needs a recorded point.
-          sym("text_dedup_spans", graft.queries.TextQueries.textDedupSpans),
-          // The embedding family (round-6 verdict #1): the bucket
-          // self-join with inline cosine + single-exchange rank, riding
-          // the plane-growth rule whose constant matters more at 100×
-          // than 10×. Planes-only is recall-safe through k = 13
-          // (RecallSpec measured the (1−p^16)^3 ≈ 0.80 decay at k = 16),
-          // so past that boundary — the 1000× decade — the factor× form
-          // grows BOTH dials via the pairs fixed point at this
-          // operator's L₀ = 3: (18, 7) at factor 1000, recall-pinned.
-          ("sim_knn_graph",
-            SimilarityQueries.simKnnGraphPlanes(SimilarityQueries.NPlanes),
-            { if (SimilarityQueries.NPlanes + extraPlanes <= 13)
-                SimilarityQueries.simKnnGraphPlanes(
-                  SimilarityQueries.NPlanes + extraPlanes)
-              else {
-                // The operator's own dials, not literals (round-12
-                // ADVICE): L₀ = NTables, k₀ = NPlanes — if either moves,
-                // the grown form moves with it.
-                val l0 = SimilarityQueries.NTables
-                var dk = extraPlanes
-                var l = l0 + (dk + 1) / 3
-                var next = math.ceil(math.log(factor * l / l0.toDouble) / math.log(2)).toInt
-                while (next != dk) {
-                  dk = next; l = l0 + (dk + 1) / 3
-                  next = math.ceil(math.log(factor * l / l0.toDouble) / math.log(2)).toInt
-                }
-                SimilarityQueries.simKnnGraphPlanes(
-                  SimilarityQueries.NPlanes + dk, l)
-              } }),
-          // round 10 (r9 verdict #2): the multi-probe online ANN search,
-          // riding the same ⌈log₂ factor⌉ plane growth as the kNN graph
-          // (its multiprobe fan grows only linearly in k, so no table
-          // term — see simAnnLshPlanes scaladoc); RecallSpec pins the
-          // grown k = 13 form ≥ 0.9 on planted near-dups.
-          ("sim_ann_lsh",
-            SimilarityQueries.simAnnLshPlanes(SimilarityQueries.NPlanes),
-            SimilarityQueries.simAnnLshPlanes(
-              SimilarityQueries.NPlanes + extraPlanes)),
-          ("dedup_embedding_pairs",
-            DedupQueries.dedupEmbeddingPairsPlanes(4),
-            // Both (k, L) dials via the fixed-point rule above — (12, 5)
-            // at factor 100; RecallSpec pins that form at ≥0.9 recall.
-            DedupQueries.dedupEmbeddingPairsPlanes(pairPlanes, pairTables)),
-          // round 15: SemDeDup — the factor× arm runs the paper's own
-          // deployment dial, cells ∝ n (50 k cells at 440 M embeddings
-          // in the paper), which holds within-cell pair mass linear.
-          // Assignment is TWO-LEVEL ROUTED (r14 verdict #1): n·√k per
-          // level instead of the old flat n·k cross, each level gated
-          // below with a real balance bound; the quadratic-risk term —
-          // the within-cell pair join — is measured in ISOLATION
-          // against the flat linear bound, the ivfpq-scan pattern.
-          ("dedup_semdedup",
-            (s: SparkSession, dd: String) =>
-              DedupQueries.dedupSemdedupCells(
-                DedupQueries.SemdedupCells)(s, s"$dd/semdd"),
-            (s: SparkSession, dd: String) =>
-              DedupQueries.dedupSemdedupCells(
-                DedupQueries.SemdedupCells * factor)(s, s"$dd/semdd")),
-          // round 13 (r12 verdict #1): the two r12-landed operators get
-          // their 100× point. kmeans runs the DECLARED fixed-2-iteration
-          // form at both arms (k = 8 is the operator's parameter, not a
-          // scale dial — the ×8 cross-join expansion collapses in-stage,
-          // so records and join rows are ~16·n at any corpus size and
-          // the flat 2×-linear gates ARE the per-iteration gates);
-          // per-copy ±1 diagonals change which vectors seed init across
-          // arms, which affects no gated ratio.
-          sym("emb_kmeans", SimilarityQueries.embKmeans),
-          // dsir: the ≤ 2·DsirB-row stats table is the only broadcast
-          // side by construction; the entry's extra gate records, at
-          // BOTH arms, how many broadcast subtrees contain a documents
-          // file scan and requires ZERO — the structural form of "the
-          // pool token stream was never the elected/forced build side"
-          // (the un-pinned fixture-scale plan DID broadcast it).
-          sym("sample_dsir_weights",
-            graft.queries.SamplingQueries.sampleDsirWeights),
-          // round 13: the PQ pair rides the embeddings fixture at its
-          // fixed operator parameters (8 subspaces, k = 4 seed codebook,
-          // 5 probes — none is a scale dial). Both collapse their
-          // candidate expansions in-stage through packed-min/sum
-          // aggregates over pinned bounded broadcasts, and neither plan
-          // has a nested loop (all joins are equi on the subspace key),
-          // so the blanket plan-sane arm applies.
-          sym("emb_pq_codes", SimilarityQueries.embPqCodes),
-          sym("sim_pq_adc_topk", SimilarityQueries.simPqAdcTopk),
-          // round 14: the IVF×PQ composition (r13 verdict #1), fixed
-          // operator parameters like the PQ pair. The blanket arms gate
-          // the whole declared plan; its entry-specific arm below
-          // measures the ADC SCAN in isolation over a snapshotted index
-          // and pins scan join rows to the probed-cell mass — the
-          // sub-linear-scan property that justifies composing IVF in.
-          sym("sim_ivfpq_topk", SimilarityQueries.simIvfPqTopk),
-          // round 14: the residual-encoded IVFADC twin — same fixture,
-          // same blanket + scan-isolation arms (the entry block below
-          // picks the residual index builder by name).
-          sym("sim_ivfpq_residual_topk", SimilarityQueries.simIvfPqResidualTopk),
-          // round 14: the TRAINED-cell IVFADC (cells = two-Lloyd
-          // k-means assignment instead of labels; cell sizes for the
-          // scan gate come from the codes frame itself).
-          sym("sim_ivfpq_trained_topk", SimilarityQueries.simIvfPqTrainedTopk),
-          // round 14: the exact re-rank refine stage over the IVFADC
-          // shortlist — blanket arms over the whole two-stage plan; its
-          // entry arm below snapshots the shortlist and pins the refine
-          // join output CONSTANT across arms (≤ 2·|probes|·R rows at any
-          // corpus size — the fetch-by-id property that makes re-rank
-          // the deployment answer to PQ loss).
-          sym("sim_ivfpq_rerank_topk", SimilarityQueries.simIvfPqRerankTopk),
-          // round 14: nprobe = 2 multi-cell routing — the scan gate sums
-          // probed-cell mass over BOTH routed cells per probe (the
-          // routed list below carries (probe, cell) pairs, so the
-          // expected-mass computation is nprobe-generic already).
-          sym("sim_ivfpq_nprobe_topk", SimilarityQueries.simIvfPqNprobeTopk),
-          // round 15 (r14 verdict #3): the clustered-scan IVFADC — the
-          // codes side reads the cell-PARTITIONED catalog table
-          // pre-ensured in fixture setup; same blanket + scan-isolation
-          // arms as sim_ivfpq_topk (the entry block below picks the
-          // table-backed codes by name). File-level pruning itself is
-          // PartitionPruningSpec's pin (DPP's size heuristic needs
-          // deployment-scale asymmetry the fixture can't fake here);
-          // this entry gates that the table-backed scan keeps the
-          // join-level probed-cell bound and linear volumes.
-          sym("sim_ivfpq_clustered_topk",
-            SimilarityQueries.simIvfPqClusteredTopk),
-          // round 15 (r14 verdict #6): the fully-trained IVFPQR — trained
-          // cells + trained residual codebooks + residual encode + exact
-          // re-rank in ONE declared plan. Blanket arms over the whole
-          // two-stage plan; the scan-isolation arm below picks its index
-          // builder by name (cell sizes come from the codes frame, so
-          // the probed-cell expectation is trained-cell-generic), and
-          // the refine arm pins its re-rank join output CONSTANT across
-          // arms exactly like sim_ivfpq_rerank_topk.
-          sym("sim_ivfpq_full_trained_topk",
-            SimilarityQueries.simIvfPqFullTrainedTopk),
-          // round 16 (r15 verdict #1): the two round-15 flagships
-          // composed with each other — the FULLY-TRAINED index persisted
-          // clustered by cell, scanned through DPP with exact re-rank.
-          // Blanket arms over the whole declared plan; the scan-isolation
-          // arm below reads the table-backed codes with the trained scan
-          // table, and the refine arm pins the re-rank join output
-          // constant across arms (the full_trained contract at the
-          // persisted layout).
-          sym("sim_ivfpq_full_clustered_topk",
-            SimilarityQueries.simIvfPqFullClusteredTopk),
-          // round 17 (r16 verdict #1): the append-admitted index's
-          // declared scan — base-trained frozen artifacts, base codes
-          // day-0, delta codes appended day-1 through the catalog. Same
-          // blanket + scan/refine isolation arms as full-clustered, PLUS
-          // the dedicated admission-isolation arm below gating the delta
-          // encode's join/shuffle work against analytic |delta|-only
-          // bounds (admission must cost ∝ |delta|, never ∝ |corpus|).
-          sym("sim_ivfpq_append", SimilarityQueries.simIvfPqAppendTopk),
-          // round 18 (r17 verdict #1): the DELETE path — tombstones
-          // routed through the frozen artifacts at |deleted|-only cost
-          // (the tombstone-isolation arm below), fetched cell-pruned,
-          // anti-joined into the DPP-pruned scan. Blanket arms over the
-          // declared plan; the scan-isolation arm reads the LIVE
-          // (anti-joined) codes so the probed-cell mass bound is the
-          // post-delete one; the refine arm pins the constant re-rank.
-          sym("sim_ivfpq_delete_topk", SimilarityQueries.simIvfPqDeleteTopk),
-          // round 18 (r17 verdict #2): the declared nprobe = 2 dial on
-          // the frozen persisted artifacts — the scan-isolation arm
-          // gates the probed mass over BOTH routed cells per probe
-          // against the same half-a-full-scan denominator, and the
-          // refine arm pins the constant re-rank at the widened dial.
-          sym("sim_ivfpq_append_nprobe",
-            SimilarityQueries.simIvfPqAppendNprobeTopk),
-          // round 18 (r17 verdict #3): the per-cell balance audit — one
-          // m = 0 corpus scan into a <= |cells|-row aggregate; the
-          // custom arm pins joinrows CONSTANT (the <= |cells|-row totals
-          // cross) across arms.
-          sym("sim_ivfpq_cell_stats", SimilarityQueries.simIvfPqCellStats),
-          // round 18: the gc audit — the cell-stats posture plus one
-          // <= |cells|-row broadcast join against the per-cell tombstone
-          // counts; its custom arm pins joinrows CONSTANT across arms.
-          sym("sim_ivfpq_gc_stats", SimilarityQueries.simIvfPqGcStats),
-          // round 18: the post-compaction scan — the append deployment
-          // plan over the COMPACTED generation (no anti-join anywhere);
-          // scan/refine isolation arms pick the gc table by name, and
-          // the compaction-isolation arm below gates the reclaim job's
-          // join output against the exact 16·M_t − 8·D decomposition
-          // (touched-cell mass, never the corpus... on this uniform
-          // fixture M_t spans all cells — the locality is file-level,
-          // IvfpqMaintenanceSpec's dynamic-overwrite pin).
-          sym("sim_ivfpq_compact_topk", SimilarityQueries.simIvfPqCompactTopk),
-          // round 18: the post-split scan — probe routing over the
-          // 9-row split cells table, DPP-pruned codes from the split
-          // generation; the split-isolation arm below gates the member
-          // re-encode + 2-means chain against |parent cell|-only bounds.
-          sym("sim_ivfpq_cell_split", SimilarityQueries.simIvfPqCellSplit),
-          // round 17: the retrain trigger — one linear pass per side
-          // through the frozen ≤ 8/≤ 32-row broadcast artifacts into one
-          // global aggregate; flat gates, one bounded assign cross.
-          sym("sim_ivfpq_drift_guard", SimilarityQueries.simIvfPqDriftGuard),
-          // round 14: the trained-codebook PQ encode — three corpus
-          // passes (two Lloyd rounds + the final encode), each an EQUI
-          // broadcast-hash join on the subspace index collapsed by the
-          // packed-min aggregate; the blanket no-nested-loop arm
-          // applies (no cross join anywhere in this plan).
-          sym("emb_pq_trained_codes", SimilarityQueries.embPqTrainedCodes),
-          // round 14 (r13 verdict #4): the run-to-convergence Lloyd loop
-          // on the planted migration-chain fixture — rounds GROW with
-          // the chain extent (5 → ~11 at 100×, by exact simulation), so
-          // the records/joinrows gates normalize by measured rounds,
-          // the dedup_clusters_raw discipline. loopParts tracks the
-          // probe's volume-scaled width.
-          (kmlName,
-            (s: SparkSession, dd: String) =>
-              graft.operators.KMeans.lloyd(
-                s.read.parquet(s"$dd/kml/embeddings.parquet"),
-                k = 2, dims = 64, loopParts = cpus.toInt, maxRounds = 40),
-            (s: SparkSession, dd: String) =>
-              graft.operators.KMeans.lloyd(
-                s.read.parquet(s"$dd/kml/embeddings.parquet"),
-                k = 2, dims = 64, loopParts = partsN, maxRounds = 40)),
-          // round 14: the PageRank convergence loop on the co-order
-          // fixture — rounds are set by the damping contraction
-          // (~log(dR0/tol)/log(1/0.85)), NOT graph size, so the entry
-          // gates rounds FLAT across arms (+2 floor slack) while
-          // records/joinrows normalize by the measured count; the loop
-          // must converge at both arms (exit-on-cap would silently
-          // shrink the normalizer).
-          (prIterName,
-            (s: SparkSession, dd: String) =>
-              graft.operators.PageRank.iterate(
-                graft.queries.LinkageQueries.coOrderPairs(s, s"$dd/tri"),
-                tol = 1000L, loopParts = cpus.toInt),
-            (s: SparkSession, dd: String) =>
-              graft.operators.PageRank.iterate(
-                graft.queries.LinkageQueries.coOrderPairs(s, s"$dd/tri"),
-                tol = 1000L, loopParts = partsN)),
-          // round 16 (r15 verdict #7): the BPE run-to-target trainer —
-          // the corpus pays exactly one scan (the word-count aggregate
-          // behind the capped vocabulary); every round is a projection
-          // over ≤ BpeVocabCap rows with the ≤ 1-row arg-max collected
-          // driver-side, so records/joinrows normalize by measured
-          // rounds and the salted 10×/100× corpora (disjoint per-copy
-          // word universes) must train the full target at both arms.
-          ("bpe_train_loop",
-            (s: SparkSession, dd: String) =>
-              graft.operators.Bpe.train(
-                graft.queries.TextQueries.bpeDocWords(s, dd),
-                graft.queries.TextQueries.BpeMerges,
-                minCount = 2L, loopParts = cpus.toInt),
-            (s: SparkSession, dd: String) =>
-              graft.operators.Bpe.train(
-                graft.queries.TextQueries.bpeDocWords(s, dd),
-                graft.queries.TextQueries.BpeMerges,
-                minCount = 2L, loopParts = partsN)),
-          // round 16 (r15 verdict #4): the LPA run-to-termination loop
-          // on the disjoint-copy co-order fixture. Rounds are a property
-          // of each copy's community structure — copies are identical,
-          // so rounds must be FLAT across arms (the pagerank_iterate
-          // convention, +2 slack for the max-over-copies of any
-          // tie-order wobble); records/joinrows normalize by the
-          // measured count, and the loop must TERMINATE (fixpoint or
-          // detected 2-cycle) at both arms — an exit-on-cap would
-          // silently shrink the normalizer.
-          (lpaIterName,
-            (s: SparkSession, dd: String) =>
-              graft.operators.Lpa.iterate(
-                graft.queries.LinkageQueries.coOrderPairs(s, s"$dd/tri"),
-                loopParts = cpus.toInt),
-            (s: SparkSession, dd: String) =>
-              graft.operators.Lpa.iterate(
-                graft.queries.LinkageQueries.coOrderPairs(s, s"$dd/tri"),
-                loopParts = partsN)))
-          .filter(t => wanted(t._1))
-      }
-
       // Warm-up (JIT, codegen, parquet reader) so the 1× baseline isn't
       // cold-start; the gated quantities are record counts, which warm-up
       // cannot change, but clean context numbers are worth one cheap run.
-      measure(spark, queries.head._2, dir1, cpus.toInt)
+      measure(spark, entries.head.q1, dir1, cpus.toInt)
 
       var allPass = true
-      val entries = queries.map { case (name, q1, qN) =>
+      val results = entries.map { case ScaleFixture.Entry(name, kinds, q1, qN) =>
         val (w1, m1) = measure(spark, q1, dir1, cpus.toInt)
         val (wN, mN) = measure(spark, qN, dirN, partsN)
         val (k1, plans1, kN, plansN) = (m1.work, m1.plans, mN.work, mN.plans)
@@ -944,7 +316,7 @@ object VolumeProbe {
             // kmeans_lloyd's expected BNLJ count is rounds-dependent;
             // its entry block below REASSIGNS planSane with the
             // one-bounded-cross-per-round pin.
-            case None if name == kmlName => !Metrics.hasCartesian(plansN)
+            case None if name == "kmeans_lloyd" => !Metrics.hasCartesian(plansN)
             case None => !Metrics.hasNestedLoop(plansN)
           }
         val recRatio = kN.shuffleRecordsRead.toDouble / math.max(k1.shuffleRecordsRead, 1L)
@@ -1053,16 +425,16 @@ object VolumeProbe {
         // blocks, 0 at 1× where the hot block is still under cap), which
         // is what keeps the flat 2×-linear joinrows arm satisfiable at
         // all: uncapped, the hot block alone adds C(20·factor, 2) pairs.
-        if (fuzzyNames.contains(name)) {
+        if (kinds.contains(ScaleFixture.Fz)) {
           // Block sizes in the query's OWN block space: last token for
           // the single-key form, the tagged last ∪ first union for the
           // multikey (its per-key spaces are disjoint by tag, so one
           // union count is exact).
           def overCap(dir: String): Long = {
-            val names = spark.read.parquet(s"$dir/part.parquet")
+            val names = spark.read.parquet(s"$dir/fz/part.parquet")
               .groupBy("p_name").agg(count(lit(1)).as("cnt"))
             val keyed =
-              if (name == fuzzyMultiName)
+              if (name == "text_fuzzy_join_multikey")
                 names.select(concat_ws("#", lit("L"),
                     element_at(split(col("p_name"), " "), -1)).as("blk"))
                   .unionByName(names.select(concat_ws("#", lit("F"),
@@ -1666,7 +1038,7 @@ object VolumeProbe {
         // per round (the ≤ k-row centroid table), no Cartesian, and the
         // loop must actually CONVERGE at both arms (an exit-on-cap would
         // silently cap the normalizer).
-        if (name == prIterName && prRounds1 > 0 && prRoundsN > 0) {
+        if (name == "pagerank_iterate" && prRounds1 > 0 && prRoundsN > 0) {
           val roundScale = prRoundsN.toDouble / prRounds1
           recOk = kN.shuffleRecordsRead.toDouble <=
             2.0 * factor * roundScale * math.max(k1.shuffleRecordsRead, 10000L)
@@ -1709,7 +1081,7 @@ object VolumeProbe {
         // FLAT across arms (disjoint identical copies → identical
         // per-copy community trajectories), and both arms must TERMINATE
         // on a detected condition (fixpoint or 2-cycle), never the cap.
-        if (name == lpaIterName && lpaRounds1 > 0 && lpaRoundsN > 0) {
+        if (name == "lpa_iterate" && lpaRounds1 > 0 && lpaRoundsN > 0) {
           val roundScale = lpaRoundsN.toDouble / lpaRounds1
           recOk = kN.shuffleRecordsRead.toDouble <=
             2.0 * factor * roundScale * math.max(k1.shuffleRecordsRead, 10000L)
@@ -1725,7 +1097,7 @@ object VolumeProbe {
           extra ++= s""""records_gate":"records<=2x_linear_per_round","""
           extra ++= s""""joinrows_gate":"joinrows<=2x_linear_per_round","""
         }
-        if (name == kmlName && kmRounds1 > 0 && kmRoundsN > 0) {
+        if (name == "kmeans_lloyd" && kmRounds1 > 0 && kmRoundsN > 0) {
           val roundScale = kmRoundsN.toDouble / kmRounds1
           recOk = kN.shuffleRecordsRead.toDouble <=
             2.0 * factor * roundScale * math.max(k1.shuffleRecordsRead, 10000L)
@@ -1788,7 +1160,7 @@ object VolumeProbe {
       val json = s"""{"probe":"volume","factor":$factor,"sf":${Jsons.q(sf)},""" +
         s""""gate":"shuffle_records<=2x_linear AND join_output_rows<=2x_linear AND spill_bounded AND plan_sane",""" +
         s""""timing_is_context_only":true,""" +
-        s""""queries":{${entries.mkString(",")}},"all_pass":$allPass}"""
+        s""""queries":{${results.mkString(",")}},"all_pass":$allPass}"""
       Files.write(java.nio.file.Paths.get(out),
         (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(json)

@@ -2,48 +2,18 @@ package graft
 
 import java.nio.file.Files
 
-import graft.queries.{DedupQueries, OlapQueries, SimilarityQueries, TextQueries}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.queries.{DedupQueries, SimilarityQueries}
 import org.apache.spark.sql.graftx.Metrics
 import org.scalatest.BeforeAndAfterAll
 
-/** Synthetic scale probe for the dedup/cluster family and the OLAP joins
-  * (round-2 verdict: every 100 TB claim was plan-shape-only; this makes
-  * sub-quadratic scaling an executable assertion, in the reference's own
-  * test style of large-input runs with closed-form checks —
-  * /root/reference/src/dist_map_test.cc:71-88).
-  *
-  * Documents: a 10× corpus from sf0.1 (5 000 → 50 000 docs) by unioning
-  * 10 copies with offset doc_ids and PER-COPY WORD SALTING (every word
-  * gets a copy tag appended): intra-copy near-dup structure is preserved
-  * exactly, while cross-copy shingle/token collisions are impossible — so
-  * candidate pairs grow ~10×, not ~100× as naive duplication would force
-  * (each doc would match its 9 clones, making even a perfectly linear
-  * operator measure quadratic).
-  *
-  * Facts (round-3 verdict #4): 10× lineitem/orders/events by unioning 10
-  * copies with OFFSET KEYS — orderkeys shift per copy (so each copy's
-  * lines join only its own orders, keeping join fan-out linear) and
-  * event_type gets a per-copy tag (so the (type, day) window domain grows
-  * 10×, exercising the window stage, not just the pre-aggregate).
-  * Dimensions stay 1× — that IS the 100 TB shape: facts grow, dims don't.
-  *
-  * Embeddings (round-5 verdict #1): 10× vectors by unioning 10 copies
-  * with offset vec_ids and a PER-COPY ±1 DIAGONAL (each copy's vectors
-  * get a deterministic per-(copy, dim) sign flip). A diagonal ±1 matrix
-  * is orthogonal, so intra-copy pairwise cosines — and therefore each
-  * copy's near-neighbor structure — are preserved EXACTLY, while
-  * cross-copy geometry (and sign-LSH buckets, which see the flipped
-  * coordinates) is scrambled: naive duplication would put every vector's
-  * 9 clones in its bucket in every table and force quadratic candidate
-  * growth on a perfectly linear operator — the embedding analog of the
-  * word salting above. The kNN-graph entry also GROWS the plane count by
-  * ⌈log₂ 10⌉ at 10× (via [[SimilarityQueries.simKnnGraphPlanes]]): the
-  * documented deployment rule is that planes track log₂(n) to hold
-  * bucket occupancy ≈ the candidate budget, and the probe exercises the
-  * rule itself rather than a fixed layout whose every bucket saturates
-  * the drop cap at scale.
+/** Synthetic scale probe for the dedup/cluster family, the OLAP joins
+  * and the rest of the extension operators (round-2 verdict: every 100 TB
+  * claim was plan-shape-only; this makes sub-quadratic scaling an
+  * executable assertion, in the reference's own test style of large-input
+  * runs with closed-form checks — /root/reference/src/dist_map_test.cc:71-88).
+  * Each entry runs at 1× and 10× the sf0.1 corpus of [[ScaleFixture]],
+  * which documents the salting; this spec keeps the names it runs and its
+  * gate.
   *
   * The assertion is a triple gate — wall-time (10× ≤ 3× the 1× wall plus
   * slack) OR work (executor-CPU 10× ≤ 25× AND disk spill bounded) OR
@@ -68,6 +38,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
 
+  private val sf = "/root/testdata/sf0.1"
   private val dir1 = Files.createTempDirectory("graft-scale1").toString
   private val dir10 = Files.createTempDirectory("graft-scale10").toString
 
@@ -76,261 +47,40 @@ class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
     super.afterAll()
   }
 
+  /** The [[ScaleFixture.entries]] this spec gates, in run order. */
+  private val names = Seq(
+    "dedup_minhash_lsh", "dedup_minhash_capped", "dedup_simhash_banded",
+    "dedup_jaccard_on_lsh", "dedup_ngram_jaccard_capped", "dedup_containment",
+    "text_dup_span_ratio", "text_ngram_novelty", "text_dedup_spans",
+    "split_leakage_audit", "dedup_clusters_raw", "dedup_cluster_sizes_raw",
+    "dedup_keep_canonical_raw", "sim_knn_graph", "dedup_embedding_pairs",
+    "sim_ann_lsh", "sim_ann_ivf", "dedup_source_overlap", "dedup_incremental",
+    "text_tfidf_top_terms", "text_token_rarity", "text_lm_fluency",
+    "join_supply_revenue", "part_type_revenue", "events_anomaly_zscore",
+    "events_type_transitions", "events_funnel", "events_retention",
+    "asof_last_order", "events_lateness_histogram", "events_error_window_join",
+    "graph_triangle_count", "text_fuzzy_join_blocked", "text_fuzzy_join_multikey",
+    "text_inverted_index", "events_anomaly_mad", "text_bm25_topk",
+    "sample_temperature_mix", "sample_dsir_weights", "emb_kmeans",
+    "graph_pagerank", "text_bpe_train", "text_bpe_encode",
+    "linkage_golden_record", "graph_label_propagation", "text_ccnet_buckets",
+    "dedup_minhash_estimate", "sample_unimax", "text_gopher_rules",
+    "olap_grouping_sets", "sim_range_search")
+
+  private lazy val family: Map[String, ScaleFixture.Entry] =
+    ScaleFixture.entries(10, graft.sources.Tables.documents(spark, sf).count())
+      .collect {
+        // sim_ann_lsh keeps its declared planes at 10×: the probe grows
+        // them with log₂ n, and fewer candidates at 10× would loosen
+        // this gate.
+        case e if e.name == "sim_ann_lsh" =>
+          e.name -> e.copy(q1 = SimilarityQueries.simAnnLsh, qN = SimilarityQueries.simAnnLsh)
+        case e if names.contains(e.name) => e.name -> e
+      }.toMap
+
   override def beforeAll(): Unit = {
     super.beforeAll()
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    // 1× written through the same writer so file layout is comparable.
-    docs.write.mode("overwrite").parquet(s"$dir1/documents.parquet")
-    def salted(tag: Int): DataFrame = docs.select(
-      (col("doc_id") + tag * 100000000L).as("doc_id"),
-      concat_ws(" ",
-        transform(split(col("text"), " "), w => concat(w, lit(s"q$tag")))).as("text"),
-      col("lang"), col("source"), col("n_chars"))
-    (0 until 10).map(salted).reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$dir10/documents.parquet")
-
-    // OLAP star: dims copied 1× into BOTH dirs; facts offset-keyed 10×.
-    val sf = "/root/testdata/sf0.1"
-    for (dim <- Seq("region", "nation", "customer", "supplier", "part");
-         d <- Seq(dir1, dir10))
-      spark.read.parquet(s"$sf/$dim.parquet")
-        .write.mode("overwrite").parquet(s"$d/$dim.parquet")
-    val ord = spark.read.parquet(s"$sf/orders.parquet")
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-    ord.write.mode("overwrite").parquet(s"$dir1/orders.parquet")
-    li.write.mode("overwrite").parquet(s"$dir1/lineitem.parquet")
-    val keyOff = 1000000000L
-    (0 until 10).map(t => ord.withColumn("o_orderkey",
-        col("o_orderkey") + t * keyOff)).reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$dir10/orders.parquet")
-    (0 until 10).map(t => li.withColumn("l_orderkey",
-        col("l_orderkey") + t * keyOff)).reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$dir10/lineitem.parquet")
-    val ev = graft.sources.Tables.events(spark, sf) // sets the nanos conf
-    ev.write.mode("overwrite").parquet(s"$dir1/events.parquet")
-    (0 until 10).map(t => ev
-        .withColumn("event_id", col("event_id") + t * keyOff)
-        .withColumn("event_type", concat(col("event_type"), lit(s"_q$t"))))
-      .reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$dir10/events.parquet")
-    // Sub-fixture for events_error_window_join (round-6 verdict #5): the
-    // shared 10× events fixture tags event_type per copy, which would
-    // make the declared `=== "error"` literal match nothing — round 6
-    // probe-gated a startswith variant instead of the declared query.
-    // Here event_type is PRESERVED and each copy's timestamps shift to a
-    // disjoint ~400-day epoch (the 100 TB shape for an event log: more
-    // data is more time span): every copy opens its own hourly incident
-    // windows exactly as the 1× corpus does, window count and join
-    // output both grow ~10×, and the probe runs the declared query
-    // verbatim against `$dir/ewj`.
-    val epochOff = 400L * 86400L * 1000000000L // 400 days in ns
-    ev.write.mode("overwrite").parquet(s"$dir1/ewj/events.parquet")
-    (0 until 10).map(t => ev
-        .withColumn("event_id", col("event_id") + t * keyOff)
-        .withColumn("ts", col("ts") + t * epochOff))
-      .reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$dir10/ewj/events.parquet")
-
-    // Sub-fixture for graph_triangle_count (round 10): the shared 10×
-    // lineitem offsets only l_orderkey, so the copies would pile
-    // co-occurrence SUPPORT onto the same part pairs — every support-1
-    // noise pair would clear the ≥2 floor at 10×, densifying the graph
-    // ~30× as a pure duplication artifact (the SimHash-salting lesson:
-    // growth must come from NEW entities, not replayed ones). Offsetting
-    // BOTH keys gives 10 disjoint copies of the graph — the 100 TB shape
-    // for basket data: more orders over a wider catalog.
-    li.write.mode("overwrite").parquet(s"$dir1/tri/lineitem.parquet")
-    (0 until 10).map(t => li
-        .withColumn("l_orderkey", col("l_orderkey") + t * keyOff)
-        .withColumn("l_partkey", col("l_partkey") + t * keyOff))
-      .reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$dir10/tri/lineitem.parquet")
-
-    // Sub-fixture for the fuzzy joins: EVERY token gets a per-copy tag
-    // (the VolumeProbe part-fixture rule) so every blocking key's block
-    // space — last token for the single-key form, last ∪ first for the
-    // multikey — stays disjoint across copies: vocabulary, blocks, and
-    // matched pairs all grow 10× while in-block edit distances are
-    // untouched (both names gain the same-position suffix). The older
-    // whole-name suffix salted only the LAST token, which kept first
-    // tokens shared across copies — the multikey entry's F blocks would
-    // have grown 10× deep and measured a quadratic that is a fixture
-    // artifact, not an operator property.
-    val part = spark.read.parquet(s"$sf/part.parquet")
-    part.write.mode("overwrite").parquet(s"$dir1/fz/part.parquet")
-    (0 until 10).map(t => part
-        .withColumn("p_partkey", col("p_partkey") + t * keyOff)
-        .withColumn("p_name", concat_ws(" ",
-          transform(split(col("p_name"), " "), w => concat(w, lit(s"q$t"))))))
-      .reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$dir10/fz/part.parquet")
-
-    // Embeddings: per-copy orthogonal ±1 diagonal (see class doc). The
-    // flip pattern is murmur3(dim, copy) parity — deterministic, so the
-    // fixture is reproducible run to run.
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    emb.write.mode("overwrite").parquet(s"$dir1/embeddings.parquet")
-    def saltedEmb(t: Int): DataFrame = emb.select(
-      (col("vec_id") + t * (1L << 22)).as("vec_id"), // 2^22: stay inside the 32-bit pack domain (r11)
-      transform(col("embedding"), (x, i) =>
-        when(pmod(hash(i, lit(t)), lit(2)) === 1, negate(x)).otherwise(x))
-        .as("embedding"),
-      col("label"))
-    (0 until 10).map(saltedEmb).reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$dir10/embeddings.parquet")
-  }
-
-  /** (name, query at 1×, query at 10×). Same function at both scales for
-    * every entry except sim_knn_graph, whose 10× form grows the LSH plane
-    * count by ⌈log₂ 10⌉ = 4 — the documented re-parameterization a
-    * deployment applies as the corpus grows (class doc). The cluster trio
-    * binds the RAW label pipeline (candidates + iterative components, no
-    * memo): the round-5 memoization made the old `dedup_clusters` /
-    * `dedup_keep_canonical` entries time a memo-table read at both
-    * scales, which gates nothing. */
-  private val family: Seq[(String, DedupQueries.Q, DedupQueries.Q)] = {
-    def sym(n: String, q: DedupQueries.Q) = (n, q, q)
-    Seq(
-      sym("dedup_minhash_lsh", DedupQueries.dedupMinhashLsh),
-      sym("dedup_minhash_capped", DedupQueries.dedupMinhashCapped),
-      sym("dedup_simhash_banded", DedupQueries.dedupSimhashBanded),
-      sym("dedup_jaccard_on_lsh", DedupQueries.dedupJaccardOnLsh),
-      sym("dedup_ngram_jaccard_capped", DedupQueries.dedupNgramJaccardCapped),
-      // round 10: containment shares the ngram plan class (same df-capped
-      // universe, same intersection join) — probe it independently since
-      // its ratio filter keeps a different pair population.
-      sym("dedup_containment", DedupQueries.dedupContainment),
-      sym("text_dup_span_ratio", TextQueries.textDupSpanRatio),
-      // round 10: novelty shares the digested-shingle min-agg + equi-join
-      // class; per-copy word salting keeps every copy's first-occurrence
-      // structure intact, so output and volume track ~10×.
-      sym("text_ngram_novelty", TextQueries.textNgramNovelty),
-      sym("text_dedup_spans", TextQueries.textDedupSpans),
-      // round 9: the leakage audit's risk mode is the count-distinct
-      // expansion over (source, digest) groups; salted copies grow dup
-      // groups linearly, so volume must track ~10×.
-      sym("split_leakage_audit", graft.queries.SamplingQueries.splitLeakageAudit),
-      sym("dedup_clusters_raw", DedupQueries.dedupClustersRaw),
-      sym("dedup_cluster_sizes_raw", DedupQueries.dedupClusterSizesRaw),
-      sym("dedup_keep_canonical_raw", DedupQueries.dedupKeepCanonicalRaw),
-      ("sim_knn_graph",
-        SimilarityQueries.simKnnGraphPlanes(SimilarityQueries.NPlanes),
-        SimilarityQueries.simKnnGraphPlanes(SimilarityQueries.NPlanes + 4)),
-      ("dedup_embedding_pairs",
-        DedupQueries.dedupEmbeddingPairsPlanes(4),
-        DedupQueries.dedupEmbeddingPairsPlanes(4 + 4, nTables = 3)),
-      sym("sim_ann_lsh", SimilarityQueries.simAnnLsh),
-      sym("sim_ann_ivf", SimilarityQueries.simAnnIvf),
-      sym("dedup_source_overlap", DedupQueries.dedupSourceOverlap),
-      sym("dedup_incremental", DedupQueries.dedupIncremental),
-      sym("text_tfidf_top_terms", TextQueries.textTfidfTopTerms),
-      // round 10: token rarity on the salted docs — per-copy word tagging
-      // grows vocab AND totals 10× with every word's cf unchanged, so the
-      // relative rarity rule (cf·8·|vocab| < toks) selects the same
-      // per-copy structure and all three stages (tokc agg, head/tail
-      // vocab join, per-doc agg) must track ~10× volume.
-      sym("text_token_rarity", TextQueries.textTokenRarity),
-      // round 14: the bigram-LM fluency scorer — per-copy word tagging
-      // makes each copy's bigram vocabulary disjoint, so the model
-      // table, the collapsed per-doc bigram stream, and the one
-      // corpus-scale scoring join all track ~10× (the 100×/1000×
-      // VOLPROBE entries measured joinrows at exactly linear).
-      sym("text_lm_fluency", TextQueries.textLmFluency),
-      sym("join_supply_revenue", OlapQueries.joinSupplyRevenue),
-      sym("part_type_revenue", OlapQueries.partTypeRevenue),
-      sym("events_anomaly_zscore", OlapQueries.eventsAnomalyZscore),
-      // Events fixture notes: user_ids and timestamps are shared across
-      // copies (only event_id/event_type are offset/tagged), so funnel /
-      // transitions see 10× rows per user — the per-user window cascade
-      // at 10× depth — while retention's distinct (user, day) output is
-      // UNCHANGED at 10×: the entry gates that the big distinct shuffle
-      // partial-aggregates instead of moving 10× raw rows.
-      sym("events_type_transitions", graft.queries.ExtensionQueries.eventsTypeTransitions),
-      sym("events_funnel", graft.queries.ExtensionQueries.eventsFunnel),
-      sym("events_retention", graft.queries.ExtensionQueries.eventsRetention),
-      // The custom join shapes: as-of (union + running-last window; the
-      // quote side's (custkey, date) domain collapses to 1× under the
-      // aggregate, events grow 10×) and the binned range join (gated on
-      // its own `ewj` sub-fixture — event_type preserved, per-copy
-      // disjoint time epochs — so the DECLARED query runs verbatim;
-      // beforeAll explains). The guarded global window rides along: its
-      // per-minute aggregate domain is scale-invariant here, so the
-      // entry gates that the window input stays the COLLAPSED frame.
-      sym("asof_last_order", graft.queries.ExtensionQueries.asofLastOrder),
-      sym("events_lateness_histogram",
-        graft.queries.ExtensionQueries.eventsLatenessHistogram),
-      sym("events_error_window_join",
-        (s, d) => graft.queries.ExtensionQueries
-          .eventsErrorWindowJoin(s, s"$d/ewj")),
-      // round 10: the linkage family. Triangles and the fuzzy join run
-      // verbatim against their disjoint-copy sub-fixtures (see
-      // beforeAll); the index and the mix run on the shared salted docs
-      // (salted words = 10× vocabulary with per-copy posting lists;
-      // shared sources = 10× per-source counts through the same
-      // broadcast-threshold plan).
-      sym("graph_triangle_count",
-        (s, d) => graft.queries.LinkageQueries.graphTriangleCount(s, s"$d/tri")),
-      sym("text_fuzzy_join_blocked",
-        (s, d) => graft.queries.LinkageQueries.textFuzzyJoinBlocked(s, s"$d/fz")),
-      // round 12: the declared multikey form rides the same per-token-
-      // salted fixture (both its block spaces are disjoint per copy).
-      sym("text_fuzzy_join_multikey",
-        (s, d) => graft.queries.LinkageQueries.textFuzzyJoinMulti(s, s"$d/fz")),
-      sym("text_inverted_index", graft.queries.LinkageQueries.textInvertedIndex),
-      // round 12 (r11 verdict #7): the two r11-new operators — both
-      // calendar/limit-bounded by construction, gated so a new operator
-      // never lands without a scale point. anomaly_mad's (type, day)
-      // domain grows 10× with the per-copy type tags; bm25's one corpus
-      // shuffle is the termDocTf collapse over the salted vocabulary.
-      sym("events_anomaly_mad", graft.queries.ExtensionQueries.eventsAnomalyMad),
-      sym("text_bm25_topk", TextQueries.textBm25TopK),
-      sym("sample_temperature_mix", graft.queries.SamplingQueries.sampleTemperatureMix),
-      // round 12: the two r12-new operators land WITH their scale points
-      // (the habit r11 verdict #7 asked for). DSIR's feature table is
-      // pinned at <= 2*DsirB rows by the hash width at any corpus size,
-      // so only the token stream and the per-doc aggregates may grow —
-      // salted words shift bucket membership but not the bound. kmeans'
-      // assignment partials grow 10x with the vectors while the centroid
-      // tables stay exactly k = 8 rows (init ids 0..7 live in the
-      // un-offset copy; the per-copy diagonal scrambles geometry, which
-      // kmeans does not care about — any assignment is volume-identical).
-      sym("sample_dsir_weights", graft.queries.SamplingQueries.sampleDsirWeights),
-      sym("emb_kmeans", SimilarityQueries.embKmeans),
-      // round 14: the two r14-new iterated operators land WITH their
-      // scale points. PageRank rides the disjoint-copy tri sub-fixture
-      // (10 disjoint copies of the 1× graph, identical degrees, fixed 3
-      // rounds — every stage exactly 10×); BPE rides the salted docs:
-      // the corpus word count grows 10× while every merge round stays
-      // bounded by the 4096-word vocabulary cap.
-      sym("graph_pagerank",
-        (s, d) => graft.queries.LinkageQueries.graphPagerank(s, s"$d/tri")),
-      sym("text_bpe_train", TextQueries.textBpeTrain),
-      sym("text_bpe_encode", TextQueries.textBpeEncode),
-      // round 14: ER survivorship rides the fuzzy sub-fixture like the
-      // joins it composes (vocabulary, blocks, matched entities all 10×;
-      // the merge adds one catalog aggregate + one vocab-scale join).
-      sym("linkage_golden_record",
-        (s, d) => graft.queries.LinkageQueries.linkageGoldenRecord(s, s"$d/fz")),
-      // round 15: the seven r15-new operators land WITH their scale
-      // points (the standing habit). LPA rides the disjoint-copy tri
-      // sub-fixture like pagerank (labels never cross copies — no edges
-      // do); ccnet's per-copy-disjoint bigram vocabularies reproduce the
-      // 1× per-doc scores exactly, so thresholds are scale-invariant and
-      // every stage tracks 10×; the minhash estimator composes the two
-      // probed dedup shapes plus candidate-mass-bounded signature
-      // lookups; unimax's stats/threshold tables stay |languages|-sized
-      // while both corpus scans grow 10×; gopher/grouping-sets are
-      // single-aggregate linear; range search's BNLJ output is the
-      // τ-ball mass (intra-copy cosines preserved exactly by the ±1
-      // diagonal; cross-copy cosines scrambled toward isotropic).
-      sym("graph_label_propagation",
-        (s, d) => graft.queries.LinkageQueries.graphLabelPropagation(s, s"$d/tri")),
-      sym("text_ccnet_buckets", TextQueries.textCcnetBuckets),
-      sym("dedup_minhash_estimate", DedupQueries.dedupMinhashEstimate),
-      sym("sample_unimax", graft.queries.SamplingQueries.sampleUnimax),
-      sym("text_gopher_rules", TextQueries.textGopherRules),
-      sym("olap_grouping_sets", graft.queries.ExtensionQueries.olapGroupingSets),
-      sym("sim_range_search", SimilarityQueries.simRangeSearch))
+    ScaleFixture.write(spark, sf, dir1, dir10, 10, family.values.flatMap(_.kinds))
   }
 
   /** Entries whose plan legitimately contains a nested-loop join, so the
@@ -454,8 +204,9 @@ class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
         "— super-linear on all three gates")
   }
 
-  for ((name, q1, q10) <- family)
+  for (name <- names)
     test(s"$name scales ~linearly at 10x input") {
+      val ScaleFixture.Entry(_, _, q1, q10) = family(name)
       measureOnce(q1, dir1) // warm-up: JIT, codegen, parquet reader
       val first = gateOnce(name, q1, q10)
       if (first._1) succeed

@@ -15,7 +15,10 @@ across JVM runs:
     names the checkout directory (and is truncated at a length that
     depends on it); `graft.Inspect plans` prints `[<warehouse>/<table>]`
     instead. Both become `[<warehouse>]`; the table itself stays visible
-    in the `FileScan` name.
+    in the `FileScan` name;
+  - fixture-file locations: an absolute one (`[file:/.../sf0.1/x.parquet]`)
+    names the fixture directory; `graft.Inspect plans` prints
+    `[<sf>/x.parquet]` instead. Both become `[<sf>/x.parquet]`.
 
 Prints a unified diff for each section that differs, plus sections present
 in only one file, and a summary line. Exits 1 if any section differs.
@@ -33,6 +36,7 @@ _NORMALIZE = [
     (re.compile(r"\b([a-z])_\d+\b"), r"\1_N"),
     (re.compile(r"\[file:\S*?/spark-warehouse/[^\]]*?(?:\]|\.\.\.)"), "[<warehouse>]"),
     (re.compile(r"\[<warehouse>/[^\]]*\]"), "[<warehouse>]"),
+    (re.compile(r"\[file:[^\]]*/([^/\]]+\.parquet)\]"), r"[<sf>/\1]"),
 ]
 
 
