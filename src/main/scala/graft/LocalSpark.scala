@@ -31,7 +31,7 @@ import org.apache.spark.sql.SparkSession
   *    driver serving a query library would set exactly this. */
 object LocalSpark {
   /** The session configuration, for a caller that adds a conf of its own
-    * (a test warehouse dir, VolumeProbe's broadcast threshold) before
+    * (a test warehouse dir) before
     * `getOrCreate()`. */
   def builder(cpus: String): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cpus]")

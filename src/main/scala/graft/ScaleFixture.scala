@@ -88,8 +88,13 @@ object ScaleFixture {
   /** kml/embeddings.parquet: the planted Lloyd migration chain. */
   case object Kml extends Kind
 
-  /** One scale claim: a query at 1× and at factor×, and what it reads. */
-  final case class Entry(name: String, kinds: Seq[Kind], q1: Q, qN: Q)
+  /** One scale claim: a query at 1× and at factor×, what it reads, and
+    * the bounded nested-loop joins its declared plan carries at both
+    * scales — the exact-allowlisted ≤ k-row broadcast crosses
+    * (BroadcastGuardSpec documents the bounds), 0 for none. A gate
+    * admits nested loops only in an entry that declares them; the
+    * volume probe pins the count. */
+  final case class Entry(name: String, kinds: Seq[Kind], q1: Q, qN: Q, crosses: Int = 0)
 
   /** Copy t's offsets: doc and part ids, order/event/co-order keys,
     * `ewj` timestamps (400 days in ns), embedding ids. */
@@ -228,7 +233,7 @@ object ScaleFixture {
     (dk, l0 + (dk + 1) / 3)
   }
 
-  private def log2Ceil(x: Double): Int = math.ceil(math.log(x) / math.log(2)).toInt
+  private[graft] def log2Ceil(x: Double): Int = math.ceil(math.log(x) / math.log(2)).toInt
 
   /** The loop width of a loop entry: the shuffle width the harness set
     * for the arm (the probe tracks it with the volume). */
@@ -245,7 +250,8 @@ object ScaleFixture {
     * branch, not the operator), the SimHash bands follow the saturation
     * ladder, SemDeDup's cells grow ∝ n. */
   def entries(factor: Int, nDocs1: Long): Seq[Entry] = {
-    def sym(name: String, kinds: Seq[Kind], q: Q) = Entry(name, kinds, q, q)
+    def sym(name: String, kinds: Seq[Kind], q: Q, crosses: Int = 0) =
+      Entry(name, kinds, q, q, crosses)
     val docs = Seq(Docs)
     val emb = Seq(Embeddings)
     val extraPlanes = log2Ceil(factor)
@@ -307,15 +313,22 @@ object ScaleFixture {
       }),
       // Cells ∝ n, the paper's deployment dial (50 k cells at 440 M
       // embeddings), holds within-cell pair mass linear.
+      // Its two bounded crosses are the two routing levels of the
+      // two-level assignment (the ≤ r-row super table against the corpus
+      // and against the ≤ k-row cell seed table), both inside the assigned
+      // snapshot's materialization job; the level-2 refine is a broadcast
+      // EQUI join, not a cross.
       Entry("dedup_semdedup", Seq(DenseEmbeddings),
         under("semdd", DedupQueries.dedupSemdedupCells(DedupQueries.SemdedupCells)),
-        under("semdd", DedupQueries.dedupSemdedupCells(DedupQueries.SemdedupCells * factor))),
+        under("semdd", DedupQueries.dedupSemdedupCells(DedupQueries.SemdedupCells * factor)),
+        crosses = 2),
       // Assigns each of its 5 probes through a ≤ labels-row broadcast
       // cross join: output bounded by probes × labels at any size.
-      sym("sim_ann_ivf", emb, SimilarityQueries.simAnnIvf),
+      sym("sim_ann_ivf", emb, SimilarityQueries.simAnnIvf, crosses = 1),
       sym("dedup_source_overlap", docs, DedupQueries.dedupSourceOverlap),
       sym("dedup_incremental", docs, DedupQueries.dedupIncremental),
-      sym("text_tfidf_top_terms", docs, TextQueries.textTfidfTopTerms),
+      // crossJoin(broadcast(nDocs)): the 1-row corpus-size scalar.
+      sym("text_tfidf_top_terms", docs, TextQueries.textTfidfTopTerms, crosses = 1),
       // Word tags grow vocabulary and totals factor× with every word's cf
       // unchanged, so the relative rarity rule selects the same per-copy
       // structure.
@@ -365,45 +378,85 @@ object ScaleFixture {
       // Terms are per-copy distinct, so (term, doc) pairs grow factor×.
       sym("text_inverted_index", docs, LinkageQueries.textInvertedIndex),
       sym("text_bm25_topk", docs, TextQueries.textBm25TopK),
-      sym("sample_temperature_mix", docs, SamplingQueries.sampleTemperatureMix),
+      // crossJoin(broadcast(globals)): the 1-row corpus-total scalar.
+      sym("sample_temperature_mix", docs, SamplingQueries.sampleTemperatureMix,
+        crosses = 1),
       // DSIR's feature table is pinned at ≤ 2·DsirB rows by the hash
-      // width at any corpus size; only the token stream grows.
-      sym("sample_dsir_weights", docs, SamplingQueries.sampleDsirWeights),
+      // width at any corpus size; only the token stream grows. Its one
+      // cross is the 1-row scalar totals.
+      sym("sample_dsir_weights", docs, SamplingQueries.sampleDsirWeights, crosses = 1),
       sym("sample_unimax", docs, SamplingQueries.sampleUnimax),
       sym("text_gopher_rules", docs, TextQueries.textGopherRules),
       // BPE: the corpus word count grows factor× while every merge round
-      // stays bounded by the vocabulary cap.
-      sym("text_bpe_train", docs, TextQueries.textBpeTrain),
-      sym("text_bpe_encode", docs, TextQueries.textBpeEncode),
+      // stays bounded by the vocabulary cap. One ≤ 1-row winner cross per
+      // merge round (the LIMIT-1 arg-max over the capped vocabulary),
+      // except the last round, whose merge has no consumer and is never
+      // built; the encode path consumes every winner, so it adds one
+      // ≤ 1-row apply cross per round over the distinct-word table.
+      sym("text_bpe_train", docs, TextQueries.textBpeTrain, crosses = TextQueries.BpeMerges - 1),
+      sym("text_bpe_encode", docs, TextQueries.textBpeEncode,
+        crosses = 2 * TextQueries.BpeMerges - 1),
       // Range search's output is the τ-ball mass: intra-copy cosines are
-      // preserved exactly by the ±1 diagonal.
-      sym("sim_range_search", emb, SimilarityQueries.simRangeSearch),
+      // preserved exactly by the ±1 diagonal. The ≤ 5-probe broadcast
+      // against the corpus scan IS a nested loop by construction, its
+      // output gated by the join-rows arm.
+      sym("sim_range_search", emb, SimilarityQueries.simRangeSearch, crosses = 1),
       // k-means' assignment partials grow with the vectors while the
-      // centroid tables stay k = 8 rows.
-      sym("emb_kmeans", emb, SimilarityQueries.embKmeans),
+      // centroid tables stay k = 8 rows: two Lloyd iterations, two ≤ 8-row
+      // centroid crosses, the ×8 expansion collapsed in-stage by the
+      // map-side-combined argmin.
+      sym("emb_kmeans", emb, SimilarityQueries.embKmeans, crosses = 2),
       // PQ and IVF-PQ at their fixed operator parameters (8 subspaces,
       // k = 4 seed codebook, 5 probes — none is a scale dial).
       sym("emb_pq_codes", emb, SimilarityQueries.embPqCodes),
       sym("sim_pq_adc_topk", emb, SimilarityQueries.simPqAdcTopk),
-      sym("sim_ivfpq_topk", emb, SimilarityQueries.simIvfPqTopk),
-      sym("sim_ivfpq_residual_topk", emb, SimilarityQueries.simIvfPqResidualTopk),
-      sym("sim_ivfpq_trained_topk", emb, SimilarityQueries.simIvfPqTrainedTopk),
-      sym("sim_ivfpq_rerank_topk", emb, SimilarityQueries.simIvfPqRerankTopk),
-      sym("sim_ivfpq_nprobe_topk", emb, SimilarityQueries.simIvfPqNprobeTopk),
-      sym("sim_ivfpq_clustered_topk", emb, SimilarityQueries.simIvfPqClusteredTopk),
-      sym("sim_ivfpq_full_trained_topk", emb, SimilarityQueries.simIvfPqFullTrainedTopk),
-      sym("sim_ivfpq_full_clustered_topk", emb, SimilarityQueries.simIvfPqFullClusteredTopk),
-      sym("sim_ivfpq_append", emb, SimilarityQueries.simIvfPqAppendTopk),
-      sym("sim_ivfpq_delete_topk", emb, SimilarityQueries.simIvfPqDeleteTopk),
-      sym("sim_ivfpq_append_nprobe", emb, SimilarityQueries.simIvfPqAppendNprobeTopk),
-      sym("sim_ivfpq_cell_stats", emb, SimilarityQueries.simIvfPqCellStats),
+      // Every IVF-PQ scan's one cross is the ≤ |cells|-row probe-routing
+      // cross: rerank wraps the sim_ivfpq_topk plan once (the refine adds
+      // equi joins only), nprobe = 2 widens the routing filter, the
+      // clustered scan reads its codes from the pre-ensured catalog table.
+      sym("sim_ivfpq_topk", emb, SimilarityQueries.simIvfPqTopk, crosses = 1),
+      sym("sim_ivfpq_residual_topk", emb, SimilarityQueries.simIvfPqResidualTopk, crosses = 1),
+      // The PLAN-TREE node count of its bounded assign crosses after
+      // physical subtree sharing: the logical tree duplicates the c2-fed
+      // chains, the planner shares part of them, and the identity-deduped
+      // walk measures 6 nodes at every scale (4 distinct assigns — c1, c2,
+      // cells, probe routing — plus the two re-rooted copies the sharing
+      // leaves). AQE's stage cache dedupes the actual WORK down to exactly
+      // three corpus assignment passes (BroadcastGuardSpec's measurement).
+      sym("sim_ivfpq_trained_topk", emb, SimilarityQueries.simIvfPqTrainedTopk, crosses = 6),
+      sym("sim_ivfpq_rerank_topk", emb, SimilarityQueries.simIvfPqRerankTopk, crosses = 1),
+      sym("sim_ivfpq_nprobe_topk", emb, SimilarityQueries.simIvfPqNprobeTopk, crosses = 1),
+      sym("sim_ivfpq_clustered_topk", emb, SimilarityQueries.simIvfPqClusteredTopk, crosses = 1),
+      // Full-trained IVFPQR: the three Lloyd-chain assign crosses (c1, c2,
+      // final cells) run INSIDE the residual-subspace snapshot's one
+      // materialization job; everything downstream is equi joins over the
+      // cached frame, so no re-rooted copies survive sharing.
+      sym("sim_ivfpq_full_trained_topk", emb, SimilarityQueries.simIvfPqFullTrainedTopk,
+        crosses = 3),
+      // The deployment scans read every trained piece from pre-ensured
+      // catalog tables, so their one cross is the probe-side assign
+      // against the ≤ 8-row persisted cells (the split's 9-row cells);
+      // the delete plan instantiates the ≤ 5-row probe pipeline twice but
+      // the planner SHARES the subtree, so one node survives. The drift
+      // guard's one cross is the corpus-side assign through the frozen
+      // cells; cell stats' the ≤ |cells|-row totals broadcast. The gc
+      // audit joins by equi join only. The reclaim and split jobs' own
+      // crosses live inside the tables' one-time writes (ingest).
+      sym("sim_ivfpq_full_clustered_topk", emb, SimilarityQueries.simIvfPqFullClusteredTopk,
+        crosses = 1),
+      sym("sim_ivfpq_append", emb, SimilarityQueries.simIvfPqAppendTopk, crosses = 1),
+      sym("sim_ivfpq_delete_topk", emb, SimilarityQueries.simIvfPqDeleteTopk, crosses = 1),
+      sym("sim_ivfpq_append_nprobe", emb, SimilarityQueries.simIvfPqAppendNprobeTopk,
+        crosses = 1),
+      sym("sim_ivfpq_cell_stats", emb, SimilarityQueries.simIvfPqCellStats, crosses = 1),
       sym("sim_ivfpq_gc_stats", emb, SimilarityQueries.simIvfPqGcStats),
-      sym("sim_ivfpq_compact_topk", emb, SimilarityQueries.simIvfPqCompactTopk),
-      sym("sim_ivfpq_cell_split", emb, SimilarityQueries.simIvfPqCellSplit),
-      sym("sim_ivfpq_drift_guard", emb, SimilarityQueries.simIvfPqDriftGuard),
+      sym("sim_ivfpq_compact_topk", emb, SimilarityQueries.simIvfPqCompactTopk, crosses = 1),
+      sym("sim_ivfpq_cell_split", emb, SimilarityQueries.simIvfPqCellSplit, crosses = 1),
+      sym("sim_ivfpq_drift_guard", emb, SimilarityQueries.simIvfPqDriftGuard, crosses = 1),
       sym("emb_pq_trained_codes", emb, SimilarityQueries.embPqTrainedCodes),
       // The run-to-convergence loops. Lloyd on the planted chain: rounds
-      // grow with the chain extent. PageRank: rounds are set by the
+      // grow with the chain extent (one centroid cross per round — a
+      // rounds-dependent count the volume probe pins, so none declared). PageRank: rounds are set by the
       // damping contraction, not graph size. BPE: the corpus pays one
       // scan; every round is over ≤ BpeVocabCap rows. LPA: rounds are
       // each copy's community structure, flat across arms.

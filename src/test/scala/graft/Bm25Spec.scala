@@ -11,7 +11,7 @@ class Bm25Spec extends SparkSpec {
   import spark.implicits._
 
   private def planted(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25").toString
+    val dir = tempDir("graft-bm25")
     // Vocabulary: "hot" is the corpus-hottest word (in every doc — zero
     // discrimination), "mid" the second, "rare"... appears in two docs.
     // Query = top-3 by cf: (hot, mid, rim).

@@ -51,7 +51,7 @@ class BpeSpec extends SparkSpec {
   }
 
   private def plant(words: Map[String, Long]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+    val dir = tempDir("graft-bpe")
     // one doc per word repetition keeps the word counts explicit
     val texts = words.toSeq.sortBy(_._1).flatMap { case (w, c) =>
       Seq.fill(c.toInt)(w)
@@ -297,7 +297,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("encode: multi-word docs sum their words' encoded lengths") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe-mw").toString
+    val dir = tempDir("graft-bpe-mw")
     // "ab ab cd" and "ab" — (a,b) wins round 1 (count 3), so doc 0
     // encodes to 2·1 + 2 = 4 BPE tokens over 3 words, doc 1 to 1 over 1.
     Seq((0L, "ab ab cd", "en", "s0", 8L), (1L, "ab", "en", "s0", 2L))

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import graft.sources.Bucketing
-import org.scalatest.BeforeAndAfterAll
 
 /** Pins every branch of [[Bucketing.ensureTable]] (VERDICT r5 next #6 +
   * ADVICE r5 on content staleness). The driver's verify loop only ever
@@ -13,14 +12,9 @@ import org.scalatest.BeforeAndAfterAll
   * in place under a live JVM, and a stale warehouse directory surviving
   * from a previous process — so each gets an explicit test.
   */
-class BucketingSpec extends SparkSpec with BeforeAndAfterAll {
+class BucketingSpec extends SparkSpec {
 
-  private val tmp = Files.createTempDirectory("graft-bucketing").toString
-
-  override def afterAll(): Unit = {
-    LocalFiles.rmTree(tmp)
-    super.afterAll()
-  }
+  private val tmp = tempDir("graft-bucketing")
 
   /** A tiny distinct source dir per test, holding one parquet file whose
     * single row carries `v` — so "which source fed this table" is

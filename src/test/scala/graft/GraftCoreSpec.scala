@@ -81,14 +81,14 @@ class GraftCoreSpec extends SparkSpec {
 
   test("parquet round-trip preserves a keyed store (to_string/from_string, bare_map_test.cc:157-168)") {
     val store = Seq(("aa", 1L), ("bb", 2L), ("cc", 3L)).toDS()
-    val dir = java.nio.file.Files.createTempDirectory("graft-rt").toString + "/store"
+    val dir = tempDir("graft-rt") + "/store"
     store.toDF("key", "value").write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir).as[(String, Long)].collect().toMap
     assert(back == store.collect().toMap)
   }
 
   test("get/has push primitive-key lookups into the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv").toString + "/store"
+    val dir = tempDir("graft-kv") + "/store"
     Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("_1", "_2")
       .write.mode("overwrite").parquet(dir)
     val store = spark.read.parquet(dir).as[(Long, Long)]
@@ -171,7 +171,7 @@ class GraftCoreSpec extends SparkSpec {
 
   test("csv sink/source round-trip preserves a keyed store") {
     val store = Seq(("aa", 1L), ("bb", 2L), ("cc", 3L)).toDS().toDF("key", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString + "/store"
+    val dir = tempDir("graft-csv") + "/store"
     store.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.option("header", "true")
       .schema("key STRING, value LONG").csv(dir)
@@ -206,7 +206,7 @@ class GraftCoreSpec extends SparkSpec {
   test("json sink/source round-trip preserves a keyed store (incl. nested array)") {
     val store = Seq(("aa", 1L, Seq(1L, 2L)), ("bb", 2L, Seq(3L)))
       .toDF("key", "value", "tags")
-    val dir = java.nio.file.Files.createTempDirectory("graft-json").toString + "/store"
+    val dir = tempDir("graft-json") + "/store"
     store.write.mode("overwrite").json(dir)
     val back = spark.read
       .schema("key STRING, value LONG, tags ARRAY<LONG>").json(dir)
@@ -217,7 +217,7 @@ class GraftCoreSpec extends SparkSpec {
   test("orc sink/source round-trip preserves a keyed store (incl. nested array)") {
     val store = Seq(("aa", 1L, Seq(1L, 2L)), ("bb", 2L, Seq(3L)))
       .toDF("key", "value", "tags")
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString + "/store"
+    val dir = tempDir("graft-orc") + "/store"
     store.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
       .as[(String, Long, Seq[Long])].collect().toSet

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -66,7 +64,7 @@ class IvfpqAppendSpec extends SparkSpec {
     * partition and on the full corpus produce identical artifacts, and
     * append ≡ retrain becomes an exact-equality claim. */
   private lazy val noNewInfoDir: String = {
-    val dir = Files.createTempDirectory("graft-appendfix").toString
+    val dir = tempDir("graft-appendfix")
     def anchor(k: Int): Array[Float] =
       Array.tabulate(64)(d => if (d / 8 == k) 1.0f else 0.0f)
     val rows = (0 until 100).map(i => (i.toLong, anchor(i % 8), i % 10))
@@ -101,7 +99,7 @@ class IvfpqAppendSpec extends SparkSpec {
     // Planted drift: delta rows sit at a constant far outside the
     // training distribution; their residual quantization error through
     // the frozen artifacts dwarfs the base mean.
-    val dir = Files.createTempDirectory("graft-driftfix").toString
+    val dir = tempDir("graft-driftfix")
     val rnd = new java.util.Random(1719L)
     def noise(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
     val far = Array.fill(64)(4.0f)

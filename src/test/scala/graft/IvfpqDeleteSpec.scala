@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -90,7 +88,7 @@ class IvfpqDeleteSpec extends SparkSpec {
     * false — while cell 0's admitted count (26 of 100, 26·8 = 208 >
     * 2·100) trips the per-cell hot verdict. */
   private lazy val hotCellDir: String = {
-    val dir = Files.createTempDirectory("graft-hotcell").toString
+    val dir = tempDir("graft-hotcell")
     def anchor(k: Int): Array[Float] =
       Array.tabulate(64)(d => if (d / 8 == k) 1.0f else 0.0f)
     val nonSeedBase = (8 until 100).filter(_ % 10 != 9)

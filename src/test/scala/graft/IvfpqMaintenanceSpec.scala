@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,7 +43,7 @@ class IvfpqMaintenanceSpec extends SparkSpec {
     * seed 4 holds exactly them; every other vector sits on one of the
     * remaining seven anchors. Compaction must leave that cell empty. */
   private lazy val deletedCellDir: String = {
-    val dir = Files.createTempDirectory("graft-deleted-cell").toString
+    val dir = tempDir("graft-deleted-cell")
     def anchor(k: Int): Array[Float] =
       Array.tabulate(64)(d => if (d / 8 == k) 1.0f else 0.0f)
     val remote = Array.fill(64)(-1.0f)
@@ -90,7 +88,7 @@ class IvfpqMaintenanceSpec extends SparkSpec {
   }
 
   test("dynamic partition overwrite rewrites ONLY the partitions present in the write") {
-    val dir = Files.createTempDirectory("graft-dynow").toString + "/t"
+    val dir = tempDir("graft-dynow") + "/t"
     val sp = spark
     import sp.implicits._
     Seq((1L, 10L, "a"), (2L, 20L, "a"), (3L, 30L, "b"))
@@ -191,7 +189,7 @@ class IvfpqMaintenanceSpec extends SparkSpec {
     * cell, so cell 0's 23 is the argmax parent). The exact 2-means must
     * recover the sub-clusters: children of sizes {12, 11}. */
   private lazy val subClusterDir: String = {
-    val dir = Files.createTempDirectory("graft-subcluster").toString
+    val dir = tempDir("graft-subcluster")
     def anchor(k: Int): Array[Float] =
       Array.tabulate(64)(d => if (d / 8 == k) 1.0f else 0.0f)
     val b = { val v = anchor(0); v(1) = v(1) + 0.5f; v }
@@ -246,7 +244,7 @@ class IvfpqMaintenanceSpec extends SparkSpec {
     // sit at anchor 0, so cell 0's stored set is {0, 14, 24, …, 94} —
     // 10 rows, 9 of them garbage (id 4 is the anchor-4 seed, deleted
     // from cell 4). 45 > 10 trips cell 0; cell 4 stays below threshold.
-    val dir = Files.createTempDirectory("graft-garbage").toString
+    val dir = tempDir("graft-garbage")
     def anchor(k: Int): Array[Float] =
       Array.tabulate(64)(d => if (d / 8 == k) 1.0f else 0.0f)
     def vecOf(i: Int): Array[Float] =

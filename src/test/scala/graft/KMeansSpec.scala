@@ -82,24 +82,22 @@ class KMeansSpec extends SparkSpec {
       2L -> 0.002, 3L -> 0.004,
       4L -> 10.0, 5L -> 10.002))
       .withColumn("label", lit("t"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-kmeans").toString
-    try {
-      emb.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val declared = graft.queries.SimilarityQueries.embKmeans(spark, dir)
+    val dir = tempDir("graft-kmeans")
+    emb.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val declared = graft.queries.SimilarityQueries.embKmeans(spark, dir)
+      .collect().map(_.toSeq)
+    org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
+    val (loop, Seq(end)) = loopEnds("KMeans") {
+      KMeans.lloyd(
+        spark.read.parquet(s"$dir/embeddings.parquet"), k = 8, loopParts = 3)
         .collect().map(_.toSeq)
-      org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      val (loop, Seq(end)) = loopEnds("KMeans") {
-        KMeans.lloyd(
-          spark.read.parquet(s"$dir/embeddings.parquet"), k = 8, loopParts = 3)
-          .collect().map(_.toSeq)
-      }
-      // k = 8 over 6 points: init clusters are the ids < 8 present (all
-      // six), every point is its own nearest centroid at round 1 except
-      // the merges Lloyd itself performs — whatever the trajectory, the
-      // CONTRACT is declared(2 rounds) == lloyd's table after 2 rounds,
-      // and this corpus converges by then.
-      assert(end.exit == Exit.Fixpoint)
-      assert(declared.toSeq == loop.toSeq)
-    } finally LocalFiles.rmTree(dir)
+    }
+    // k = 8 over 6 points: init clusters are the ids < 8 present (all
+    // six), every point is its own nearest centroid at round 1 except
+    // the merges Lloyd itself performs — whatever the trajectory, the
+    // CONTRACT is declared(2 rounds) == lloyd's table after 2 rounds,
+    // and this corpus converges by then.
+    assert(end.exit == Exit.Fixpoint)
+    assert(declared.toSeq == loop.toSeq)
   }
 }

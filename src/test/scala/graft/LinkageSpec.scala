@@ -70,7 +70,7 @@ class LinkageSpec extends SparkSpec {
   }
 
   test("triangle count: planted graph yields exactly the planted triangle") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tri").toString
+    val dir = tempDir("graft-tri")
     // baskets (each listed twice so every pair clears MinSupport = 2):
     //   {1,2,3}            -> triangle on 1,2,3
     //   {4,5}              -> an edge with no closing wedge
@@ -94,7 +94,7 @@ class LinkageSpec extends SparkSpec {
   }
 
   test("pagerank: planted path graph reproduces the closed-form integer trajectory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pr").toString
+    val dir = tempDir("graft-pr")
     // Path graph 1 — 2 — 3 (each co-order basket twice to clear
     // MinSupport): deg(1) = deg(3) = 1, deg(2) = 2. Hand-run of the
     // integer update r′ = 150000 + (85 · Σ ⌊r/deg⌋) // 100 from
@@ -145,7 +145,7 @@ class LinkageSpec extends SparkSpec {
     // copy (novelty 0.0 — all shingles first seen at doc 1); doc 3 is
     // half-copied from doc 1 and half new; doc 4 is under 3 tokens and
     // must be excluded, not scored NaN.
-    val dir = java.nio.file.Files.createTempDirectory("graft-novel").toString
+    val dir = tempDir("graft-novel")
     val base = (1 to 12).map(i => s"n$i").mkString(" ")
     val mixed = ((7 to 12) ++ (100 to 105)).map(i => s"n$i").mkString(" ")
     Seq((1L, base, "en", "s1", base.length.toLong),
@@ -168,7 +168,7 @@ class LinkageSpec extends SparkSpec {
 
   test("edge inputs: null names, sub-support graphs, and shingle-free corpora stay empty, not broken") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-edge").toString
+    val dir = tempDir("graft-edge")
     // part: one null name, two names too far apart to match (dist > 3)
     Seq((1L, Option.empty[String], "b", "t", 1, 1.0),
         (2L, Option("aaaa bolt"), "b", "t", 1, 1.0),
@@ -201,7 +201,7 @@ class LinkageSpec extends SparkSpec {
     // plus one pair differing in BOTH tokens (invisible to either key —
     // the residual miss multi-key blocking accepts by design) and decoys
     // beyond the edit threshold.
-    val dir = java.nio.file.Files.createTempDirectory("graft-frecall").toString
+    val dir = tempDir("graft-frecall")
     val names = Seq(
       "alpha steel", "alpho steel",    // L-visible, dist 1
       "bravo steel", "bravi steel",    // L-visible, dist 1
@@ -273,7 +273,7 @@ class LinkageSpec extends SparkSpec {
     // aaaa~aabb (2), aabb~bbbb (2), aaaa~bbbb (4, no edge). Plus one
     // unmatched decoy, which must be ABSENT (the dedup_clusters vertex
     // convention: singletons are implicit).
-    val dir = java.nio.file.Files.createTempDirectory("graft-ent").toString
+    val dir = tempDir("graft-ent")
     try {
       Seq((10L, "acme steel"), (0L, "acme steel"), (1L, "acmo steel"),
           (2L, "acmi steel"), (3L, "aaaa bolt"), (4L, "aabb bolt"),
@@ -301,7 +301,7 @@ class LinkageSpec extends SparkSpec {
     // must survive by frequency); entity 3 = the transitive bolt chain
     // where every name has one row (the tie must break to "aaaa bolt",
     // the ascending-name rule). The singleton decoy stays absent.
-    val dir = java.nio.file.Files.createTempDirectory("graft-gold").toString
+    val dir = tempDir("graft-gold")
     try {
       Seq((10L, "acme steel", 5.0), (0L, "acme steel", 3.0),
           (1L, "acmo steel", 7.0), (2L, "acmi steel", 4.0),

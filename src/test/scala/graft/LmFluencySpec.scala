@@ -20,23 +20,21 @@ class LmFluencySpec extends SparkSpec {
   import spark.implicits._
 
   test("planted micro-corpus: closed-form scores, bigram-less doc excluded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lm").toString
-    try {
-      Seq((0L, "a b a b"), (1L, "a b"), (2L, "a c"), (3L, "solo"))
-        .map { case (id, t) => (id, t, "en", "s0", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val rows = graft.queries.TextQueries.textLmFluency(spark, dir).collect()
-      org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      val out = rows.map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      assert(!out.contains(3L), "bigram-less doc must be excluded")
-      assert(out.keySet == Set(0L, 1L, 2L))
-      assert(out(0L) == ((3L, 833333.333333)), s"doc 0: ${out(0L)}")
-      assert(out(1L) == ((1L, 750000.0)), s"doc 1: ${out(1L)}")
-      assert(out(2L) == ((1L, 250000.0)), s"doc 2: ${out(2L)}")
-      // The fluency ordering: the doc whose continuation is the
-      // corpus-common one outscores the doc with the rare continuation.
-      assert(out(1L)._2 > out(2L)._2)
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-lm")
+    Seq((0L, "a b a b"), (1L, "a b"), (2L, "a c"), (3L, "solo"))
+      .map { case (id, t) => (id, t, "en", "s0", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val rows = graft.queries.TextQueries.textLmFluency(spark, dir).collect()
+    org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
+    val out = rows.map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    assert(!out.contains(3L), "bigram-less doc must be excluded")
+    assert(out.keySet == Set(0L, 1L, 2L))
+    assert(out(0L) == ((3L, 833333.333333)), s"doc 0: ${out(0L)}")
+    assert(out(1L) == ((1L, 750000.0)), s"doc 1: ${out(1L)}")
+    assert(out(2L) == ((1L, 250000.0)), s"doc 2: ${out(2L)}")
+    // The fluency ordering: the doc whose continuation is the
+    // corpus-common one outscores the doc with the rare continuation.
+    assert(out(1L)._2 > out(2L)._2)
   }
 }

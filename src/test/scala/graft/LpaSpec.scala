@@ -40,7 +40,7 @@ class LpaSpec extends SparkSpec {
       copy <- 0 until 2
       p <- Seq(a, b)
     } yield (1000L + i * 10L + copy, p)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lpa").toString
+    val dir = tempDir("graft-lpa")
     rows.toDF("l_orderkey", "l_partkey")
       .withColumn("l_shipdate", to_timestamp_ntz(lit("2020-01-01")))
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")

@@ -10,7 +10,7 @@ class MinhashEstimateSpec extends SparkSpec {
   test("identical docs land at full agreement with exact Jaccard 1") {
     val text = "alpha beta gamma delta epsilon zeta eta theta"
     val other = "one two three four five six seven eight nine"
-    val dir = java.nio.file.Files.createTempDirectory("graft-mhest").toString
+    val dir = tempDir("graft-mhest")
     Seq((1L, text), (2L, text), (3L, other))
       .map { case (i, t) => (i, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

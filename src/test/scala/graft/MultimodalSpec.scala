@@ -192,7 +192,7 @@ class MultimodalSpec extends SparkSpec {
       (9L, imageBytes("gif", 300, 299), (300, 299, 3)), // image (gif path)
       (4L, wavBytes(16000, 16, 1), (16000, 16, 1)),     // audio
       (5L, pngBytes(512, 256), (512, 256, 3)))   // video slot, real pixels
-    val dir = java.nio.file.Files.createTempDirectory("graft-realmedia").toString
+    val dir = tempDir("graft-realmedia")
     media.map { case (id, bytes, _) => (id, bytes, "xx", "media", bytes.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

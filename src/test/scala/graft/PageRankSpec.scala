@@ -38,7 +38,7 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("planted path graph: loop matches the sequential reference to the fixpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-priter").toString
+    val dir = tempDir("graft-priter")
     val baskets = Seq(
       100L -> Seq(1L, 2L), 101L -> Seq(1L, 2L),
       102L -> Seq(2L, 3L), 103L -> Seq(2L, 3L))
@@ -78,8 +78,7 @@ class PageRankSpec extends SparkSpec {
     // what the contraction argument says rounds depend on. Rounds must
     // be IDENTICAL, not merely close.
     def fixture(copies: Int): String = {
-      val dir = java.nio.file.Files.createTempDirectory(
-        s"graft-prflat$copies").toString
+      val dir = tempDir(s"graft-prflat$copies")
       val baskets = Seq(
         100L -> Seq(1L, 2L), 101L -> Seq(1L, 2L),
         102L -> Seq(2L, 3L), 103L -> Seq(2L, 3L))

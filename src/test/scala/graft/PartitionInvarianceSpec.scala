@@ -15,7 +15,7 @@ package graft
 class PartitionInvarianceSpec extends SparkSpec {
 
   private lazy val shuffledDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-inv").toString
+    val dir = tempDir("graft-inv")
     graft.sources.Tables.names.foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet")
         .repartition(7)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -16,7 +14,7 @@ import graft.sources.Tables
 class PartitionPruningSpec extends SparkSpec {
 
   test("filter on partition column prunes partitions at the scan") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part")
     Tables.orders(spark, sfDir)
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year")

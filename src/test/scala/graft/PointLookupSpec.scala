@@ -112,7 +112,7 @@ class PointLookupSpec extends SparkSpec {
   }
 
   test("get, has and put reject a store whose first two columns are not _1, _2") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lookup").toString + "/store"
+    val dir = tempDir("graft-lookup") + "/store"
     Seq((100L, 1L), (200L, 2L)).toDF("_2", "_1").write.mode("overwrite").parquet(dir)
     // `as[(K, V)]` binds a tuple by ordinal while the key predicate and the
     // reduce read the column NAMED _1 and a union pairs columns by
@@ -134,7 +134,6 @@ class PointLookupSpec extends SparkSpec {
         rejected("put")(Graft.put(s, keyed, (a: Long, b: Long) => a + b))
       }
     } finally Graft.clear(store)
-    LocalFiles.rmTree(dir)
   }
 
   test("a Long key on an Int column read as Long keeps the planned cast-and-compare") {

@@ -28,7 +28,7 @@ class PqSpec extends SparkSpec {
       Seq((4L, perturb(proto(0), 0, 1))) ++                  // probe: proto 0 + 1 millunit
       (for (p <- 0 until 4; j <- 0 until 10)
         yield ((100 + p * 10 + j).toLong, perturb(proto(p), j % 64, (j % 2) + 1)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    val dir = tempDir("graft-pq")
     rows.toDF("vec_id", "embedding")
       .withColumn("label", lit("t"))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -37,25 +37,23 @@ class PqSpec extends SparkSpec {
 
   test("every planted point codes to its prototype in all 8 subspaces; prototype err = 0") {
     val dir = fixtureDir()
-    try {
-      val codes = graft.queries.SimilarityQueries.embPqCodes(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-      // Prototypes code to themselves exactly.
-      for (p <- 0 until 4; m <- 0 until 8)
-        assert(codes((p.toLong, m.toLong)) == (p.toLong, 0L),
-          s"prototype $p subspace $m")
-      // Planted points: code = prototype id everywhere; err nonzero only
-      // in the one perturbed subspace (dim j%64 lives in subspace
-      // (j%64)/8) and equals the squared millunit perturbation there.
-      for (p <- 0 until 4; j <- 0 until 10; m <- 0 until 8) {
-        val id = (100 + p * 10 + j).toLong
-        val (code, err) = codes((id, m.toLong))
-        assert(code == p.toLong, s"point $id subspace $m routed to $code")
-        val pertSub = (j % 64) / 8
-        val expectedErr = if (m == pertSub) { val k = (j % 2) + 1; (k * k).toLong } else 0L
-        assert(err == expectedErr, s"point $id subspace $m err $err != $expectedErr")
-      }
-    } finally LocalFiles.rmTree(dir)
+    val codes = graft.queries.SimilarityQueries.embPqCodes(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    // Prototypes code to themselves exactly.
+    for (p <- 0 until 4; m <- 0 until 8)
+      assert(codes((p.toLong, m.toLong)) == (p.toLong, 0L),
+        s"prototype $p subspace $m")
+    // Planted points: code = prototype id everywhere; err nonzero only
+    // in the one perturbed subspace (dim j%64 lives in subspace
+    // (j%64)/8) and equals the squared millunit perturbation there.
+    for (p <- 0 until 4; j <- 0 until 10; m <- 0 until 8) {
+      val id = (100 + p * 10 + j).toLong
+      val (code, err) = codes((id, m.toLong))
+      assert(code == p.toLong, s"point $id subspace $m routed to $code")
+      val pertSub = (j % 64) / 8
+      val expectedErr = if (m == pertSub) { val k = (j % 2) + 1; (k * k).toLong } else 0L
+      assert(err == expectedErr, s"point $id subspace $m err $err != $expectedErr")
+    }
   }
 
   test("ivfpq: the ADC scan never leaves the probed cell") {
@@ -81,18 +79,16 @@ class PqSpec extends SparkSpec {
       val protoId = if (id < 4) id else if (id == 4) 0L else (id - 100) / 10
       (id, emb, cell(id, protoId))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    try {
-      labeled.toDF("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val out = graft.queries.SimilarityQueries.simIvfPqTopk(spark, dir).collect()
-        .filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
-      assert(out.map(_.getLong(1)).toSeq == Seq(0L, 102L, 103L, 104L, 105L),
-        s"probed-cell restriction violated: got ${out.map(_.getLong(1)).toSeq}")
-      assert(out.forall(_.getLong(2) == 1L),
-        s"all-zero-coded cell-a candidates must sit at adist 1, got " +
-          s"${out.map(_.getLong(2)).toSeq}")
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-ivfpq")
+    labeled.toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val out = graft.queries.SimilarityQueries.simIvfPqTopk(spark, dir).collect()
+      .filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
+    assert(out.map(_.getLong(1)).toSeq == Seq(0L, 102L, 103L, 104L, 105L),
+      s"probed-cell restriction violated: got ${out.map(_.getLong(1)).toSeq}")
+    assert(out.forall(_.getLong(2) == 1L),
+      s"all-zero-coded cell-a candidates must sit at adist 1, got " +
+        s"${out.map(_.getLong(2)).toSeq}")
   }
 
   test("residual IVFADC equals plain ADC on a one-cell corpus (algebraic identity)") {
@@ -108,15 +104,13 @@ class PqSpec extends SparkSpec {
     // millunits, so every residual distance is exactly 10⁶× the plain
     // one — same ranking, same ties, adist scaled.
     val dir = fixtureDir()
-    try {
-      val plain = graft.queries.SimilarityQueries.simPqAdcTopk(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      val residual = graft.queries.SimilarityQueries.simIvfPqResidualTopk(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      assert(plain.nonEmpty)
-      assert(residual == plain.map { case (p, c, a) => (p, c, a * 1000000L) },
-        s"one-cell residual IVFADC diverged from plain ADC:\n$residual\nvs\n$plain")
-    } finally LocalFiles.rmTree(dir)
+    val plain = graft.queries.SimilarityQueries.simPqAdcTopk(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val residual = graft.queries.SimilarityQueries.simIvfPqResidualTopk(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(plain.nonEmpty)
+    assert(residual == plain.map { case (p, c, a) => (p, c, a * 1000000L) },
+      s"one-cell residual IVFADC diverged from plain ADC:\n$residual\nvs\n$plain")
   }
 
   test("residual ivfpq: the ADC scan never leaves the probed cell") {
@@ -139,15 +133,13 @@ class PqSpec extends SparkSpec {
       val protoId = if (id < 4) id else if (id == 4) 0L else (id - 100) / 10
       (id, emb, cell(id, protoId))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqr").toString
-    try {
-      labeled.toDF("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val out = graft.queries.SimilarityQueries.simIvfPqResidualTopk(spark, dir)
-        .collect().filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
-      assert(out.map(_.getLong(1)).toSeq == Seq(0L, 102L, 103L, 104L, 105L),
-        s"probed-cell restriction violated: got ${out.map(_.getLong(1)).toSeq}")
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-ivfpqr")
+    labeled.toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val out = graft.queries.SimilarityQueries.simIvfPqResidualTopk(spark, dir)
+      .collect().filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
+    assert(out.map(_.getLong(1)).toSeq == Seq(0L, 102L, 103L, 104L, 105L),
+      s"probed-cell restriction violated: got ${out.map(_.getLong(1)).toSeq}")
   }
 
   test("trained-cell ivfpq: Lloyd cells separate planted blobs, empties drop, scan stays in-cell") {
@@ -172,23 +164,21 @@ class PqSpec extends SparkSpec {
       pairs.zipWithIndex.flatMap { case ((dim, k), j) =>
         Seq((130L + 2 * j) -> perturb(proto(3), dim, k),
             (131L + 2 * j) -> perturb(proto(3), dim, -k)) }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqt").toString
-    try {
-      rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val out = graft.queries.SimilarityQueries.simIvfPqTrainedTopk(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      val expected = Seq(
-        0L -> Seq(2L, 4L, 100L, 101L, 102L),
-        1L -> Seq(3L, 130L, 131L, 132L, 133L),
-        2L -> Seq(0L, 4L, 100L, 101L, 102L),
-        3L -> Seq(1L, 130L, 131L, 132L, 133L),
-        4L -> Seq(0L, 2L, 100L, 101L, 102L)
-      ).flatMap { case (p, cands) => cands.map(c => (p, c, 0L)) }
-      assert(out.sorted.toSeq == expected.sorted,
-        s"trained-cell ADC diverged:\n${out.sorted.toSeq}\nvs\n${expected.sorted}")
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-ivfpqt")
+    rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val out = graft.queries.SimilarityQueries.simIvfPqTrainedTopk(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
+    val expected = Seq(
+      0L -> Seq(2L, 4L, 100L, 101L, 102L),
+      1L -> Seq(3L, 130L, 131L, 132L, 133L),
+      2L -> Seq(0L, 4L, 100L, 101L, 102L),
+      3L -> Seq(1L, 130L, 131L, 132L, 133L),
+      4L -> Seq(0L, 2L, 100L, 101L, 102L)
+    ).flatMap { case (p, cands) => cands.map(c => (p, c, 0L)) }
+    assert(out.sorted.toSeq == expected.sorted,
+      s"trained-cell ADC diverged:\n${out.sorted.toSeq}\nvs\n${expected.sorted}")
   }
 
   test("trained codebooks recover the planted prototypes exactly (integer fixpoint)") {
@@ -243,23 +233,21 @@ class PqSpec extends SparkSpec {
       (for (p <- 0 until 4; j <- 0 until 3; sgn <- Seq(1, -1))
         yield ((100 + p * 10 + j * 2 + (if (sgn > 0) 0 else 1)).toLong,
           perturb(proto(p), j * 7, sgn)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqt").toString
-    try {
-      rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val out = graft.queries.SimilarityQueries.embPqTrainedCodes(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
-        .toMap
-      org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      for ((id, _) <- rows; m <- 0 until 8) {
-        val p = if (id < 4) id else (id - 100) / 10
-        val pertSub = if (id < 4) -1 else (((id - 100) % 10) / 2).toInt * 7 / 8
-        val (code, err) = out((id, m.toLong))
-        assert(code == p, s"point $id subspace $m coded to $code, not $p")
-        val expectedErr = if (m == pertSub) 1000000L else 0L
-        assert(err == expectedErr, s"point $id subspace $m err $err != $expectedErr")
-      }
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-pqt")
+    rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val out = graft.queries.SimilarityQueries.embPqTrainedCodes(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
+      .toMap
+    org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
+    for ((id, _) <- rows; m <- 0 until 8) {
+      val p = if (id < 4) id else (id - 100) / 10
+      val pertSub = if (id < 4) -1 else (((id - 100) % 10) / 2).toInt * 7 / 8
+      val (code, err) = out((id, m.toLong))
+      assert(code == p, s"point $id subspace $m coded to $code, not $p")
+      val expectedErr = if (m == pertSub) 1000000L else 0L
+      assert(err == expectedErr, s"point $id subspace $m err $err != $expectedErr")
+    }
   }
 
   test("nprobe=2 routing recovers the cross-cell neighbors nprobe=1 loses") {
@@ -282,19 +270,17 @@ class PqSpec extends SparkSpec {
       val protoId = if (id < 4) id else if (id == 4) 0L else (id - 100) / 10
       (id, emb, cell(id, protoId))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqn").toString
-    try {
-      labeled.toDF("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val out = graft.queries.SimilarityQueries.simIvfPqNprobeTopk(spark, dir)
-        .collect().filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
-      assert(out.map(_.getLong(1)).toSeq == Seq(0L, 100L, 101L, 102L, 103L),
-        s"nprobe=2 did not recover the mislabeled neighbors: got " +
-          s"${out.map(_.getLong(1)).toSeq}")
-      assert(out.forall(_.getLong(2) == 1L),
-        s"all-zero-coded candidates must sit at adist 1, got " +
-          s"${out.map(_.getLong(2)).toSeq}")
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-ivfpqn")
+    labeled.toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val out = graft.queries.SimilarityQueries.simIvfPqNprobeTopk(spark, dir)
+      .collect().filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
+    assert(out.map(_.getLong(1)).toSeq == Seq(0L, 100L, 101L, 102L, 103L),
+      s"nprobe=2 did not recover the mislabeled neighbors: got " +
+        s"${out.map(_.getLong(1)).toSeq}")
+    assert(out.forall(_.getLong(2) == 1L),
+      s"all-zero-coded candidates must sit at adist 1, got " +
+        s"${out.map(_.getLong(2)).toSeq}")
   }
 
   test("exact re-rank fixes the ADC's planted rank inversions") {
@@ -309,34 +295,30 @@ class PqSpec extends SparkSpec {
     // tiebreak) and drop 101/103 (edist 5): top-5 = 100,0,102,104,106,
     // output id-ordered with both distances carried.
     val dir = fixtureDir()
-    try {
-      val out = graft.queries.SimilarityQueries.simIvfPqRerankTopk(spark, dir)
-        .collect().filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
-      assert(out.map(_.getLong(1)).toSeq == Seq(0L, 100L, 102L, 104L, 106L),
-        s"re-rank did not fix the planted inversion: got " +
-          s"${out.map(_.getLong(1)).toSeq}")
-      assert(out.map(_.getLong(3)).toSeq == Seq(1L, 0L, 2L, 2L, 2L),
-        s"exact distances wrong: ${out.map(_.getLong(3)).toSeq}")
-      assert(out.forall(_.getLong(2) == 1L),
-        s"shortlist adist must be 1 for all-zero-coded candidates, got " +
-          s"${out.map(_.getLong(2)).toSeq}")
-    } finally LocalFiles.rmTree(dir)
+    val out = graft.queries.SimilarityQueries.simIvfPqRerankTopk(spark, dir)
+      .collect().filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
+    assert(out.map(_.getLong(1)).toSeq == Seq(0L, 100L, 102L, 104L, 106L),
+      s"re-rank did not fix the planted inversion: got " +
+        s"${out.map(_.getLong(1)).toSeq}")
+    assert(out.map(_.getLong(3)).toSeq == Seq(1L, 0L, 2L, 2L, 2L),
+      s"exact distances wrong: ${out.map(_.getLong(3)).toSeq}")
+    assert(out.forall(_.getLong(2) == 1L),
+      s"shortlist adist must be 1 for all-zero-coded candidates, got " +
+        s"${out.map(_.getLong(2)).toSeq}")
   }
 
   test("ADC ranking for the near-prototype probe is the cluster-0 cells, id-tiebroken") {
     val dir = fixtureDir()
-    try {
-      val adc = graft.queries.SimilarityQueries.simPqAdcTopk(spark, dir).collect()
-        .filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
-      // Probe 4 = proto 0 + 1 millunit on dim 0: its distance-table row
-      // for codeword 0 is 1 in subspace 0 and 0 elsewhere, so EVERY
-      // candidate coded all-zeros has adist exactly 1, and the top-5 are
-      // the five lowest candidate ids in cluster 0: the prototype itself
-      // (vec 0) then planted points 100..103.
-      assert(adc.map(_.getLong(1)).toSeq == Seq(0L, 100L, 101L, 102L, 103L),
-        s"got ${adc.map(_.getLong(1)).toSeq}")
-      assert(adc.forall(_.getLong(2) == 1L),
-        s"all-zero-coded candidates must sit at adist 1, got ${adc.map(_.getLong(2)).toSeq}")
-    } finally LocalFiles.rmTree(dir)
+    val adc = graft.queries.SimilarityQueries.simPqAdcTopk(spark, dir).collect()
+      .filter(_.getLong(0) == 4L).sortBy(_.getLong(1))
+    // Probe 4 = proto 0 + 1 millunit on dim 0: its distance-table row
+    // for codeword 0 is 1 in subspace 0 and 0 elsewhere, so EVERY
+    // candidate coded all-zeros has adist exactly 1, and the top-5 are
+    // the five lowest candidate ids in cluster 0: the prototype itself
+    // (vec 0) then planted points 100..103.
+    assert(adc.map(_.getLong(1)).toSeq == Seq(0L, 100L, 101L, 102L, 103L),
+      s"got ${adc.map(_.getLong(1)).toSeq}")
+    assert(adc.forall(_.getLong(2) == 1L),
+      s"all-zero-coded candidates must sit at adist 1, got ${adc.map(_.getLong(2)).toSeq}")
   }
 }

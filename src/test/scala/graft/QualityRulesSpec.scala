@@ -15,7 +15,7 @@ class QualityRulesSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkDocs(docs: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-qr").toString
+    val dir = tempDir("graft-qr")
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -57,7 +57,7 @@ class QueriesSpec extends SparkSpec {
     // directions of the agreement are exercised regardless of fixture
     // regeneration. EquivalenceSpec pins the removal-side values; this
     // pins the cross-query join on the same shapes.
-    val dir = java.nio.file.Files.createTempDirectory("graft-span-agree").toString
+    val dir = tempDir("graft-span-agree")
     import spark.implicits._
     val boiler = (1 to 12).map(i => s"tok$i").mkString(" ")
     val unique = "unique words only here nothing repeats at all ever"
@@ -74,7 +74,7 @@ class QueriesSpec extends SparkSpec {
     // Planted series: type "a" has 9 quiet days (counts 10±1) and one
     // 50-count spike — median 10, MAD 1, spike adev 40 > 3 → exactly one
     // anomaly. Type "b" is constant — MAD 0, no deviation, no flags.
-    val dir = java.nio.file.Files.createTempDirectory("graft-mad").toString
+    val dir = tempDir("graft-mad")
     val counts = Map(0 -> 10, 1 -> 9, 2 -> 11, 3 -> 10, 4 -> 10,
                      5 -> 9, 6 -> 11, 7 -> 10, 8 -> 10, 9 -> 50)
     val rows =
@@ -147,7 +147,7 @@ class QueriesSpec extends SparkSpec {
 
   test("partitioned parquet sink prunes partitions on read") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString + "/events_by_type"
+    val dir = tempDir("graft-part") + "/events_by_type"
     graft.sources.Tables.events(spark, sfDir)
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)
     val pruned = spark.read.parquet(dir).filter(col("event_type") === "click")

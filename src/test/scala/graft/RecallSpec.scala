@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,7 +34,7 @@ class RecallSpec extends SparkSpec {
     * exactly 5 true near neighbors, its planted dups, and the exact top-5
     * is all-planted. Fixed-seed PRNG keeps the spec reproducible. */
   private lazy val plantedDir: String = {
-    val dir = Files.createTempDirectory("graft-planted").toString
+    val dir = tempDir("graft-planted")
     val rnd = new java.util.Random(421L)
     def noise(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
     val base = Array.fill(100)(noise())
@@ -241,7 +239,7 @@ class RecallSpec extends SparkSpec {
 
   test("an out-of-domain vec_id raises loudly instead of corrupting the pack") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-packguard").toString
+    val dir = tempDir("graft-packguard")
     val vec = Array.tabulate(64)(i => (i % 7 - 3).toFloat)
     Seq((1L, vec, 0), (4294967296L, vec, 0)) // 2^32: first id past the domain
       .toDF("vec_id", "embedding", "label")
@@ -287,7 +285,7 @@ class RecallSpec extends SparkSpec {
     // (not cluster-quality scores) is the point: the oracle proves
     // cross-engine agreement, this proves the arithmetic IS the k-means
     // update on data where the answer is closed-form.
-    val dir = Files.createTempDirectory("graft-kmeans").toString
+    val dir = tempDir("graft-kmeans")
     def vec(j: Int, member: Boolean): Array[Float] = {
       val a = Array.fill(64)(0f); a(j) = 1f; if (member) a(j + 8) = 0.002f; a
     }

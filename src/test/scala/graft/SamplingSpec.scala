@@ -33,7 +33,7 @@ class SamplingSpec extends SparkSpec {
     // restricted to the surviving ids — only possible if no survivor moved.
     val docs = Tables.documents(spark, sfDir).limit(500).cache()
     val half = docs.filter(col("doc_id") % 2 === 0)
-    val dirHalf = java.nio.file.Files.createTempDirectory("graft-split-half").toString
+    val dirHalf = tempDir("graft-split-half")
     half.write.mode("overwrite").parquet(s"$dirHalf/documents.parquet")
     val fromHalfDir = SamplingQueries.sampleSplitAssign(spark, dirHalf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("n_docs")).toMap
@@ -73,7 +73,7 @@ class SamplingSpec extends SparkSpec {
       (trainIds(0) + 0, "unique text a", "en", "src_clean", 13L), // id reuse across sources is fine
       (testIds(0) + 0, "unique text b", "en", "src_clean", 13L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-leak").toString
+    val dir = tempDir("graft-leak")
     rows.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SamplingQueries.splitLeakageAudit(spark, dir).collect()
       .map(r => r.getString(0) ->
@@ -107,33 +107,31 @@ class SamplingSpec extends SparkSpec {
       (trainIds(3), "unique text a", "en", "src_clean", 13L),
       (testIds(1), "unique text b", "en", "src_clean", 13L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-csplit").toString
-    try {
-      rows.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val out = SamplingQueries.sampleSplitByContent(spark, dir).collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          ((r.getLong(2), r.getLong(3), r.getLong(4))))
-      // Groups never fragment: per source, Σ n_groups over splits equals
-      // the source's distinct-digest count (2 for each planted source),
-      // and every group's docs are all in one cell — so src_dup's 4 docs
-      // land as two (n_docs = 2, n_groups = 1) cells (possibly the same
-      // split) rather than the id-keyed rule's train/test straddle.
-      val bySource = out.groupBy(_._1._1)
-      assert(bySource("src_dup").map(_._2._2).sum == 2L)
-      assert(bySource("src_dup").forall { case (_, (nd, ng, _)) => nd == 2L * ng })
-      assert(bySource("src_clean").map(_._2._2).sum == 2L)
-      // And the direct fix claim: rebuilding the audit with the CONTENT
-      // key in place of the id key reports zero leaky groups.
-      val contentAudited = spark.read.parquet(s"$dir/documents.parquet")
-        .select(col("source"),
-          graft.functions.ColFns.normDigest(col("text")).as("dg"))
-        .withColumn("split", SamplingQueries.splitKeyed(col("dg")))
-        .groupBy("source", "dg")
-        .agg(countDistinct(col("split")).as("n_splits"))
-        .filter(col("n_splits") > 1L)
-        .count()
-      assert(contentAudited == 0L, "content-keyed split produced a leaky group")
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-csplit")
+    rows.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val out = SamplingQueries.sampleSplitByContent(spark, dir).collect()
+      .map(r => (r.getString(0), r.getString(1)) ->
+        ((r.getLong(2), r.getLong(3), r.getLong(4))))
+    // Groups never fragment: per source, Σ n_groups over splits equals
+    // the source's distinct-digest count (2 for each planted source),
+    // and every group's docs are all in one cell — so src_dup's 4 docs
+    // land as two (n_docs = 2, n_groups = 1) cells (possibly the same
+    // split) rather than the id-keyed rule's train/test straddle.
+    val bySource = out.groupBy(_._1._1)
+    assert(bySource("src_dup").map(_._2._2).sum == 2L)
+    assert(bySource("src_dup").forall { case (_, (nd, ng, _)) => nd == 2L * ng })
+    assert(bySource("src_clean").map(_._2._2).sum == 2L)
+    // And the direct fix claim: rebuilding the audit with the CONTENT
+    // key in place of the id key reports zero leaky groups.
+    val contentAudited = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("source"),
+        graft.functions.ColFns.normDigest(col("text")).as("dg"))
+      .withColumn("split", SamplingQueries.splitKeyed(col("dg")))
+      .groupBy("source", "dg")
+      .agg(countDistinct(col("split")).as("n_splits"))
+      .filter(col("n_splits") > 1L)
+      .count()
+    assert(contentAudited == 0L, "content-keyed split produced a leaky group")
   }
 
   test("DSIR votes separate target-like from source-like documents on a planted bimodal corpus") {
@@ -154,7 +152,7 @@ class SamplingSpec extends SparkSpec {
       (1L to 10L).map(i => (i, aText, "en", "tgt_src", 24L)) ++
       (11L to 20L).map(i => (i, bText, "xx", "pool_src", 24L)) :+
       ((21L, aText, "xx", "pool_src", 24L))
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsir").toString
+    val dir = tempDir("graft-dsir")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SamplingQueries.sampleDsirWeights(spark, dir).collect()
@@ -177,7 +175,7 @@ class SamplingSpec extends SparkSpec {
     val rows = Seq((1L, "x", "a", "s", 10L)) ++
       (2L to 3L).map(i => (i, "x", "b", "s", 500L)) ++
       (4L to 7L).map(i => (i, "x", "c", "s", 500L))
-    val dir = java.nio.file.Files.createTempDirectory("graft-unimax").toString
+    val dir = tempDir("graft-unimax")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SamplingQueries.sampleUnimax(spark, dir).collect()

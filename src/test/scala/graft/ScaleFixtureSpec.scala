@@ -16,18 +16,13 @@ import org.apache.spark.sql.functions._
 class ScaleFixtureSpec extends SparkSpec {
 
   private val factor = 3
-  private val dir1 = Files.createTempDirectory("graft-fixture1").toString
-  private val dirN = Files.createTempDirectory("graft-fixture3").toString
+  private val dir1 = tempDir("graft-fixture1")
+  private val dirN = tempDir("graft-fixture3")
 
   override def beforeAll(): Unit = {
     super.beforeAll()
     write(spark, sfDir, dir1, dirN, factor,
       Seq(Docs, Embeddings, DenseEmbeddings, Facts, Ewj, Tri, Fz, Kml))
-  }
-
-  override def afterAll(): Unit = {
-    Seq(dir1, dirN).foreach(LocalFiles.rmTree)
-    super.afterAll()
   }
 
   private def one(path: String): DataFrame = spark.read.parquet(s"$dir1/$path")

@@ -1,10 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.queries.{DedupQueries, SimilarityQueries}
 import org.apache.spark.sql.graftx.Metrics
-import org.scalatest.BeforeAndAfterAll
 
 /** Synthetic scale probe for the dedup/cluster family, the OLAP joins
   * and the rest of the extension operators (round-2 verdict: every 100 TB
@@ -35,17 +32,18 @@ import org.scalatest.BeforeAndAfterAll
   * spot: executorCpuTime excludes GC threads and off-CPU I/O waits, so a
   * spill-bound regression is CPU-light — but it is never SPILL-light, and
   * diskBytesSpilled is as host-noise-free as the record counts.
+  *
+  * Auto-broadcast is off, as in [[VolumeProbe]] (its class doc gives the
+  * reason): otherwise a join's class at 10× rides Catalyst's size
+  * estimate of the fixture files, and a broadcast at 1× that turns into
+  * a shuffle join at 10× reads as super-linear shuffle volume. This spec
+  * runs in its own JVM (build.sbt), so the conf reaches no other spec.
   */
-class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
+class ScaleProbeSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.1"
-  private val dir1 = Files.createTempDirectory("graft-scale1").toString
-  private val dir10 = Files.createTempDirectory("graft-scale10").toString
-
-  override def afterAll(): Unit = {
-    Seq(dir1, dir10).foreach(LocalFiles.rmTree)
-    super.afterAll()
-  }
+  private val dir1 = tempDir("graft-scale1")
+  private val dir10 = tempDir("graft-scale10")
 
   /** The [[ScaleFixture.entries]] this spec gates, in run order. */
   private val names = Seq(
@@ -80,37 +78,9 @@ class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     ScaleFixture.write(spark, sf, dir1, dir10, 10, family.values.flatMap(_.kinds))
   }
-
-  /** Entries whose plan legitimately contains a nested-loop join, so the
-    * volume gate's plan-sanity arm must not disqualify them: sim_ann_ivf
-    * assigns each of its 5 probes to the nearest centroid via a broadcast
-    * cross join against the per-label centroid table — output bounded by
-    * probes × labels, both O(1) in corpus size. The plan-shape check
-    * exists to catch CORPUS-scale in-stage pair generation (a
-    * BroadcastNestedLoopJoin whose output grows with n²); a
-    * constant-bounded cross join is not that failure mode, and records +
-    * spill still gate the entry's actual data volume. text_tfidf_top_terms
-    * is the other instance: its crossJoin(broadcast(nDocs)) is the 1-row
-    * corpus-size scalar. */
-  private val boundedNestedLoop =
-    // sample_temperature_mix: crossJoin(broadcast(globals)) — the 1-row
-    // corpus-total scalar, same class as text_tfidf_top_terms's.
-    // sample_dsir_weights: the same 1-row totals scalar; emb_kmeans: the
-    // k = 8 centroid cross join whose x8 expansion collapses in-stage
-    // through the map-side-combined min(struct) argmin.
-    // text_bpe_train: one ≤ 1-row winner cross join per merge round
-    // (LIMIT-1 arg-max applied to the capped vocabulary) — rounds − 1
-    // BNLJ nodes, all over ≤ 4096-row inputs; the encode path adds one
-    // ≤ 1-row apply cross per round over the distinct-word table.
-    // sim_range_search: the ≤ 5-probe broadcast against the corpus scan
-    // IS a BNLJ by construction (the sim_cosine_topk class) — its output
-    // is the τ-ball mass, gated by the joinrows arm, and the broadcast
-    // side is bounded at 5 rows at any corpus size.
-    Set("sim_ann_ivf", "text_tfidf_top_terms", "sample_temperature_mix",
-      "sample_dsir_weights", "emb_kmeans", "text_bpe_train",
-      "text_bpe_encode", "sim_range_search")
 
   /** One measured run through [[VolumeProbe.measure]] at the session's
     * shuffle width: (wall seconds, [[Metrics.TaskWork]], plan-sane).
@@ -174,11 +144,14 @@ class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
     *    host-noise-free as the record counts, and is ANDed in here: a
     *    linear plan's join output grows ~10× at 10× input, the collapsed
     *    quadratic's ~100×. */
-  private def gateOnce(name: String, q1: DedupQueries.Q,
-      q10: DedupQueries.Q): (Boolean, String) = {
-    val (w1, k1, _) = measure(q1, dir1)
-    val (w10, k10, planRaw) = measure(q10, dir10)
-    val plan10 = planRaw || boundedNestedLoop(name)
+  private def gateOnce(e: ScaleFixture.Entry): (Boolean, String) = {
+    val name = e.name
+    val (w1, k1, _) = measure(e.q1, dir1)
+    val (w10, k10, planRaw) = measure(e.qN, dir10)
+    // An entry that declares bounded crosses may carry nested loops: the
+    // plan-shape check exists to catch CORPUS-scale in-stage pair
+    // generation, and records + spill still gate its data volume.
+    val plan10 = planRaw || e.crosses > 0
     info(f"$name: 1x wall=$w1%.2f s cpu=${k1.cpuSec}%.2f s spill=${k1.diskSpilledBytes / 1e6}%.0f MB " +
       f"shufrec=${k1.shuffleRecordsRead} joinrows=${k1.joinOutputRows}; " +
       f"10x wall=$w10%.2f s cpu=${k10.cpuSec}%.2f s spill=${k10.diskSpilledBytes / 1e6}%.0f MB " +
@@ -206,9 +179,9 @@ class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
 
   for (name <- names)
     test(s"$name scales ~linearly at 10x input") {
-      val ScaleFixture.Entry(_, _, q1, q10) = family(name)
-      measureOnce(q1, dir1) // warm-up: JIT, codegen, parquet reader
-      val first = gateOnce(name, q1, q10)
+      val e = family(name)
+      measureOnce(e.q1, dir1) // warm-up: JIT, codegen, parquet reader
+      val first = gateOnce(e)
       if (first._1) succeed
       else {
         // One full re-measurement before failing: this host's documented
@@ -220,7 +193,7 @@ class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
         // work and fails every attempt; a host episode does not survive
         // two attempts minutes apart.
         info(s"$name failed all gates once — re-measuring (host-stall suspicion): ${first._2}")
-        val second = gateOnce(name, q1, q10)
+        val second = gateOnce(e)
         assert(second._1, second._2)
       }
     }

@@ -97,7 +97,7 @@ class SchemaContractSpec extends SparkSpec {
   }
 
   test("a legacy long-nanos events fixture passes through unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-legacy-events").toString
+    val dir = tempDir("graft-legacy-events")
     import spark.implicits._
     val rows = Seq((1L, 1700000000123456789L, 7L, "view", 1.0, "{}"),
       (2L, 1700000001000000000L, 8L, "click", 2.0, "{}"))
@@ -110,7 +110,7 @@ class SchemaContractSpec extends SparkSpec {
   }
 
   test("a tz-adjusted orders fixture normalizes to NTZ with identical wall-clock values") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tz-orders").toString
+    val dir = tempDir("graft-tz-orders")
     import spark.implicits._
     // Writing a TimestampType column produces isAdjustedToUTC=true parquet
     // — the flipped-bit drift tsToNtz guards against. The literal parses
@@ -128,7 +128,7 @@ class SchemaContractSpec extends SparkSpec {
   }
 
   test("an unsupported ts encoding fails fast with the found schema, not a downstream analysis error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bad-events").toString
+    val dir = tempDir("graft-bad-events")
     import spark.implicits._
     Seq((1L, "2024-01-01T00:00:00", 7L, "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -37,31 +37,29 @@ class SemDedupSpec extends SparkSpec {
       (0 until 8).map(p => (p.toLong, proto(p))) ++
       (for (p <- 0 until 4; j <- 0 until 3)
         yield ((100 + p * 10 + j).toLong, perturb(proto(p), p * 8, j)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sdd").toString
-    try {
-      rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val out = graft.queries.DedupQueries.dedupSemdedup(spark, dir)
-        .collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3)))
-        .toMap
-      org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      assert(out.size == rows.size)
-      for ((id, _) <- rows) {
-        val famP = if (id < 8) id.toInt else ((id - 100) / 10).toInt
-        val (cluster, cdist, kept) = out(id)
-        assert(cluster == famP, s"vector $id assigned to cell $cluster, not $famP")
-        val expectedCdist = if (id < 8) 0L else { val j = (id - 100) % 10; j * j }
-        assert(cdist == expectedCdist,
-          s"vector $id cdist $cdist != $expectedCdist")
-        val expectedKept =
-          if (id >= 4 && id < 8) true                 // singleton seeds
-          else if (id >= 100 && id % 10 == 2) true    // clique max (cdist 4)
-          else false                                  // seed 0..3 / j = 0,1
-        assert(kept == expectedKept,
-          s"vector $id kept=$kept, expected $expectedKept")
-      }
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-sdd")
+    rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val out = graft.queries.DedupQueries.dedupSemdedup(spark, dir)
+      .collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      .toMap
+    org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
+    assert(out.size == rows.size)
+    for ((id, _) <- rows) {
+      val famP = if (id < 8) id.toInt else ((id - 100) / 10).toInt
+      val (cluster, cdist, kept) = out(id)
+      assert(cluster == famP, s"vector $id assigned to cell $cluster, not $famP")
+      val expectedCdist = if (id < 8) 0L else { val j = (id - 100) % 10; j * j }
+      assert(cdist == expectedCdist,
+        s"vector $id cdist $cdist != $expectedCdist")
+      val expectedKept =
+        if (id >= 4 && id < 8) true                 // singleton seeds
+        else if (id >= 100 && id % 10 == 2) true    // clique max (cdist 4)
+        else false                                  // seed 0..3 / j = 0,1
+      assert(kept == expectedKept,
+        s"vector $id kept=$kept, expected $expectedKept")
+    }
   }
 
   test("trained cells: same verdicts as the seeded form, cdist = distance to the Lloyd mean") {
@@ -78,35 +76,33 @@ class SemDedupSpec extends SparkSpec {
       (0 until 8).map(p => (p.toLong, proto(p))) ++
       (for (p <- 0 until 4; j <- 0 until 3)
         yield ((100 + p * 10 + j).toLong, perturb(proto(p), p * 8, j)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sddt").toString
-    try {
-      rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val out = graft.queries.DedupQueries.dedupSemdedupTrained(spark, dir)
-        .collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3)))
-        .toMap
-      org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      assert(out.size == rows.size)
-      for ((id, _) <- rows) {
-        val famP = if (id < 8) id.toInt else ((id - 100) / 10).toInt
-        val (cluster, cdist, kept) = out(id)
-        assert(cluster == famP, s"vector $id assigned to cell $cluster, not $famP")
-        val expectedCdist =
-          if (id >= 4 && id < 8) 0L // singleton cluster: centroid = itself
-          else if (id < 4 || id % 10 == 0) 562500L // 750² off the mean
-          else if (id % 10 == 1) 62500L            // 250²
-          else 1562500L                            // 1250²
-        assert(cdist == expectedCdist,
-          s"vector $id cdist $cdist != $expectedCdist")
-        val expectedKept =
-          if (id >= 4 && id < 8) true                 // singleton seeds
-          else if (id >= 100 && id % 10 == 2) true    // clique max (1250²)
-          else false
-        assert(kept == expectedKept,
-          s"vector $id kept=$kept, expected $expectedKept")
-      }
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-sddt")
+    rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val out = graft.queries.DedupQueries.dedupSemdedupTrained(spark, dir)
+      .collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      .toMap
+    org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
+    assert(out.size == rows.size)
+    for ((id, _) <- rows) {
+      val famP = if (id < 8) id.toInt else ((id - 100) / 10).toInt
+      val (cluster, cdist, kept) = out(id)
+      assert(cluster == famP, s"vector $id assigned to cell $cluster, not $famP")
+      val expectedCdist =
+        if (id >= 4 && id < 8) 0L // singleton cluster: centroid = itself
+        else if (id < 4 || id % 10 == 0) 562500L // 750² off the mean
+        else if (id % 10 == 1) 62500L            // 250²
+        else 1562500L                            // 1250²
+      assert(cdist == expectedCdist,
+        s"vector $id cdist $cdist != $expectedCdist")
+      val expectedKept =
+        if (id >= 4 && id < 8) true                 // singleton seeds
+        else if (id >= 100 && id % 10 == 2) true    // clique max (1250²)
+        else false
+      assert(kept == expectedKept,
+        s"vector $id kept=$kept, expected $expectedKept")
+    }
   }
 
   test("the cells dial: finer cells keep every verdict deterministic and split no clique") {
@@ -120,24 +116,22 @@ class SemDedupSpec extends SparkSpec {
       (0 until 8).map(p => (p.toLong, proto(p))) ++
       (for (p <- 0 until 4; j <- 0 until 3)
         yield ((100 + p * 10 + j).toLong, perturb(proto(p), p * 8, j)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sdd2").toString
-    try {
-      rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      // ids are sparse (0..7, 100..132), so vec_id < 16 still selects
-      // exactly the 8 prototypes: same seeds, k = 16 — the dial's only
-      // effect here is the packing constant, pinning its correctness.
-      val out = graft.queries.DedupQueries.dedupSemdedupCells(16)(spark, dir)
-        .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
-      org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      for ((id, _) <- rows) {
-        val expectedKept =
-          if (id >= 4 && id < 8) true
-          else if (id >= 100 && id % 10 == 2) true
-          else false
-        assert(out(id) == expectedKept, s"vector $id flipped under the k dial")
-      }
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-sdd2")
+    rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    // ids are sparse (0..7, 100..132), so vec_id < 16 still selects
+    // exactly the 8 prototypes: same seeds, k = 16 — the dial's only
+    // effect here is the packing constant, pinning its correctness.
+    val out = graft.queries.DedupQueries.dedupSemdedupCells(16)(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
+    org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
+    for ((id, _) <- rows) {
+      val expectedKept =
+        if (id >= 4 && id < 8) true
+        else if (id >= 100 && id % 10 == 2) true
+        else false
+      assert(out(id) == expectedKept, s"vector $id flipped under the k dial")
+    }
   }
 
   test("the tau dial: a cos≈0.707 pair drops at tau=0.3 but survives the paper's tau=0.95") {
@@ -154,21 +148,19 @@ class SemDedupSpec extends SparkSpec {
       (0L, proto(0)), (1L, proto(1)), (2L, proto(2)),
       (100L, (0 until 64).map(i => if (i < 16) 1.0f else 0.0f).toSeq),
       (101L, perturb(proto(0), 0, 1)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sdd3").toString
-    try {
-      rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val hi = graft.queries.DedupQueries.dedupSemdedupCells(4)(spark, dir)
-        .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
-      org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      assert(hi == Map(0L -> false, 1L -> true, 2L -> true,
-        100L -> true, 101L -> true), s"tau=0.95 verdicts: $hi")
-      val lo = graft.queries.DedupQueries
-        .dedupSemdedupCellsTau(4, 9L, 100L)(spark, dir)
-        .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
-      org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
-      assert(lo == Map(0L -> false, 1L -> true, 2L -> true,
-        100L -> true, 101L -> false), s"tau=0.3 verdicts: $lo")
-    } finally LocalFiles.rmTree(dir)
+    val dir = tempDir("graft-sdd3")
+    rows.toDF("vec_id", "embedding").withColumn("label", lit("t"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val hi = graft.queries.DedupQueries.dedupSemdedupCells(4)(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
+    org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
+    assert(hi == Map(0L -> false, 1L -> true, 2L -> true,
+      100L -> true, 101L -> true), s"tau=0.95 verdicts: $hi")
+    val lo = graft.queries.DedupQueries
+      .dedupSemdedupCellsTau(4, 9L, 100L)(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
+    org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
+    assert(lo == Map(0L -> false, 1L -> true, 2L -> true,
+      100L -> true, 101L -> false), s"tau=0.3 verdicts: $lo")
   }
 }

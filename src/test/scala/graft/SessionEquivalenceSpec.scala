@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.queries.ExtensionQueries
@@ -24,13 +23,6 @@ import org.apache.spark.sql.streaming.OutputMode
 class SessionEquivalenceSpec extends SparkSpec {
 
   import TestSpark.spark.implicits._
-
-  private val tempDirs = scala.collection.mutable.Buffer[String]()
-
-  override def afterAll(): Unit = {
-    tempDirs.foreach(LocalFiles.rmTree)
-    super.afterAll()
-  }
 
   /** Seeded session-structured generator: per user, sessions of 1–6
     * events with intra-gaps of 1–25 min and inter-gaps of 35–120 min
@@ -61,9 +53,7 @@ class SessionEquivalenceSpec extends SparkSpec {
       val events = genEvents(seed)
 
       // Batch truth: the declared query over a real parquet events table.
-      // (Temp dir registered for cleanup below.)
-      val dir = Files.createTempDirectory(s"graft-sess$seed").toString
-      tempDirs += dir
+      val dir = tempDir(s"graft-sess$seed")
       events.toDF()
         .select(col("event_id"), (col("ts").cast("long") * 1000000000L).as("ts"),
           col("user_id"), col("event_type"), col("value"))

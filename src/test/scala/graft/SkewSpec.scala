@@ -74,7 +74,7 @@ class SkewSpec extends SparkSpec {
 
   private lazy val megaDir: String = {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mega").toString
+    val dir = tempDir("graft-mega")
     val docs = (0 until 10000).map { i =>
       val src = if (i % 33 != 0) "src1" else s"src${2 + i % 3}"
       val words = Seq.tabulate(1 + i % 7)(j => s"w${(i * 31 + j) % 997}")

@@ -1,16 +1,22 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftx.Metrics
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM, forked by sbt): the
-  * LocalSpark configuration the harness mains time, at local[4]. */
+  * LocalSpark configuration the harness mains time, at local[4]. Its
+  * warehouse is a temp dir removed at JVM exit. */
 object TestSpark {
+  private val warehouse = Files.createTempDirectory("graft-wh").toString
+  sys.addShutdownHook(LocalFiles.rmTree(warehouse))
+
   lazy val spark: SparkSession = LocalSpark.builder("4")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    .config("spark.sql.warehouse.dir", warehouse)
     .getOrCreate()
   spark.sparkContext.setLogLevel("ERROR")
 
@@ -20,6 +26,19 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   lazy val sfDir: String = TestSpark.sfDir
+
+  private val tempDirs = new ConcurrentLinkedQueue[String]()
+
+  /** A fresh temp dir named `prefix…`, removed with its contents after
+    * the suite. */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    tempDirs.add(dir)
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => LocalFiles.rmTree(d)) finally super.afterAll()
 
   /** Runs `body` in one [[Metrics.measure]] window: its result and the
     * window's LoopEnd records of `loop`, in posting order. */

@@ -52,7 +52,7 @@ class TextHeadSplitSpec extends SparkSpec {
     // 40 docs over a 64-word vocabulary where word w_r appears ~60/r
     // times corpus-wide (a real Zipf draw, unlike the near-uniform
     // fixture vocabulary): the top ranks clear cf·lnV·√V ≥ T easily.
-    val dir = java.nio.file.Files.createTempDirectory("graft-zipf").toString
+    val dir = tempDir("graft-zipf")
     val docs = (0 until 40).map { d =>
       val text = (1 to 64).flatMap { r =>
         val reps = 60 / r

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -48,7 +46,7 @@ class VectorStreamsSpec extends SparkSpec {
     import sp.implicits._
     val mem = MemoryStream[(Long, Seq[Float])]
     val vectors = mem.toDF().toDF("vec_id", "embedding")
-    val ck = Files.createTempDirectory("graft-stream-ck").toString
+    val ck = tempDir("graft-stream-ck")
     val q = VectorStreams.admit(vectors, tbl, cellsT, cbT, ck)
     try {
       mem.addData(batchA.toSeq: _*)
