@@ -5,7 +5,9 @@ import graft.queries.{DedupQueries, ExtensionQueries, LinkageQueries, OlapQuerie
 import graft.queries.DedupQueries.Q
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Metrics
 
 /** The salted scale fixture and the one table of scale entries behind
   * every sub-quadratic scaling gate: the 10× `ScaleProbeSpec` and the
@@ -94,7 +96,20 @@ object ScaleFixture {
     * (BroadcastGuardSpec documents the bounds), 0 for none. A gate
     * admits nested loops only in an entry that declares them; the
     * volume probe pins the count. */
-  final case class Entry(name: String, kinds: Seq[Kind], q1: Q, qN: Q, crosses: Int = 0)
+  final case class Entry(name: String, kinds: Seq[Kind], q1: Q, qN: Q, crosses: Int = 0) {
+
+    /** The plan-shape rule of both scale harnesses, over the executed
+      * plans of one 1× and one factor× run: no nested-loop join at
+      * factor× — or, for an entry that declares bounded crosses, no
+      * CartesianProduct and EXACTLY `crosses` BroadcastNestedLoopJoins
+      * at both scales (mere cross-scale equality would pass an unbounded
+      * nested loop present at both, e.g. a regression that drops the
+      * broadcast bound at fixture scale too). */
+    def planSane(plans1: Seq[SparkPlan], plansN: Seq[SparkPlan]): Boolean =
+      if (crosses == 0) !Metrics.hasNestedLoop(plansN)
+      else !Metrics.hasCartesian(plansN) && Metrics.nestedLoopCount(plans1) == crosses &&
+        Metrics.nestedLoopCount(plansN) == crosses
+  }
 
   /** Copy t's offsets: doc and part ids, order/event/co-order keys,
     * `ewj` timestamps (400 days in ns), embedding ids. */
@@ -331,8 +346,11 @@ object ScaleFixture {
       sym("text_tfidf_top_terms", docs, TextQueries.textTfidfTopTerms, crosses = 1),
       // Word tags grow vocabulary and totals factor× with every word's cf
       // unchanged, so the relative rarity rule selects the same per-copy
-      // structure.
-      sym("text_token_rarity", docs, TextQueries.textTokenRarity),
+      // structure. Its one cross is crossJoin(broadcast(totals)), the
+      // 1-row vocabulary totals scalar the head/tail tag compares
+      // against (one executed node at 1× and 10×: the head and tail
+      // filters share it).
+      sym("text_token_rarity", docs, TextQueries.textTokenRarity, crosses = 1),
       // Tagged words make each copy's bigram vocabulary disjoint: model
       // table, per-doc bigram stream and the scoring join grow factor×,
       // and CCNet's per-doc scores — hence its thresholds — are
@@ -377,7 +395,9 @@ object ScaleFixture {
       sym("linkage_golden_record", Seq(Fz), under("fz", LinkageQueries.linkageGoldenRecord)),
       // Terms are per-copy distinct, so (term, doc) pairs grow factor×.
       sym("text_inverted_index", docs, LinkageQueries.textInvertedIndex),
-      sym("text_bm25_topk", docs, TextQueries.textBm25TopK),
+      // crossJoin(broadcast(stats)): the 1-row (n_docs, total length)
+      // corpus scalar BM25's idf and length norm read.
+      sym("text_bm25_topk", docs, TextQueries.textBm25TopK, crosses = 1),
       // crossJoin(broadcast(globals)): the 1-row corpus-total scalar.
       sym("sample_temperature_mix", docs, SamplingQueries.sampleTemperatureMix,
         crosses = 1),

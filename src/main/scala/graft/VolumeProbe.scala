@@ -310,19 +310,13 @@ object VolumeProbe {
 
   /** round 13: an entry whose DECLARED plan carries exact-allowlisted
     * bounded broadcast cross joins ([[ScaleFixture.Entry]]'s `crosses`;
-    * BroadcastGuardSpec documents the bounds) gets the bounded posture
-    * instead of the blanket no-nested-loop arm: no CartesianProduct, and
-    * the ABSOLUTE BNLJ count pinned at both arms (round-13 ADVICE: mere
-    * cross-arm equality would pass an unbounded nested loop present at
-    * BOTH arms — e.g. a regression that drops the broadcast bound at
-    * fixture scale too). */
-  private val boundedCrosses: Arm = r => {
-    val (b1, bN) = (Metrics.nestedLoopCount(r.m1.plans), Metrics.nestedLoopCount(r.mN.plans))
-    val n = r.e.crosses
-    Verdict(fields = r.pair("bnlj", b1, bN) ++ Seq("bnlj_expected" -> n,
-        "plan_sane_gate" -> "no_cartesian_and_bnlj_count==expected_both_arms"),
-      planSane = Some(!Metrics.hasCartesian(r.mN.plans) && b1 == n && bN == n))
-  }
+    * BroadcastGuardSpec documents the bounds) is gated by
+    * [[ScaleFixture.Entry.planSane]]'s bounded posture; this arm records
+    * the counts it pins. */
+  private val boundedCrosses: Arm = r =>
+    Verdict(fields = r.pair("bnlj", Metrics.nestedLoopCount(r.m1.plans),
+        Metrics.nestedLoopCount(r.mN.plans)) ++ Seq("bnlj_expected" -> r.e.crosses,
+      "plan_sane_gate" -> "no_cartesian_and_bnlj_count==expected_both_arms"))
 
   /** A loop's rounds from the LoopEnd each run posted inside its window:
     * -1 when the loop did not finish there. */
@@ -795,8 +789,8 @@ object VolumeProbe {
   /** Gates `entries` (some of [[names]]), in the order given, at 1× and
     * `factor`× the tables in `sf`, on `spark` at its default parallelism,
     * and returns (the JSON artifact, whether every entry passed). Writes
-    * its corpora under fresh temp dirs and removes them, and restores the
-    * confs it sets. */
+    * its corpora under fresh temp dirs and removes them with the catalog
+    * tables written for them, and restores the confs it sets. */
   def run(spark: SparkSession, sf: String, factor: Int, entries: Seq[String]): (String, Boolean) = {
     val confs = Seq("spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold")
     val saved = confs.map(k => k -> spark.conf.getOption(k))
@@ -842,7 +836,7 @@ object VolumeProbe {
         val arms = (if (e.crosses > 0) Seq(boundedCrosses) else Nil) ++ row.arms
         val verdicts = arms.map(_(r))
         val planSane = verdicts.flatMap(_.planSane).headOption
-          .getOrElse(!Metrics.hasNestedLoop(mN.plans))
+          .getOrElse(e.planSane(m1.plans, mN.plans))
         val recOk = verdicts.flatMap(_.records).headOption
           .getOrElse(r.linear(k1.shuffleRecordsRead, kN.shuffleRecordsRead))
         val joinOk = verdicts.flatMap(_.joins).headOption
@@ -891,6 +885,13 @@ object VolumeProbe {
         s""""timing_is_context_only":true,""" +
         s""""queries":{${results.map(_._2).mkString(",")}},"all_pass":$allPass}""", allPass)
     } finally {
+      // The catalog tables its ingest and queries wrote for the two
+      // fixture dirs (IVF-PQ indexes, cluster labels) are keyed to dirs
+      // about to be removed: drop them with their warehouse files.
+      val tags = Seq(dir1, dirN).map(graft.sources.Bucketing.dirTag)
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(t => tags.exists(t.contains))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
       LocalFiles.rmTree(dir1)
       LocalFiles.rmTree(dirN)
       saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.{Metrics, Sessions}
-import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
+import org.apache.spark.sql.graftx.Sessions
+import org.apache.spark.sql.graftx.Metrics.Exit
 
 import graft.queries.TextQueries
 
@@ -73,19 +73,18 @@ import graft.queries.TextQueries
   * winner (k = 1 is unconditionally sequential). `maxBatch` bounds the
   * folded replace-expression depth per round. The run posts
   * `LoopEnd("Bpe", merges, Cap | Exhausted, batches)`
-  * ([[Metrics.loopEnd]]): its rounds are MERGES (= rows in the returned
+  * ([[Loop.run]]): its rounds are MERGES (= rows in the returned
   * table, the probe's target contract), its batches the driver rounds
   * (≤ merges) the batching buys down; a run that throws posts nothing.
   *
-  * Loop discipline (the [[KMeans]]/[[PageRank]]/[[Lpa]] contract):
-  * conf-isolated `newSession()` clone, AQE off, shuffle width
-  * `loopParts`; the capped vocabulary snapshots once and each round
-  * re-snapshots the ≤ cap-row merged vocabulary (localCheckpoint per
-  * round — real vocab targets run thousands of rounds, the dependency-
-  * graph depth the PageRank lesson is about); hitting `targetMerges`
-  * is SUCCESS (the budget is the contract, exit `Cap`), stopping early
-  * — no adjacent pair left, or the best pair's count below `minCount` —
-  * is exit `Exhausted`.
+  * Loop discipline ([[Loop.run]] owns the session clone and every
+  * snapshot's release): the capped vocabulary snapshots once and each
+  * round re-snapshots the ≤ cap-row merged vocabulary, checkpointed
+  * (real vocab targets run thousands of rounds, the dependency-graph
+  * depth [[Loop.snap]]'s checkpoint flag exists for); hitting
+  * `targetMerges` is SUCCESS (the budget is the contract, exit `Cap`),
+  * stopping early — no adjacent pair left, or the best pair's count
+  * below `minCount` — is exit `Exhausted`.
   */
 object Bpe {
 
@@ -107,28 +106,19 @@ object Bpe {
     require(targetMerges >= 1, s"targetMerges must be positive: $targetMerges")
     require(minCount >= 1L, s"minCount must be positive: $minCount")
     require(maxBatch >= 1, s"maxBatch must be positive: $maxBatch")
-    val parent = docWords.sparkSession
-    val s = parent.newSession()
-    Sessions.copyRuntimeConf(parent, s)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val MM = TextQueries.BpeMark + TextQueries.BpeMark
-    // The one corpus pass: word counts → top-cap vocabulary, wrapped.
-    val (v0Rdd, v0) = Sessions.snapshot(Sessions.rebind(
-      docWords.groupBy("word").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), asc("word"))
-        .limit(TextQueries.BpeVocabCap)
-        .select(TextQueries.bpeWrap(col("word")).as("w"), col("cnt")), s))
-    var vocab = v0
-    var vocabRdd: org.apache.spark.rdd.RDD[_] = v0Rdd
-    val merges = Seq.newBuilder[(Long, String, String, Long)]
-    var round = 0
-    var batches = 0
-    var exhausted = false
-    var inFlight: org.apache.spark.rdd.RDD[_] = null
-    try {
+    Loop.run("Bpe", docWords.sparkSession, loopParts) { loop =>
+      // The one corpus pass: word counts → top-cap vocabulary, wrapped,
+      // under the loop session.
+      var vocab = loop.snap(Sessions.rebind(
+        docWords.groupBy("word").agg(count(lit(1)).as("cnt"))
+          .orderBy(desc("cnt"), asc("word"))
+          .limit(TextQueries.BpeVocabCap)
+          .select(TextQueries.bpeWrap(col("word")).as("w"), col("cnt")), loop.session))
+      val merges = Seq.newBuilder[(Long, String, String, Long)]
+      var round = 0
+      var batches = 0
+      var exhausted = false
       while (round < targetMerges && !exhausted) {
-        val syms = split(col("w").substr(lit(2), length(col("w")) - 2), MM)
         // The round's collect: the aggregated pair table, UNSORTED —
         // vocabulary-scale (≤ Σ_w (|w| − 1) rows) — then sorted on the
         // driver: a distributed orderBy here would add a range-partition
@@ -137,37 +127,25 @@ object Bpe {
         // loop at 89 rounds). The driver sort uses unsigned UTF-8 byte
         // order — exactly Spark's `asc` on strings — so the arg-max
         // tie-break stays bit-identical to the declared query's.
-        val pairs: Array[Row] = vocab
-          .select(col("cnt"), syms.as("syms"))
-          .filter(size(col("syms")) > 1)
-          .select(col("cnt"), explode(zip_with(
-            slice(col("syms"), lit(1), size(col("syms")) - 1),
-            slice(col("syms"), lit(2), size(col("syms")) - 1),
-            (a, b) => struct(a.as("lhs"), b.as("rhs")))).as("pr"))
-          .groupBy(col("pr.lhs").as("lhs"), col("pr.rhs").as("rhs"))
-          .agg(sum(col("cnt")).as("pair_count"))
-          .collect()
-        if (pairs.isEmpty) {
-          exhausted = true
-        } else {
-          def u8(s: String): Array[Byte] =
-            s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val sorted = pairs.sortWith { (x, y) =>
-            val (cx, cy) = (x.getAs[Long]("pair_count"), y.getAs[Long]("pair_count"))
-            if (cx != cy) cx > cy
-            else {
-              val cl = java.util.Arrays.compareUnsigned(
-                u8(x.getAs[String]("lhs")), u8(y.getAs[String]("lhs")))
-              if (cl != 0) cl < 0
-              else java.util.Arrays.compareUnsigned(
-                u8(x.getAs[String]("rhs")), u8(y.getAs[String]("rhs"))) < 0
-            }
-          }
-          val ls = sorted.map(_.getAs[String]("lhs"))
-          val rs = sorted.map(_.getAs[String]("rhs"))
-          val cnts = sorted.map(_.getAs[Long]("pair_count"))
-          if (cnts(0) < minCount) exhausted = true
+        val pairs: Array[Row] = TextQueries.bpePairCounts(vocab).collect()
+        def u8(s: String): Array[Byte] =
+          s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val sorted = pairs.sortWith { (x, y) =>
+          val (cx, cy) = (x.getAs[Long]("pair_count"), y.getAs[Long]("pair_count"))
+          if (cx != cy) cx > cy
           else {
+            val cl = java.util.Arrays.compareUnsigned(
+              u8(x.getAs[String]("lhs")), u8(y.getAs[String]("lhs")))
+            if (cl != 0) cl < 0
+            else java.util.Arrays.compareUnsigned(
+              u8(x.getAs[String]("rhs")), u8(y.getAs[String]("rhs"))) < 0
+          }
+        }
+        val ls = sorted.map(_.getAs[String]("lhs"))
+        val rs = sorted.map(_.getAs[String]("rhs"))
+        val cnts = sorted.map(_.getAs[Long]("pair_count"))
+        if (pairs.isEmpty || cnts(0) < minCount) exhausted = true
+        else {
           // Longest mutually-non-interacting ≥ minCount prefix, bounded
           // by maxBatch and the remaining merge budget. Condition (c):
           // `symSet` is every symbol the pair table mentions; a candidate
@@ -208,28 +186,16 @@ object Bpe {
             // sequential application, one projection, one job.
             val mergedW = (0 until k).foldLeft(col("w")) { (c, i) =>
               TextQueries.bpeApply(c, lit(ls(i)), lit(rs(i))) }
-            val (nextRdd, next) = Sessions.snapshot(
-              vocab.select(mergedW.as("w"), col("cnt")))
-            nextRdd.localCheckpoint()
-            inFlight = nextRdd
+            val next = loop.snap(
+              vocab.select(mergedW.as("w"), col("cnt")), checkpoint = true)
             next.count() // materialize before releasing the previous round
-            vocabRdd.unpersist(blocking = false)
-            vocab = next
-            vocabRdd = nextRdd
-            inFlight = null
-          }
+            vocab = loop.swap(vocab, next)
           }
         }
       }
-      Metrics.loopEnd(parent, LoopEnd("Bpe", round,
-        if (exhausted) Exit.Exhausted else Exit.Cap, batches))
-    } finally {
-      if ((inFlight != null) && (inFlight ne vocabRdd))
-        inFlight.unpersist(blocking = false)
-      vocabRdd.unpersist(blocking = false)
-    }
-    import parent.implicits._
-    merges.result().toDF("round", "lhs", "rhs", "pair_count")
-      .orderBy("round")
+      import loop.session.implicits._
+      Loop.Done(merges.result().toDF("round", "lhs", "rhs", "pair_count"),
+        round, if (exhausted) Exit.Exhausted else Exit.Cap, batches)
+    }.orderBy("round")
   }
 }

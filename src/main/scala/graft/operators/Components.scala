@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.{Metrics, Sessions}
-import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
+import org.apache.spark.sql.graftx.Metrics.Exit
 
 /** Distributed connected components — the operator behind `dedup_clusters`
   * (each near-dup pair component collapses to its min doc_id, the
@@ -20,18 +19,8 @@ import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
   * converges in ≤ 12 rounds here vs 300 steps for pure propagation
   * (ComponentsSpec).
   *
-  * Execution notes earned the hard way (see DedupQueries history):
-  *  - the whole loop runs on a `newSession()` CLONE of the caller's
-  *    session via [[Sessions.rebind]]: AQE off (it materializes every
-  *    Exchange as its own scheduled query stage — ~0.5 s pure scheduling
-  *    per shuffle with nothing to adapt on a tiny graph) and
-  *    shuffle.partitions = loopParts, with the caller's conf untouched
-  *    and cached data shared (the cache lives on shared RDD handles);
-  *  - every iterated frame is a [[Sessions.snapshot]] (flat LogicalRDD,
-  *    caller-owned persist handle): plain persist() keeps full lineage
-  *    and the shortcut self-reference DOUBLES the logical plan per round
-  *    — measured planning overhead grew 0.2 s → 1.2 s/round by round 4
-  *    and would dwarf execution by round 10;
+  * Execution notes earned the hard way (see DedupQueries history); the
+  * session clone and every snapshot's release are [[Loop.run]]'s:
   *  - ONE action per round: the changed-count materializes `prop` and
   *    `next` into their snapshots and reads `prev` from the previous
   *    round's — nothing re-executes a prior round's lineage (the round-2
@@ -49,7 +38,7 @@ import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
   *    diameter below ~2^49; hitting the cap means a bug, not a big graph.
   *
   * A converged run posts `LoopEnd("Components", rounds, Fixpoint)`
-  * ([[Metrics.loopEnd]]); a run that throws posts nothing. VolumeProbe
+  * ([[Loop.run]]); a run that throws posts nothing. VolumeProbe
   * normalizes the clusters entries' per-round linearity gate by those
   * rounds: every round re-joins the full edge set, so total join-output
   * rows are rounds × O(edges), and rounds track the MAX component
@@ -65,95 +54,54 @@ object Components {
     *                  propagation reach; 50 ≈ diameter 2^49)
     * @return (doc_id, cluster_rep) for every vertex of the pair graph */
   def connectedComponents(pairs: DataFrame, loopParts: Int,
-                          maxRounds: Int = 50): DataFrame = {
-    val parent = pairs.sparkSession
-    val s = parent.newSession()
-    // The clone inherits builder-time options only; carry over the
-    // parent's runtime-set SQL confs (a lineage reading the events table
-    // needs its nanosAsLong flag, etc.) BEFORE narrowing the loop conf.
-    Sessions.copyRuntimeConf(parent, s)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // The candidate-pair lineage can be the heaviest stage of the whole
-    // query (for dedup_clusters it is the corpus-wide MinHash-LSH join),
-    // so it is snapshotted under the PARENT session — full shuffle width,
-    // AQE skew handling intact; loopParts sizes the tiny label loop, not
-    // the corpus scan. Only the flat LogicalRDD result is rebound into
-    // the narrow clone.
-    val (pRdd, p0) = Sessions.snapshot(pairs)
-    val p = Sessions.rebind(p0, s)
-    val undirected = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    // Snapshot the vertex set once: it feeds BOTH the self-looped edges
-    // and the initial labels, and as a plain subtree the union+distinct
-    // shuffle over the full vertex set would execute twice at startup
-    // (round-9 review).
-    val (vRdd, verts) = Sessions.snapshot(
-      undirected.select(col("src").as("v")).distinct())
-    val (edgesRdd, edges) = Sessions.snapshot(
-      undirected
-        .union(verts.select(col("v").as("src"), col("v").as("dst")))
-        .repartition(loopParts, col("dst")))
-    var (prevRdd, prev) = Sessions.snapshot(
-      verts.select(col("v"), col("v").as("rep"))
-        .repartition(loopParts, col("v")))
-    var round = 0
-    var converged = false
-    // Track the round's in-flight snapshots so a mid-round failure (task
-    // error, cancellation) releases them in the finally block — they are
-    // vertex-set-sized and a catch-and-retry caller would otherwise leak
-    // two cached RDDs per failed attempt (round-9 review).
-    var inFlightProp: org.apache.spark.rdd.RDD[_] = null
-    var inFlightNext: org.apache.spark.rdd.RDD[_] = null
-    try {
-      while (round < maxRounds && !converged) {
-        val (propRdd, prop) = Sessions.snapshot(
+                          maxRounds: Int = 50): DataFrame =
+    Loop.run("Components", pairs.sparkSession, loopParts) { loop =>
+      // The candidate-pair lineage can be the heaviest stage of the whole
+      // query (for dedup_clusters it is the corpus-wide MinHash-LSH join),
+      // so it is snapshotted under the CALLER's session — full shuffle
+      // width, AQE skew handling intact; loopParts sizes the tiny label
+      // loop, not the corpus scan.
+      val p = loop.snap(pairs)
+      val undirected = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      // Snapshot the vertex set once: it feeds BOTH the self-looped edges
+      // and the initial labels, and as a plain subtree the union+distinct
+      // shuffle over the full vertex set would execute twice at startup
+      // (round-9 review).
+      val verts = loop.snap(undirected.select(col("src").as("v")).distinct())
+      val edges = loop.snap(
+        undirected
+          .union(verts.select(col("v").as("src"), col("v").as("dst")))
+          .repartition(loopParts, col("dst")))
+      var prev = loop.snap(
+        verts.select(col("v"), col("v").as("rep"))
+          .repartition(loopParts, col("v")))
+      val (rounds, converged) = loop.rounds(maxRounds) { round =>
+        val prop = loop.snap(
           edges.join(prev, col("dst") === col("v"))
             .groupBy(col("src")).agg(min(col("rep")).as("rep"))
             .select(col("src").as("v"), col("rep")))
-        inFlightProp = propRdd
-        val (nextRdd, next) = Sessions.snapshot(
+        val next = loop.snap(
           prop.as("a").join(prop.as("b"), col("a.rep") === col("b.v"))
             .select(col("a.v").as("v"), col("b.rep").as("rep")))
-        inFlightNext = nextRdd
         // The ONE action of the round: materializes prop + next snapshots
         // and compares against the cached prev in the same job.
         val changed = next.join(
             prev.select(col("v").as("pv"), col("rep").as("prev_rep")),
             col("v") === col("pv"))
           .filter(col("rep") =!= col("prev_rep")).count()
-        propRdd.unpersist(blocking = false)
-        inFlightProp = null
-        prevRdd.unpersist(blocking = false)
+        loop.release(prop)
+        prev = loop.swap(prev, next)
         if (round == 0) { // edges + labels are materialized now
-          pRdd.unpersist(blocking = false)
-          vRdd.unpersist(blocking = false)
+          loop.release(p)
+          loop.release(verts)
         }
-        prev = next
-        prevRdd = nextRdd
-        inFlightNext = null
-        converged = changed == 0
-        round += 1
+        changed == 0
       }
       if (!converged)
         throw new IllegalStateException(
           s"connectedComponents did not converge within $maxRounds rounds")
-      Metrics.loopEnd(parent, LoopEnd("Components", round, Exit.Fixpoint))
-    } finally {
-      if (inFlightProp != null) inFlightProp.unpersist(blocking = false)
-      if ((inFlightNext != null) && (inFlightNext ne prevRdd))
-        inFlightNext.unpersist(blocking = false)
-      edgesRdd.unpersist(blocking = false)
-      pRdd.unpersist(blocking = false)
-      vRdd.unpersist(blocking = false)
-      if (!converged) prevRdd.unpersist(blocking = false)
-    }
-    // The final labels stay persisted because the returned plan reads that
-    // RDD directly; once the caller drops the DataFrame, Spark's
-    // ContextCleaner unpersists (cached RDDs are weakly referenced).
-    // Rebind onto the caller's session so downstream runs under ITS conf.
-    Sessions.rebind(
-      prev.select(col("v").as("doc_id"), col("rep").as("cluster_rep")),
-      parent).orderBy("doc_id")
-  }
+      Loop.Done(prev.select(col("v").as("doc_id"), col("rep").as("cluster_rep")),
+        rounds, Exit.Fixpoint)
+    }.orderBy("doc_id")
 }

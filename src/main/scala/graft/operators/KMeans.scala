@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.{Metrics, Sessions}
-import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
+import org.apache.spark.sql.graftx.Metrics.Exit
 
 import graft.functions.ColFns.{qdot, qnorm2}
 
@@ -22,11 +21,8 @@ import graft.functions.ColFns.{qdot, qnorm2}
   * ≤ k-row join — the per-round action costs one corpus
   * assign+update pass and nothing more.
   *
-  * Loop discipline (all of it inherited from [[Components]], the
-  * operator that earned it):
-  *  - the loop runs on a `newSession()` clone — AQE off (it schedules
-  *    every tiny exchange as its own query stage), shuffle width =
-  *    `loopParts`, caller conf untouched;
+  * Loop discipline ([[Loop.run]] owns the session clone and every
+  * snapshot's release):
   *  - the corpus frame `q` is snapshotted ONCE (quantize + norm run one
   *    time, not once per round); per round the only NEW snapshot is the
   *    ≤ k-row centroid table, so iterated lineage never grows;
@@ -41,7 +37,7 @@ import graft.functions.ColFns.{qdot, qnorm2}
   *    never ship), a Lloyd fixpoint is refinement — integer floor
   *    centroids can in principle 2-cycle near a tie, and every real
   *    deployment runs k-means under a round budget. The run posts
-  *    `LoopEnd("KMeans", rounds, Fixpoint | Cap)` ([[Metrics.loopEnd]])
+  *    `LoopEnd("KMeans", rounds, Fixpoint | Cap)` ([[Loop.run]])
   *    for the caller/probe to gate on; a run that throws posts nothing.
   *
   * 100 TB shape: each round is one broadcast cross join (≤ k rows
@@ -121,28 +117,18 @@ object KMeans {
   def lloyd(embeddings: DataFrame, k: Int, dims: Int = 64,
             loopParts: Int = 8, maxRounds: Int = 40): DataFrame = {
     require(k >= 1 && k <= 16, s"packed argmin carries labels in [0,16): k=$k")
-    val parent = embeddings.sparkSession
-    val s = parent.newSession()
-    Sessions.copyRuntimeConf(parent, s)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val (qRdd, q0) = Sessions.snapshot(quantize(embeddings))
-    val q = Sessions.rebind(q0, s)
-    var (prevRdd, prev) = Sessions.snapshot(
-      q.filter(col("vec_id") < k)
-        .select(col("vec_id").as("cluster"),
-          transform(col("qv"), _ * 1000L).as("c"))
-        .withColumn("cn2", qdot(col("c"), col("c")))
-        .withColumn("n", lit(0L)))
-    var round = 0
-    var converged = false
-    var inFlight: org.apache.spark.rdd.RDD[_] = null
-    try {
-      while (round < maxRounds && !converged) {
-        val (nextRdd, next) = Sessions.snapshot(
+    Loop.run("KMeans", embeddings.sparkSession, loopParts) { loop =>
+      val q = loop.snap(quantize(embeddings))
+      var prev = loop.snap(
+        q.filter(col("vec_id") < k)
+          .select(col("vec_id").as("cluster"),
+            transform(col("qv"), _ * 1000L).as("c"))
+          .withColumn("cn2", qdot(col("c"), col("c")))
+          .withColumn("n", lit(0L)))
+      val (rounds, converged) = loop.rounds(maxRounds) { _ =>
+        val next = loop.snap(
           update(assign(q, prev), dims)
             .withColumn("cn2", qdot(col("c"), col("c"))))
-        inFlight = nextRdd
         // The ONE action of the round: materializes the new centroid
         // table and diffs it against the previous one in the same job.
         // Full outer: a cluster present on one side only (emptied, or
@@ -155,26 +141,16 @@ object KMeans {
           .filter(col("nc").isNull || col("pc").isNull ||
             col("c2") =!= col("c1") || col("n2x") =!= col("n1x"))
           .count()
-        prevRdd.unpersist(blocking = false)
-        prev = next
-        prevRdd = nextRdd
-        inFlight = null
-        converged = changed == 0
-        round += 1
+        prev = loop.swap(prev, next)
+        changed == 0
       }
-      Metrics.loopEnd(parent, LoopEnd("KMeans", round,
-        if (converged) Exit.Fixpoint else Exit.Cap))
-    } finally {
-      if ((inFlight != null) && (inFlight ne prevRdd))
-        inFlight.unpersist(blocking = false)
-      qRdd.unpersist(blocking = false)
-    }
-    // Flatten to the emb_kmeans output contract under the CALLER's conf.
-    Sessions.rebind(
-      prev.select(col("cluster").as("cluster_id"),
-          posexplode(col("c")).as(Seq("dim", "cd")), col("n"))
-        .select(col("cluster_id"), col("dim").cast("long").as("dim"),
-          col("cd").as("c"), col("n").as("n_vecs")),
-      parent).orderBy("cluster_id", "dim")
+      // Flatten to the emb_kmeans output contract.
+      Loop.Done(
+        prev.select(col("cluster").as("cluster_id"),
+            posexplode(col("c")).as(Seq("dim", "cd")), col("n"))
+          .select(col("cluster_id"), col("dim").cast("long").as("dim"),
+            col("cd").as("c"), col("n").as("n_vecs")),
+        rounds, if (converged) Exit.Fixpoint else Exit.Cap)
+    }.orderBy("cluster_id", "dim")
   }
 }

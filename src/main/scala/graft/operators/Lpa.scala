@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.{Metrics, Sessions}
-import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
+import org.apache.spark.sql.graftx.Metrics.Exit
 
 /** Run-to-termination label propagation (round-15 verdict #4) — the
   * N-round form behind the declared fixed-2-round
@@ -33,20 +32,18 @@ import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
   * `maxRounds` RETURNS rather than throws (the lloyd rule — a label
   * table short of termination is refinement, not corruption). The run
   * posts `LoopEnd("Lpa", rounds, Fixpoint | TwoCycle | Cap)`
-  * ([[Metrics.loopEnd]]); a run that throws posts nothing.
+  * ([[Loop.run]]); a run that throws posts nothing.
   *
-  * Loop discipline (inherited from [[Components]]/[[KMeans]]/
-  * [[PageRank]]):
-  *  - conf-isolated `newSession()` clone — AQE off, shuffle width
-  *    `loopParts`, caller conf untouched;
+  * Loop discipline ([[Loop.run]] owns the session clone and every
+  * snapshot's release):
   *  - the directed edge set snapshots ONCE (the loop invariant); per
   *    round the only NEW snapshot is the node-scale label table, so
   *    iterated lineage never grows;
-  *  - `localCheckpoint` on each round's snapshot RDD — the PageRank
-  *    lesson: the RDD dependency OBJECT graph still chains
-  *    round-over-round after the logical cut, and past ~15 rounds the
-  *    serialized task binary overflows the executor deserialization
-  *    stack;
+  *  - each round's label snapshot is checkpointed ([[Loop.snap]]'s
+  *    flag — the PageRank lesson: the RDD dependency OBJECT graph still
+  *    chains round-over-round after the logical cut, and past ~15
+  *    rounds the serialized task binary overflows the executor
+  *    deserialization stack);
   *  - ONE action per round (the two disagreement counts share a job).
   *
   * 100 TB shape: per round one equi-join (labels ⋈ out-edges on the
@@ -101,33 +98,21 @@ object Lpa {
     *         session, ordered by p — on oscillation, the LAST round's
     *         side of the 2-cycle */
   def iterate(pairs: DataFrame, loopParts: Int = 8,
-              maxRounds: Int = 60): DataFrame = {
-    val parent = pairs.sparkSession
-    val s = parent.newSession()
-    Sessions.copyRuntimeConf(parent, s)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val (pRdd, p0) = Sessions.snapshot(pairs)
-    val pr = Sessions.rebind(p0, s)
-    val (eRdd, edges) = Sessions.snapshot(
-      pr.select(col("pa").as("src"), col("pb").as("dst"))
-        .union(pr.select(col("pb").as("src"), col("pa").as("dst"))))
-    var (prevRdd, prev) = Sessions.snapshot(
-      edges.select(col("src").as("p")).distinct()
-        .select(col("p"), col("p").as("lbl")))
-    // The round before `prev` — absent in round 1 (the 2-cycle test
-    // needs two completed rounds to be meaningful).
-    var prevPrevRdd: org.apache.spark.rdd.RDD[_] = null
-    var prevPrev: DataFrame = null
-    var round = 0
-    var exit: Exit = Exit.Cap
-    var inFlight: org.apache.spark.rdd.RDD[_] = null
-    var fin: DataFrame = null
-    try {
-      while (round < maxRounds && exit == Exit.Cap) {
-        val (nextRdd, next) = Sessions.snapshot(voteRound(edges, prev))
-        nextRdd.localCheckpoint()
-        inFlight = nextRdd
+              maxRounds: Int = 60): DataFrame =
+    Loop.run("Lpa", pairs.sparkSession, loopParts) { loop =>
+      val pr = loop.snap(pairs)
+      val edges = loop.snap(
+        pr.select(col("pa").as("src"), col("pb").as("dst"))
+          .union(pr.select(col("pb").as("src"), col("pa").as("dst"))))
+      var prev = loop.snap(
+        edges.select(col("src").as("p")).distinct()
+          .select(col("p"), col("p").as("lbl")))
+      // The round before `prev` — absent in round 1 (the 2-cycle test
+      // needs two completed rounds to be meaningful).
+      var prevPrev: DataFrame = null
+      var exit: Exit = Exit.Cap
+      val (rounds, _) = loop.rounds(maxRounds) { _ =>
+        val next = loop.snap(voteRound(edges, prev), checkpoint = true)
         // The ONE action of the round: materialize the new label table
         // and count disagreements vs the previous round AND the round
         // before it, in the same job. The node set is static (every
@@ -154,43 +139,18 @@ object Lpa {
                 coalesce(sum(when(col("nl") =!= col("ql"), 1L).otherwise(0L)),
                   lit(0L)).as("d2"))
               .head
-        val movedPrev = row.getLong(0)
-        val movedPrevPrev = row.getLong(1)
-        if (prevPrevRdd != null) prevPrevRdd.unpersist(blocking = false)
-        prevPrev = prev
-        prevPrevRdd = prevRdd
+        prevPrev = loop.swap(prevPrev, prev)
         prev = next
-        prevRdd = nextRdd
-        inFlight = null
-        round += 1
-        if (movedPrev == 0L) exit = Exit.Fixpoint
-        else if (movedPrevPrev == 0L) exit = Exit.TwoCycle
+        if (row.getLong(0) == 0L) exit = Exit.Fixpoint
+        else if (row.getLong(1) == 0L) exit = Exit.TwoCycle
+        exit != Exit.Cap
       }
       // Materialize the final frame into a fresh snapshot so the loop's
-      // checkpointed RDDs can all be released here (the PageRank
-      // finally-block lesson: returning a plan over an about-to-be-
-      // unpersisted snapshot makes the caller's first action re-run the
-      // corpus-scale lineage).
-      val (fRdd, f0) = Sessions.snapshot(prev.select(col("p"), col("lbl").as("label")))
-      f0.count()
-      fin = f0
-      prevRdd.unpersist(blocking = false)
-      if (prevPrevRdd != null) prevPrevRdd.unpersist(blocking = false)
-      prevRdd = null
-      prevPrevRdd = null
-      Metrics.loopEnd(parent, LoopEnd("Lpa", round, exit))
-    } finally {
-      // Deterministic release on EVERY exit: the success path nulls
-      // prevRdd/prevPrevRdd after its own unpersist, so these fire only
-      // when an exception escaped mid-loop with node-scale snapshots
-      // still cached (ADVICE round 16).
-      if ((inFlight != null) && (inFlight ne prevRdd))
-        inFlight.unpersist(blocking = false)
-      if (prevRdd != null) prevRdd.unpersist(blocking = false)
-      if (prevPrevRdd != null) prevPrevRdd.unpersist(blocking = false)
-      pRdd.unpersist(blocking = false)
-      eRdd.unpersist(blocking = false)
-    }
-    Sessions.rebind(fin, parent).orderBy("p")
-  }
+      // checkpointed RDDs are all released on return (the PageRank
+      // lesson: returning a plan over a released snapshot makes the
+      // caller's first action re-run the corpus-scale lineage).
+      val fin = loop.snap(prev.select(col("p"), col("lbl").as("label")))
+      fin.count()
+      Loop.Done(fin, rounds, exit)
+    }.orderBy("p")
 }

@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.{Metrics, Sessions}
-import org.apache.spark.sql.graftx.Metrics.{Exit, LoopEnd}
+import org.apache.spark.sql.graftx.Metrics.Exit
 
 import graft.functions.ColFns.floorDiv
 import graft.queries.LinkageQueries.{PrDampDen, PrDampNum, PrScale, PrTeleport}
@@ -21,12 +20,13 @@ import graft.queries.LinkageQueries.{PrDampDen, PrDampNum, PrScale, PrTeleport}
   * damping constant, not the graph size, which is why the declared
   * fixed-round instance is an honest stand-in at any corpus scale.
   *
-  * Loop discipline (inherited from [[Components]]/[[KMeans.lloyd]]):
-  *  - the loop runs on a `newSession()` clone — AQE off, shuffle width
-  *    `loopParts`, caller conf untouched;
+  * Loop discipline ([[Loop.run]] owns the session clone and every
+  * snapshot's release):
   *  - the pair set and the degree-enriched out-edge table snapshot
   *    ONCE (the loop invariants); per round the only NEW snapshot is
-  *    the node-scale rank table, so iterated lineage never grows;
+  *    the node-scale rank table, checkpointed (about 50 rounds to tol —
+  *    the depth [[Loop.snap]]'s checkpoint flag exists for), so
+  *    iterated lineage never grows;
   *  - ONE action per round: the delta count materializes the round's
   *    join+aggregate into the new snapshot and diffs it against the
   *    previous table in the same job (inner join — the node set is
@@ -35,9 +35,34 @@ import graft.queries.LinkageQueries.{PrDampDen, PrDampNum, PrScale, PrTeleport}
   *  - hitting `maxRounds` RETURNS rather than throws (the lloyd rule):
   *    a rank table short of tol is refinement, not corruption. The
   *    run posts `LoopEnd("PageRank", rounds, Fixpoint | Cap)`
-  *    ([[Metrics.loopEnd]]); a run that throws posts nothing.
+  *    ([[Loop.run]]); a run that throws posts nothing.
   */
 object PageRank {
+
+  /** The degree table (p, deg) of an undirected pair set (pa, pb) and
+    * its directed out-edges enriched with the source degree
+    * (src, dst, deg) — the loop-invariant table of every rank round,
+    * shared with the declared fixed-round `graph_pagerank` instance.
+    * Every node has degree ≥ 1 by construction (all nodes come from
+    * edges, both directions present), so there is no dangling mass. */
+  private[graft] def degrees(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val edges = pairs.select(col("pa").as("src"), col("pb").as("dst"))
+      .union(pairs.select(col("pb").as("src"), col("pa").as("dst")))
+    val deg = edges.groupBy(col("src").as("p")).agg(count(lit(1)).as("deg"))
+    (deg, edges.join(deg.withColumnRenamed("p", "src"), "src"))
+  }
+
+  /** One integer rank update r′(v) = (1−d)·S + d · Σ_{u∈N(v)} r(u)/deg(u)
+    * over [[degrees]]' out-edges and a rank table (p, r): ONE equi-join
+    * on the source key and ONE destination aggregate, in exact micro-units
+    * with explicit floors (the [[floorDiv]] doctrine). */
+  private[graft] def rankRound(outEdges: DataFrame, ranks: DataFrame): DataFrame =
+    outEdges.join(ranks, outEdges("src") === ranks("p"))
+      .groupBy(col("dst"))
+      .agg((lit(PrTeleport) + floorDiv(
+        lit(PrDampNum) * sum(floorDiv(col("r"), col("deg"))),
+        PrDampDen)).as("r"))
+      .select(col("dst").as("p"), col("r"))
 
   /** @param pairs     undirected support-thresholded edge set
     *                   (pa, pb) — [[graft.queries.LinkageQueries
@@ -51,51 +76,15 @@ object PageRank {
   def iterate(pairs: DataFrame, tol: Long = 1000L,
               loopParts: Int = 8, maxRounds: Int = 60): DataFrame = {
     require(tol >= 0L, s"tol must be non-negative, got $tol")
-    val parent = pairs.sparkSession
-    val s = parent.newSession()
-    Sessions.copyRuntimeConf(parent, s)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val (pRdd, p0) = Sessions.snapshot(pairs)
-    val pr = Sessions.rebind(p0, s)
-    val edges = pr.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(pr.select(col("pb").as("src"), col("pa").as("dst")))
-    val deg = edges.groupBy(col("src").as("p")).agg(count(lit(1)).as("deg"))
-    val (oeRdd, outEdges) = Sessions.snapshot(
-      edges.join(deg.withColumnRenamed("p", "src"), "src"))
-    // Node table (p, deg) — recomputed from the out-edge snapshot where
-    // needed (init + final attach); a distinct over edge rows, cheap
-    // against the cached snapshot.
-    def nodes = outEdges.select(col("src").as("p"), col("deg")).distinct()
-    var (prevRdd, prev) = Sessions.snapshot(
-      nodes.select(col("p"), lit(PrScale).as("r")))
-    var round = 0
-    var converged = false
-    var inFlight: org.apache.spark.rdd.RDD[_] = null
-    var fin: DataFrame = null
-    try {
-      while (round < maxRounds && !converged) {
-        val (nextRdd, next) = Sessions.snapshot(
-          outEdges.join(prev, outEdges("src") === prev("p"))
-            .groupBy(col("dst"))
-            .agg((lit(PrTeleport) + floorDiv(
-              lit(PrDampNum) * sum(floorDiv(col("r"), col("deg"))),
-              PrDampDen)).as("r"))
-            .select(col("dst").as("p"), col("r")))
-        // TRUE lineage cut, not just a logical-plan cut: a snapshot's
-        // RDD still carries the previous round's RDD in its dependency
-        // OBJECT graph, and at ~50 rounds (this loop's tol depth —
-        // Components/KMeans converge in ≤ 12) the serialized task
-        // binary's recursive object graph overflows the executor's
-        // deserialization stack (measured: StackOverflowError in
-        // ObjectInputStream at the 100× probe arm). localCheckpoint
-        // truncates the dependency graph at the round's first action —
-        // the GraphX periodic-checkpoint practice; a cluster deployment
-        // would use reliable checkpointing for executor-loss tolerance.
-        // The truncated prev is never re-executed after its unpersist
-        // (the output reads only the FINAL table, still cached).
-        nextRdd.localCheckpoint()
-        inFlight = nextRdd
+    Loop.run("PageRank", pairs.sparkSession, loopParts) { loop =>
+      val outEdges = loop.snap(degrees(loop.snap(pairs))._2)
+      // Node table (p, deg) — recomputed from the out-edge snapshot where
+      // needed (init + final attach); a distinct over edge rows, cheap
+      // against the cached snapshot.
+      def nodes = outEdges.select(col("src").as("p"), col("deg")).distinct()
+      var prev = loop.snap(nodes.select(col("p"), lit(PrScale).as("r")))
+      val (rounds, converged) = loop.rounds(maxRounds) { _ =>
+        val next = loop.snap(rankRound(outEdges, prev), checkpoint = true)
         // The ONE action of the round: materialize the new rank table
         // and count nodes still moving more than tol, in the same job.
         val moving = next.select(col("p").as("np"), col("r").as("nr"))
@@ -103,44 +92,25 @@ object PageRank {
             col("np") === col("pp"))
           .filter(abs(col("nr") - col("prv")) > tol)
           .count()
-        prevRdd.unpersist(blocking = false)
-        prev = next
-        prevRdd = nextRdd
-        inFlight = null
-        converged = moving == 0L
-        round += 1
+        prev = loop.swap(prev, next)
+        moving == 0L
       }
       // Attach the degree column and MATERIALIZE the final node-scale
       // table while the out-edge invariant is still cached (round-14
-      // ADVICE: the returned plan referenced `nodes` — derived from the
-      // snapshot the finally block below releases — so the caller's
-      // FIRST action silently re-ran the corpus-scale basket expansion,
-      // pair aggregate, and degree join from full lineage, paying the
-      // most expensive stage twice). The count() is one node-scale job
-      // over two cached tables; after it, every loop RDD — including
-      // the localCheckpointed final rank table, now subsumed — is
-      // released here rather than left to the caller.
-      val (fRdd, f0) = Sessions.snapshot(
+      // ADVICE: a returned plan reading `nodes` — derived from a snapshot
+      // the loop releases — made the caller's FIRST action silently re-run
+      // the corpus-scale basket expansion, pair aggregate, and degree join
+      // from full lineage, paying the most expensive stage twice). The
+      // count() is one node-scale job over two cached tables; the result
+      // reads only this snapshot, so every other loop RDD — including the
+      // checkpointed final rank table, now subsumed — is released on
+      // return, and no non-recomputable checkpoint block outlives the call.
+      val fin = loop.snap(
         prev.join(nodes, "p")
           .select(col("p").as("p_partkey"), col("r").as("pagerank"),
                   col("deg").as("degree")))
-      f0.count()
-      fin = f0
-      // The final rank table's data lives on in `fin`; drop its
-      // checkpointed RDD now so the registry never holds a
-      // non-recomputable snapshot past iterate()'s return (the
-      // Sessions.releaseSnapshots caveat applies to `fin` itself —
-      // see that scaladoc — but not to any checkpoint block).
-      prevRdd.unpersist(blocking = false)
-      Metrics.loopEnd(parent, LoopEnd("PageRank", round,
-        if (converged) Exit.Fixpoint else Exit.Cap))
-    } finally {
-      if ((inFlight != null) && (inFlight ne prevRdd))
-        inFlight.unpersist(blocking = false)
-      pRdd.unpersist(blocking = false)
-      oeRdd.unpersist(blocking = false)
-    }
-    Sessions.rebind(fin, parent)
-      .orderBy(desc("pagerank"), asc("p_partkey"))
+      fin.count()
+      Loop.Done(fin, rounds, if (converged) Exit.Fixpoint else Exit.Cap)
+    }.orderBy(desc("pagerank"), asc("p_partkey"))
   }
 }

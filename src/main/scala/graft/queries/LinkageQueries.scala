@@ -299,26 +299,16 @@ object LinkageQueries {
     * /root/reference/src/dist_map.h:255-279. */
   val graphPagerank: Q = (s, d) => {
     val pairs = coOrderPairs(s, d)
-    val eSnap = Sessions.snapshot(pairs)._2
-    val edges = eSnap.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(eSnap.select(col("pb").as("src"), col("pa").as("dst")))
-    val deg = edges.groupBy(col("src").as("p")).agg(count(lit(1)).as("deg"))
+    val (deg, oe) = graft.operators.PageRank.degrees(Sessions.snapshot(pairs)._2)
     // Out-edges enriched with the source degree, snapshotted ONCE — the
     // loop-invariant table (the KMeans/Components discipline): without
     // it every round re-runs the degree aggregate and its exchange over
     // the 2·|E| edge stream; with it each round is exactly one
     // ranks ⋈ out-edges join plus one destination aggregate.
-    val outEdges = Sessions.snapshot(
-      edges.join(deg.withColumnRenamed("p", "src"), "src"))._2
+    val outEdges = Sessions.snapshot(oe)._2
     var ranks = deg.select(col("p"), lit(PrScale).as("r"))
-    for (_ <- 1 to PrIters) {
-      ranks = outEdges.join(ranks, outEdges("src") === ranks("p"))
-        .groupBy(col("dst"))
-        .agg((lit(PrTeleport) + graft.functions.ColFns.floorDiv(
-          lit(PrDampNum) * sum(graft.functions.ColFns.floorDiv(col("r"), col("deg"))),
-          PrDampDen)).as("r"))
-        .select(col("dst").as("p"), col("r"))
-    }
+    for (_ <- 1 to PrIters)
+      ranks = graft.operators.PageRank.rankRound(outEdges, ranks)
     ranks.join(deg, "p")
       .select(col("p").as("p_partkey"), col("r").as("pagerank"),
               col("deg").as("degree"))

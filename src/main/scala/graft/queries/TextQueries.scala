@@ -1149,6 +1149,23 @@ object TextQueries {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "" && !col("word").contains(BpeMark))
 
+  /** The adjacent-symbol pair counts (lhs, rhs, pair_count) of a
+    * wrapped vocabulary (w, cnt), each pair weighted by its word's count:
+    * the one pair count of the declared trainer ([[bpeWinners]]) and
+    * the run-to-target loop ([[graft.operators.Bpe.train]]). */
+  private[graft] def bpePairCounts(vocab: DataFrame): DataFrame = {
+    val syms = split(col("w").substr(lit(2), length(col("w")) - 2), BpeMark + BpeMark)
+    vocab
+      .select(col("cnt"), syms.as("syms"))
+      .filter(size(col("syms")) > 1)
+      .select(col("cnt"), explode(zip_with(
+        slice(col("syms"), lit(1), size(col("syms")) - 1),
+        slice(col("syms"), lit(2), size(col("syms")) - 1),
+        (a, b) => struct(a.as("lhs"), b.as("rhs")))).as("pr"))
+      .groupBy(col("pr.lhs").as("lhs"), col("pr.rhs").as("rhs"))
+      .agg(sum(col("cnt")).as("pair_count"))
+  }
+
   /** The trainer loop: runs `rounds` merge rounds over the capped word
     * vocabulary and returns the per-round winner frames (each ≤ 1 row:
     * lhs, rhs, pair_count). Each round's merged vocabulary is
@@ -1158,7 +1175,6 @@ object TextQueries {
     * cross joins total). */
   private[graft] def bpeWinners(s: SparkSession, d: String,
                                 rounds: Int): Seq[DataFrame] = {
-    val MM = BpeMark + BpeMark
     val vocab0 = bpeDocWords(s, d)
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("word"))
@@ -1167,16 +1183,7 @@ object TextQueries {
     var vocab = org.apache.spark.sql.graftx.Sessions.snapshot(vocab0)._2
     val out = Seq.newBuilder[DataFrame]
     for (k <- 1 to rounds) {
-      val syms = split(col("w").substr(lit(2), length(col("w")) - 2), MM)
-      val winner = vocab
-        .select(col("cnt"), syms.as("syms"))
-        .filter(size(col("syms")) > 1)
-        .select(col("cnt"), explode(zip_with(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1),
-          (a, b) => struct(a.as("lhs"), b.as("rhs")))).as("pr"))
-        .groupBy(col("pr.lhs").as("lhs"), col("pr.rhs").as("rhs"))
-        .agg(sum(col("cnt")).as("pair_count"))
+      val winner = bpePairCounts(vocab)
         .orderBy(desc("pair_count"), asc("lhs"), asc("rhs"))
         .limit(1)
       out += winner

@@ -208,7 +208,7 @@ object Sessions {
   /** Unpersists (non-blocking) every snapshot taken since the last call
     * and returns how many were released (already-GC'd entries just drop
     * off — ContextCleaner has them). Idempotent with callers that
-    * already unpersist their own handles (Components): RDD.unpersist on an
+    * already unpersist their own handles (graft.operators.Loop): RDD.unpersist on an
     * uncached RDD is a no-op.
     *
     * RE-EXECUTION CAVEAT (round-14 ADVICE): "a released frame
@@ -216,7 +216,7 @@ object Sessions {
     * snapshots whose physical lineage is intact. A snapshot whose
     * internal RDD — or an ANCESTOR in its dependency graph — was
     * `localCheckpoint()`ed (the deep-loop discipline, see
-    * PageRank.iterate) has that lineage deliberately truncated:
+    * graft.operators.Loop.snap) has that lineage deliberately truncated:
     * after release, re-executing such a frame throws
     * (checkpoint block not found) instead of recomputing. Deep-loop
     * results must therefore be consumed (collected / written) BEFORE

@@ -25,14 +25,18 @@ class ComponentsSpec extends SparkSpec {
 
   test("a run that hits maxRounds throws, and its window holds no Components record") {
     // The 300-vertex path needs ~9 rounds; a cap of 2 must fail loudly
-    // and leave nothing behind that reads as this run's outcome.
+    // and leave nothing behind: no record that reads as this run's
+    // outcome, and no snapshot still cached.
     val pairs = (0L until 299L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
     val (thrown, ends) = loopEnds("Components") {
       intercept[IllegalStateException](
         Components.connectedComponents(pairs, loopParts = 3, maxRounds = 2))
     }
     assert(thrown.getMessage.contains("did not converge within 2 rounds"))
     assert(ends.isEmpty, ends.toString)
+    assert(persisted -- before == Set.empty, "the failed run left snapshots persisted")
   }
 
   test("cycle, star, and disjoint components resolve to min labels") {

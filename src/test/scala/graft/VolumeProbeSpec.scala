@@ -1,9 +1,10 @@
 package graft
 
 /** [[VolumeProbe.run]] end to end at a small size: sf0.001 at 1× and 2×,
-  * one entry per kind of arm that writes no catalog table. Each entry
-  * must pass, and its artifact must carry the gate fields of its arms —
-  * an arm that silently stopped running would drop them. */
+  * one entry per kind of arm, and one whose persisted index writes
+  * catalog tables. Each entry must pass, and its artifact must carry the
+  * gate fields of its arms — an arm that silently stopped running would
+  * drop them. The run must leave no catalog table behind. */
 class VolumeProbeSpec extends SparkSpec {
 
   private val common = Seq("gate_records", "gate_joinrows", "gate_spill", "plan_sane", "pass")
@@ -21,11 +22,13 @@ class VolumeProbeSpec extends SparkSpec {
     "sample_dsir_weights" -> (crosses :+ "gate_no_corpus_broadcast"),
     "sim_ivfpq_topk" -> (crosses ++ Seq("gate_scan_cell_bounded", "scan_gate")),
     "sim_ivfpq_rerank_topk" -> (crosses ++ Seq("gate_refine_constant", "refine_gate")),
+    "sim_ivfpq_clustered_topk" -> (crosses ++ Seq("gate_scan_cell_bounded", "scan_gate")),
     "dedup_semdedup" -> (crosses ++ Seq("gate_refine_balanced", "refine_gate",
       "gate_cand_linear", "cand_gate", "gate_qual_linear", "qual_gate", "joinrows_gate")))
 
   private val confs = Seq("spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold")
-  private lazy val before = confs.map(spark.conf.getOption)
+  private def tables: Set[String] = spark.catalog.listTables().collect().map(_.name).toSet
+  private lazy val before = (confs.map(spark.conf.getOption), tables)
   private lazy val (artifact, allPass) = {
     before
     VolumeProbe.run(spark, sfDir, 2, arms.map(_._1))
@@ -42,7 +45,12 @@ class VolumeProbeSpec extends SparkSpec {
     assert(entries.keySet == arms.map(_._1).toSet)
     assert(allPass, artifact)
     assert(artifact.endsWith(""""all_pass":true}"""))
-    assert(confs.map(spark.conf.getOption) == before)
+    assert(confs.map(spark.conf.getOption) == before._1)
+  }
+
+  test("run leaves no catalog table behind") {
+    artifact
+    assert(tables -- before._2 == Set.empty)
   }
 
   for ((name, gates) <- arms)
