@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.{Bridge, CachedRows}
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType, LongType, ShortType, StringType}
@@ -42,26 +43,40 @@ object Graft {
   def fromRange(spark: SparkSession, start: Long, end: Long, step: Long = 1L): Dataset[java.lang.Long] =
     spark.range(start, end, step)
 
-  /** The shared shuffle-reduce tail of both mapreduce forms: group the
-    * emitted pairs by the `_1` column itself and merge values with
-    * `reducer` (Spark's ReduceAggregator, the one typed `reduceGroups`
-    * runs, so partial map-side combine comes with it). Grouping on the
-    * output column makes the exchange hash `_1`: the store's partitioning
-    * names its key, which is what lets a cached point op read only the
-    * owning partition ([[lookup]]). */
+  /** The shared shuffle-reduce tail of mapreduce, mapreduceRange and put,
+    * and the one place that picks how `reducer` runs, from the value
+    * encoder alone: group the pairs by the `_1` column itself and merge
+    * values with `reducer`, partially before the shuffle and finally
+    * after it. A value whose encoder never writes null (the Scala
+    * primitives) is asserted non-null on the way in, so a null `_2` in a
+    * stored frame fails as it does in mapreduce's tuple decoder instead
+    * of reducing as 0; such a value sits in one mutable fixed-width
+    * buffer slot, so `reducer` runs as Bridge's FlatReduce (a codegen'd
+    * HashAggregate). Every other value runs through Spark's
+    * ReduceAggregator (the ObjectHashAggregate typed `reduceGroups`
+    * runs), which passes nulls to `reducer`. Grouping on the output
+    * column makes the exchange hash `_1`: the store's partitioning names
+    * its key, which is what lets a cached point op read only the owning
+    * partition ([[lookup]]). */
   private def reduceByKey[KR, VR](pairs: Dataset[(KR, VR)], reducer: Reducer[VR])(
-      implicit ekr: Encoder[(KR, VR)], ev: Encoder[VR]): Dataset[(KR, VR)] =
-    pairs.groupBy(col("_1"))
-      .agg(udaf(Bridge.reduceAggregator(reducer), ev)(col("_2")).as("_2"))
-      .as[(KR, VR)]
+      implicit ekr: Encoder[(KR, VR)], ev: Encoder[VR]): Dataset[(KR, VR)] = {
+    val nonNull = Bridge.nonNullType(ev)
+    val in = if (nonNull.isDefined) Bridge.notNull(col("_2"), ev) else col("_2")
+    val reduced = nonNull.filter(UnsafeRow.isMutable) match {
+      case Some(t) => Bridge.flatReduce(reducer, in.cast(t))
+      case None => udaf(Bridge.reduceAggregator(reducer), ev)(Bridge.inputs(in, ev): _*)
+    }
+    pairs.groupBy(col("_1")).agg(reduced.as("_2")).as[(KR, VR)]
+  }
 
   /** The central operator: flat-map each pair through `mapper`, hash-shuffle
     * by the emitted key, merge values with `reducer`
     * (DistMap::mapreduce, src/dist_map.h:255-279). Spark plans map-side
-    * partial reduction (ReduceAggregator partials) before the exchange,
-    * matching hpmr's staging-map combine, and the exchange hashes the key
-    * column `_1`, the analog of hpmr's owner `hash(k) % n_procs`
-    * (src/dist_map.h:121-124). */
+    * partial reduction before the exchange, matching hpmr's staging-map
+    * combine (a HashAggregate for a primitive value, an
+    * ObjectHashAggregate for any other, [[reduceByKey]]), and the
+    * exchange hashes the key column `_1`, the analog of hpmr's owner
+    * `hash(k) % n_procs` (src/dist_map.h:121-124). */
   def mapreduce[K, V, KR, VR](in: Dataset[(K, V)], mapper: Mapper[K, V, KR, VR],
                               reducer: Reducer[VR])(
       implicit ekr: Encoder[(KR, VR)], ev: Encoder[VR]): Dataset[(KR, VR)] =
@@ -77,8 +92,11 @@ object Graft {
 
   /** Buffered write with combine (DistMap::async_set,
     * src/dist_map.h:118-130): merge a batch of new pairs into the store,
-    * resolving key collisions with `reducer`. The union is positional, so
-    * both sides must hold the key column contract ([[requireKeyed]]). */
+    * resolving key collisions with `reducer`, by the same reduce as
+    * [[mapreduce]] ([[reduceByKey]]): a null value of a primitive `V`
+    * fails with NOT_NULL_ASSERT_VIOLATION, as mapreduce's decoder does.
+    * The union is positional, so both sides must hold the key column
+    * contract ([[requireKeyed]]). */
   def put[K, V](store: Dataset[(K, V)], batch: Dataset[(K, V)], reducer: Reducer[V])(
       implicit ekv: Encoder[(K, V)], ev: Encoder[V]): Dataset[(K, V)] = {
     requireKeyed("Graft.put", store)

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * runs identical workloads on its maps and std::unordered_map in adjacent
   * TESTs so wall-times can be eyeballed (src/bare_map_test.cc:62-92).
   * The analog here: the same 1M-pair mapreduce through (a) the typed
-  * facade (object lambdas, ReduceAggregator) and (b) the columnar
-  * DataFrame path (codegen'd sum). Both must produce the golden value;
+  * facade (an object mapper lambda, and the reducer lambda called from a
+  * codegen'd HashAggregate) and (b) the columnar DataFrame path
+  * (codegen'd sum). Both must produce the golden value;
   * the printed times document why the declared queries use the columnar
   * form.
   */

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -20,15 +19,6 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
   */
 class PlanShapeSpec extends SparkSpec {
 
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case qs: QueryStageExec => Seq(qs.plan)
-      case o => o.children
-    }
-    p +: (kids ++ p.subqueries).flatMap(nodes)
-  }
-
   private def planOf(name: String): SparkPlan = {
     val p = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
     org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
@@ -36,7 +26,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("emb_kmeans plans hash aggregates only — no sort of the xk-expanded stream") {
-    val sorts = nodes(planOf("emb_kmeans")).collect { case s: SortAggregateExec => s }
+    val sorts = planNodes(planOf("emb_kmeans")).collect { case s: SortAggregateExec => s }
     assert(sorts.isEmpty,
       s"emb_kmeans regressed to ${sorts.size} SortAggregate(s) — the packed-long " +
         "argmin (KMeans.assign) or a non-primitive aggregation buffer changed")
@@ -44,7 +34,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("sample_dsir_weights scans documents once in the main plan and never broadcasts it") {
     val plan = planOf("sample_dsir_weights")
-    val docScans = nodes(plan).collect {
+    val docScans = planNodes(plan).collect {
       case f: FileSourceScanExec
         if f.relation.location.rootPaths.exists(_.toString.contains("documents.parquet")) => f
     }
@@ -65,7 +55,7 @@ class PlanShapeSpec extends SparkSpec {
     // bounded cross join to allowlist, and the packed-min argmin must
     // stay hash-aggregatable (a struct/array buffer would plan the ×4
     // candidate stream through SortAggregates, the round-12 lesson).
-    val ps = nodes(planOf("emb_pq_trained_codes"))
+    val ps = planNodes(planOf("emb_pq_trained_codes"))
     val sorts = ps.collect { case s: SortAggregateExec => s }
     assert(sorts.isEmpty,
       s"emb_pq_trained_codes regressed to ${sorts.size} SortAggregate(s)")
@@ -85,7 +75,7 @@ class PlanShapeSpec extends SparkSpec {
     // side losing its join keys) or a SortAggregate over the bigram
     // stream (e.g. a struct/array buffer creeping into the collapse) is
     // the regression class this pin catches.
-    val ps = nodes(planOf("text_lm_fluency"))
+    val ps = planNodes(planOf("text_lm_fluency"))
     val sorts = ps.collect { case s: SortAggregateExec => s }
     assert(sorts.isEmpty,
       s"text_lm_fluency regressed to ${sorts.size} SortAggregate(s)")
@@ -117,7 +107,7 @@ class PlanShapeSpec extends SparkSpec {
     Seq("sim_ivfpq_topk", "sim_ivfpq_residual_topk", "sim_ivfpq_trained_topk",
         "sim_ivfpq_rerank_topk", "sim_ivfpq_nprobe_topk")
       .foreach { q =>
-        val exchanges = nodes(planOf(q)).collect {
+        val exchanges = planNodes(planOf(q)).collect {
           case e: ShuffleExchangeExec => e.outputPartitioning
         }
         // The (probe_id, vec_id) exchange is the downstream ADC final
@@ -140,7 +130,7 @@ class PlanShapeSpec extends SparkSpec {
     // Keyed (vec_id, m), the (probe, vec) partial-agg collapse depends on
     // partition layout (measured 309x records at 100x); keyed vec_id, a
     // vector's re-exploded subspace rows stay together by construction.
-    val exchanges = nodes(planOf("sim_pq_adc_topk")).collect {
+    val exchanges = planNodes(planOf("sim_pq_adc_topk")).collect {
       case e: ShuffleExchangeExec => e.outputPartitioning
     }
     // Exact structural match (round-13 ADVICE): an exchange counts as
@@ -174,7 +164,7 @@ class PlanShapeSpec extends SparkSpec {
     // node would be the volume regression the probe only catches at
     // probe time; this pins it on every build.
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    val ps = nodes(planOf("graph_pagerank"))
+    val ps = planNodes(planOf("graph_pagerank"))
     val dstExchanges = ps.collect {
       case e: ShuffleExchangeExec => e.outputPartitioning
     }.collect {
@@ -200,7 +190,7 @@ class PlanShapeSpec extends SparkSpec {
     // corpus scan lives inside the FIRST snapshot's own materialization
     // job. A FileSourceScan in the MAIN plan means a round started
     // re-reading documents — the vocabulary-scale loop contract broken.
-    val ps = nodes(planOf("text_bpe_train"))
+    val ps = planNodes(planOf("text_bpe_train"))
     val scans = ps.collect { case f: FileSourceScanExec => f }
     assert(scans.isEmpty,
       s"bpe train's main plan carries ${scans.size} file scan(s) — rounds must " +
@@ -220,7 +210,7 @@ class PlanShapeSpec extends SparkSpec {
     // snapshots). More means a duplicated chain; fewer means a merge
     // silently dropped — both invisible to correctness on a corpus
     // whose later merges happen not to fire.
-    val ps = nodes(planOf("text_bpe_encode"))
+    val ps = planNodes(planOf("text_bpe_encode"))
     val crosses = ps.collect {
       case b: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => b
     }
@@ -235,7 +225,7 @@ class PlanShapeSpec extends SparkSpec {
     // max(struct) buffer is not hash-aggregatable and planned the
     // GRAPH-scale vote stream through 4 SortAggregates in the first
     // dump — the round-12 emb_kmeans smell, pinned here against return.
-    val ps = nodes(planOf("graph_label_propagation"))
+    val ps = planNodes(planOf("graph_label_propagation"))
     val sorts = ps.collect { case s: SortAggregateExec => s }
     assert(sorts.isEmpty,
       s"lpa regressed to ${sorts.size} SortAggregate(s) — the packed-decimal vote " +
@@ -254,13 +244,13 @@ class PlanShapeSpec extends SparkSpec {
     // BOUNDED score-domain aggregate, never raw per-doc scores — and
     // partitioned by lang, never global (the WindowGuardSpec doctrine
     // applied to the counting sort).
-    val ps = nodes(planOf("text_ccnet_buckets"))
+    val ps = planNodes(planOf("text_ccnet_buckets"))
     val windows = ps.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }
     assert(windows.size == 2, s"expected the cum + n window pair, got ${windows.size}")
     windows.foreach { w =>
       assert(w.partitionSpec.nonEmpty, "ccnet window went global — must partition by lang")
-      assert(nodes(w.child).exists {
+      assert(planNodes(w.child).exists {
         case _: org.apache.spark.sql.execution.aggregate.HashAggregateExec => true
         case _ => false
       }, "ccnet window consumes raw rows — the (lang, score) counting " +

@@ -194,13 +194,6 @@ class PointLookupSpec extends SparkSpec {
     } finally Graft.clear(store)
   }
 
-  /** Runs `body` with `spark.sql.shuffle.partitions` at `n`. */
-  private def withShufflePartitions[A](n: Int)(body: => A): A = {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", before)
-  }
-
   /** A cached, materialized key-owned store of "k0".."k299" built by
     * mapreduce and then put at `n` shuffle partitions. */
   private def keyOwned(n: Int): Dataset[(String, Long)] = withShufflePartitions(n) {

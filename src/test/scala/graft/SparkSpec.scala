@@ -4,6 +4,8 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.graftx.Metrics
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,6 +41,23 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit =
     try tempDirs.forEach(d => LocalFiles.rmTree(d)) finally super.afterAll()
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` at `n`. */
+  def withShufflePartitions[A](n: Int)(body: => A): A = {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
+
+  /** Every node of `p`, through AQE wrappers, query stages and subqueries. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case qs: QueryStageExec => Seq(qs.plan)
+      case o => o.children
+    }
+    p +: (kids ++ p.subqueries).flatMap(planNodes)
+  }
 
   /** Runs `body` in one [[Metrics.measure]] window: its result and the
     * window's LoopEnd records of `loop`, in posting order. */
